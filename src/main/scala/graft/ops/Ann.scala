@@ -47,16 +47,39 @@ object Ann extends IndexLifecycle {
     * `graft.resilientMaterialize=true` to switch every such site to
     * persist(MEMORY_AND_DISK)+count: recomputable lineage, one extra
     * pass. Blocks are freed by ContextCleaner when the frame is dropped,
-    * either way.
+    * either way. A frame that is already local (see [[isLocal]]) is
+    * returned as is: pinning it again costs a job and buys nothing.
     */
   private[graft] def materializeOnce(df: DataFrame): DataFrame = {
     val resilient = df.sparkSession.conf
       .getOption("graft.resilientMaterialize").exists(_.toBoolean)
-    if (resilient) {
+    if (isLocal(df)) df
+    else if (resilient) {
       val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       p.count()
       p
     } else df.localCheckpoint(true)
+  }
+
+  /** True when `df` reads nothing but driver rows (a `LocalRelation`) or
+    * a materialized checkpoint, under column renames and literals only:
+    * re-running such a plan per consumer re-reads pinned rows and
+    * re-executes no subtree.
+    */
+  private[graft] def isLocal(df: DataFrame): Boolean = {
+    import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, Literal}
+    import org.apache.spark.sql.catalyst.plans.logical._
+    def walk(p: LogicalPlan): Boolean = p match {
+      case _: LocalRelation => true
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.isCheckpointed
+      case Project(list, child) => list.forall {
+        case _: Attribute | Alias(_: Attribute | _: Literal, _) => true
+        case _ => false
+      } && walk(child)
+      case SubqueryAlias(_, child) => walk(child)
+      case _ => false
+    }
+    walk(df.queryExecution.analyzed)
   }
 
   /** Broadcast a data-dependent candidate-id frame only while it provably

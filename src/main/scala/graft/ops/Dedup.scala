@@ -1586,6 +1586,10 @@ object Dedup extends IndexLifecycle {
     emb.join(losers, Seq(idCol), "left_anti")
   }
 
+  /** [[cosinePairsAuto]]'s default cutover: the most rows the exact
+    * all-pairs branch takes before banding. */
+  private[graft] val MaxExactPairRows = 10000
+
   /** Size-guarded cosine near-dup pairs — the path callers should default
     * to. Exact O(n²) broadcast join only while the input provably fits
     * (`maxExactRows`); above that it auto-escalates to the AND/OR-amplified
@@ -1603,13 +1607,28 @@ object Dedup extends IndexLifecycle {
       idCol: String = "vec_id",
       vecCol: String = "embedding",
       minCos: Double = 0.95,
-      maxExactRows: Int = 10000,
+      maxExactRows: Int = MaxExactPairRows,
       nTables: Int = 12,
-      nProjs: Int = 3): DataFrame = {
+      nProjs: Int = 3): DataFrame =
     // one probe job decides the branch; the exact path is entered unchecked
     // so the same probe is not paid twice
-    val small = emb.limit(maxExactRows + 1).count() <= maxExactRows
-    if (small) cosinePairsExactUnchecked(emb, idCol, vecCol, minCos)
+    cosinePairsCounted(emb, emb.limit(maxExactRows + 1).count(), idCol,
+      vecCol, minCos, maxExactRows, nTables, nProjs)
+
+  /** [[cosinePairsAuto]] for a caller that already knows `emb`'s row
+    * count (a driver-pinned serving batch): the branch is decided without
+    * the probe job.
+    */
+  private[graft] def cosinePairsCounted(
+      emb: DataFrame,
+      nRows: Long,
+      idCol: String,
+      vecCol: String,
+      minCos: Double,
+      maxExactRows: Int = MaxExactPairRows,
+      nTables: Int = 12,
+      nProjs: Int = 3): DataFrame = {
+    if (nRows <= maxExactRows) cosinePairsExactUnchecked(emb, idCol, vecCol, minCos)
     // the caller's cap rides along: rp's own selectivity-probe fallback
     // must not route back to a broadcast product the caller already ruled
     // out by escalating here

@@ -4,6 +4,7 @@ import scala.collection.mutable
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Sharded HNSW graph ANN — the graph-walk member of the ANN family next
   * to the bucketing/quantization members ([[Ann]] LSH/RP/IVF, [[Pq]],
@@ -731,7 +732,7 @@ object Hnsw extends IndexLifecycle {
     val nShards = meta.numShards
     val qb = spark.sparkContext.broadcast(routed)
     val tb = spark.sparkContext.broadcast(loadTombstones(spark, path))
-    spark.read.parquet(segPath(path))
+    spark.read.schema(segmentSchema).parquet(segPath(path))
       .where(col("shard").isin(wanted.map(Integer.valueOf): _*))
       .select(col("shard").cast("int"), col("id"), col("vec"), col("level"), col("links"))
       .as[HnswRow]
@@ -822,8 +823,22 @@ object Hnsw extends IndexLifecycle {
     (before, after)
   }
 
+  /** The column types [[write]] pins for `meta/` and `segments/` (the
+    * segment files' `shard` is the partition directory). Readers declare
+    * them instead of inferring them, which costs a job per read.
+    */
+  private val metaSchema = StructType(Seq(
+    StructField("m", IntegerType), StructField("ef_construction", IntegerType),
+    StructField("ef_search", IntegerType), StructField("num_shards", IntegerType),
+    StructField("seed", LongType)))
+  private val segmentSchema = StructType(Seq(
+    StructField("id", LongType), StructField("vec", ArrayType(FloatType)),
+    StructField("level", IntegerType),
+    StructField("links", ArrayType(ArrayType(LongType))),
+    StructField("shard", IntegerType)))
+
   def loadMeta(spark: SparkSession, path: String): Params = {
-    val r = spark.read.parquet(metaPath(path)).head
+    val r = spark.read.schema(metaSchema).parquet(metaPath(path)).head
     Params(r.getAs[Int]("m"), r.getAs[Int]("ef_construction"),
       r.getAs[Int]("ef_search"), r.getAs[Int]("num_shards"), r.getAs[Long]("seed"))
   }
@@ -848,7 +863,7 @@ object Hnsw extends IndexLifecycle {
     val qb = spark.sparkContext.broadcast(
       collectQueries(queries, queryIdCol, queryVecCol))
     val tb = spark.sparkContext.broadcast(loadTombstones(spark, path))
-    spark.read.parquet(segPath(path))
+    spark.read.schema(segmentSchema).parquet(segPath(path))
       .select(col("shard").cast("int"), col("id"), col("vec"), col("level"), col("links"))
       .as[HnswRow]
       .groupByKey(_.shard)

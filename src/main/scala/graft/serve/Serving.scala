@@ -119,6 +119,18 @@ object SessionMemory {
   def windowedMemory(
       memory: DataFrame,
       maxTurns: Int,
+      tokenBudget: Long): DataFrame =
+    withWindowFlag(memory, maxTurns, tokenBudget)
+      .where(col("__in_window"))
+      .select(col("session_id"), col("turn"), col("role"), col("content"),
+        col("__toks").as("n_tokens"))
+
+  /** Every memory row, flagged `__in_window` when [[windowedMemory]]
+    * keeps it — for a caller that aggregates the window next to the full
+    * history in one pass. */
+  private[serve] def withWindowFlag(
+      memory: DataFrame,
+      maxTurns: Int,
       tokenBudget: Long): DataFrame = {
     val byRecency = org.apache.spark.sql.expressions.Window
       .partitionBy(col("session_id"))
@@ -129,9 +141,7 @@ object SessionMemory {
       .withColumn("__rn", row_number().over(byRecency))
       .withColumn("__cum", sum(col("__toks")).over(
         byRecency.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .where(col("__rn") <= maxTurns && col("__cum") <= tokenBudget)
-      .select(col("session_id"), col("turn"), col("role"), col("content"),
-        col("__toks").as("n_tokens"))
+      .withColumn("__in_window", col("__rn") <= maxTurns && col("__cum") <= tokenBudget)
   }
 }
 
@@ -250,6 +260,25 @@ object RagServing {
       }
 }
 
+/** Driver-pinned frames for the micro-batch-bounded serving passes: a
+  * pinned frame is a `LocalRelation`, so its filters and projections run
+  * on the driver with no job; joins of pinned rows go through [[keyed]].
+  */
+private[graft] object Pinned {
+  import org.apache.spark.sql.Row
+  import org.apache.spark.sql.types.StructType
+  def apply(spark: SparkSession, rows: Seq[Row], schema: StructType): DataFrame =
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+
+  /** One collect pins `df` (no job when it is already local). */
+  def of(df: DataFrame): DataFrame = apply(df.sparkSession, df.collect().toSeq, df.schema)
+
+  /** `rows` by column `i` — the build side of an in-memory equi-join,
+    * with the SQL join's multiplicity; null keys never match. */
+  def keyed(rows: Seq[Row], i: Int): Map[Any, Seq[Row]] =
+    rows.filter(!_.isNullAt(i)).groupBy(_.get(i)).withDefaultValue(Nil)
+}
+
 /** The composed cached-RAG serving loop — the production upgrade of the
   * reference's chat path (app.py:214-260): cache hits short-circuit the
   * whole pipeline and are served from the STORED answer at zero marginal
@@ -262,29 +291,28 @@ object RagServing {
 object CachedRag {
 
   /** One serving batch `(query_id, question, query_vec)` against an
-    * answer-bearing persisted cache `(cache_id, embedding, answer)`:
+    * answer-bearing persisted cache `(cache_id, embedding, answer)`, as
+    * ONE batch-bounded disposition pass — the batch is micro-batch-bounded
+    * by contract, so each step pins at most batch-many rows on the driver:
     *
-    *   1. [[SemanticCache.routeLookup]] against the store (minus this
-    *      batch's OWN minted ids, so a replayed micro-batch re-derives
-    *      its original dispositions instead of hitting its own
-    *      insertions) — the SAME exact-vs-banded product router the
-    *      intake uses, so a banded-scale cache never broadcasts
-    *      wholesale inside the loop;
+    *   1. [[SemanticCache.pinnedLookup]] against the store minus this
+    *      batch's OWN minted ids (a replayed micro-batch re-derives its
+    *      original dispositions), through the intake's exact-vs-banded
+    *      router, so a banded-scale cache never broadcasts wholesale;
     *   2. misses run `answerMisses` — the caller's retrieval + answer +
     *      pricing pipeline, `(query_id, question, query_vec) →
-    *      (query_id, question, answer, cost)` (deterministic by
-    *      contract, or replays produce different answers);
+    *      (query_id, question, answer, cost)` (deterministic by contract,
+    *      or replays produce different answers), outside every sizing
+    *      scope, since it touches caller-owned tables;
     *   3. the answered misses insert back through
-    *      [[SemanticCache.intakeBatch]] (`carryCols = answer`), which
-    *      also resolves within-batch duplicates;
-    *   4. hits are served from the STORE's answer at cost 0.
+    *      [[SemanticCache.intakeResolved]] with step 1's dispositions (no
+    *      second lookup), which also resolves within-batch duplicates;
+    *   4. hits are served from the STORE's answer at cost 0, read ONCE
+    *      after the intake (a pre-insert read of the same path once let
+    *      ReuseExchange serve stale answers, see `ep5`'s registration).
     *
-    * Returns `(query_id, question, answer, hit, cache_id, cost)`. The
-    * store is read ONCE after the intake for every answer join in the
-    * returned plan — a pre-insert read of the same path canonicalizes
-    * equal and ReuseExchange then serves stale answers (measured, see
-    * `ep5`'s registration note); the lookup's pre-insert view lives
-    * behind its own checkpoint.
+    * Returns a driver-local `(query_id, question, answer, hit, cache_id,
+    * cost)`.
     */
   def cachedAnswerBatch(
       spark: SparkSession,
@@ -294,97 +322,49 @@ object CachedRag {
       answerMisses: DataFrame => DataFrame,
       idOffset: Long = 1000000L,
       maxExactProduct: Long = SemanticCache.MaxExactLookupProduct): DataFrame = {
-    import graft.ops.Ann.materializeOnce
-    // materialize the caller's batch ONCE: the loop references it from
-    // ~8 downstream plans (router count, own-id exclusion, lookup, miss
-    // slice, intake joins, hit assembly), and an unmaterialized frame
-    // re-plans AND re-executes its whole subtree per consumer — in the
-    // chat composition that subtree is a multi-join per turn (the
-    // double-execution class, guide §1.2; micro-batch-bounded by
-    // contract, so the checkpoint is bounded)
-    val batch0 = materializeOnce(batch)
-    val p = new org.apache.hadoop.fs.Path(cachePath)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    def emptyStore = batch0.select(
-      col("query_id").cast("long").as("cache_id"),
-      col("query_vec").as("embedding"),
-      lit(null).cast("string").as("answer")).limit(0)
-    val stored0 = if (fs.exists(p)) spark.read.parquet(cachePath) else emptyStore
-    val ownIds = batch0.select((col("query_id") + idOffset).cast("long").as("cache_id"))
-    val visible = stored0.join(broadcast(ownIds), Seq("cache_id"), "left_anti")
-    // the INTAKE's router, not the pinned exact path (round-11 verdict
-    // #1): a banded-scale cache served through the composed loop must
-    // take the same deep-AND lookupBanded route intakeBatch takes — the
-    // exact broadcast scan was measured at 709 s/OOM past ~1e8
-    // batch × cache pairs. Dispositions are value-equal for exact
-    // re-asks (identical band keys collide in every table), so the
-    // registered ep5/st19 oracles hold on either route. The router
-    // counts VISIBLE (store minus own minted ids) so a crash-replay —
-    // whose first delivery's insertions sit in the raw store — computes
-    // the same product and takes the same route as the first delivery.
-    // the router's counts double as the shuffle-sizing gate (see
-    // intakeBatch): the lookup + miss-slice scope is sized from the real
-    // store bytes + batch rows; `answerMisses` below runs OUTSIDE the
-    // scope — its pipeline touches caller-owned tables this gate cannot
-    // see
-    val nBatch = batch0.count()
-    val nStore = visible.count()
-    val opBytes = BigInt(nBatch) * SemanticCache.ServingRowBytes +
-      BigInt(graft.ops.Layout.dirBytes(spark, cachePath))
-    // disableAqeAtOne=false: the banded lookup's checkpoint-rejoin plan
-    // trips a Spark analyzer conflicting-reference error when analyzed
-    // with AQE disabled (same empirical rule as the star loop — keep AQE
-    // for bodies that re-join checkpointed subtrees)
-    val (disp, missQ) = graft.ops.Layout.withShuffleSizedTo(spark, opBytes,
-      disableAqeAtOne = false) {
-      val d = materializeOnce(SemanticCache.routeLookup(batch0, visible, minCos,
-        maxExactProduct = maxExactProduct,
-        batchCount = Some(nBatch), storeCount = Some(nStore)))
-      (d, materializeOnce(
-        d.where(!col("hit")).select("query_id").join(batch0, Seq("query_id"))))
-    }
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val store = SemanticCache.listStore(spark, cachePath)
+    val (batch0, looked) = SemanticCache.pinnedLookup(spark, batch, store,
+      minCos, idOffset, "query_id", "query_vec", maxExactProduct)
+    val qRows = batch0.collect().toSeq
+    val qById = Pinned.keyed(qRows, batch0.schema.fieldIndex("query_id"))
+    val vecType = batch0.schema("query_vec").dataType
+    val (hits, misses) = looked.collect().toSeq.partition(_.getBoolean(3))
     val missRows =
-      if (missQ.isEmpty) None
+      if (misses.isEmpty) Nil
       else {
-        val priced = materializeOnce(answerMisses(missQ))
-        // feed the dispositions THIS loop already derived into the
-        // intake tail ([[SemanticCache.intakeResolved]]) instead of
-        // letting intakeBatch re-run a second full store lookup over the
-        // same visible view (the round-15 fusion — at banded scale the
-        // lookup IS the per-batch cost, and it ran twice). Equivalence:
-        // the intake's own lookup would probe `stored` minus the misses'
-        // minted ids; hits never insert, so that view holds exactly the
-        // same rows as `visible` (stored minus ALL own ids), and `disp`'s
-        // miss rows are the routeLookup result against it.
-        val intake = SemanticCache.intakeResolved(spark,
-          disp.where(!col("hit"))
-            .select("query_id", "cache_id", "cos", "hit")
-            .join(batch0.select(col("query_id"), col("query_vec").as("__qv")),
-              Seq("query_id"))
-            .join(priced.select("query_id", "answer"), Seq("query_id")),
-          cachePath, minCos, idOffset, carryCols = Seq("answer"),
-          batchRowBound = nBatch)
-        Some(priced
-          .join(intake.select("query_id", "cache_id", "hit"), Seq("query_id"))
-          .select(col("query_id"), col("question"), col("answer"),
-            col("hit"), col("cache_id"), col("cost")))
+        val priced = answerMisses(Pinned(spark,
+            misses.flatMap(l => qById(l.get(0))), batch0.schema))
+          .select(col("query_id").cast(batch0.schema("query_id").dataType),
+            col("question"), col("answer").cast("string"),
+            col("cost").cast("double"))
+          .collect().toSeq
+        val pricedById = Pinned.keyed(priced, 0)
+        // step 3's rows `(query_id, cache_id, cos, hit, __qv, answer)`:
+        // the lookup's miss rows with their vector and fresh answer
+        val intakeIn =
+          for (l <- misses; q <- qById(l.get(0)); pr <- pricedById(l.get(0)))
+            yield Row.fromSeq(l.toSeq :+ q.getAs[Any]("query_vec") :+ pr.get(2))
+        val intake = Pinned.keyed(SemanticCache.intakeResolved(spark,
+          Pinned(spark, intakeIn, StructType(looked.schema.fields ++ Seq(
+            StructField("__qv", vecType), StructField("answer", StringType)))),
+          store, minCos, idOffset, carryCols = Seq("answer"),
+          batchRowBound = qRows.length).collect().toSeq, 0)
+        for (pr <- priced; d <- intake(pr.get(0)))
+          yield Row(pr.get(0), pr.get(1), pr.get(2), d.get(3), d.get(1), pr.get(3))
       }
-    val storedAfter = if (fs.exists(p)) spark.read.parquet(cachePath) else emptyStore
-    // the hit-answer fetch pushes `cache_id IN (...)` into the store scan
-    // (the b11b term-set discipline — round-11 verdict #2): the hit ids
-    // are micro-batch-bounded by contract, so the collect is
-    // driver-sized, and without the pushdown this join shuffled the FULL
-    // store per micro-batch at banded scale just to fetch k answers
-    // (below broadcast size AQE hid it)
-    val hitIds = disp.where(col("hit"))
-      .select(col("cache_id").cast("long")).collect().map(_.getLong(0)).toSeq
-    val hitRows = disp.where(col("hit"))
-      .join(storedAfter.where(col("cache_id").isin(hitIds.map(x => x: Any): _*))
-        .select(col("cache_id"), col("answer")), Seq("cache_id"))
-      .join(batch0.select("query_id", "question"), Seq("query_id"))
-      .select(col("query_id"), col("question"), col("answer"),
-        col("hit"), col("cache_id"), lit(0.0).as("cost"))
-    missRows.map(hitRows.unionByName(_)).getOrElse(hitRows)
+    val answers = Pinned.keyed(
+      if (hits.isEmpty) Nil
+      else SemanticCache.readStore(spark, cachePath, vecType, withAnswer = true)
+        .where(col("cache_id").isin(hits.map(_.get(1)).distinct: _*))
+        .select("cache_id", "answer").collect().toSeq, 0)
+    val hitRows = for (h <- hits; a <- answers(h.get(1)); q <- qById(h.get(0)))
+      yield Row(h.get(0), q.getAs[Any]("question"), a.get(1), true, h.get(1), 0.0)
+    Pinned(spark, hitRows ++ missRows, StructType(Seq(batch0.schema("query_id"),
+      batch0.schema("question"), StructField("answer", StringType),
+      StructField("hit", BooleanType), StructField("cache_id", LongType),
+      StructField("cost", DoubleType))))
   }
 
   /** One streaming micro-batch: [[cachedAnswerBatch]] landed at
@@ -606,54 +586,22 @@ object ChatRag {
     hasBucketDirs || !hasFlatData
   }
 
-  /** The arriving sessions' slice of the memory table: bucketed tables
-    * read ONLY the touched `sbucket=` dirs (exists-filtered — a brand-new
-    * session's bucket may not exist yet) with the session IN-filter
-    * pushed into those scans; legacy tables read the root and prune rows
-    * only. Returns None when nothing exists to read.
-    */
-  private def readMemorySlice(
-      spark: SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem,
-      mp: org.apache.hadoop.fs.Path,
-      memoryPath: String,
-      bucketed: Boolean,
-      sessionIds: Seq[Any],
-      nBuckets: Int): Option[DataFrame] = {
-    if (!fs.exists(mp)) return None
-    if (bucketed) {
-      val dirs = sessionIds.map(sessionBucket(_, nBuckets)).distinct.sorted
-        .map(b => new org.apache.hadoop.fs.Path(mp, s"sbucket=$b"))
-        .filter(fs.exists(_))
-      if (dirs.isEmpty) None
-      else Some(
-        spark.read.parquet(dirs.map(_.toString): _*)
-          .where(col("session_id").isin(sessionIds: _*))
-          .select("session_id", "turn", "role", "content"))
-    } else Some(
-      spark.read.parquet(memoryPath)
-        .where(col("session_id").isin(sessionIds: _*))
-        .select("session_id", "turn", "role", "content"))
-  }
-
   /** One chat TURN for a batch of sessions — ONE question per session per
     * turn (the reference's chat contract; several sessions serve in
     * parallel, the batch dimension):
     *
-    *   1. load each session's memory at ask time (C1), checkpointed so
-    *      this turn's own append below cannot leak into the plan (the
-    *      ReuseExchange-staleness discipline from
-    *      [[CachedRag.cachedAnswerBatch]]);
+    *   1. load each session's memory at ask time (C1) as ONE per-session
+    *      `(count, max turn)` aggregate, collected before anything is
+    *      written, so this turn's own append cannot leak into it;
     *   2. serve the questions through the cached RAG loop (ep5's law:
     *      hits from the store at cost 0, misses answered + inserted);
-    *   3. assemble the C2 prompt over the ask-time memory (faithful
-    *      duplicated-role replay) with the served payload as the trailing
-    *      context message — a hit's prompt is the one the LLM WOULD have
-    *      received (GPTCache short-circuits the call itself). The prompt
-    *      SIZE is the composition's observable: it grows by 2 faithful
-    *      replays per remembered turn, so `n_prompt_msgs` =
-    *      3 + 2 · history rows — a memory that failed to compose flattens
-    *      it at 3;
+    *   3. size the C2 prompt over the ask-time memory (faithful
+    *      duplicated-role replay, [[PromptAssembly.messages]]: system +
+    *      2 per remembered row + question + context) — a hit's prompt is
+    *      the one the LLM WOULD have received (GPTCache short-circuits the
+    *      call itself). The prompt SIZE is the composition's observable,
+    *      `n_prompt_msgs` = 3 + 2 · history rows — a memory that failed to
+    *      compose flattens it at 3;
     *   4. append (question, answer) to the memory table (C4's two-row
     *      law, batch form, turn numbers continuing each session's max).
     *
@@ -704,13 +652,23 @@ object ChatRag {
       turnTs: Option[Long] = None,
       chatLog: Option[String] = None,
       chatLogWidth: Long = ChatLog.DefaultDayWidth): DataFrame = {
-    import graft.ops.Ann.materializeOnce
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
     require(memoryBuckets > 0, s"chatTurn: memoryBuckets $memoryBuckets must be > 0")
-    // materialize the turn's questions ONCE (see cachedAnswerBatch's
-    // note): the batch subtree — often a multi-join the caller assembled
-    // — otherwise re-plans and re-executes for the session-contract
-    // collect, the disposition pass and the session join
-    val questions0 = materializeOnce(questions)
+    // ONE collect pins the turn's questions (micro-batch-bounded by
+    // contract): every later step reads this copy, never the caller's plan
+    val questions0 = Pinned.of(questions)
+    val qRows = questions0.collect().toSeq
+    val sIdx = questions0.schema.fieldIndex("session_id")
+    val perSession = qRows.groupBy(_.get(sIdx))
+    val sessionIds = perSession.keys.toSeq
+    // the contract fails LOUDLY: a violating batch would mint the same
+    // turn number twice and silently corrupt the log's role-alternation
+    val multi = perSession.filter(_._2.size > 1).toSeq
+    require(multi.isEmpty,
+      s"chatTurn: one question per session per turn — session(s) " +
+        s"${multi.map(_._1).mkString(",")} sent " +
+        s"${multi.map(_._2.size).mkString(",")} questions")
     val mp = new org.apache.hadoop.fs.Path(memoryPath)
     val fs = mp.getFileSystem(spark.sessionState.newHadoopConf())
     val bucketed = isBucketed(fs, mp)
@@ -718,95 +676,72 @@ object ChatRag {
     // count would silently miss history — see effectiveBuckets)
     val nBuckets = if (bucketed) effectiveBuckets(fs, mp, memoryBuckets)
       else memoryBuckets
-    def emptyMemory = questions0.select(
-      col("session_id"), lit(0L).as("turn"),
-      lit("").as("role"), lit("").as("content")).limit(0)
-    // the batch's sessions are micro-batch-bounded by contract, so the
-    // history read targets the arriving sessions' bucket dirs and pushes
-    // `session_id IN (...)` into those scans (the b11b discipline) — a
-    // memory table holds EVERY session ever served, and this turn needs
-    // only the arriving ones; the listing walks only the touched buckets
-    // ONE driver action carries both the session-id list and the
-    // one-question-per-session-per-turn contract (the job-budget
-    // hygiene note — the previous distinct + count pair was two)
-    val sessionCounts = questions0.groupBy("session_id")
-      .agg(count(lit(1)).as("__n")).collect()
-    val sessionIds = sessionCounts.map(_.get(0)).toSeq
-    // the contract fails LOUDLY (the house require stance): a violating
-    // batch would mint the same turn number for both questions and
-    // silently corrupt the log's role-alternation
-    val multi = sessionCounts.filter(_.getLong(1) > 1)
-    require(multi.isEmpty,
-      s"chatTurn: one question per session per turn — session(s) " +
-        s"${multi.map(_.get(0)).mkString(",")} sent " +
-        s"${multi.map(_.getLong(1)).mkString(",")} questions")
-    // size the turn's own scaffolding shuffles from what the contract
-    // bounds them by: the touched buckets' REAL bytes (the only history
-    // this turn can read) + sessions × a generous serving-row width.
-    // The disposition pass below is NOT in any scope here — its
-    // answerMisses pipeline touches caller-owned tables; the cache loop
-    // sizes itself (see cachedAnswerBatch/intakeResolved).
+    // the touched buckets' existence, probed ONCE for the slice read, the
+    // sizing gate and the sidecar bootstrap (single writer: it holds)
+    val touched = sessionIds.groupBy(sessionBucket(_, nBuckets))
+    val preExists = touched.keys.map(b =>
+      b -> fs.exists(new org.apache.hadoop.fs.Path(mp, s"sbucket=$b"))).toMap
+    val bucketDirs = touched.keys.toSeq.sorted.filter(preExists)
+      .map(b => new org.apache.hadoop.fs.Path(mp, s"sbucket=$b"))
+    // size the turn's own shuffles from the touched buckets' REAL bytes +
+    // sessions × a generous serving-row width. The cache pass sizes
+    // itself (its answerMisses touches caller-owned tables). Nothing in
+    // these scopes re-joins a checkpoint, so AQE may go at one partition.
     val sliceBytes =
       if (!bucketed) graft.ops.Layout.dirBytes(spark, memoryPath)
-      else sessionIds.map(sessionBucket(_, nBuckets)).distinct
-        .map(b => new org.apache.hadoop.fs.Path(mp, s"sbucket=$b"))
-        .filter(fs.exists(_))
-        .map(d => fs.getContentSummary(d).getLength).sum
+      else bucketDirs.map(d => fs.getContentSummary(d).getLength).sum
     val turnBytes = BigInt(sliceBytes) +
       BigInt(sessionIds.size) * 2 * SemanticCache.ServingRowBytes
-    val history = graft.ops.Layout.withShuffleSizedTo(spark, turnBytes) {
-      materializeOnce(
-        readMemorySlice(spark, fs, mp, memoryPath, bucketed, sessionIds,
-          nBuckets).getOrElse(emptyMemory))
+    // the ask-time memory as ONE per-session aggregate — prompt history
+    // rows (c9-windowed when asked; turn numbers ride the full log) and
+    // max turn — over the touched bucket dirs (legacy: the root), with
+    // declared columns and the session IN-filter pushed into the scans
+    val sliceDirs = if (bucketed) bucketDirs else Seq(mp)
+    val memStats = if (sliceDirs.isEmpty) Map.empty[Any, Row] else {
+      val h = spark.read.schema(StructType(Seq(
+          StructField("session_id", questions0.schema("session_id").dataType),
+          StructField("turn", LongType), StructField("role", StringType),
+          StructField("content", StringType))))
+        .parquet(sliceDirs.map(_.toString): _*)
+        .where(col("session_id").isin(sessionIds: _*))
+      graft.ops.Layout.withShuffleSizedTo(spark, turnBytes) {
+        memoryWindow.fold(h.withColumn("__in_window", lit(true))) {
+            case (maxTurns, tokenBudget) =>
+              SessionMemory.withWindowFlag(h, maxTurns, tokenBudget)
+          }
+          .groupBy("session_id")
+          .agg(count(when(col("__in_window"), 1)).as("__n"),
+            max(col("turn")).as("__mt"))
+          .collect().map(r => r.get(0) -> r).toMap
+      }
     }
-    val disp = materializeOnce(
-      CachedRag.cachedAnswerBatch(spark,
+    val served = CachedRag.cachedAnswerBatch(spark,
         questions0.select("query_id", "question", "query_vec"),
         cachePath, minCos, answerMisses, idOffset)
-        .join(questions0.select("session_id", "query_id"), Seq("query_id")))
+    val qById = Pinned.keyed(qRows, questions0.schema.fieldIndex("query_id"))
+    // a null session matches no memory or prompt row and is not output
+    val out = Pinned(spark,
+      for (d <- served.collect().toSeq; q <- qById(d.get(0)) if !q.isNullAt(sIdx))
+        yield {
+          val st = memStats.get(q.get(sIdx))
+          val turn = st.filterNot(_.isNullAt(2)).fold(0L)(_.getLong(2) + 1)
+          Row(q.get(sIdx), turn, d.get(0), d.get(1), d.get(2), d.get(3),
+            d.get(4), d.get(5), 3L + 2L * st.fold(0L)(_.getLong(1)))
+        },
+      StructType(questions0.schema("session_id") +: StructField("turn", LongType) +:
+        served.schema.fields.toSeq :+ StructField("n_prompt_msgs", LongType)))
     graft.ops.Layout.withShuffleSizedTo(spark, turnBytes) {
-    val promptHistory = memoryWindow match {
-      case Some((maxTurns, tokenBudget)) =>
-        SessionMemory.windowedMemory(history, maxTurns, tokenBudget)
-          .select("session_id", "turn", "role", "content")
-      case None => history
-    }
-    val prompts = PromptAssembly.messages(
-      promptHistory,
-      disp.select(col("session_id"), col("question"),
-        coalesce(col("answer"), lit(Config.NoInfoFallback)).as("context")),
-      faithful = true)
-    val nMsgs = prompts.groupBy("session_id")
-      .agg(count(lit(1)).as("n_prompt_msgs"))
-    val nextTurn = history.groupBy("session_id")
-      .agg(max(col("turn")).as("__mt"))
-    val out = materializeOnce(
-      disp.join(nMsgs, Seq("session_id"))
-        .join(nextTurn, Seq("session_id"), "left")
-        .withColumn("turn", coalesce(col("__mt") + 1, lit(0L)))
-        .select(col("session_id"), col("turn"), col("query_id"),
-          col("question"), col("answer"), col("hit"), col("cache_id"),
-          col("cost"), col("n_prompt_msgs")))
-    // the C4 append, AFTER every output above is checkpointed. The rows
-    // are 2 × a micro-batch-bounded session count, written by ONE task
-    // (one file per touched bucket) — a session's user+assistant pair
-    // always shares a file, never a half-written turn whose dangling
-    // user row would shift the next replay's numbering.
-    // Guarded on (session_id, turn): a replay whose history is UNCHANGED
-    // (the append never landed) re-mints the same turn numbers and the
-    // anti-join — pruned to this batch's sessions, like the history read
-    // — skips nothing and appends cleanly; a replay whose append DID
-    // land re-derives as a NEW turn (history max moved): the log records
-    // the re-served exchange again under fresh turn numbers —
-    // at-least-once on the conversation log inside that one crash
-    // window; the cache stays exactly-once (id-idempotent).
-    // [[streamingChatRag]]'s ledger makes the normal path exactly-once.
-    // `turnTs` stamps an append-time `ts` column — the age signal
-    // [[pruneIdleSessions]] retires idle sessions by. Optional and
-    // schema-stable: callers that never stamp write the original 4-column
-    // rows (ep6/st20 hashes unchanged); mixed tables read through
-    // mergeSchema everywhere that rewrites (compactSmallFiles,
-    // rewriteBucketDir, rebucketMemoryTable).
+    // the C4 append, AFTER the output is pinned. Each session's new turn
+    // numbers sit above its ask-time max by construction, so a replay
+    // whose append never landed re-mints the same numbers; one whose
+    // append DID land re-derives as a NEW turn (history max moved) and
+    // logs the re-served exchange again — at-least-once on the
+    // conversation log inside that one crash window, while the cache
+    // stays exactly-once (id-idempotent). [[streamingChatRag]]'s ledger
+    // makes the normal path exactly-once.
+    // `turnTs` stamps an append-time `ts` column, the age signal of
+    // [[pruneIdleSessions]]; unstamped callers write the original 4
+    // columns, and every rewrite reads mixed tables through mergeSchema.
     val appendBase = out.select(col("session_id"),
         explode(array(
           struct(col("turn"), lit("user").as("role"),
@@ -819,39 +754,24 @@ object ChatRag {
       case Some(ts) => appendBase.withColumn("ts", lit(ts))
       case None => appendBase
     }
-    // the replay guard anti-joins against the SAME slice `history` was
-    // checkpointed from at turn start — not a second readMemorySlice:
-    // chatTurn is the table's single writer and nothing has appended
-    // between the two points, so the re-read was a duplicate bucket scan
-    // per turn (round-15 fusion; the getOrElse-empty arm makes the
-    // absent-table case an anti-join against zero rows — same no-op as
-    // the old None branch)
-    val freshAppend =
-      appendRows.join(history.select("session_id", "turn"),
-        Seq("session_id", "turn"), "left_anti")
     // bucketed: ONE task writes one file per TOUCHED bucket; a session's
-    // two rows share a bucket, so each session's turn stays all-or-nothing
-    // within one file commit (cross-bucket partiality on a driver crash
-    // heals through the (session_id, turn) anti-join above). Legacy: the
-    // original single-file append.
+    // user+assistant pair shares a bucket, so each session's turn stays
+    // all-or-nothing within one file commit. Legacy: one flat file.
     if (bucketed) {
       // record the fan-out BEFORE the first append: a crash between
       // append and marker would otherwise let a later caller re-derive
       // a different count from its parameter
       recordBuckets(fs, mp, nBuckets)
-      // pre-append existence per touched bucket: a bucket BORN with this
-      // append gets its recency sidecar from birth (complete by
-      // construction); a pre-existing untracked bucket stays untracked
-      // (a partial sidecar would lie stale-high about its older history)
-      val touched = sessionIds.groupBy(sessionBucket(_, nBuckets))
-      val preExists = touched.keys.map(b =>
-        b -> fs.exists(new org.apache.hadoop.fs.Path(mp, s"sbucket=$b"))).toMap
-      freshAppend.withColumn("sbucket", bucketExpr(nBuckets))
+      appendRows.withColumn("sbucket", bucketExpr(nBuckets))
         .coalesce(1).write.mode("append").partitionBy("sbucket")
         .parquet(memoryPath)
       // recency deltas AFTER the data append — the stale-LOW crash
       // direction (see RecencySidecar's staleness contract); the
-      // streaming ledger's replay re-lands a delta lost to the window
+      // streaming ledger's replay re-lands a delta lost to the window. A
+      // bucket BORN with this append gets its sidecar from birth
+      // (complete by construction); a pre-existing untracked bucket stays
+      // untracked (a partial sidecar would lie stale-high about its older
+      // history)
       touched.foreach { case (b, ids) =>
         RecencySidecar.appendDelta(fs,
           new org.apache.hadoop.fs.Path(mp, s"sbucket=$b"),
@@ -859,27 +779,18 @@ object ChatRag {
           bootstrap = !preExists(b))
       }
     } else
-      freshAppend.coalesce(1).write.mode("append").parquet(memoryPath)
-    // the LIFECYCLE arm (round-12 verdict #1): every other maintained
-    // store runs the policy loop; the memory table appends one file per
-    // touched bucket per turn forever without this. Metadata-only signal
-    // (maintenanceDue lists, never scans data); the action bin-packs each
-    // bucket dir through the house swap discipline. Bucket dirs only —
-    // compacting the ROOT would swap away the `_batches` stream ledger —
-    // so legacy flat tables get no file compaction (migrate by starting
-    // a bucketed table and replaying, or accept the legacy listing cost).
+      appendRows.coalesce(1).write.mode("append").parquet(memoryPath)
+    // the LIFECYCLE arm (round-12 verdict #1): a metadata-only signal, and
+    // the action bin-packs each bucket dir through the house swap
+    // discipline. Bucket dirs only — compacting the ROOT would swap away
+    // the `_batches` stream ledger — so legacy flat tables get no file
+    // compaction (migrate by starting a bucketed table and replaying).
     maintenance.foreach { pol =>
       if (bucketed) {
         // PER-BUCKET due + SIZE-TIERED fold (round-13 verdict #1): the
-        // previous arm evaluated one table-wide signal and then coalesced
-        // every bucket dir WHOLE — settled files included — so each
-        // firing rewrote the entire state (write amplification O(state):
-        // at maxSmallFiles=64 and ~16 files/turn, a full rewrite every ~4
-        // turns). Now the signal is each bucket's OWN small-file count
-        // (one recursive listing, same walk as before) and the fold
-        // merges only size-peer small files — a turn's fold cost tracks
-        // the fresh turn files, while settled merged bases hop by
-        // metadata-only rename.
+        // signal is each bucket's OWN small-file count and the fold
+        // merges only size-peer small files, so a firing's cost tracks the
+        // fresh turn files, never the whole state
         graft.ops.Layout.compactSmallFilesAll(spark,
           graft.ops.Layout.dueSubdirs(spark, memoryPath, pol, "sbucket="),
           targetBytes = pol.smallFileBytes * 8)
@@ -2411,142 +2322,137 @@ object SemanticCache {
       queryVecCol: String = "query_vec",
       carryCols: Seq[String] = Nil,
       maxExactProduct: Long = MaxExactLookupProduct): DataFrame = {
-    import graft.ops.Ann.materializeOnce
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.StructType
     require(!carryCols.exists(Set("query_id", "cache_id", "cos", "hit")),
       s"carryCols ${carryCols.mkString(",")} clash with the disposition schema")
-    // materialize the caller's batch ONCE: the intake references it from
-    // several downstream plans (router count, own-id exclusion, lookup,
-    // the carry-col join), and an unmaterialized frame re-plans AND
-    // re-executes its whole subtree per consumer (the double-execution
-    // class, guide §1.2; micro-batch-bounded by contract)
-    val batch0 = materializeOnce(batch)
-    val p = new org.apache.hadoop.fs.Path(cachePath)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val stored =
-      if (fs.exists(p)) spark.read.parquet(cachePath)
-      else // bootstrap: an absent store is an empty cache with the batch's schema
-        batch0.select(col(queryIdCol).cast("long").as("cache_id"),
-          col(queryVecCol).as("embedding")).limit(0)
-    // exclude this batch's OWN (replayed) insertions from the lookup
-    val ownIds = batch0.select((col(queryIdCol) + idOffset).cast("long").as("cache_id"))
-    val visible = stored.join(broadcast(ownIds), Seq("cache_id"), "left_anti")
-    // the router's own (batch, visible) counts double as the shuffle-
-    // sizing gate (Layout.withShuffleSizedTo): hoisted here and passed
-    // down, so sizing costs no extra job. Store bytes come from the real
-    // file listing; the batch side is rows × a generous serving-row
-    // width. A banded-scale cache or a bulk batch raises the estimate
-    // past the advisory size and the plan is exactly as before.
-    val nBatch = batch0.count()
-    val nStore = visible.count()
-    graft.ops.Layout.withShuffleSizedTo(spark,
-      BigInt(nBatch) * ServingRowBytes +
-        BigInt(graft.ops.Layout.dirBytes(spark, cachePath)),
-      disableAqeAtOne = false) {
-      intakeResolved(spark,
-        routeLookup(batch0, visible, minCos, queryIdCol, queryVecCol,
-          maxExactProduct, batchCount = Some(nBatch), storeCount = Some(nStore))
-          .join(batch0.select((col(queryIdCol).as("query_id") +:
-            col(queryVecCol).as("__qv") +: carryCols.map(col)): _*), Seq("query_id")),
-        cachePath, minCos, idOffset, carryCols, batchRowBound = nBatch)
-    }
+    val store = listStore(spark, cachePath)
+    val (batch0, looked) = pinnedLookup(spark, batch, store, minCos, idOffset,
+      queryIdCol, queryVecCol, maxExactProduct)
+    val payload = batch0.select((col(queryIdCol).as("query_id") +:
+      col(queryVecCol).as("__qv") +: carryCols.map(col)): _*)
+    val byId = Pinned.keyed(payload.collect().toSeq, 0)
+    intakeResolved(spark,
+      Pinned(spark,
+        for (l <- looked.collect().toSeq; p <- byId(l.get(0)))
+          yield Row.fromSeq(l.toSeq ++ p.toSeq.tail),
+        StructType(looked.schema.fields ++ payload.schema.fields.tail)),
+      store, minCos, idOffset, carryCols, batchRowBound = batch0.collect().length)
   }
 
   /** Steps 2–4 of [[intakeBatch]] — within-batch resolve, collision-
-    * checked insert, disposition assembly — over a PRE-COMPUTED lookup
-    * `looked0` of `(query_id, cache_id, cos, hit, __qv, carryCols*)`
-    * rows. Split out so the composed serving loop
-    * ([[CachedRag.cachedAnswerBatch]]) can feed the dispositions it
-    * already derived for its misses instead of paying a SECOND full
-    * store lookup per micro-batch (the round-15 fusion: the lookup is
-    * the probe-side cost that scales with the cache, and the loop ran
-    * it twice against the same visible view — once to route, once
-    * inside the intake). The caller owns the lookup-equivalence premise:
-    * `looked0`'s rows must be the [[routeLookup]] result against the
-    * store minus the batch's own minted ids, exactly what
-    * [[intakeBatch]] computes itself.
+    * checked insert, disposition assembly — over a PRE-COMPUTED,
+    * driver-pinned lookup `looked` of `(query_id, cache_id, cos, hit,
+    * __qv, carryCols*)` rows. Split out so the composed serving loop
+    * ([[CachedRag.cachedAnswerBatch]]) feeds the dispositions it already
+    * derived for its misses instead of paying a SECOND store lookup per
+    * micro-batch. The caller owns the lookup-equivalence premise:
+    * `looked`'s rows must be the [[routeLookup]] result against the store
+    * minus the batch's own minted ids, exactly what [[intakeBatch]]
+    * computes itself (hits never insert, so that view is the same for
+    * the whole batch and for its misses alone). `store` is the caller's
+    * listing of the cache dir, taken before the lookup. Returns the
+    * dispositions as a driver-local frame.
     */
   private[graft] def intakeResolved(
       spark: SparkSession,
-      looked0: DataFrame,
-      cachePath: String,
+      looked: DataFrame,
+      store: StoreListing,
       minCos: Double,
       idOffset: Long,
       carryCols: Seq[String],
-      batchRowBound: Long = Long.MaxValue): DataFrame = {
-    import graft.ops.Ann.materializeOnce
-    val p = new org.apache.hadoop.fs.Path(cachePath)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val looked = materializeOnce(looked0)
-    // size the resolve/insert tail from the REAL store bytes + the
-    // caller's batch-row bound (both callers already counted the batch
-    // for the lookup router, so the gate costs NO extra job; the default
-    // Long.MaxValue means "unknown" and leaves the plan untouched).
-    // disableAqeAtOne=false: the in-batch resolve can route through the
-    // banded pair path, whose checkpoint-rejoin plan trips a Spark
-    // analyzer conflicting-reference error when analyzed with AQE off.
+      batchRowBound: Long): DataFrame = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val rows = looked.collect().toSeq
+    val Seq(qi, ci, cosi, hi) = Seq("query_id", "cache_id", "cos", "hit")
+      .map(looked.schema.fieldIndex)
+    val nMiss = rows.count(!_.getBoolean(hi))
+    val vecType = looked.schema("__qv").dataType
+    // size the resolve/insert tail from the store bytes of the caller's
+    // listing + the caller's batch-row bound (no extra job, no re-listing).
+    // AQE may go at one partition on the exact pair branch only: the
+    // banded branch's checkpoint-rejoin plan trips a Spark analyzer
+    // conflicting-reference error when analyzed with AQE off.
     graft.ops.Layout.withShuffleSizedTo(spark,
-      (BigInt(batchRowBound) * ServingRowBytes)
-        .min(BigInt(Long.MaxValue)) +
-        BigInt(graft.ops.Layout.dirBytes(spark, cachePath)),
-      disableAqeAtOne = false) {
+      (BigInt(batchRowBound) * ServingRowBytes).min(BigInt(Long.MaxValue)) +
+        BigInt(store.bytes),
+      disableAqeAtOne = nMiss <= graft.ops.Dedup.MaxExactPairRows) {
     // within-batch resolve over the misses (step 2). Pair generation is
-    // the d8 selectivity law ([[graft.ops.Dedup.cosinePairsAuto]]): an
-    // exact broadcast product under 10k misses, RP-banded candidates
-    // with exact-cosine verify above — a 100k-query micro-batch must
-    // never pay a 10^10-pair nested loop. Precision stays exact; recall
-    // above the cutover is approximate EXCEPT exact duplicates (identical
-    // band keys collide in every table), which is the dominant in-batch
-    // case — and a missed near-pair only inserts both entries, never
-    // serves a wrong one.
+    // the d8 selectivity law ([[graft.ops.Dedup.cosinePairsAuto]], its
+    // size probe answered by the pinned miss count): an exact broadcast
+    // product under 10k misses, RP-banded candidates with exact-cosine
+    // verify above. Recall above the cutover is approximate EXCEPT exact
+    // duplicates (the dominant in-batch case), and a missed near-pair
+    // only inserts both entries, never serves a wrong one. The pairs stay
+    // in Spark (identical questions make them quadratic); only the
+    // one-row-per-loser result is collected.
     val misses = looked.where(!col("hit")).select(col("query_id"), col("__qv"))
-    val pairs = materializeOnce(
-      graft.ops.Dedup.cosinePairsAuto(misses, "query_id", "__qv", minCos)
-        .select(col("id_b").as("query_id"), col("id_a").as("__wq"),
-          col("cos").as("__bcos")))
-    val winnerIds = misses.select("query_id")
-      .join(pairs.select("query_id").distinct(), Seq("query_id"), "left_anti")
-    val inBatch = materializeOnce(
-      pairs.join(broadcast(winnerIds.select(col("query_id").as("__wq"))), Seq("__wq"))
-        .groupBy("query_id")
-        .agg(min(struct((-col("__bcos")).as("__nc"), col("__wq").as("__wid"))).as("__b"))
-        .select(col("query_id"),
-          (col("__b.__wid") + idOffset).cast("long").as("__in_cid"),
-          (-col("__b.__nc")).as("__in_cos")))
+    val inBatch = Pinned.keyed(
+      if (nMiss < 2) Nil
+      else {
+        val pairs = graft.ops.Dedup.cosinePairsCounted(misses, nMiss,
+            "query_id", "__qv", minCos)
+          .select(col("id_b").as("query_id"), col("id_a").as("__wq"),
+            col("cos").as("__bcos"))
+        val winnerIds = misses.select("query_id")
+          .join(pairs.select("query_id").distinct(), Seq("query_id"), "left_anti")
+        pairs.join(broadcast(winnerIds.select(col("query_id").as("__wq"))), Seq("__wq"))
+          .groupBy("query_id")
+          .agg(min(struct((-col("__bcos")).as("__nc"), col("__wq").as("__wid"))).as("__b"))
+          .select(col("query_id"), (col("__b.__wid") + idOffset).cast("long"),
+            -col("__b.__nc"))
+          .collect().toSeq
+      }, 0)
     // inserts = misses minus in-batch losers (winners AND promoted chain tails)
-    val inserts = materializeOnce(
-      looked.where(!col("hit"))
-        .join(inBatch.select("query_id"), Seq("query_id"), "left_anti")
-        .select(((col("query_id") + idOffset).cast("long").as("cache_id") +:
-          col("__qv").as("embedding") +: carryCols.map(col)): _*))
+    val inserts = looked
+      .where(!col("hit") && (col("query_id").isNull ||
+        !col("query_id").isin(inBatch.keys.toSeq: _*)))
+      .select(((col("query_id") + idOffset).cast("long").as("cache_id") +:
+        col("__qv").as("embedding") +: carryCols.map(col)): _*)
+    val insertRows = inserts.collect().toSeq
+    val insertById = Pinned.keyed(insertRows, 0)
     // id reuse is legal ONLY as an exact replay: a dropped insert whose
     // stored embedding differs is a collision — fail loudly (ADVICE r10).
-    // ONE driver action (the r11 job-budget hygiene note): the dup-key
-    // set is replay-bounded (normally EMPTY; at worst one row per insert,
-    // ids + a boolean only), so a single collect both checks the
-    // collision law and feeds the insert's replay exclusion as a scan
-    // filter — no checkpoint, no second count, no broadcast build.
+    // ONE read fetches the stored embeddings of the insert ids (a pushed-
+    // down filter); the null-safe comparison on the pinned pairs feeds
+    // both the collision law and the insert's replay exclusion.
     val dups =
-      if (!fs.exists(p)) Array.empty[org.apache.spark.sql.Row]
-      else spark.read.parquet(cachePath)
-        .select(col("cache_id"), col("embedding").as("__old"))
-        .join(broadcast(inserts.select(col("cache_id"), col("embedding").as("__new"))),
-          Seq("cache_id"))
+      if (!store.exists || insertRows.isEmpty) Nil
+      else Pinned(spark,
+          for (o <- readStore(spark, store.path, vecType)
+                .where(col("cache_id").isin(insertRows.map(_.get(0)): _*))
+                .collect().toSeq;
+              n <- insertById(o.get(0)))
+            yield Row(o.get(0), o.get(1), n.get(1)),
+          StructType(Seq(StructField("cache_id", LongType),
+            StructField("__old", vecType), StructField("__new", vecType))))
         .select(col("cache_id"), (col("__old") <=> col("__new")).as("__same"))
-        .collect()
+        .collect().toSeq
     val nCollisions = dups.count(!_.getBoolean(1))
     require(nCollisions == 0,
       s"$nCollisions cache_id collision(s): batch query ids map onto existing " +
         "cache entries holding DIFFERENT embeddings — ids may only be reused " +
         "by exact replays of the original row")
-    val dupIds = dups.map(_.getLong(0)).toSeq
-    inserts.where(!col("cache_id").isin(dupIds.map(x => x: Any): _*))
-      .write.mode("append").parquet(cachePath)
-    looked.join(broadcast(inBatch), Seq("query_id"), "left")
+    val dupIds = dups.map(_.get(0)).toSet
+    val fresh = insertRows.filterNot(r => dupIds(r.get(0)))
+    // ONE task lands the batch's entries as one file
+    if (fresh.nonEmpty)
+      Pinned(spark, fresh, inserts.schema).coalesce(1)
+        .write.mode("append").parquet(store.path)
+    Pinned.of(Pinned(spark,
+        rows.map { r =>
+          val in = inBatch(r.get(qi)).headOption
+          Row(r.get(qi), r.get(ci), r.get(cosi), r.get(hi),
+            in.map(_.get(1)).orNull, in.map(_.get(2)).orNull)
+        },
+        StructType(Seq(qi, ci, cosi, hi).map(looked.schema(_)) ++ Seq(
+          StructField("__in_cid", LongType), StructField("__in_cos", DoubleType))))
       .select(col("query_id"),
         coalesce(col("cache_id"), col("__in_cid"),
           (col("query_id") + idOffset).cast("long")).as("cache_id"),
         coalesce(col("cos"), col("__in_cos")).as("cos"),
-        (col("hit") || col("__in_cid").isNotNull).as("hit"))
+        (col("hit") || col("__in_cid").isNotNull).as("hit")))
     }
   }
 
@@ -2991,9 +2897,8 @@ object SemanticCache {
     * big products route through the banded path (precision exact; recall
     * approximate EXCEPT cos-1 re-asked questions, whose identical band
     * keys always collide; a banding-missed near-hit re-answers and
-    * re-inserts — never serves a wrong entry). Both counts are cheap
-    * (the batch is micro-batch bounded; the visible count reads one
-    * column) and caller-supplied when already known.
+    * re-inserts — never serves a wrong entry). Both counts are
+    * caller-supplied when already known (see [[routeStoreCount]]).
     *
     * The banded route runs DEEPER AND-amplification than
     * [[lookupBanded]]'s serving default (8 tables × 6 projs vs 12 × 3):
@@ -3008,13 +2913,10 @@ object SemanticCache {
     * (round-11 verdict #1: the composed serving loop was pinned to the
     * exact broadcast path and would have paid the measured 709 s/OOM
     * wall at exactly the banded-scale caches [[lookupBanded]] exists
-    * for). The default store count is VISIBLE's — one cache_id-column
-    * scan through the own-id anti-join — not the raw store's metadata
-    * count, deliberately: a crash-replayed batch finds its own first
-    * delivery's insertions in the raw store, and counting them could
-    * flip the route across the exact/banded boundary and re-derive
-    * near-hit dispositions differently; the visible count is identical
-    * on first delivery and replay by construction.
+    * for). The store count is VISIBLE's, never the raw store's: a
+    * crash-replayed batch finds its own first delivery's insertions in
+    * the raw store, and counting them could flip the route and re-derive
+    * near-hit dispositions differently.
     */
   private[graft] def routeLookup(
       batch: DataFrame,
@@ -3025,14 +2927,112 @@ object SemanticCache {
       maxExactProduct: Long = MaxExactLookupProduct,
       batchCount: Option[Long] = None,
       storeCount: Option[Long] = None): DataFrame = {
-    val exactProduct = batchCount.getOrElse(batch.count()) *
-      math.max(1L, storeCount.getOrElse(visible.count()))
-    if (exactProduct <= maxExactProduct)
+    if (isExactRoute(batchCount.getOrElse(batch.count()),
+        storeCount.getOrElse(visible.count()), maxExactProduct))
       lookup(batch, visible, minCos, queryIdCol, queryVecCol)
     else
       lookupBanded(batch, visible, minCos, queryIdCol, queryVecCol,
         nTables = 8, nProjs = 6)
   }
+
+  /** The cache dir's data files, listed ONCE per serving or intake pass:
+    * their bytes size the pass's shuffles, their parquet footers bound
+    * its row count for the route gate. */
+  private[graft] final case class StoreListing(path: String, exists: Boolean,
+      files: Seq[org.apache.hadoop.fs.FileStatus]) {
+    def bytes: Long = files.map(_.getLen).sum
+  }
+
+  private[graft] def listStore(spark: SparkSession, cachePath: String): StoreListing = {
+    val p = new org.apache.hadoop.fs.Path(cachePath)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    def data(d: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.FileStatus] =
+      fs.listStatus(d).toSeq.filterNot(e => "_.".contains(e.getPath.getName.head))
+        .flatMap(e => if (e.isDirectory) data(e.getPath) else Seq(e))
+    val exists = fs.exists(p)
+    StoreListing(cachePath, exists, if (exists) data(p) else Nil)
+  }
+
+  /** The store count [[routeLookup]] routes a pass on. The footers' row
+    * count bounds the visible rows (store minus the batch's own ids) from
+    * above, so while `nBatch × footer rows` stays within
+    * `maxExactProduct` both pick the exact route and no job runs (footers
+    * are read only until their sum passes the bound). Past it the exact
+    * `visibleCount` decides, so a crash-replay — whose first delivery's
+    * insertions sit in the raw store — takes its first delivery's route.
+    */
+  private[graft] def routeStoreCount(
+      spark: SparkSession,
+      store: StoreListing,
+      nBatch: Long,
+      maxExactProduct: Long)(visibleCount: => Long): Long = {
+    val conf = spark.sessionState.newHadoopConf()
+    val cap = maxExactProduct / math.max(1L, nBatch)
+    var rows = 0L
+    val files = store.files.iterator
+    while (files.hasNext && rows <= cap) {
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(files.next(), conf))
+      try rows += r.getRecordCount finally r.close()
+    }
+    if (math.max(1L, rows) <= cap) rows else visibleCount
+  }
+
+  /** The cache store's declared read — `(cache_id, embedding)`, plus the
+    * `answer` payload on request — with the embedding typed like the
+    * batch vectors it is compared with: no schema-inference job.
+    */
+  private[graft] def readStore(spark: SparkSession, cachePath: String,
+      vecType: org.apache.spark.sql.types.DataType,
+      withAnswer: Boolean = false): DataFrame = {
+    import org.apache.spark.sql.types._
+    spark.read.schema(StructType(
+      Seq(StructField("cache_id", LongType), StructField("embedding", vecType)) ++
+        (if (withAnswer) Seq(StructField("answer", StringType)) else Nil)))
+      .parquet(cachePath)
+  }
+
+  /** Step 1 of the intake and of the serving pass: the micro-batch is
+    * pinned ONCE and every later step reads that copy; the store minus
+    * the batch's OWN minted ids (a scan filter — the ids are on the
+    * driver) goes through [[routeLookup]], whose ≤ batch-many rows
+    * `(query_id, cache_id, cos, hit)` are pinned too. The shuffles are
+    * sized from batch rows × a generous serving-row width + the listed
+    * store bytes. Returns (batch, lookup).
+    */
+  private[graft] def pinnedLookup(
+      spark: SparkSession,
+      batch: DataFrame,
+      store: StoreListing,
+      minCos: Double,
+      idOffset: Long,
+      queryIdCol: String,
+      queryVecCol: String,
+      maxExactProduct: Long): (DataFrame, DataFrame) = {
+    val batch0 = Pinned.of(batch)
+    val nBatch = batch0.collect().length.toLong
+    val stored = if (store.exists)
+        readStore(spark, store.path, batch0.schema(queryVecCol).dataType)
+      else // bootstrap: an absent store is an empty cache with the batch's schema
+        batch0.select(col(queryIdCol).cast("long").as("cache_id"),
+          col(queryVecCol).as("embedding")).limit(0)
+    val ownIds = batch0.where(col(queryIdCol).isNotNull)
+      .select((col(queryIdCol) + idOffset).cast("long")).collect().map(_.get(0))
+    val visible = stored.where(col("cache_id").isNull || !col("cache_id").isin(ownIds: _*))
+    val nStore = routeStoreCount(spark, store, nBatch, maxExactProduct)(visible.count())
+    // AQE may go at one partition on the exact route only: the banded
+    // lookup's checkpoint-rejoin plan trips the analyzer with AQE off
+    graft.ops.Layout.withShuffleSizedTo(spark,
+      BigInt(nBatch) * ServingRowBytes + BigInt(store.bytes),
+      disableAqeAtOne = isExactRoute(nBatch, nStore, maxExactProduct)) {
+      (batch0, Pinned.of(routeLookup(batch0, visible, minCos, queryIdCol, queryVecCol,
+        maxExactProduct, batchCount = Some(nBatch), storeCount = Some(nStore))))
+    }
+  }
+
+  private[graft] def isExactRoute(nBatch: Long, nStore: Long,
+      maxExactProduct: Long): Boolean =
+    nBatch * math.max(1L, nStore) <= maxExactProduct
 
   /** [[intakeBatch]]'s exact-vs-banded lookup cutover: the largest
     * batch × cache cosine product the broadcast scan pays before the

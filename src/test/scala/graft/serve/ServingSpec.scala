@@ -430,7 +430,10 @@ class ServingSpec extends SparkSpec {
     // round-11 verdict #1's done-criterion: the composed serving loop now
     // routes through the SAME exact-vs-banded chooser as the intake, and
     // on a cos-1 re-ask fixture the two routes are value-equal (the c11b
-    // recipe applied to the RAG body)
+    // recipe applied to the RAG body). The fixture's store and batch size
+    // the pass to ONE shuffle partition, so this also pins the banded
+    // route's checkpoint-rejoin plan keeping AQE at the one-partition
+    // threshold (only the exact route may drop it)
     import org.apache.spark.sql.functions.col
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val answerMisses: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame =
@@ -1801,9 +1804,120 @@ class ServingSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  // the fused disposition pass's edges: each pins the exact dispositions
+  private def passRows(df: org.apache.spark.sql.DataFrame) =
+    df.collect().map(r => r.getLong(0) ->
+      (r.getString(2), r.getBoolean(3), r.getLong(4), r.getDouble(5))).toMap
+
+  private def echoPriced(calls: java.util.concurrent.atomic.AtomicInteger)
+      : org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame =
+    missQ => {
+      calls.incrementAndGet()
+      missQ.select(col("query_id"), col("question"),
+        concat(lit("computed: "), col("question")).as("answer"), lit(0.5).as("cost"))
+    }
+
+  test("cachedAnswerBatch all-hit batch: answerMisses never runs, answers come from the store") {
+    val cache = java.nio.file.Files.createTempDirectory("graft_pass_hit").toString + "/cache"
+    Seq((7L, Array(1.0f, 0.0f), "stored seven"), (8L, Array(0.0f, 1.0f), "stored eight"))
+      .toDF("cache_id", "embedding", "answer").write.parquet(cache)
+    val calls = new java.util.concurrent.atomic.AtomicInteger(0)
+    val got = passRows(CachedRag.cachedAnswerBatch(spark,
+      Seq((1L, "q one", Array(1.0f, 0.0f)), (2L, "q two", Array(0.0f, 2.0f)))
+        .toDF("query_id", "question", "query_vec"), cache, 0.95, echoPriced(calls)))
+    assert(got == Map(1L -> ("stored seven", true, 7L, 0.0),
+      2L -> ("stored eight", true, 8L, 0.0)), s"all-hit dispositions: $got")
+    assert(calls.get == 0, "an all-hit batch must not run the miss pipeline")
+    assert(spark.read.parquet(cache).count() == 2, "hits never insert")
+  }
+
+  test("cachedAnswerBatch all-miss batch with in-batch near-duplicates: one insert, the loser hits the winner") {
+    val cache = java.nio.file.Files.createTempDirectory("graft_pass_dup").toString + "/cache"
+    val calls = new java.util.concurrent.atomic.AtomicInteger(0)
+    val got = passRows(CachedRag.cachedAnswerBatch(spark,
+      Seq((5L, "q five", Array(1.0f, 0.0f)), (6L, "q six", Array(0.99f, 0.05f)))
+        .toDF("query_id", "question", "query_vec"), cache, 0.95, echoPriced(calls)))
+    // both miss the (absent) store and are answered; 6 is 5's in-batch
+    // near-duplicate, so it hits 5's freshly minted entry
+    assert(got == Map(5L -> ("computed: q five", false, 1000005L, 0.5),
+      6L -> ("computed: q six", true, 1000005L, 0.5)), s"all-miss dispositions: $got")
+    assert(calls.get == 1)
+    val stored = spark.read.parquet(cache)
+    assert(stored.select("cache_id", "answer").as[(Long, String)].collect().toSeq ==
+      Seq((1000005L, "computed: q five")), "ONE entry for the near-duplicate pair")
+  }
+
+  test("cachedAnswerBatch replayed batch: identical dispositions through own-id exclusion") {
+    val cache = java.nio.file.Files.createTempDirectory("graft_pass_replay").toString + "/cache"
+    Seq((7L, Array(1.0f, 0.0f), "stored seven")).toDF("cache_id", "embedding", "answer")
+      .write.parquet(cache)
+    val batch = Seq((1L, "q one", Array(1.0f, 0.0f)), (2L, "q two", Array(0.0f, 1.0f)),
+      (3L, "q three", Array(0.0f, 1.0f))).toDF("query_id", "question", "query_vec")
+    val calls = new java.util.concurrent.atomic.AtomicInteger(0)
+    val first = passRows(CachedRag.cachedAnswerBatch(spark, batch, cache, 0.95, echoPriced(calls)))
+    assert(first == Map(1L -> ("stored seven", true, 7L, 0.0),
+      2L -> ("computed: q two", false, 1000002L, 0.5),
+      3L -> ("computed: q three", true, 1000002L, 0.5)), s"first delivery: $first")
+    // the replay finds its own insertion 1000002 in the raw store; the
+    // own-id exclusion hides it, so 2 and 3 miss again exactly as before
+    val replay = passRows(CachedRag.cachedAnswerBatch(spark, batch, cache, 0.95, echoPriced(calls)))
+    assert(replay == first, s"a replayed batch must re-derive its dispositions: $replay")
+    assert(spark.read.parquet(cache).count() == 2, "the replay inserts nothing")
+  }
+
+  test("route gate: the footer bound takes the exact visible count's route just above and below it") {
+    val cache = java.nio.file.Files.createTempDirectory("graft_pass_route").toString + "/cache"
+    // 4 raw rows in two files; 2 of them are this batch's own minted ids
+    // (a crash-replay), so the visible store holds 2
+    Seq((7L, Array(1.0f, 0.0f)), (8L, Array(0.0f, 1.0f))).toDF("cache_id", "embedding")
+      .write.parquet(cache)
+    Seq((1000001L, Array(0.6f, 0.8f)), (1000002L, Array(0.8f, 0.6f)))
+      .toDF("cache_id", "embedding").write.mode("append").parquet(cache)
+    val store = SemanticCache.listStore(spark, cache)
+    val (nBatch, visible) = (2L, 2L)
+    def routed(maxExact: Long): (Boolean, Boolean) = {
+      var counted = false
+      val n = SemanticCache.routeStoreCount(spark, store, nBatch, maxExact) {
+        counted = true; visible
+      }
+      val exact = SemanticCache.isExactRoute(nBatch, n, maxExact)
+      assert(exact == SemanticCache.isExactRoute(nBatch, visible, maxExact),
+        s"maxExact $maxExact: the gate's route must be the exact visible count's")
+      (exact, counted)
+    }
+    // at the bound (2 × 4 raw rows = 8): the footers prove the exact
+    // route, no count job
+    assert(routed(8L) == ((true, false)))
+    // just above it (7 < 8): the raw rows no longer prove it, the exact
+    // visible count decides — exact (2 × 2 = 4 ≤ 7), the first delivery's
+    // route, where the raw count alone would have banded the replay
+    assert(routed(7L) == ((true, true)))
+    assert(routed(3L) == ((false, true)))
+  }
+
+  /** Jobs `body` submits, counted between two listener-bus drains (the
+    * first keeps earlier tests' queued events out of the count). */
+  private def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    org.apache.spark.ListenerBusDrain.drain(sc)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      body
+      org.apache.spark.ListenerBusDrain.drain(sc)
+      jobs.get()
+    } finally sc.removeSparkListener(listener)
+  }
+
   test("intakeBatch job budget: one micro-batch stays within its scheduling budget") {
     // the round-11 hygiene note: intakeBatch fires several driver actions
-    // per micro-batch (batch/store counts, checkpoints, the collision
+    // per micro-batch (the lookup, the in-batch resolve, the collision
     // guard, the insert). Each is cheap, but at second-scale micro-batches
     // the job-scheduling overhead compounds — this pins the TOTAL job
     // count (body + one consumer action) so a refactor that quietly adds
@@ -1815,33 +1929,22 @@ class ServingSpec extends SparkSpec {
     val batch = Seq(
       (1L, Array(1.0f, 0.0f)), (2L, Array(0.0f, 1.0f)), (3L, Array(0.6f, 0.8f))
     ).toDF("query_id", "query_vec")
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
+    val n = jobsOf {
       SemanticCache.intakeBatch(spark, batch, tmp, minCos = 0.95).collect()
-      Thread.sleep(1500) // listener bus is async; drain before reading
-      val n = jobs.get()
-      info(s"intakeBatch micro-batch issued $n jobs")
-      // measured 28: the collision check folded into one collect took the
-      // pre-fold 30 to 27, then replay-stable routing (count VISIBLE, not
-      // the raw store — a deliberate +1-job trade for route stability
-      // under crash replay) brought it to 28; +1 headroom for jitter
-      assert(n <= 29, s"intake job budget blown: $n jobs for one micro-batch")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }
+    info(s"intakeBatch micro-batch issued $n jobs")
+    // measured 9: the routed lookup (3), the two misses' in-batch resolve
+    // (4), the collision read and the insert — the batch is already local
+    // and the footer bound skips the visible count; +1 headroom for jitter
+    assert(n <= 10, s"intake job budget blown: $n jobs for one micro-batch")
   }
 
   test("cachedAnswerBatch job budget: one serving micro-batch stays pinned") {
-    // the composed loop runs the intake's jobs PLUS its own (lookup
-    // checkpoint, miss routing, answer pipeline, hit-id collect, the
-    // two answer joins) — pin the total so a refactor that quietly adds
-    // per-batch driver actions fails loudly instead of surfacing as
-    // st19 latency (the intakeBatch budget's rationale, one level up)
+    // the composed loop runs the intake's tail PLUS its own (answer
+    // pipeline, hit-answer read) — pin the total so a refactor that
+    // quietly adds per-batch driver actions fails loudly instead of
+    // surfacing as st19 latency (the intakeBatch budget's rationale, one
+    // level up)
     val tmp = java.nio.file.Files
       .createTempDirectory("graft_crag_budget").toString + "/cache"
     Seq((7L, Array(1.0f, 0.0f), "seed answer"))
@@ -1854,33 +1957,21 @@ class ServingSpec extends SparkSpec {
       missQ.select(col("query_id"), col("question"),
         concat(lit("ans "), col("question")).as("answer"),
         lit(0.01).as("cost"))
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
+    val n = jobsOf {
       CachedRag.cachedAnswerBatch(spark, batch, tmp, minCos = 0.95,
         echoMisses).collect()
-      Thread.sleep(1500) // listener bus is async; drain before reading
-      val n = jobs.get()
-      info(s"cachedAnswerBatch micro-batch issued $n jobs")
-      // measured 54: the embedded intake's 28 plus the loop's own
-      // route counts, lookup/miss/priced checkpoints, hit-id collect
-      // and the answer joins; +2 headroom for jitter
-      assert(n <= 56, s"serving-loop job budget blown: $n jobs")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }
+    info(s"cachedAnswerBatch micro-batch issued $n jobs")
+    // measured 6: the routed lookup (3), the collision read, the insert
+    // and the hit answers' read — a single miss has no in-batch pair to
+    // resolve; +2 headroom for jitter
+    assert(n <= 8, s"serving-loop job budget blown: $n jobs")
   }
 
   test("chatTurn job budget: one full chat turn stays pinned") {
     // the composition's whole per-turn driver-action cost — the number
-    // st20's latency is made of. cachedAnswerBatch's 54 plus the turn's
-    // own: the fused session-contract aggregate, the history checkpoint,
-    // the prompt/nextTurn aggregates, the output checkpoint, the
-    // idempotence anti-join read and the bucketed append.
+    // st20's latency is made of: the cache pass's jobs plus the turn's
+    // own history aggregate and bucketed append.
     val tmp = java.nio.file.Files.createTempDirectory("graft_ct_budget").toString
     val (cache, mem) = (s"$tmp/cache", s"$tmp/mem")
     val batch = Seq(
@@ -1891,24 +1982,15 @@ class ServingSpec extends SparkSpec {
       missQ.select(col("query_id"), col("question"),
         concat(lit("ans "), col("question")).as("answer"),
         lit(0.01).as("cost"))
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
+    val n = jobsOf {
       ChatRag.chatTurn(spark, batch, mem, cache, minCos = 0.95, echoMisses)
         .collect()
-      Thread.sleep(1500) // listener bus is async; drain before reading
-      val n = jobs.get()
-      info(s"chatTurn issued $n jobs")
-      // measured 42 (two-miss bootstrap turn: the embedded serving loop
-      // plus the turn's own aggregates/checkpoints/append); +4 headroom
-      assert(n <= 46, s"chat-turn job budget blown: $n jobs")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }
+    info(s"chatTurn issued $n jobs")
+    // measured 6 (two-miss bootstrap turn, nothing to read yet): the
+    // in-batch resolve (4), the cache insert and the memory append; +4
+    // headroom
+    assert(n <= 10, s"chat-turn job budget blown: $n jobs")
   }
 
   test("cache intake: carryCols persist payload columns on inserted entries") {
