@@ -3635,8 +3635,8 @@ object SparkEntry {
       require(pruned == 2L,
         s"c16 premise drifted: pruning retired $pruned rows (expected 2 — " +
           "s3's one exchange)")
-      // mergeSchema: the table deliberately straddles the optional ts
-      s.read.option("mergeSchema", "true").parquet(mem)
+      // the table deliberately straddles the optional ts
+      graft.serve.PartitionedTable.read(s, mem)
         .select("session_id", "turn", "role", "content", "ts")
         .orderBy("session_id", "turn")
     }

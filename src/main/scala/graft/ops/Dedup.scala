@@ -427,7 +427,8 @@ object Dedup extends IndexLifecycle {
     Layout.withShuffleSizedTo(spark, Layout.planBytes(docs) * 4) {
     val exploded = Ann.materializeOnce(
       shingleExplode(docs, idCol, textCol, shingleSize)
-        .repartition(col(idCol)).select(col(idCol).as("doc_id"), col("__h")))
+        .repartition(col(idCol))
+        .select(col(idCol).cast("long").as("doc_id"), col("__h")))
     // ONE signature aggregate feeds both the band surface and the sigs/
     // table (the estimated-verify side) — materialized so neither write
     // re-runs it
@@ -448,7 +449,7 @@ object Dedup extends IndexLifecycle {
         .write.mode("overwrite").parquet(s"$path/bands"),
       () => sigs.write.mode("overwrite").parquet(s"$path/sigs"),
       () => exploded.write.mode("overwrite").parquet(s"$path/shingles"),
-      () => docs.select(col(idCol).as("doc_id")).distinct()
+      () => docs.select(col(idCol).cast("long").as("doc_id")).distinct()
         .write.mode("overwrite").parquet(s"$path/docs"),
       () => Seq((shingleSize, numHashes, bands))
         .toDF("shingle_size", "num_hashes", "bands")
@@ -513,7 +514,9 @@ object Dedup extends IndexLifecycle {
     * ledger-filtered parts (`freshIds` = `doc_id`s not yet in `docs/`;
     * `exploded`/`sigs` restricted to them). Same crash-window discipline:
     * data tables append BEFORE the `docs/` ledger, so a crash between
-    * them replays to exact row copies every probe folds.
+    * them replays to exact row copies every probe folds. Ids land as
+    * BIGINT whatever the caller's id type, the type the declared readers
+    * expect.
     */
   private[graft] def appendPartsToStore(
       path: String,
@@ -522,17 +525,18 @@ object Dedup extends IndexLifecycle {
       sigs: DataFrame,
       numHashes: Int,
       bands: Int): Unit = {
+    def stored(df: DataFrame) = df.withColumn("doc_id", col("doc_id").cast("long"))
     // the three DATA appends are order-free among themselves (the crash
     // law above only orders data-before-LEDGER), so they land
     // concurrently (guide §2.6); the docs/ ledger append stays strictly
     // last — it is what makes a replayed batch skip these ids
     Layout.mapConcurrently[() => Unit, Unit](Seq(
-      () => bandsOfSigs(sigs, "doc_id", numHashes, bands)
+      () => bandsOfSigs(stored(sigs), "doc_id", numHashes, bands)
         .write.mode("append").parquet(s"$path/bands"),
-      () => sigs.write.mode("append").parquet(s"$path/sigs"),
-      () => exploded.write.mode("append").parquet(s"$path/shingles")),
+      () => stored(sigs).write.mode("append").parquet(s"$path/sigs"),
+      () => stored(exploded).write.mode("append").parquet(s"$path/shingles")),
       parallelism = 3)(_())
-    freshIds.write.mode("append").parquet(s"$path/docs")
+    stored(freshIds).write.mode("append").parquet(s"$path/docs")
   }
 
   /** The stored band surface with tombstoned docs excluded — every store

@@ -638,9 +638,10 @@ object Layout {
     } finally pool.shutdown()
   }
 
-  /** Advance a digit-named retention-horizon marker (`<root>/_retention/
-    * <horizon>`, max wins) — the audit convention shared by the
-    * disposition ledger, the memory table, and the chat log. Idempotent
+  /** Advance a digit-named monotone marker (`<root>/<name>/<horizon>`,
+    * max wins) — the `_retention` audit convention shared by the
+    * disposition ledger, the memory table, and the chat log, and the
+    * `_recency` fold high-water mark. Idempotent
     * and monotone: an existing marker at or above `horizon` is kept
     * untouched (never regressed), otherwise the new marker lands FIRST
     * and older ones are swept after — a crash mid-advance leaves at
@@ -652,8 +653,9 @@ object Layout {
   def advanceRetentionMarker(
       fs: org.apache.hadoop.fs.FileSystem,
       root: org.apache.hadoop.fs.Path,
-      horizon: Long): Unit = {
-    val retDir = new org.apache.hadoop.fs.Path(root, "_retention")
+      horizon: Long,
+      name: String = "_retention"): Unit = {
+    val retDir = new org.apache.hadoop.fs.Path(root, name)
     fs.mkdirs(retDir)
     val old = fs.listStatus(retDir).toSeq.filter(_.isFile)
       .map(_.getPath.getName)
@@ -669,7 +671,7 @@ object Layout {
 
   /** Read a digit-named max-wins marker dir (`<root>/<name>/<value>`,
     * highest value wins) — the ONE copy of the marker convention shared
-    * by `_nbuckets`, `_daywidth`, and `_retention` readers (it was
+    * by `_nbuckets`, `_daywidth`, `_retention` and `_recency` readers (it was
     * re-implemented per site, one of them with a needless sort).
     * Non-digit names are foreign files and ignored; a missing dir is
     * simply "never recorded".

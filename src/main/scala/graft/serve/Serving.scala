@@ -480,6 +480,218 @@ object CachedRag {
       }
 }
 
+/** The ONE layout law of the two conversation stores — the memory table
+  * (`sbucket=` hash partitions, `_nbuckets` marker) and the chat log
+  * (`day=` partitions, `_daywidth` marker). A table is a root of
+  * `prefix`-named partition dirs plus hidden root sidecars: the recorded
+  * partitioning constant as a digit-named `marker/<v>` (max wins), the
+  * `_batches` stream ledger, `_retention`. A root holding flat data files
+  * and no partition dirs is the LEGACY shape each store serves through its
+  * own legacy arm. Every mutation follows the house swap discipline
+  * ([[graft.ops.Layout.swapDir]]): a partition rewrite stages then swaps,
+  * an emptied partition retires by rename-aside, and a whole-table
+  * migration stages a complete generation (marker and root sidecars
+  * included) and swaps the root once. Single-writer, like every
+  * maintenance op.
+  */
+private[graft] final case class PartitionedTable(prefix: String, marker: String) {
+  import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+
+  private def isPartitionDir(e: FileStatus): Boolean =
+    e.isDirectory && e.getPath.getName.startsWith(prefix)
+
+  /** True when the table at `root` is read/written partitioned: a new
+    * table, or one that already has partition dirs. Flat data files and
+    * no partition dirs is the legacy shape.
+    */
+  def isPartitioned(fs: FileSystem, root: Path): Boolean = {
+    if (!fs.exists(root)) return true
+    val entries = fs.listStatus(root).toSeq
+    entries.exists(isPartitionDir) || !entries.exists(e =>
+      e.isFile && !e.getPath.getName.startsWith("_") &&
+        !e.getPath.getName.startsWith(".") && e.getLen > 0)
+  }
+
+  def partitionDirs(fs: FileSystem, root: Path): Seq[Path] =
+    fs.listStatus(root).toSeq.filter(isPartitionDir).map(_.getPath)
+
+  /** The recorded table constant — the ONE reader of the marker, so turns,
+    * deletes and retention all target the partitions the rows were
+    * written to.
+    */
+  def recorded(fs: FileSystem, root: Path): Option[Long] =
+    graft.ops.Layout.readMaxDigitMarker(fs, root, marker)
+
+  /** Record the constant BEFORE the first data write: a crash between
+    * append and marker would otherwise let a later caller re-derive a
+    * different value from its parameter.
+    */
+  def record(fs: FileSystem, root: Path, value: Long): Unit =
+    graft.ops.Layout.writeDigitMarker(fs, root, marker, value)
+
+  /** The constant a write must use: the recorded value WINS over the
+    * caller's `requested` (which sizes NEW tables only). A markerless
+    * table that ALREADY has partition dirs (written directly with
+    * partitionBy, or by any path that bypassed [[record]]) is the exact
+    * hazard the marker guards — nothing can verify the parameter against
+    * how the rows were actually assigned (a wrong fan-out silently splits
+    * every session's history; a wrong width mis-targets retention's
+    * partition drops) — so it refuses loudly, naming `migration`, the
+    * store's whole-table rewrite that records the value by construction.
+    */
+  def effective(fs: FileSystem, root: Path, requested: Long,
+      migration: String): Long =
+    recorded(fs, root).getOrElse {
+      require(!fs.exists(root) || !fs.listStatus(root).exists(isPartitionDir),
+        s"$root has $prefix dirs but no $marker marker — the partitioning " +
+          "constant cannot be inferred from a parameter (a wrong guess " +
+          "silently mis-targets partitions). Record the true value as " +
+          s"$marker/<v>, or rewrite through $migration, which records it " +
+          "correctly by construction")
+      requested
+    }
+
+  /** Heal-or-sweep every partition dir's crashed-swap leftovers under
+    * `root` (ADVICE r14 #1): a retire that crashed between its
+    * rename-aside and delete strands the condemned rows in a hidden
+    * `.<prefix>N.__old` that no later op targets (the partition dir itself
+    * is absent, so exists-filters skip it) — a retried delete would report
+    * success while the forgotten rows persisted. One root listing finds
+    * every hidden sibling; [[graft.ops.Layout.healOrSweepSwap]] dispatches
+    * per crash signature. Runs at the top of every partition-rewriting
+    * lifecycle op, so whichever op touches the table next recovers it.
+    */
+  def healLeftovers(fs: FileSystem, root: Path): Unit = {
+    graft.ops.Layout.sweepSwapSiblings(fs, root,
+      java.util.regex.Pattern.quote(prefix) + "[^/]+")
+    ()
+  }
+
+  /** RETIRE a partition dir whose every row goes: the dir disappears
+    * rather than swap to an empty dir (a part-file-less dir fails schema
+    * inference on the next read, and an absent dir is exactly the
+    * never-written path). A single rename-aside — readers never see a
+    * partial dir — then the delete; a crash between them is healed by
+    * [[healLeftovers]].
+    */
+  def retire(fs: FileSystem, dir: Path): Unit = {
+    val aside = graft.ops.Layout.swapSiblings(dir)._2
+    if (fs.exists(aside)) fs.delete(aside, true)
+    fs.rename(dir, aside)
+    fs.delete(aside, true)
+    ()
+  }
+
+  /** Filter-rewrite ONE partition dir through the house swap discipline:
+    * `transform` decides what SURVIVES; an emptied dir is [[retire]]d.
+    * Returns (rows before, rows after); an identity transform leaves the
+    * dir byte-untouched. No localCheckpoint: every read (two counts + the
+    * staged write) completes against the untouched live dir BEFORE the
+    * swap, so the partition is never pinned whole in the block manager —
+    * three bounded scans of one dir beat capping the rewrite at executor
+    * storage when a partition has grown large.
+    */
+  def rewriteDir(spark: SparkSession, fs: FileSystem, dir: Path,
+      transform: DataFrame => DataFrame): (Long, Long) = {
+    val before = PartitionedTable.read(spark, dir.toString)
+    val kept = transform(before)
+    val nBefore = before.count()
+    val nAfter = kept.count()
+    if (nAfter == 0L) retire(fs, dir)
+    else if (nAfter < nBefore) {
+      val staged = graft.ops.Layout.compactStaging(fs, dir.toString)
+      kept.write.mode("overwrite").parquet(staged)
+      graft.ops.Layout.swapDir(fs, dir.toString, staged)
+    }
+    (nBefore, nAfter)
+  }
+
+  /** [[rewriteDir]] over many partitions, submitted concurrently — the
+    * same disjoint-dirs argument as
+    * [[graft.ops.Layout.compactSmallFilesAll]]: each rewrite is a small
+    * single-writer job on its own directory, and a serial loop pays
+    * per-job setup latency per partition (measured: ~60 sequential bucket
+    * rewrites dominated a 100-session delete). Returns rows removed; the
+    * first failed rewrite rethrows after the pool drains.
+    */
+  def rewriteDirsAll(spark: SparkSession, fs: FileSystem, dirs: Seq[Path],
+      transform: DataFrame => DataFrame, parallelism: Int = 8): Long =
+    graft.ops.Layout.mapConcurrently(dirs, parallelism) { d =>
+      val (b, a) = rewriteDir(spark, fs, d, transform)
+      b - a
+    }.sum
+
+  /** The whole-table rewrite into this layout — re-partitioning a table
+    * under a new constant `value`, and, as the from-nothing special case,
+    * the one-shot MIGRATION of a legacy flat table. The ONE writer allowed
+    * to change the marker: it rewrites the whole generation (new partition
+    * dirs, exactly one marker) behind the house swap, so every reader sees
+    * the old layout with the old marker or the new with the new, never a
+    * mix. `partition` adds the partition column to the table's data
+    * columns (a partitioned table's old column is dropped first). The
+    * write is one streaming pass over the untouched live root —
+    * materializing the state through the block manager would cap the
+    * rewrite at executor storage — and plans no Exchange. Root sidecars
+    * are copied into the stage ([[installStaged]]), so the stream ledger
+    * survives and a replayed micro-batch still no-ops afterwards.
+    *
+    * Entry first HEALS a previous migration's crashed swap (ADVICE r14
+    * #3): a crash inside the swap window leaves the root absent with the
+    * staged generation complete (the swap only begins after the staged
+    * write, the marker and the sidecar copies all landed), so
+    * [[graft.ops.Layout.healOrSweepSwap]] finishes it and the retry
+    * proceeds — or no-ops at the same value, which is allowed.
+    */
+  def migrate(spark: SparkSession, path: String, op: String, value: Long)(
+      partition: DataFrame => DataFrame): Unit = {
+    val root = new Path(path)
+    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    graft.ops.Layout.healOrSweepSwap(fs, root)
+    require(fs.exists(root), s"$op: $path does not exist")
+    val column = prefix.stripSuffix("=")
+    val staged = graft.ops.Layout.compactStaging(fs, path)
+    partition(PartitionedTable.read(spark, path).drop(column))
+      .write.mode("overwrite").partitionBy(column).parquet(staged)
+    graft.ops.Layout.writeDigitMarker(fs, new Path(staged), marker, value)
+    PartitionedTable.installStaged(spark, fs, root, staged)
+  }
+}
+
+private[graft] object PartitionedTable {
+  import org.apache.hadoop.fs.{FileSystem, Path}
+
+  val Memory = PartitionedTable("sbucket=", "_nbuckets")
+  val Log = PartitionedTable("day=", "_daywidth")
+
+  /** The ONE schema-merging read of a conversation-store table (or of
+    * some of its partition dirs): memory appends straddle the optional
+    * `ts` column and the log carries caller-chosen columns, so no
+    * declared schema covers every table yet. Serving reads that know
+    * their columns (the chat turn's slice) declare them instead.
+    */
+  def read(spark: SparkSession, paths: String*): DataFrame =
+    spark.read.option("mergeSchema", "true").parquet(paths: _*)
+
+  /** Install a complete staged generation of `root`: COPY the root
+    * sidecars (hidden `_` entries other than `_SUCCESS`) the stage does
+    * not already hold into it — the live root stays whole until the swap,
+    * so a crash anywhere before it loses nothing — then the single
+    * [[graft.ops.Layout.swapDir]].
+    */
+  def installStaged(spark: SparkSession, fs: FileSystem, root: Path,
+      staged: String): Unit = {
+    val conf = spark.sessionState.newHadoopConf()
+    fs.listStatus(root).toSeq.map(_.getPath)
+      .filter { p =>
+        val n = p.getName
+        n.startsWith("_") && n != "_SUCCESS" && !fs.exists(new Path(staged, n))
+      }
+      .foreach(p => org.apache.hadoop.fs.FileUtil.copy(fs, p, fs,
+        new Path(staged, p.getName), false, true, conf))
+    graft.ops.Layout.swapDir(fs, root.toString, staged)
+  }
+}
+
 /** EP6 — the reference's full CHAT shape (app.py:227-256: memory load →
   * prompt assembly → answer → memory append) composed AROUND the cached
   * serving loop: every stage is oracled standalone (c1/c2/c4 memory +
@@ -522,69 +734,11 @@ object ChatRag {
   /** The bucket count is a TABLE constant, not a per-call knob: reads
     * target bucket DIRECTORIES by recomputing the session hash, so a
     * later call with a different count would silently miss part of the
-    * history. The count is recorded at first write as a digit-named
-    * marker (`_nbuckets/<n>` — the ledger-file convention, hidden from
-    * reads), and the recorded value WINS over the parameter thereafter;
-    * `memoryBuckets` sizes NEW tables only.
+    * history. The count is recorded at first write as the `_nbuckets`
+    * marker of [[PartitionedTable.Memory]], and the recorded value WINS
+    * over the parameter thereafter; `memoryBuckets` sizes NEW tables only.
     */
-  /** The recorded `_nbuckets` table constant, when one exists (max wins
-    * across marker files — the digit-marker convention). The ONE reader
-    * of the marker: [[effectiveBuckets]] and [[deleteSessions]] MUST
-    * agree on it, or deletes would target different buckets than turns
-    * write.
-    */
-  private def recordedBuckets(
-      fs: org.apache.hadoop.fs.FileSystem,
-      mp: org.apache.hadoop.fs.Path): Option[Int] =
-    graft.ops.Layout.readMaxDigitMarker(fs, mp, "_nbuckets").map(_.toInt)
-
-  private def effectiveBuckets(
-      fs: org.apache.hadoop.fs.FileSystem,
-      mp: org.apache.hadoop.fs.Path,
-      requested: Int): Int = {
-    recordedBuckets(fs, mp).getOrElse {
-      // A markerless table that ALREADY has sbucket= dirs (written
-      // directly with partitionBy, or any path that bypassed the
-      // append's recordBuckets) is the exact hazard the marker guards —
-      // and NOTHING can verify the caller's parameter against how the
-      // rows were actually hashed (a table written mod 32 and first read
-      // with the default 16 would freeze a WRONG constant, silently
-      // splitting every session's history and part-missing later
-      // deletes). Refuse loudly: record the true fan-out explicitly, or
-      // rewrite through rebucketMemoryTable, which records it correctly
-      // by construction.
-      require(!fs.exists(mp) || !fs.listStatus(mp).exists(e =>
-          e.isDirectory && e.getPath.getName.startsWith("sbucket=")),
-        s"memory table $mp has sbucket= dirs but no _nbuckets marker — " +
-          "the fan-out cannot be inferred from a parameter (a wrong " +
-          "guess silently splits history). Record the true count as " +
-          "_nbuckets/<n>, or rewrite through rebucketMemoryTable")
-      requested
-    }
-  }
-
-  private def recordBuckets(
-      fs: org.apache.hadoop.fs.FileSystem,
-      mp: org.apache.hadoop.fs.Path,
-      n: Int): Unit =
-    graft.ops.Layout.writeDigitMarker(fs, mp, "_nbuckets", n.toLong)
-
-  /** True when the table at `mp` should be read/written bucketed: a new
-    * table, or one that already has `sbucket=` partition dirs. A table
-    * holding flat data files and no bucket dirs is legacy.
-    */
-  private def isBucketed(
-      fs: org.apache.hadoop.fs.FileSystem,
-      mp: org.apache.hadoop.fs.Path): Boolean = {
-    if (!fs.exists(mp)) return true
-    val entries = fs.listStatus(mp).toSeq
-    val hasBucketDirs = entries.exists(e =>
-      e.isDirectory && e.getPath.getName.startsWith("sbucket="))
-    val hasFlatData = entries.exists(e =>
-      e.isFile && !e.getPath.getName.startsWith("_") &&
-        !e.getPath.getName.startsWith(".") && e.getLen > 0)
-    hasBucketDirs || !hasFlatData
-  }
+  private val layout = PartitionedTable.Memory
 
   /** One chat TURN for a batch of sessions — ONE question per session per
     * turn (the reference's chat contract; several sessions serve in
@@ -671,10 +825,11 @@ object ChatRag {
         s"${multi.map(_._2.size).mkString(",")} questions")
     val mp = new org.apache.hadoop.fs.Path(memoryPath)
     val fs = mp.getFileSystem(spark.sessionState.newHadoopConf())
-    val bucketed = isBucketed(fs, mp)
+    val bucketed = layout.isPartitioned(fs, mp)
     // the table's recorded fan-out wins over the parameter (a mismatched
-    // count would silently miss history — see effectiveBuckets)
-    val nBuckets = if (bucketed) effectiveBuckets(fs, mp, memoryBuckets)
+    // count would silently miss history — see PartitionedTable.effective)
+    val nBuckets =
+      if (bucketed) layout.effective(fs, mp, memoryBuckets, "rebucketMemoryTable").toInt
       else memoryBuckets
     // the touched buckets' existence, probed ONCE for the slice read, the
     // sizing gate and the sidecar bootstrap (single writer: it holds)
@@ -741,7 +896,8 @@ object ChatRag {
     // makes the normal path exactly-once.
     // `turnTs` stamps an append-time `ts` column, the age signal of
     // [[pruneIdleSessions]]; unstamped callers write the original 4
-    // columns, and every rewrite reads mixed tables through mergeSchema.
+    // columns, and every rewrite reads mixed tables through
+    // PartitionedTable.read.
     val appendBase = out.select(col("session_id"),
         explode(array(
           struct(col("turn"), lit("user").as("role"),
@@ -758,10 +914,8 @@ object ChatRag {
     // user+assistant pair shares a bucket, so each session's turn stays
     // all-or-nothing within one file commit. Legacy: one flat file.
     if (bucketed) {
-      // record the fan-out BEFORE the first append: a crash between
-      // append and marker would otherwise let a later caller re-derive
-      // a different count from its parameter
-      recordBuckets(fs, mp, nBuckets)
+      // record the fan-out BEFORE the first append (PartitionedTable.record)
+      layout.record(fs, mp, nBuckets)
       appendRows.withColumn("sbucket", bucketExpr(nBuckets))
         .coalesce(1).write.mode("append").partitionBy("sbucket")
         .parquet(memoryPath)
@@ -792,7 +946,7 @@ object ChatRag {
         // merges only size-peer small files, so a firing's cost tracks the
         // fresh turn files, never the whole state
         graft.ops.Layout.compactSmallFilesAll(spark,
-          graft.ops.Layout.dueSubdirs(spark, memoryPath, pol, "sbucket="),
+          graft.ops.Layout.dueSubdirs(spark, memoryPath, pol, layout.prefix),
           targetBytes = pol.smallFileBytes * 8)
         ()
       }
@@ -956,101 +1110,12 @@ object ChatRag {
       }
   }
 
-  /** Filter-rewrite ONE bucket dir through the house swap discipline
-    * (materialize-then-swap; [[graft.ops.Layout.swapDir]]'s reader
-    * contract): `transform` decides what SURVIVES. A bucket whose rows
-    * all go is RETIRED — the dir disappears rather than swap to an
-    * empty dir (a part-file-less dir fails schema inference on the next
-    * slice read, and an absent dir is exactly the brand-new-session
-    * path). Returns (rows before, rows after); an identity transform
-    * leaves the dir byte-untouched.
-    */
-  private[serve] def rewriteBucketDir(
-      spark: SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem,
-      dir: org.apache.hadoop.fs.Path,
-      transform: DataFrame => DataFrame): (Long, Long) = {
-    // mergeSchema: buckets whose appends straddle the optional `ts`
-    // column (see chatTurn's turnTs) must not drop it in the rewrite.
-    // No localCheckpoint: every read (two counts + the staged write)
-    // completes against the untouched live dir BEFORE the swap, so the
-    // bucket is never pinned whole in the block manager — three bounded
-    // scans of one bucket dir beat capping the rewrite at executor
-    // storage when a bucket has grown rebucket-large.
-    val before = spark.read.option("mergeSchema", "true")
-      .parquet(dir.toString)
-    val kept = transform(before)
-    val nBefore = before.count()
-    val nAfter = kept.count()
-    if (nAfter == 0L) {
-      val aside = new org.apache.hadoop.fs.Path(
-        dir.getParent, s".${dir.getName}.__old")
-      if (fs.exists(aside)) fs.delete(aside, true)
-      fs.rename(dir, aside) // single rename: readers never see a partial dir
-      fs.delete(aside, true)
-    } else if (nAfter < nBefore) {
-      val staged = graft.ops.Layout.compactStaging(fs, dir.toString)
-      kept.write.mode("overwrite").parquet(staged)
-      graft.ops.Layout.swapDir(fs, dir.toString, staged)
-    }
-    (nBefore, nAfter)
-  }
-
-  /** [[rewriteBucketDir]] over many buckets, submitted concurrently —
-    * the same disjoint-dirs argument as
-    * [[graft.ops.Layout.compactSmallFilesAll]]: each rewrite is a small
-    * single-writer job on its own directory, and a serial loop pays
-    * per-job setup latency per bucket (measured: ~60 sequential bucket
-    * rewrites dominated a 100-session delete). Returns rows removed;
-    * the first failed rewrite rethrows after the pool drains.
-    */
-  private[serve] def rewriteBucketDirsAll(
-      spark: SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem,
-      dirs: Seq[org.apache.hadoop.fs.Path],
-      transform: DataFrame => DataFrame,
-      parallelism: Int = 8): Long =
-    graft.ops.Layout.mapConcurrently(dirs, parallelism) { d =>
-      val (b, a) = rewriteBucketDir(spark, fs, d, transform)
-      b - a
-    }.sum
-
-  /** Heal-or-sweep every bucket dir's crashed-swap leftovers under the
-    * table root (ADVICE r14 #1): a retire that crashed between its
-    * rename-aside and delete strands the condemned rows in a hidden
-    * `.sbucket=N.__old` that no later op targets (the bucket dir itself is
-    * absent, so exists-filters skip it) — a retried deleteSessions would
-    * report success while the forgotten rows persisted. One root listing
-    * finds every hidden sibling; [[graft.ops.Layout.healOrSweepSwap]]
-    * dispatches per crash signature (finish a committed swap, sweep a
-    * condemned aside or an uncommitted stage). Runs at the top of every
-    * bucket-rewriting lifecycle op, so a crash is recovered by whichever
-    * maintenance action touches the table next.
-    */
-  private def healBucketLeftovers(
-      fs: org.apache.hadoop.fs.FileSystem,
-      mp: org.apache.hadoop.fs.Path): Unit =
-    healPartitionLeftovers(fs, mp, "sbucket=")
-
-  /** The generic form of the sweep above, shared with [[ChatLog]]'s
-    * `day=`-partitioned layout: heal-or-sweep every `prefix`-named
-    * partition dir's hidden swap siblings under `root`.
-    */
-  private[serve] def healPartitionLeftovers(
-      fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path,
-      prefix: String): Unit = {
-    graft.ops.Layout.sweepSwapSiblings(fs, root,
-      java.util.regex.Pattern.quote(prefix) + "[^/]+")
-    ()
-  }
-
   private def requireBucketedFor(
       op: String,
       fs: org.apache.hadoop.fs.FileSystem,
       mp: org.apache.hadoop.fs.Path,
       memoryPath: String): Unit =
-    require(isBucketed(fs, mp),
+    require(layout.isPartitioned(fs, mp),
       s"$op: $memoryPath is a legacy flat memory table — run " +
         "rebucketMemoryTable first (the ledger-preserving one-shot " +
         "migration); selective rewrites need the bucketed layout to " +
@@ -1093,27 +1158,24 @@ object ChatRag {
     // recover any crashed rewrite/retire FIRST: a lingering
     // `.sbucket=N.__old` from a crashed retire holds exactly the rows a
     // retried delete exists to remove (ADVICE r14 #1)
-    healBucketLeftovers(fs, mp)
+    layout.healLeftovers(fs, mp)
     // bucket rewrites sized from the table's real bytes
     // (Layout.withShuffleSizedTo) — a KB-scale memory table was paying a
     // 32-way fan-out per touched bucket; a grown table keeps its plan
     graft.ops.Layout.withShuffleSizedTo(spark,
       BigInt(graft.ops.Layout.dirBytes(spark, memoryPath)),
       disableAqeAtOne = false) {
-    val dirs = recordedBuckets(fs, mp) match {
+    val dirs = layout.recorded(fs, mp) match {
       case Some(n) =>
-        sessionIds.map(sessionBucket(_, n)).distinct.sorted
+        sessionIds.map(sessionBucket(_, n.toInt)).distinct.sorted
           .map(b => new org.apache.hadoop.fs.Path(mp, s"sbucket=$b"))
           .filter(fs.exists(_))
-      case None =>
-        fs.listStatus(mp).toSeq
-          .filter(e => e.isDirectory && e.getPath.getName.startsWith("sbucket="))
-          .map(_.getPath)
+      case None => layout.partitionDirs(fs, mp)
     }
     // null-safe keep: `!isin` alone is NULL for a null key, which would
     // silently destroy (and count) every null-session row in the bucket
     val trackedBefore = dirs.filter(d => RecencySidecar.isTracked(fs, d)).toSet
-    val removed = rewriteBucketDirsAll(spark, fs, dirs,
+    val removed = layout.rewriteDirsAll(spark, fs, dirs,
       df => df.where(col("session_id").isNull ||
         !col("session_id").isin(sessionIds: _*)))
     // a swapped bucket loses its recency sidecar with the replaced dir —
@@ -1129,15 +1191,10 @@ object ChatRag {
   /** Re-fan-out the memory table (round-13 missing #2) — and, as the
     * from-nothing special case, the one-shot MIGRATION of a legacy flat
     * table into the bucketed layout (round-13 missing #3, retiring the
-    * "replay by hand" advice). The recorded-count-wins law stays intact:
-    * this is the ONE writer allowed to change `_nbuckets`, and it does so
-    * by rewriting the whole generation — new `sbucket=` dirs, exactly one
-    * marker — behind the house swap, so every reader sees either the old
-    * fan-out with the old marker or the new with the new, never a mix.
-    * Root-level sidecars (`_batches` stream ledger, `_retention`) are
-    * COPIED into the staged generation before the swap — the live root
-    * stays whole until the single swap rename, and the ledger survives
-    * the migration (a replayed micro-batch still no-ops afterwards).
+    * "replay by hand" advice) — through [[PartitionedTable.migrate]]: the
+    * ONE writer allowed to change `_nbuckets`, one staged generation with
+    * exactly one marker and the root sidecars (`_batches` stream ledger,
+    * `_retention`) copied in, installed by a single swap.
     *
     * Full-state rewrite by design — the rare, explicit maintenance action
     * (a 100×-grown deployment widens 16 → 256 once), not a per-turn cost.
@@ -1151,55 +1208,8 @@ object ChatRag {
       newBuckets: Int): Unit = {
     require(newBuckets > 0,
       s"rebucketMemoryTable: newBuckets $newBuckets must be > 0")
-    val mp = new org.apache.hadoop.fs.Path(memoryPath)
-    val conf = spark.sessionState.newHadoopConf()
-    val fs = mp.getFileSystem(conf)
-    // HEAL a crashed swap of a PREVIOUS rebucket before the existence
-    // check (ADVICE r14 #3): a crash inside swapDir's two-rename window
-    // leaves the table root absent with the staged generation complete
-    // (the swap only begins after the staged write, its `_nbuckets`
-    // marker, and the sidecar copies all landed), and the bare
-    // require(exists) refused the retry with no recovery path short of
-    // hand-renaming hidden siblings. healOrSweepSwap finishes the swap
-    // (live absent + stage + aside ⇒ rename stage live), after which the
-    // retry proceeds — or no-ops at the same width, which is allowed.
-    graft.ops.Layout.healOrSweepSwap(fs, mp)
-    require(fs.exists(mp), s"rebucketMemoryTable: $memoryPath does not exist")
-    // partition discovery surfaces the old `sbucket` column on a bucketed
-    // table; a legacy flat table has none. Either way the DATA columns
-    // carry over verbatim (mergeSchema keeps a straddled `ts`).
-    // no localCheckpoint: the staged write is ONE streaming pass over the
-    // live root, which stays untouched until the single swap after the
-    // write completes — materializing the whole state through the block
-    // manager would cap rebucket at executor storage, the wrong bound for
-    // the full-state maintenance action
-    val data = spark.read.option("mergeSchema", "true").parquet(memoryPath)
-      .drop("sbucket")
-    val staged = graft.ops.Layout.compactStaging(fs, memoryPath)
-    val sp = new org.apache.hadoop.fs.Path(staged)
-    // the one streaming rewrite pass, sized from the table's real bytes
-    // (full-state by design — at scale the gate leaves the plan alone)
-    graft.ops.Layout.withShuffleSizedTo(spark,
-      BigInt(graft.ops.Layout.dirBytes(spark, memoryPath)),
-      disableAqeAtOne = false) {
-      data.withColumn("sbucket", bucketExpr(newBuckets))
-        .write.mode("overwrite").partitionBy("sbucket").parquet(staged)
-    }
-    val nd = new org.apache.hadoop.fs.Path(sp, "_nbuckets")
-    fs.mkdirs(nd)
-    fs.create(new org.apache.hadoop.fs.Path(nd, newBuckets.toString), true)
-      .close()
-    fs.listStatus(mp).toSeq
-      .filter { e =>
-        val n = e.getPath.getName
-        n.startsWith("_") && n != "_nbuckets" && n != "_SUCCESS"
-      }
-      .foreach { e =>
-        org.apache.hadoop.fs.FileUtil.copy(fs, e.getPath, fs,
-          new org.apache.hadoop.fs.Path(sp, e.getPath.getName),
-          false, true, conf)
-      }
-    graft.ops.Layout.swapDir(fs, memoryPath, staged)
+    layout.migrate(spark, memoryPath, "rebucketMemoryTable", newBuckets)(
+      _.withColumn("sbucket", bucketExpr(newBuckets)))
   }
 
   /** Idle-session retention for the memory table (round-13 missing #4):
@@ -1241,15 +1251,13 @@ object ChatRag {
     val fs = mp.getFileSystem(spark.sessionState.newHadoopConf())
     if (!fs.exists(mp)) return 0L
     requireBucketedFor("pruneIdleSessions", fs, mp, memoryPath)
-    healBucketLeftovers(fs, mp)
+    layout.healLeftovers(fs, mp)
     graft.ops.Layout.advanceRetentionMarker(fs, mp, beforeTs)
     // bucket rewrites sized from the table's real bytes (see deleteSessions)
     graft.ops.Layout.withShuffleSizedTo(spark,
       BigInt(graft.ops.Layout.dirBytes(spark, memoryPath)),
       disableAqeAtOne = false) {
-    val bucketDirs = fs.listStatus(mp).toSeq
-      .filter(e => e.isDirectory && e.getPath.getName.startsWith("sbucket="))
-      .map(_.getPath)
+    val bucketDirs = layout.partitionDirs(fs, mp)
     // the recency sidecar GATES which buckets scan (round-14 verdict #2):
     // a tracked bucket whose folded state shows no candidate — no session
     // fully stamped with max below the horizon — is skipped without
@@ -1264,7 +1272,7 @@ object ChatRag {
       !RecencySidecar.isTracked(fs, d) ||
         RecencySidecar.hasCandidate(fs, d, beforeTs)
     }
-    val pruned = rewriteBucketDirsAll(spark, fs, scan,
+    val pruned = layout.rewriteDirsAll(spark, fs, scan,
       df =>
         if (!df.columns.contains("ts")) df // untimed bucket: nothing ages
         else {
@@ -1312,12 +1320,9 @@ object ChatRag {
     val mp = new org.apache.hadoop.fs.Path(memoryPath)
     val fs = mp.getFileSystem(spark.sessionState.newHadoopConf())
     val exists = fs.exists(mp)
-    val nBucketDirs =
-      if (!exists) 0L
-      else fs.listStatus(mp).toSeq.count(e =>
-        e.isDirectory && e.getPath.getName.startsWith("sbucket=")).toLong
+    val nBucketDirs = if (!exists) 0L else layout.partitionDirs(fs, mp).size.toLong
     val (nFiles, bytes) = graft.ops.Layout.visibleFileStats(fs, mp)
-    val recorded = if (exists) recordedBuckets(fs, mp) else None
+    val recorded = if (exists) layout.recorded(fs, mp) else None
     val horizon =
       if (!exists) None
       else graft.ops.Layout.readMaxDigitMarker(fs, mp, "_retention")
@@ -1325,7 +1330,7 @@ object ChatRag {
       if (!exists || nFiles == 0L) (0L, 0L, 0L, None: Option[Long], None: Option[Long])
       else graft.ops.Layout.withShuffleSizedTo(spark, BigInt(bytes),
         disableAqeAtOne = false) {
-        val df = spark.read.option("mergeSchema", "true").parquet(memoryPath)
+        val df = PartitionedTable.read(spark, memoryPath)
         val withTs =
           if (df.columns.contains("ts")) df
           else df.withColumn("ts", lit(null).cast("long"))
@@ -1340,7 +1345,7 @@ object ChatRag {
           if (r.isNullAt(4)) None else Some(r.getLong(4)))
       }
     Seq((dataStats._1, dataStats._2, dataStats._3, dataStats._4, dataStats._5,
-      recorded.map(_.toLong), horizon, nBucketDirs, nFiles, bytes))
+      recorded, horizon, nBucketDirs, nFiles, bytes))
       .toDF("n_sessions", "n_rows", "n_untimed_rows", "oldest_ts",
         "newest_ts", "nbuckets", "retention_horizon", "n_bucket_dirs",
         "n_files", "bytes")
@@ -1358,10 +1363,7 @@ object ChatRag {
     val fs = mp.getFileSystem(spark.sessionState.newHadoopConf())
     if (!fs.exists(mp)) return
     requireBucketedFor("refreshRecencySidecars", fs, mp, memoryPath)
-    RecencySidecar.refreshAll(spark, fs,
-      fs.listStatus(mp).toSeq
-        .filter(e => e.isDirectory && e.getPath.getName.startsWith("sbucket="))
-        .map(_.getPath))
+    RecencySidecar.refreshAll(spark, fs, layout.partitionDirs(fs, mp))
   }
 }
 
@@ -1649,7 +1651,7 @@ private[graft] object RecencySidecar {
     */
   def refresh(spark: SparkSession, fs: FileSystem, bucket: Path): Unit = {
     if (!fs.exists(bucket)) return
-    val df = spark.read.option("mergeSchema", "true").parquet(bucket.toString)
+    val df = PartitionedTable.read(spark, bucket.toString)
     val stats =
       if (!df.columns.contains("ts"))
         df.select(col("session_id").cast("string").as("__k"))
@@ -1755,57 +1757,7 @@ object ChatLog {
     */
   val DefaultDayWidth: Long = 86400000L
 
-  private def widthMarkerDir(p: org.apache.hadoop.fs.Path) =
-    new org.apache.hadoop.fs.Path(p, "_daywidth")
-
-  private def recordedWidth(
-      fs: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path): Option[Long] =
-    graft.ops.Layout.readMaxDigitMarker(fs, p, "_daywidth")
-
-  private def recordWidth(
-      fs: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path,
-      w: Long): Unit =
-    graft.ops.Layout.writeDigitMarker(fs, p, "_daywidth", w)
-
-  /** True when the log at `p` should be written/maintained partitioned: a
-    * new table, or one that already has `day=` dirs. Flat data files at
-    * the root and no day dirs is the legacy shape.
-    */
-  private def isDayPartitioned(
-      fs: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path): Boolean = {
-    if (!fs.exists(p)) return true
-    val entries = fs.listStatus(p).toSeq
-    val hasDayDirs = entries.exists(e =>
-      e.isDirectory && e.getPath.getName.startsWith("day="))
-    val hasFlatData = entries.exists(e =>
-      e.isFile && !e.getPath.getName.startsWith("_") &&
-        !e.getPath.getName.startsWith(".") && e.getLen > 0)
-    hasDayDirs || !hasFlatData
-  }
-
-  private def effectiveWidth(
-      fs: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path,
-      requested: Long): Long = {
-    require(requested > 0, s"chat-log dayWidth $requested must be > 0")
-    recordedWidth(fs, p).getOrElse {
-      // a markerless table that already has day= dirs is the hazard the
-      // marker exists for: prune's partition-drop math derives from the
-      // width, and a wrong guess drops partitions still holding rows
-      // above the horizon — silent over-deletion. Refuse loudly.
-      require(!fs.exists(p) || !fs.listStatus(p).exists(e =>
-          e.isDirectory && e.getPath.getName.startsWith("day=")),
-        s"chat log $p has day= dirs but no _daywidth marker — the " +
-          "partition width cannot be inferred from a parameter (a wrong " +
-          "guess mis-targets retention's partition drops). Record the " +
-          "true width as _daywidth/<w>, or rewrite through " +
-          "repartitionByDay, which records it correctly by construction")
-      requested
-    }
-  }
+  private val layout = PartitionedTable.Log
 
   /** The ts column as a LONG in the table's width units: integral columns
     * pass through, timestamps become epoch millis (pair with the default
@@ -1842,12 +1794,11 @@ object ChatLog {
       dayWidth: Long = DefaultDayWidth, tsCol: String = "ts"): Unit = {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(rows.sparkSession.sessionState.newHadoopConf())
-    if (isDayPartitioned(fs, p)) {
-      val width = effectiveWidth(fs, p, dayWidth)
-      // marker BEFORE the first data write (the recordBuckets crash
-      // order): a crash between them must not let a later caller freeze
-      // a different width from its parameter
-      recordWidth(fs, p, width)
+    if (layout.isPartitioned(fs, p)) {
+      require(dayWidth > 0, s"chat-log dayWidth $dayWidth must be > 0")
+      val width = layout.effective(fs, p, dayWidth, "repartitionByDay")
+      // marker BEFORE the first data write (PartitionedTable.record)
+      layout.record(fs, p, width)
       withDay(rows, tsCol, width)
         .write.mode("append").partitionBy("day").parquet(path)
     } else
@@ -1862,15 +1813,13 @@ object ChatLog {
   private def dayDirs(
       fs: org.apache.hadoop.fs.FileSystem,
       p: org.apache.hadoop.fs.Path): Seq[(Option[Long], org.apache.hadoop.fs.Path)] =
-    fs.listStatus(p).toSeq
-      .filter(e => e.isDirectory && e.getPath.getName.startsWith("day="))
-      .map { e =>
-        val v = e.getPath.getName.stripPrefix("day=")
-        val day =
-          if (v == "__HIVE_DEFAULT_PARTITION__") None
-          else Some(java.net.URLDecoder.decode(v, "UTF-8").toLong)
-        (day, e.getPath)
-      }
+    layout.partitionDirs(fs, p).map { d =>
+      val v = d.getName.stripPrefix(layout.prefix)
+      val day =
+        if (v == "__HIVE_DEFAULT_PARTITION__") None
+        else Some(java.net.URLDecoder.decode(v, "UTF-8").toLong)
+      (day, d)
+    }
 
   /** Right-to-be-forgotten for the chat log — the log-side half of
     * [[ChatRag.deleteSessions]] (a GDPR request covers the conversation
@@ -1902,18 +1851,15 @@ object ChatLog {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
     if (!fs.exists(p)) return 0L
-    if (isDayPartitioned(fs, p)) {
+    if (layout.isPartitioned(fs, p)) {
       requireNotStreamSink(fs, p, path)
-      ChatRag.healPartitionLeftovers(fs, p, "day=")
-      ChatRag.rewriteBucketDirsAll(spark, fs, dayDirs(fs, p).map(_._2),
+      layout.healLeftovers(fs, p)
+      layout.rewriteDirsAll(spark, fs, layout.partitionDirs(fs, p),
         df => df.where(col(userCol).isNull || !col(userCol).isin(users: _*)))
     } else
       deleteWhere(spark, path, col(userCol).isin(users: _*))
   }
 
-  /** The shared filter-swap body of [[deleteUsers]] and [[pruneBefore]]:
-    * drops every row matching `pred`, preserving root sidecars.
-    */
   private def requireNotStreamSink(
       fs: org.apache.hadoop.fs.FileSystem,
       p: org.apache.hadoop.fs.Path,
@@ -1924,18 +1870,21 @@ object ChatLog {
         "serving the deleted generation after a swap; stop the stream, " +
         "delete _spark_metadata (reads fall back to the listing), re-run")
 
+  /** The legacy flat log's filter-swap body of [[deleteUsers]] and
+    * [[pruneBefore]]: drops every row matching `pred`, preserving root
+    * sidecars.
+    */
   private def deleteWhere(
       spark: SparkSession,
       path: String,
       pred: Column): Long = {
     val p = new org.apache.hadoop.fs.Path(path)
-    val conf = spark.sessionState.newHadoopConf()
-    val fs = p.getFileSystem(conf)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
     requireNotStreamSink(fs, p, path)
     // no localCheckpoint: counts and the staged write all complete
     // against the untouched live dir before the single swap (the same
-    // bound-by-scans-not-storage trade as rewriteBucketDir)
-    val before = spark.read.option("mergeSchema", "true").parquet(path)
+    // bound-by-scans-not-storage trade as PartitionedTable.rewriteDir)
+    val before = PartitionedTable.read(spark, path)
     // null-safe: a row where pred is NULL (e.g. a null user against an
     // isin list) is KEPT, not silently destroyed — only rows that
     // definitely match are deleted
@@ -1944,25 +1893,16 @@ object ChatLog {
     val nAfter = kept.count()
     if (nAfter == nBefore) return 0L
     // ONE protocol for both outcomes: stage the surviving generation
-    // (possibly no data files at all — the loudly-empty contract), COPY
-    // the root sidecars into it (the live dir stays whole until the
-    // swap, so a crash anywhere before it loses nothing — the previous
+    // (possibly no data files at all — the loudly-empty contract), then
+    // install it with the root sidecars copied in (the previous
     // empty-branch rename-aside had a window that stranded the stream
-    // ledger in the hidden aside with no heal), then the single swap.
+    // ledger in the hidden aside with no heal).
     val staged = graft.ops.Layout.compactStaging(fs, path)
     if (nAfter == 0L)
       fs.mkdirs(new org.apache.hadoop.fs.Path(staged))
     else
       kept.write.mode("overwrite").parquet(staged)
-    fs.listStatus(p).toSeq
-      .filter { e =>
-        val n = e.getPath.getName
-        n.startsWith("_") && n != "_SUCCESS"
-      }
-      .foreach(e => org.apache.hadoop.fs.FileUtil.copy(fs, e.getPath, fs,
-        new org.apache.hadoop.fs.Path(staged, e.getPath.getName),
-        false, true, conf))
-    graft.ops.Layout.swapDir(fs, path, staged)
+    PartitionedTable.installStaged(spark, fs, p, staged)
     nBefore - nAfter
   }
 
@@ -2004,9 +1944,9 @@ object ChatLog {
     // validate the refusal precondition BEFORE recording the horizon — a
     // refused op must not claim retention advanced
     requireNotStreamSink(fs, p, path)
-    if (isDayPartitioned(fs, p)) {
-      ChatRag.healPartitionLeftovers(fs, p, "day=")
-      val width = effectiveWidth(fs, p, DefaultDayWidth)
+    if (layout.isPartitioned(fs, p)) {
+      layout.healLeftovers(fs, p)
+      val width = layout.effective(fs, p, DefaultDayWidth, "repartitionByDay")
       graft.ops.Layout.advanceRetentionMarker(fs, p, beforeTs)
       val horizonDay = Math.floorDiv(beforeTs, width)
       val dirs = dayDirs(fs, p)
@@ -2015,29 +1955,21 @@ object ChatLog {
       // per-dir count loop paid one serial Spark job per retired day —
       // minutes of scheduling latency on a first-prune backlog of
       // hundreds of days, inside the streaming maintenance poll), then
-      // the retire rename-aside per dir (single rename — readers never
-      // see a partial dir; a crash between the renames is
-      // healed-or-swept by the next lifecycle op's
-      // healPartitionLeftovers)
+      // the retire per dir (PartitionedTable.retire: a crash inside it is
+      // healed-or-swept by the next lifecycle op)
       val dropDirs = dirs.collect {
         case (Some(day), dir) if day < horizonDay => dir
       }
       val dropped =
         if (dropDirs.isEmpty) 0L
         else spark.read.parquet(dropDirs.map(_.toString): _*).count()
-      dropDirs.foreach { dir =>
-        val aside = new org.apache.hadoop.fs.Path(
-          dir.getParent, s".${dir.getName}.__old")
-        if (fs.exists(aside)) fs.delete(aside, true)
-        fs.rename(dir, aside)
-        fs.delete(aside, true)
-      }
+      dropDirs.foreach(layout.retire(fs, _))
       // the one boundary day straddles the horizon only when beforeTs is
       // unaligned; a width-aligned horizon drops cleanly with zero reads
       val boundary =
         if (beforeTs % width == 0) 0L
         else dirs.collect { case (Some(day), dir) if day == horizonDay =>
-          val (before, after) = ChatRag.rewriteBucketDir(spark, fs, dir,
+          val (before, after) = layout.rewriteDir(spark, fs, dir,
             df => {
               val t = tsLong(df, tsCol)
               df.where(t.isNull || t >= lit(beforeTs))
@@ -2053,11 +1985,11 @@ object ChatLog {
   }
 
   /** One-shot MIGRATION of a legacy flat chat log into the
-    * `day=`-partitioned layout (the [[ChatRag.rebucketMemoryTable]]
-    * discipline, applied to the log): one streaming pass rewrites the
-    * whole log into day dirs in a hidden staged sibling, the `_daywidth`
-    * marker and every root `_`-sidecar land IN the stage, then the
-    * single [[graft.ops.Layout.swapDir]] installs it — readers see the
+    * `day=`-partitioned layout — [[PartitionedTable.migrate]], the
+    * [[ChatRag.rebucketMemoryTable]] discipline applied to the log: one
+    * streaming pass rewrites the whole log into day dirs in a hidden
+    * staged sibling, the `_daywidth` marker and every root `_`-sidecar
+    * land IN the stage, then a single swap installs it — readers see the
     * old layout or the new, never a mix, and a crash inside the swap
     * window heals at the next entry (live-absent + complete stage ⇒
     * finish). Values are layout-invariant; also serves as the explicit
@@ -2071,33 +2003,10 @@ object ChatLog {
       tsCol: String = "ts"): Unit = {
     require(dayWidth > 0, s"repartitionByDay: dayWidth $dayWidth must be > 0")
     val p = new org.apache.hadoop.fs.Path(path)
-    val conf = spark.sessionState.newHadoopConf()
-    val fs = p.getFileSystem(conf)
-    // heal a previous migration's crashed swap before the existence check
-    graft.ops.Layout.healOrSweepSwap(fs, p)
-    require(fs.exists(p), s"repartitionByDay: $path does not exist")
-    requireNotStreamSink(fs, p, path)
-    val data = spark.read.option("mergeSchema", "true").parquet(path)
-      .drop("day")
-    val staged = graft.ops.Layout.compactStaging(fs, path)
-    val sp = new org.apache.hadoop.fs.Path(staged)
-    withDay(data, tsCol, dayWidth)
-      .write.mode("overwrite").partitionBy("day").parquet(staged)
-    val wd = new org.apache.hadoop.fs.Path(sp, "_daywidth")
-    fs.mkdirs(wd)
-    fs.create(new org.apache.hadoop.fs.Path(wd, dayWidth.toString), true)
-      .close()
-    fs.listStatus(p).toSeq
-      .filter { e =>
-        val n = e.getPath.getName
-        n.startsWith("_") && n != "_daywidth" && n != "_SUCCESS"
-      }
-      .foreach { e =>
-        org.apache.hadoop.fs.FileUtil.copy(fs, e.getPath, fs,
-          new org.apache.hadoop.fs.Path(sp, e.getPath.getName),
-          false, true, conf)
-      }
-    graft.ops.Layout.swapDir(fs, path, staged)
+    requireNotStreamSink(p.getFileSystem(spark.sessionState.newHadoopConf()),
+      p, path)
+    layout.migrate(spark, path, "repartitionByDay", dayWidth)(
+      withDay(_, tsCol, dayWidth))
   }
 
   /** File-compaction maintenance for the `day=` layout: each append —
@@ -2123,8 +2032,8 @@ object ChatLog {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
     if (!fs.exists(p)) return 0
-    ChatRag.healPartitionLeftovers(fs, p, "day=")
-    val due = graft.ops.Layout.dueSubdirs(spark, path, policy, "day=")
+    layout.healLeftovers(fs, p)
+    val due = graft.ops.Layout.dueSubdirs(spark, path, policy, layout.prefix)
     graft.ops.Layout.compactSmallFilesAll(spark, due,
       targetBytes = policy.smallFileBytes * 8)
     due.size
@@ -2149,7 +2058,7 @@ object ChatLog {
     val exists = fs.exists(p)
     val (nFiles, bytes) = graft.ops.Layout.visibleFileStats(fs, p)
     val days = if (exists) dayDirs(fs, p).flatMap(_._1) else Seq.empty
-    val width = if (exists) recordedWidth(fs, p) else None
+    val width = if (exists) layout.recorded(fs, p) else None
     val horizon =
       if (!exists) None
       else graft.ops.Layout.readMaxDigitMarker(fs, p, "_retention")
@@ -2157,7 +2066,7 @@ object ChatLog {
       if (!exists || nFiles == 0L)
         (0L, 0L, 0L, None: Option[Long], None: Option[Long])
       else {
-        val df = spark.read.option("mergeSchema", "true").parquet(path)
+        val df = PartitionedTable.read(spark, path)
         val t = tsLong(df, tsCol)
         val u =
           if (df.columns.contains(userCol)) col(userCol).cast("string")
@@ -2646,12 +2555,8 @@ object SemanticCache {
     def empty = spark.range(0)
       .select(col("id").as("cache_id"), col("id").as("last_use"))
     if (!fs.exists(dp)) return empty
-    val recDir = new org.apache.hadoop.fs.Path(dp, "_recency")
-    val statePath = new org.apache.hadoop.fs.Path(recDir, "state").toString
-    val marks =
-      if (!fs.exists(recDir)) Seq.empty[Long]
-      else fs.listStatus(recDir).toSeq.filter(_.isFile).map(_.getPath.getName)
-        .filter(n => n.nonEmpty && n.forall(_.isDigit)).map(_.toLong)
+    val statePath = new org.apache.hadoop.fs.Path(
+      new org.apache.hadoop.fs.Path(dp, "_recency"), "state").toString
     val stateExists = fs.exists(new org.apache.hadoop.fs.Path(statePath))
     // markers WITHOUT a state table = a crash inside the state swap's
     // rename window destroyed the fold — trusting the water mark then
@@ -2660,14 +2565,9 @@ object SemanticCache {
     // still on disk refolds; only dirs pruned BEFORE such a crash lose
     // their recency (they degrade to the never-used default — prune
     // after a successful fold, not concurrently with one).
-    val water =
-      if (marks.isEmpty || !stateExists) Long.MinValue else marks.max
+    val water = foldWater(fs, dp, stateExists)
     val base = if (stateExists) spark.read.parquet(statePath) else empty
-    val batchNs = fs.listStatus(dp).toSeq.filter(_.isDirectory)
-      .map(_.getPath.getName).filter(_.startsWith("batch="))
-      .map(_.stripPrefix("batch=")).filter(n => n.nonEmpty && n.forall(_.isDigit))
-      .map(_.toLong).sorted
-    val newNs = batchNs.filter(_ > water)
+    val newNs = batchNumbers(fs, dp).filter(_ > water)
     if (newNs.isEmpty) return base
     val fresh = newNs.map { n =>
       spark.read.parquet(s"$dispositionsPath/batch=$n")
@@ -2680,12 +2580,30 @@ object SemanticCache {
     val staging = graft.ops.Layout.compactStaging(fs, statePath)
     merged.write.mode("overwrite").parquet(staging)
     graft.ops.Layout.swapDir(fs, statePath, staging)
-    fs.mkdirs(recDir)
-    fs.create(new org.apache.hadoop.fs.Path(recDir, newNs.max.toString)).close()
-    marks.foreach(m =>
-      fs.delete(new org.apache.hadoop.fs.Path(recDir, m.toString), false))
+    // monotone, max wins: a recovery refold whose newest dir was already
+    // marked keeps that marker instead of sweeping it with the old ones
+    graft.ops.Layout.advanceRetentionMarker(fs, dp, newNs.max, "_recency")
     merged
   }
+
+  /** The disposition history's `batch=<n>` dir numbers, ascending. */
+  private def batchNumbers(
+      fs: org.apache.hadoop.fs.FileSystem,
+      dp: org.apache.hadoop.fs.Path): Seq[Long] =
+    fs.listStatus(dp).toSeq.filter(_.isDirectory)
+      .map(_.getPath.getName).filter(_.startsWith("batch="))
+      .map(_.stripPrefix("batch=")).filter(n => n.nonEmpty && n.forall(_.isDigit))
+      .map(_.toLong).sorted
+
+  /** [[foldRecency]]'s high-water mark: the max `_recency` marker, trusted
+    * only while the state table it describes exists.
+    */
+  private def foldWater(
+      fs: org.apache.hadoop.fs.FileSystem,
+      dp: org.apache.hadoop.fs.Path,
+      stateExists: Boolean): Long =
+    graft.ops.Layout.readMaxDigitMarker(fs, dp, "_recency")
+      .filter(_ => stateExists).getOrElse(Long.MinValue)
 
   /** Disposition-history RETENTION (round-12 missing #4): the serving
     * loops land one `batch=<id>/` dir per micro-batch FOREVER — a
@@ -2712,21 +2630,11 @@ object SemanticCache {
     val dp = new org.apache.hadoop.fs.Path(dispositionsPath)
     val fs = dp.getFileSystem(spark.sessionState.newHadoopConf())
     if (!fs.exists(dp)) return (0, 0)
-    val batchNs = fs.listStatus(dp).toSeq.filter(_.isDirectory)
-      .map(_.getPath.getName).filter(_.startsWith("batch="))
-      .map(_.stripPrefix("batch=")).filter(n => n.nonEmpty && n.forall(_.isDigit))
-      .map(_.toLong)
-    val prune = batchNs.filter(_ < retainFrom).sorted
+    val batchNs = batchNumbers(fs, dp)
+    val prune = batchNs.filter(_ < retainFrom)
     if (prune.nonEmpty && requireFolded) {
-      val recDir = new org.apache.hadoop.fs.Path(dp, "_recency")
-      val stateExists =
-        fs.exists(new org.apache.hadoop.fs.Path(recDir, "state"))
-      val water =
-        if (!stateExists || !fs.exists(recDir)) Long.MinValue
-        else fs.listStatus(recDir).toSeq.filter(_.isFile)
-          .map(_.getPath.getName)
-          .filter(n => n.nonEmpty && n.forall(_.isDigit)).map(_.toLong)
-          .foldLeft(Long.MinValue)(math.max)
+      val water = foldWater(fs, dp,
+        fs.exists(new org.apache.hadoop.fs.Path(dp, "_recency/state")))
       require(prune.max <= water,
         s"pruneDispositions: batch dirs ${prune.filter(_ > water).mkString(",")} " +
           s"are not folded into $dispositionsPath/_recency (high-water $water) " +
@@ -2759,13 +2667,8 @@ object SemanticCache {
       fromBatch: Long = 0L): DataFrame = {
     val dp = new org.apache.hadoop.fs.Path(dispositionsPath)
     val fs = dp.getFileSystem(spark.sessionState.newHadoopConf())
-    val retDir = new org.apache.hadoop.fs.Path(dp, "_retention")
-    val horizon =
-      if (!fs.exists(retDir)) Long.MinValue
-      else fs.listStatus(retDir).toSeq.filter(_.isFile)
-        .map(_.getPath.getName)
-        .filter(n => n.nonEmpty && n.forall(_.isDigit)).map(_.toLong)
-        .foldLeft(Long.MinValue)(math.max)
+    val horizon = graft.ops.Layout.readMaxDigitMarker(fs, dp, "_retention")
+      .getOrElse(Long.MinValue)
     require(fromBatch >= horizon,
       s"readDispositions: batches below $horizon were pruned from " +
         s"$dispositionsPath — fromBatch $fromBatch reaches into discarded history")

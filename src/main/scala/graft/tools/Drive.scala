@@ -525,7 +525,7 @@ object Drive {
       val idlePruned = graft.serve.ChatRag.pruneIdleSessions(spark, c13mem,
         beforeTs = 1000L)
       println(s"pruneIdleSessions(ts<1000) retired $idlePruned rows " +
-        s"(${spark.read.option("mergeSchema", "true").parquet(c13mem).count()} remain)")
+        s"(${graft.serve.PartitionedTable.read(spark, c13mem).count()} remain)")
       // the round-15 observability row: what an operator reads before
       // choosing the next lifecycle action
       val rep = graft.serve.ChatRag.memoryReport(spark, c13mem).head()

@@ -1316,7 +1316,7 @@ object ScaleSmoke {
         graft.serve.ChatRag.rebucketMemoryTable(spark, mem, newBuckets = 256)
         1L
       }
-      assert(spark.read.option("mergeSchema", "true").parquet(mem)
+      assert(graft.serve.PartitionedTable.read(spark, mem)
         .count() == liveRows, "the resize must be row-exact")
     }
 

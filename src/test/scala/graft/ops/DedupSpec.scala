@@ -594,8 +594,8 @@ class DedupSpec extends SparkSpec {
     // batch-bounded id set CHECKPOINTED at its fan-out point. The unfused
     // composition re-executed the probe/resolve DAGs per consumer — at
     // micro-batch scale each replica is a cascade of broadcast-build
-    // jobs (measured same-run in JobCountProbe: 156 jobs / ~31 s per
-    // batch unfused vs 59 / ~7 s fused). AQE off so exchange
+    // jobs (measured same-run: 156 jobs / ~31 s per batch unfused vs
+    // 59 / ~7 s fused). AQE off so exchange
     // materialization doesn't hide the action count.
     val tmp = java.nio.file.Files
       .createTempDirectory("graft_ndi_jobs").toString + "/store"
@@ -1037,5 +1037,37 @@ class DedupSpec extends SparkSpec {
       .select("doc_id").as[Long].collect().toSet == Set(1L, 2L, 3L, 4L))
     assert(Dedup.appendMinhash(spark, batch, path) == 0L,
       "replayed batch must be a ledger no-op, including the zero-shingle doc")
+  }
+
+  test("minhash store built from an INT doc_id: append, probe and delete read it back") {
+    // the declared readers expect BIGINT ids: a store written with the
+    // caller's INT column uncast failed every later read
+    val path = java.nio.file.Files
+      .createTempDirectory("graft_mh_int").toString + "/idx"
+    val intDocs = fixtureDocs.select(col("doc_id").cast("int").as("doc_id"), col("text"))
+    val corpus = intDocs.where(col("doc_id") % 3 =!= 0)
+    val batch = intDocs.where(col("doc_id") % 3 === 0)
+    Dedup.writeMinhash(corpus.where(col("doc_id") % 2 === 0), path,
+      shingleSize = 1, numHashes = 128, bands = 32)
+    val appended = Dedup.appendMinhash(spark, corpus.where(col("doc_id") % 2 =!= 0), path)
+    assert(appended == corpus.where(col("doc_id") % 2 =!= 0).count())
+    def probe() = Dedup.nearDupesAgainstStore(spark, batch, path, minJaccard = 0.8)
+      .select(col("batch_id").cast("long"), col("corpus_id").cast("long"))
+      .as[(Long, Long)].collect().toSet
+    val pairs = probe()
+    // the same probe over a store built from the BIGINT ids
+    val longPath = java.nio.file.Files
+      .createTempDirectory("graft_mh_long").toString + "/idx"
+    Dedup.writeMinhash(fixtureDocs.where($"doc_id" % 3 =!= 0), longPath,
+      shingleSize = 1, numHashes = 128, bands = 32)
+    assert(pairs.nonEmpty && pairs == Dedup.nearDupesAgainstStore(spark,
+        fixtureDocs.where($"doc_id" % 3 === 0), longPath, minJaccard = 0.8)
+      .select("batch_id", "corpus_id").as[(Long, Long)].collect().toSet)
+    Dedup.deleteMinhash(spark, path, pairs.map(_._2).toSeq)
+    assert(probe().isEmpty, "deleted partners must stop matching")
+    Seq("docs", "bands", "sigs", "shingles").foreach { t =>
+      assert(spark.read.parquet(s"$path/$t").schema("doc_id").dataType ==
+        org.apache.spark.sql.types.LongType, s"$t stores BIGINT ids")
+    }
   }
 }

@@ -660,6 +660,9 @@ class ServingSpec extends SparkSpec {
     fs.delete(new org.apache.hadoop.fs.Path(s"$disp/_recency/state"), true)
     assert(fold() == Map(5L -> 2L),
       "a lost state table must refold the on-disk dirs, not trust the stale water")
+    // the refold's newest dir (2) was already marked: the marker must
+    // survive it, or pruning the folded dir refuses as "not folded"
+    assert(SemanticCache.pruneDispositions(spark, disp, 3L) == ((1, 0)))
   }
 
   test("chatTurn refuses two questions for one session in a single turn") {
@@ -1531,6 +1534,47 @@ class ServingSpec extends SparkSpec {
       "the healed rebucket must serve the staged generation")
     assert(fs.listStatus(new org.apache.hadoop.fs.Path(s"$mem/_nbuckets"))
       .map(_.getPath.getName).toSeq == Seq("8"))
+    // the chat log runs the same layout code, so it has the same crash
+    // signatures: a day dir left retired-aside is swept by the next
+    // pruneBefore or deleteUsers
+    val log = s"$tmp/log"
+    ChatLog.append(Seq(("a", "m1", "r", 110L), ("b", "m2", "r", 250L),
+      ("c", "m3", "r", 350L)).toDF("user", "message", "response", "ts"),
+      log, dayWidth = 100L)
+    def logAside(day: Int) = {
+      val live = new org.apache.hadoop.fs.Path(log, s"day=$day")
+      val aside = new org.apache.hadoop.fs.Path(log, s".day=$day.__old")
+      fs.rename(live, aside)
+      aside
+    }
+    val day1 = logAside(1)
+    assert(ChatLog.pruneBefore(spark, log, beforeTs = 200L) == 0L)
+    assert(!fs.exists(day1), "a retried prune must remove the crashed retire's remnant")
+    val day3 = logAside(3)
+    assert(ChatLog.deleteUsers(spark, log, Seq("c")) == 0L)
+    assert(!fs.exists(day3), "a retried delete must remove the crashed retire's remnant")
+    assert(spark.read.parquet(log).select("message").as[String]
+      .collect().toSeq == Seq("m2"))
+    // repartitionByDay crash: log root absent mid-swap, staged generation
+    // complete (day dirs + _daywidth) — the retry finishes the swap
+    val flat = s"$tmp/flatlog"
+    Seq(("x", "f1", "r", 10L), ("y", "f2", "r", 120L))
+      .toDF("user", "message", "response", "ts").coalesce(1).write.parquet(flat)
+    val logStage = new org.apache.hadoop.fs.Path(tmp, ".flatlog.__compact")
+    spark.read.parquet(flat).withColumn("day", expr("ts div 100"))
+      .write.partitionBy("day").parquet(logStage.toString)
+    fs.mkdirs(new org.apache.hadoop.fs.Path(logStage, "_daywidth"))
+    fs.create(new org.apache.hadoop.fs.Path(logStage, "_daywidth/100"), true)
+      .close()
+    fs.rename(new org.apache.hadoop.fs.Path(flat),
+      new org.apache.hadoop.fs.Path(tmp, ".flatlog.__old"))
+    ChatLog.repartitionByDay(spark, flat, dayWidth = 100L)
+    assert(spark.read.parquet(flat).select("message").as[String]
+      .collect().toSet == Set("f1", "f2"), "the healed migration serves every row")
+    assert(fs.listStatus(new org.apache.hadoop.fs.Path(s"$flat/_daywidth"))
+      .map(_.getPath.getName).toSeq == Seq("100"))
+    assert(fs.exists(new org.apache.hadoop.fs.Path(s"$flat/day=1")),
+      "the log is day-partitioned after the retry")
   }
 
   test("pruneIdleSessions: mixed stamping keeps the session (any null ts = age unknown)") {
