@@ -302,12 +302,15 @@ object VectorIndex {
     */
   def compact(spark: SparkSession, path: String): Long = {
     import spark.implicits._
-    val active = loadActive(spark, path).localCheckpoint(true)
-    val n = active.count()
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sessionState.newHadoopConf())
-    active.write.mode("overwrite").partitionBy("section")
-      .parquet(s"$path.__compact")
+    // a compact that crashed between swapDir's two renames left the live
+    // dir absent: finish (or sweep) that swap before reading it
+    graft.ops.Layout.healOrSweepSwap(fs, new org.apache.hadoop.fs.Path(path))
+    val active = loadActive(spark, path).localCheckpoint(true)
+    val n = active.count()
+    val staged = graft.ops.Layout.compactStaging(fs, path)
+    active.write.mode("overwrite").partitionBy("section").parquet(staged)
     // a full compact spends EVERY tombstone, so AS OF below the newest
     // surviving epoch would silently serve a partial view (a doc whose
     // live row carries epoch 3 vanishes from AS OF 2 instead of showing
@@ -334,11 +337,11 @@ object VectorIndex {
       retentionHorizon(spark, path).getOrElse(Long.MinValue),
       math.max(maxEpoch, maxTombEpoch) + 1)
     Seq(horizon).toDF("retain_from")
-      .coalesce(1).write.parquet(s"$path.__compact/_retention")
+      .coalesce(1).write.parquet(s"$staged/_retention")
     // rename-aside swap (shared protocol — see Layout.swapDir). The
     // `_tombstones` sidecar lives inside the old generation's directory,
     // so it is swapped out (spent) together with the rows it resolved.
-    graft.ops.Layout.swapDir(fs, path, s"$path.__compact")
+    graft.ops.Layout.swapDir(fs, path, staged)
     n
   }
 
@@ -367,6 +370,9 @@ object VectorIndex {
     */
   def compactRetain(
       spark: SparkSession, path: String, retainFrom: Long): (Long, Long) = {
+    val fs = new org.apache.hadoop.fs.Path(path)
+      .getFileSystem(spark.sessionState.newHadoopConf())
+    graft.ops.Layout.healOrSweepSwap(fs, new org.apache.hadoop.fs.Path(path)) // see compact
     retentionHorizon(spark, path).foreach(h => require(retainFrom >= h,
       s"compactRetain: retainFrom $retainFrom is below the existing " +
         s"horizon $h — history there is already folded"))
@@ -388,9 +394,7 @@ object VectorIndex {
     require(after > 0,
       s"compactRetain: no rows survive the fold at $path — delete the " +
         "index directory instead of compacting to empty")
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    val staged = s"$path.__compact"
+    val staged = graft.ops.Layout.compactStaging(fs, path)
     folded.write.mode("overwrite").partitionBy("section").parquet(staged)
     // surviving tombstones + the horizon marker ride INSIDE the staged
     // generation (underscore dirs are invisible to the parquet reader),

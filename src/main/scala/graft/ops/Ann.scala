@@ -165,7 +165,7 @@ object Ann extends IndexLifecycle {
     * Recall = P(any of the `numHashTables` bands collide); tune
     * `bucketLength`/`numHashTables` at fit time, not here.
     *
-    * CAVEAT (measured, PerfSmoke 1M × 64 queries): MLlib's model hashes
+    * CAVEAT (measured, 1M × 64 queries, PERF.md): MLlib's model hashes
     * with ONE projection per table, so each band keeps a large slice of
     * the index and the candidate set barely shrinks — this path exists for
     * compatibility with a fitted `BucketedRandomProjectionLSH` model.
@@ -278,21 +278,6 @@ object Ann extends IndexLifecycle {
     }
   }
 
-  /** Batch ANN via multi-projection random-projection LSH — the fully
-    * Spark-native alternative to [[lshTopKBatch]].
-    *
-    * Why it exists: profiling at 1M × 64 queries showed MLlib's BRP-LSH
-    * tables (one projection each, OR-combined) keep ~5% of the index per
-    * band — candidates shrink ~6× while the probe joins cost more than the
-    * distances saved. Classic E2LSH fixes this with `nProjs` projections
-    * AND-ed per table (selectivity fⁿ, recall recovered by OR over
-    * `nTables`); this implements exactly that as codegen column algebra —
-    * no fit, no model broadcast, deterministic from `seed`.
-    *
-    * Plan shape matches [[lshTopKBatch]]: narrow (id, band, key) explode,
-    * broadcast probe join, candidate-id dedup, vectors fetched once,
-    * bounded-heap top-k.
-    */
   /** Banded index for [[rpTopKBatch]]: one `(id, band, __key)` row per
     * (vector, table). Compute ONCE and persist (or write to a parquet
     * "bands" sidecar next to the index — it is pure column algebra, so it
@@ -316,6 +301,21 @@ object Ann extends IndexLifecycle {
       nTables, nProjs, width, seed, dims)
   }
 
+  /** Batch ANN via multi-projection random-projection LSH — the fully
+    * Spark-native alternative to [[lshTopKBatch]].
+    *
+    * Why it exists: profiling at 1M × 64 queries showed MLlib's BRP-LSH
+    * tables (one projection each, OR-combined) keep ~5% of the index per
+    * band — candidates shrink ~6× while the probe joins cost more than the
+    * distances saved. Classic E2LSH fixes this with `nProjs` projections
+    * AND-ed per table (selectivity fⁿ, recall recovered by OR over
+    * `nTables`); this implements exactly that as codegen column algebra —
+    * no fit, no model broadcast, deterministic from `seed`.
+    *
+    * Plan shape matches [[lshTopKBatch]]: narrow (id, band, key) explode,
+    * broadcast probe join, candidate-id dedup, vectors fetched once,
+    * bounded-heap top-k.
+    */
   def rpTopKBatch(
       queries: DataFrame,
       index: DataFrame,

@@ -307,15 +307,6 @@ object CorpusPipeline {
         ()
       }
 
-  /** Streaming UPSERT maintenance: like [[streamingIndexSink]] but each
-    * arriving doc REPLACES its prior revision via the merge-on-read
-    * tombstone path ([[graft.index.VectorIndex.upsertDocs]]) — the shape
-    * a CDC / re-crawl feed needs, where the same doc_id recurs with new
-    * content. The streaming `batchId` is the MoR epoch: monotonic across
-    * restarts (Spark replays a failed batch with the SAME id), so
-    * re-delivery tombstones and re-appends identically — the resolved
-    * view is exactly-once even under at-least-once delivery.
-    */
   /** Streaming ANN-index maintenance: append each micro-batch of
     * embedded vectors to a persisted HNSW index as NEW segments
     * ([[graft.ops.Hnsw.appendBatch]] — the Lucene segment law; the index
@@ -818,6 +809,15 @@ object CorpusPipeline {
         ()
       }
 
+  /** Streaming UPSERT maintenance: like [[streamingIndexSink]] but each
+    * arriving doc REPLACES its prior revision via the merge-on-read
+    * tombstone path ([[graft.index.VectorIndex.upsertDocs]]) — the shape
+    * a CDC / re-crawl feed needs, where the same doc_id recurs with new
+    * content. The streaming `batchId` is the MoR epoch: monotonic across
+    * restarts (Spark replays a failed batch with the SAME id), so
+    * re-delivery tombstones and re-appends identically — the resolved
+    * view is exactly-once even under at-least-once delivery.
+    */
   def streamingUpsertSink(
       docs: DataFrame,
       path: String,

@@ -683,13 +683,6 @@ object Dedup extends IndexLifecycle {
     storeProbeExact(spark, path, exploded, batchBands, minJaccard, maxBucketSize)
   }
 
-  /** The band-join + exact-verify core of [[nearDupesAgainstStore]], over
-    * PRE-BUILT batch parts — `exploded` is `(batch_id, __h)` and
-    * `batchBands` is `(batch_id, band, band_key)`. Split out so the fused
-    * intake path ([[graft.ops.CorpusPipeline.nearDupIntakeBatch]]) shares
-    * ONE materialized explode/signature pass across the store probe, the
-    * within-batch resolve and the append.
-    */
   /** Stored band surface with degenerate (hot) buckets dropped, computed
     * O(touched) not O(corpus): a hot stored bucket only matters if THIS
     * batch probes it, so the size aggregate is restricted to the batch's
@@ -717,6 +710,13 @@ object Dedup extends IndexLifecycle {
       stored.join(broadcast(hot), Seq("band", "band_key"), "left_anti")
     }
 
+  /** The band-join + exact-verify core of [[nearDupesAgainstStore]], over
+    * PRE-BUILT batch parts — `exploded` is `(batch_id, __h)` and
+    * `batchBands` is `(batch_id, band, band_key)`. Split out so the fused
+    * intake path ([[graft.ops.CorpusPipeline.nearDupIntakeBatch]]) shares
+    * ONE materialized explode/signature pass across the store probe, the
+    * within-batch resolve and the append.
+    */
   private[graft] def storeProbeExact(
       spark: org.apache.spark.sql.SparkSession,
       path: String,
@@ -1408,11 +1408,6 @@ object Dedup extends IndexLifecycle {
 
   // -------------------------------------------- embedding cosine near-dup
 
-  /** Embedding near-dup pairs with cosine ≥ `minCos`. Exact variant: a
-    * self equi-join on an LSH-free coarse key is impossible in general, so
-    * this is the *small-side* exact path (broadcast one side); the scale
-    * path is [[Ann.cosinePairsLsh]] (random-projection bucketed).
-    */
   /** Top-N most-similar embedding pairs by cosine — the inspection variant
     * of [[cosinePairsExact]] (useful when no pair clears a dedup threshold).
     *
@@ -1455,6 +1450,11 @@ object Dedup extends IndexLifecycle {
       .limit(topN)
   }
 
+  /** Embedding near-dup pairs with cosine ≥ `minCos`. Exact variant: a
+    * self equi-join on an LSH-free coarse key is impossible in general, so
+    * this is the *small-side* exact path (broadcast one side); the scale
+    * path is [[Ann.cosinePairsLsh]] (random-projection bucketed).
+    */
   def cosinePairsExact(
       emb: DataFrame,
       idCol: String = "vec_id",

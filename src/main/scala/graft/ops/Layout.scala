@@ -220,42 +220,6 @@ object Layout {
       untouchedFiles: Int,
       rewrittenBytes: Long)
 
-  /** SIZE-TIERED minor compaction of a flat directory — the fold whose
-    * cost tracks the FRESH bytes, not the accumulated state (round-13
-    * verdict #1: [[compactFiles]] coalesces the WHOLE directory, so a
-    * store that appends small files forever rewrites its settled base on
-    * every trigger — write amplification O(state) per firing). Two laws:
-    *
-    *  - files ≥ `targetBytes` are SETTLED: never read, never rewritten —
-    *    they hop through the swap by metadata-only rename;
-    *  - below `targetBytes`, only SIZE PEERS are consumed (geometric
-    *    classes, base 4): a file is rewritten only when its class holds
-    *    ≥ 2 files; all consuming classes merge through ONE staged write
-    *    into ceil(bytes / targetBytes) outputs. A fold after N fresh
-    *    appends therefore rewrites ~the N fresh files; the previous
-    *    fold's merged output sits alone in a higher class and is left in
-    *    place until a size PEER joins it — each byte is rewritten
-    *    O(log₄(targetBytes / fileSize)) times over its whole life, the
-    *    LSM minor-compaction shape [[graft.search.Bm25.mergeSegments]]
-    *    and the HNSW tiered merge already follow. A fold's RESIDUE is at
-    *    most one file per size class (~log₄ targetBytes ≈ 13 singletons),
-    *    so a due signal thresholded above that cannot latch on a
-    *    directory the fold can no longer shrink.
-    *
-    * Swap protocol (single-writer, same reader contract as [[swapDir]]:
-    * reads inside the rename window fail loudly and retry, never see
-    * partial data): merged outputs land in the hidden staging sibling,
-    * a `_consumed` manifest (the merged inputs' names) commits the
-    * stage, THEN live renames aside, untouched files hop old → staged by
-    * name, staged renames live, old (now only consumed inputs) drops.
-    * A crash mid-swap leaves the live dir ABSENT (loud) with every byte
-    * preserved across the two hidden siblings, and the next call HEALS:
-    * live missing + old + committed stage ⇒ finish the move via the
-    * manifest. A crash before the manifest leaves live intact and the
-    * stale stage is swept. Directories with subdirectories or a
-    * `_tombstones` sidecar refuse (use [[compactFiles]] /
-    * [[graft.index.VectorIndex.compact]]).
-    */
   private def isDataName(name: String): Boolean =
     !name.startsWith("_") && !name.startsWith(".")
 
@@ -427,6 +391,42 @@ object Layout {
     groups.size
   }
 
+  /** SIZE-TIERED minor compaction of a flat directory — the fold whose
+    * cost tracks the FRESH bytes, not the accumulated state (round-13
+    * verdict #1: [[compactFiles]] coalesces the WHOLE directory, so a
+    * store that appends small files forever rewrites its settled base on
+    * every trigger — write amplification O(state) per firing). Two laws:
+    *
+    *  - files ≥ `targetBytes` are SETTLED: never read, never rewritten —
+    *    they hop through the swap by metadata-only rename;
+    *  - below `targetBytes`, only SIZE PEERS are consumed (geometric
+    *    classes, base 4): a file is rewritten only when its class holds
+    *    ≥ 2 files; all consuming classes merge through ONE staged write
+    *    into ceil(bytes / targetBytes) outputs. A fold after N fresh
+    *    appends therefore rewrites ~the N fresh files; the previous
+    *    fold's merged output sits alone in a higher class and is left in
+    *    place until a size PEER joins it — each byte is rewritten
+    *    O(log₄(targetBytes / fileSize)) times over its whole life, the
+    *    LSM minor-compaction shape [[graft.search.Bm25.mergeSegments]]
+    *    and the HNSW tiered merge already follow. A fold's RESIDUE is at
+    *    most one file per size class (~log₄ targetBytes ≈ 13 singletons),
+    *    so a due signal thresholded above that cannot latch on a
+    *    directory the fold can no longer shrink.
+    *
+    * Swap protocol (single-writer, same reader contract as [[swapDir]]:
+    * reads inside the rename window fail loudly and retry, never see
+    * partial data): merged outputs land in the hidden staging sibling,
+    * a `_consumed` manifest (the merged inputs' names) commits the
+    * stage, THEN live renames aside, untouched files hop old → staged by
+    * name, staged renames live, old (now only consumed inputs) drops.
+    * A crash mid-swap leaves the live dir ABSENT (loud) with every byte
+    * preserved across the two hidden siblings, and the next call HEALS:
+    * live missing + old + committed stage ⇒ finish the move via the
+    * manifest. A crash before the manifest leaves live intact and the
+    * stale stage is swept. Directories with subdirectories or a
+    * `_tombstones` sidecar refuse (use [[compactFiles]] /
+    * [[graft.index.VectorIndex.compact]]).
+    */
   def compactSmallFiles(
       spark: org.apache.spark.sql.SparkSession,
       path: String,
@@ -525,15 +525,6 @@ object Layout {
     mapConcurrently(dirs, parallelism)(d =>
       compactSmallFiles(spark, d, targetBytes))
 
-  /** Run `f` over every item on a bounded pool and return the results in
-    * item order — the ONE copy of the maintenance fan-out protocol
-    * ([[compactSmallFilesAll]], the bucket-rewrite sweep, the recency
-    * bootstrap): await EVERY task before rethrowing the first failure's
-    * cause. Bailing on the first `.get()` would leave sibling tasks
-    * still running on their directories, and the caller's natural retry
-    * would then race their staging/aside dirs — two writers on one
-    * bucket, the exact single-writer breach the swap protocol forbids.
-    */
   /** Optimizer-estimated size of a frame's output in bytes — plan
     * statistics only (file-listing sums scaled by projection/filter
     * selectivity), never a job. Frames whose stats Catalyst cannot bound
@@ -618,6 +609,15 @@ object Layout {
     }
   }
 
+  /** Run `f` over every item on a bounded pool and return the results in
+    * item order — the ONE copy of the maintenance fan-out protocol
+    * ([[compactSmallFilesAll]], the bucket-rewrite sweep, the recency
+    * bootstrap): await EVERY task before rethrowing the first failure's
+    * cause. Bailing on the first `.get()` would leave sibling tasks
+    * still running on their directories, and the caller's natural retry
+    * would then race their staging/aside dirs — two writers on one
+    * bucket, the exact single-writer breach the swap protocol forbids.
+    */
   def mapConcurrently[A, B](items: Seq[A], parallelism: Int)(
       f: A => B): Seq[B] = {
     if (items.isEmpty) return Seq.empty
@@ -759,29 +759,6 @@ object Layout {
       .map(d => new org.apache.hadoop.fs.Path(hp, d).toString)
   }
 
-  /** Shared directory-swap tail of every compact in the repo (file
-    * compaction here, [[graft.index.VectorIndex.compact]],
-    * [[Hnsw.compact]], [[graft.search.Bm25.compactIndex]]): the staged
-    * rewrite at `staged` replaces `target` by rename-ASIDE — live dir →
-    * hidden `.{name}.__old` sibling, staged → live, drop old — so a
-    * driver crash at
-    * any point leaves either the old or the new generation intact and
-    * the no-directory window is a single rename. (The previous
-    * delete-then-rename order had a crash window that stranded the data
-    * in the staged dir with no live view.) Single-writer contract: one
-    * maintainer swaps at a time; an overlapping reader that lists the
-    * target inside the rename pair may fail and should retry.
-    */
-  /** Probe-side tombstone exclusion shared by the at-rest index families
-    * ([[graft.search.Bm25.loadIndex]], [[Ann.loadIvf]]): read the
-    * sidecar — bounded by `maxTombstones` with a loud compact-first
-    * refusal — and filter `df`. Small sets become a scan-stage `NOT IN`
-    * predicate (pushed into the parquet scan); past 1024 ids a literal
-    * In is prohibitive to even construct, so a broadcast anti-join takes
-    * over (hash probe per row, no shuffle of the big side). Compaction
-    * paths must NOT use this — they anti-join the raw sidecar
-    * directly, scale-safe at any tombstone count.
-    */
   /** The distinct dead-id set of a tombstone sidecar (empty when the
     * sidecar doesn't exist), memoized on the sidecar's FILE SIGNATURE
     * (names + lengths + mtimes — a cheap listStatus): repeated loadIndex
@@ -827,6 +804,16 @@ object Layout {
     }
   }
 
+  /** Probe-side tombstone exclusion shared by the at-rest index families
+    * ([[graft.search.Bm25.loadIndex]], [[Ann.loadIvf]]): read the
+    * sidecar — bounded by `maxTombstones` with a loud compact-first
+    * refusal — and filter `df`. Small sets become a scan-stage `NOT IN`
+    * predicate (pushed into the parquet scan); past 1024 ids a literal
+    * In is prohibitive to even construct, so a broadcast anti-join takes
+    * over (hash probe per row, no shuffle of the big side). Compaction
+    * paths must NOT use this — they anti-join the raw sidecar
+    * directly, scale-safe at any tombstone count.
+    */
   private[graft] def excludeTombstoned(
       spark: org.apache.spark.sql.SparkSession,
       df: DataFrame,
@@ -1001,6 +988,16 @@ object Layout {
     }
   }
 
+  /** Ledger dirs already checked for legacy parquet files this process —
+    * the migration is one-time by construction, so re-listing the dir on
+    * every `ledgeredBatch` call (once per micro-batch, forever) pays a
+    * filesystem listing for a fact that can never change back. Keyed by
+    * URI string; single-writer contract means no other process can
+    * re-introduce legacy files behind the memo.
+    */
+  private val migratedLedgers =
+    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+
   /** One-time upgrade of a pre-marker ledger: the previous format was a
     * parquet table of `batch_id` rows, which the marker-file read
     * (`fs.exists`) cannot see — an index whose batches were ledgered by
@@ -1012,16 +1009,6 @@ object Layout {
     * ledger. Bounded: the read is ledger-sized (one row per batch ever
     * applied).
     */
-  /** Ledger dirs already checked for legacy parquet files this process —
-    * the migration is one-time by construction, so re-listing the dir on
-    * every `ledgeredBatch` call (once per micro-batch, forever) pays a
-    * filesystem listing for a fact that can never change back. Keyed by
-    * URI string; single-writer contract means no other process can
-    * re-introduce legacy files behind the memo.
-    */
-  private val migratedLedgers =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
   private def migrateLegacyLedger(
       spark: org.apache.spark.sql.SparkSession,
       fs: org.apache.hadoop.fs.FileSystem,
@@ -1127,6 +1114,19 @@ object Layout {
       dPath.getParent, s".${dPath.getName}.__compact").toString
   }
 
+  /** Shared directory-swap tail of every compact in the repo (file
+    * compaction here, [[graft.index.VectorIndex.compact]],
+    * [[Hnsw.compact]], [[graft.search.Bm25.compactIndex]]): the staged
+    * rewrite at `staged` replaces `target` by rename-ASIDE — live dir →
+    * hidden `.{name}.__old` sibling, staged → live, drop old — so a
+    * driver crash at
+    * any point leaves either the old or the new generation intact and
+    * the no-directory window is a single rename. (The previous
+    * delete-then-rename order had a crash window that stranded the data
+    * in the staged dir with no live view.) Single-writer contract: one
+    * maintainer swaps at a time; an overlapping reader that lists the
+    * target inside the rename pair may fail and should retry.
+    */
   private[graft] def swapDir(
       fs: org.apache.hadoop.fs.FileSystem, target: String, staged: String): Unit = {
     val tp = new org.apache.hadoop.fs.Path(target)

@@ -399,8 +399,8 @@ object StreamingOps {
     * watermarks so Spark can bound join state (views older than purchase
     * watermark + window are evicted) — the canonical watermarked
     * stream-stream join shape.
-    */
-  /** `joinType = "left_outer"` additionally emits purchases with NO view in
+    *
+    * `joinType = "left_outer"` additionally emits purchases with NO view in
     * the window (null view columns) — in streaming these surface once the
     * watermark passes `purchase_ts + window`, i.e. when the match can no
     * longer arrive; in batch they surface immediately. State stays

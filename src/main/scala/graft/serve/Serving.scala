@@ -204,9 +204,6 @@ object PromptAssembly {
           _.getField("m")).as("messages"))
 }
 
-/** C3: the LLM-completion boundary. The engine never calls a network model;
-  * serving plugs an [[Answerer]] in, tests use the deterministic stub.
-  */
 /** EP2 as a stream: the reference's interactive chat loop
   * (`/root/reference/micro-infobot/app.py:219-256`) re-expressed as
   * micro-batch serving — a stream of questions is answered against a
@@ -438,8 +435,8 @@ object CachedRag {
     * exclusion + id-idempotent inserts make a re-delivered micro-batch
     * re-derive identical dispositions (given a deterministic
     * `answerMisses`) and overwrite its own output dir.
-    */
-  /** `ledgered = true` is for a NON-deterministic `answerMisses` (a real
+    *
+    * `ledgered = true` is for a NON-deterministic `answerMisses` (a real
     * LLM behind [[HttpAnswerer]]): the ledger-free convergence story
     * assumes a re-delivered batch re-derives the SAME answers, which
     * only a deterministic pipeline guarantees — with a live model, a
@@ -780,8 +777,8 @@ object ChatRag {
     * the same runs-itself wiring every other maintained store has.
     * Neither knob changes any served value: ep6/st20's oracles hold on
     * either layout, with or without the policy.
-    */
-  /** `chatLog = Some(path)` lands each served exchange in the C5 chat
+    *
+    * `chatLog = Some(path)` lands each served exchange in the C5 chat
     * log too — the reference's per-turn trail (app.py:258 calls
     * guardar_chat_en_mongo after EVERY answer; the composition was the
     * one reference behavior ep6 didn't carry): `user` = the session id,
@@ -1009,15 +1006,15 @@ object ChatRag {
     * anti-join) — while the cache stays exactly-once (id-idempotent
     * inserts) and the output dir re-derives self-healingly against the
     * grown memory. Never a wrong or half-written turn.
-    */
-  /** `maintenanceEvery` gates how often the policy SIGNAL is even
+    *
+    * `maintenanceEvery` gates how often the policy SIGNAL is even
     * evaluated: `maintenanceDue` is metadata-only but its recursive
     * listing covers the WHOLE table — on an object store that listing
     * is exactly the per-turn cost the bucketed layout exists to avoid,
     * so a long-lived stream polls it every N batches (file accumulation
     * between polls is bounded at one file per touched bucket per batch).
-    */
-  /** `chatLogPath = Some(p)` composes the C5 trail into the loop (the
+    *
+    * `chatLogPath = Some(p)` composes the C5 trail into the loop (the
     * reference's shape — every turn logs); `chatLogRetainFor = Some(keep)`
     * additionally prunes the log past `turnTsOf(batchId) − keep` on the
     * `maintenanceEvery` poll — affordable now that the day= layout makes
@@ -1698,6 +1695,9 @@ private[graft] object RecencySidecar {
 /** The LLM boundary (reference `ChatCompletion.create`, app.py:246-250).
   * [[HttpAnswerer]] is the remote-API binding; [[EchoAnswerer]] the
   * deterministic offline stub the oracled queries run on.
+  *
+  * C3: the LLM-completion boundary. The engine never calls a network model;
+  * serving plugs an [[Answerer]] in, tests use the deterministic stub.
   */
 trait Answerer extends Serializable {
   /** Adds `answerCol` computed from a context column and question column. */
@@ -2783,16 +2783,6 @@ object SemanticCache {
     graft.ops.Layout.swapDir(fs, cachePath, staging)
   }
 
-  /** [[lookup]]'s scale path — a cache too big to broadcast: both sides
-    * unit-normalized (codegen `unit_vector_f`, so cos ⇔ L2:
-    * ‖a−b‖² = 2−2cos), banded top-1 via [[graft.ops.Ann.rpTopKBatch]]
-    * (AND/OR-amplified RP-LSH — the cache never shuffles per batch),
-    * then the threshold on the candidate's EXACT distance. Precision is
-    * exact (rpTopKBatch verifies candidates with true L2); only recall
-    * is approximate — EXCEPT for exact-duplicate hits (cos = 1), whose
-    * identical band keys collide in every table, so a re-asked question
-    * is always served. Same output contract as [[lookup]].
-    */
   /** The shared exact-vs-banded lookup ROUTER — lookup-path selectivity
     * (the cosinePairsAuto law applied to the batch × cache product): the
     * exact broadcast scan is 10^7-ish pairs for a chat-sized batch, but
@@ -2955,6 +2945,16 @@ object SemanticCache {
     */
   private[graft] val ServingRowBytes: Long = 8192L
 
+  /** [[lookup]]'s scale path — a cache too big to broadcast: both sides
+    * unit-normalized (codegen `unit_vector_f`, so cos ⇔ L2:
+    * ‖a−b‖² = 2−2cos), banded top-1 via [[graft.ops.Ann.rpTopKBatch]]
+    * (AND/OR-amplified RP-LSH — the cache never shuffles per batch),
+    * then the threshold on the candidate's EXACT distance. Precision is
+    * exact (rpTopKBatch verifies candidates with true L2); only recall
+    * is approximate — EXCEPT for exact-duplicate hits (cos = 1), whose
+    * identical band keys collide in every table, so a re-asked question
+    * is always served. Same output contract as [[lookup]].
+    */
   def lookupBanded(
       queries: DataFrame,
       cache: DataFrame,

@@ -404,6 +404,35 @@ class VectorIndexSpec extends SparkSpec {
     assert(active.count() == expected.size, "no duplicate chunk rows")
   }
 
+  test("compact heals a compact that crashed between the swap renames") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_idx_swapcrash")
+    val path = dir.toString + "/idx"
+    val d = docs(0 until 6)
+    val embedder = VectorIndex.fit(d)
+    VectorIndex.append(spark, d, path, embedder)
+    VectorIndex.upsertDocs(spark,
+      Seq((2L, "SECTION ALPHA\n\nsecond revision body for document two"))
+        .toDF("doc_id", "text"), path, embedder, epoch = 1)
+    VectorIndex.deleteDocs(spark, Seq(0L, 3L), path, epoch = 2)
+    def activeRows(p: String) =
+      VectorIndex.loadActive(spark, p).collect().map(_.toString).sorted.toSeq
+    val before = activeRows(path)
+    // the crash signature: a complete compacted generation staged at
+    // `.idx.__compact`, the live dir already renamed aside to `.idx.__old`
+    val copy = dir.toString + "/copy"
+    org.apache.commons.io.FileUtils.copyDirectory(
+      new java.io.File(path), new java.io.File(copy))
+    VectorIndex.compact(spark, copy)
+    java.nio.file.Files.move(
+      java.nio.file.Paths.get(copy), dir.resolve(".idx.__compact"))
+    java.nio.file.Files.move(
+      java.nio.file.Paths.get(path), dir.resolve(".idx.__old"))
+    VectorIndex.compact(spark, path)
+    assert(activeRows(path) == before)
+    assert(!java.nio.file.Files.exists(dir.resolve(".idx.__old")))
+    assert(!java.nio.file.Files.exists(dir.resolve(".idx.__compact")))
+  }
+
   test("resolveActive epoch law: tombstone kills <= epoch, revives above") {
     import org.apache.spark.sql.functions.{col, lit}
     val data = Seq(

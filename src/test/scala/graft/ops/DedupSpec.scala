@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.SparkSpec
+import org.apache.spark.ListenerBusDrain
 import org.apache.spark.sql.functions._
 
 class DedupSpec extends SparkSpec {
@@ -572,16 +573,12 @@ class DedupSpec extends SparkSpec {
     // AQE materializes every exchange as its own job, which hides the
     // action count; with it off, jobs ≈ actions + broadcast builds.
     val corpus = docs
-    val group = "funnel-job-count"
     val aqe = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.sparkContext.setJobGroup(group, "funnel", interruptOnCancel = false)
-    try CorpusPipeline.funnel(corpus, 0.0, 0.9, maxDocFreq = 1000L).head()
-    finally {
-      spark.sparkContext.clearJobGroup()
-      spark.conf.set("spark.sql.adaptive.enabled", aqe)
-    }
-    val jobs = spark.sparkContext.statusTracker.getJobIdsForGroup(group).length
+    val (_, jobs) =
+      try ListenerBusDrain.jobsOf(spark.sparkContext) {
+        CorpusPipeline.funnel(corpus, 0.0, 0.9, maxDocFreq = 1000L).head()
+      } finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
     // one aggregate action + ≤5 broadcast builds (stop tokens, 2× sizes,
     // losers); the old shape was 4 full-pipeline actions (quality ×4,
     // dedup ×3, jaccard ×2), i.e. 4 aggregate actions before broadcasts
@@ -608,17 +605,12 @@ class DedupSpec extends SparkSpec {
       (2L, "completely novel content here"),
       (3L, "completely novel content here")   // in-batch twin of 2 → dropped
     ).toDF("doc_id", "text")
-    val group = "intake-job-count"
     val aqe = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.sparkContext.setJobGroup(group, "intake", interruptOnCancel = false)
-    val survivors =
-      try CorpusPipeline.nearDupIntakeBatch(spark, batch, tmp)
-      finally {
-        spark.sparkContext.clearJobGroup()
-        spark.conf.set("spark.sql.adaptive.enabled", aqe)
-      }
-    val jobs = spark.sparkContext.statusTracker.getJobIdsForGroup(group).length
+    val (survivors, jobs) =
+      try ListenerBusDrain.jobsOf(spark.sparkContext) {
+        CorpusPipeline.nearDupIntakeBatch(spark, batch, tmp)
+      } finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
     assert(jobs <= 80, s"intake used $jobs jobs — the fused path regressed " +
       "(59 at fusion time; the unfused shape was 156)")
     assert(survivors.select("doc_id").as[Long].collect().toSet == Set(2L))

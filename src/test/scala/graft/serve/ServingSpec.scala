@@ -1,6 +1,7 @@
 package graft.serve
 
 import graft.SparkSpec
+import org.apache.spark.ListenerBusDrain
 import org.apache.spark.sql.functions._
 
 class ServingSpec extends SparkSpec {
@@ -1939,26 +1940,6 @@ class ServingSpec extends SparkSpec {
     assert(routed(3L) == ((false, true)))
   }
 
-  /** Jobs `body` submits, counted between two listener-bus drains (the
-    * first keeps earlier tests' queued events out of the count). */
-  private def jobsOf(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    org.apache.spark.ListenerBusDrain.drain(sc)
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    sc.addSparkListener(listener)
-    try {
-      body
-      org.apache.spark.ListenerBusDrain.drain(sc)
-      jobs.get()
-    } finally sc.removeSparkListener(listener)
-  }
-
   test("intakeBatch job budget: one micro-batch stays within its scheduling budget") {
     // the round-11 hygiene note: intakeBatch fires several driver actions
     // per micro-batch (the lookup, the in-batch resolve, the collision
@@ -1973,7 +1954,7 @@ class ServingSpec extends SparkSpec {
     val batch = Seq(
       (1L, Array(1.0f, 0.0f)), (2L, Array(0.0f, 1.0f)), (3L, Array(0.6f, 0.8f))
     ).toDF("query_id", "query_vec")
-    val n = jobsOf {
+    val (_, n) = ListenerBusDrain.jobsOf(spark.sparkContext) {
       SemanticCache.intakeBatch(spark, batch, tmp, minCos = 0.95).collect()
     }
     info(s"intakeBatch micro-batch issued $n jobs")
@@ -2001,7 +1982,7 @@ class ServingSpec extends SparkSpec {
       missQ.select(col("query_id"), col("question"),
         concat(lit("ans "), col("question")).as("answer"),
         lit(0.01).as("cost"))
-    val n = jobsOf {
+    val (_, n) = ListenerBusDrain.jobsOf(spark.sparkContext) {
       CachedRag.cachedAnswerBatch(spark, batch, tmp, minCos = 0.95,
         echoMisses).collect()
     }
@@ -2026,7 +2007,7 @@ class ServingSpec extends SparkSpec {
       missQ.select(col("query_id"), col("question"),
         concat(lit("ans "), col("question")).as("answer"),
         lit(0.01).as("cost"))
-    val n = jobsOf {
+    val (_, n) = ListenerBusDrain.jobsOf(spark.sparkContext) {
       ChatRag.chatTurn(spark, batch, mem, cache, minCos = 0.95, echoMisses)
         .collect()
     }
