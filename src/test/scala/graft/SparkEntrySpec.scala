@@ -37,7 +37,8 @@ class SparkEntrySpec extends AnyFunSuite {
       assert(!sql.contains("/root/") || paths.nonEmpty,
         s"$name: absolute path outside a read_parquet golden reference")
       paths.foreach { p =>
-        assert(p.startsWith("/root/repo/fixtures/"),
+        assert(new java.io.File(p).getCanonicalFile.getParentFile ==
+            new java.io.File("fixtures").getCanonicalFile,
           s"$name: golden path must live in committed fixtures/, got $p")
         assert(new java.io.File(p).isFile, s"$name: missing golden fixture $p")
       }
