@@ -789,8 +789,8 @@ object SparkEntry {
     //    Scala-vs-Python cross-implementation agreement, not self-reference.
     // golden-parquet oracle (LangChain-port boundaries)
     reg("t4_chunks", oracle =
-      s"""SELECT doc_id, pos, section, chunk_idx, chunk
-        |FROM read_parquet('$FixturesDir/t4_chunks_sf001.parquet')""".stripMargin) { (s, dir) =>
+      """SELECT doc_id, pos, section, chunk_idx, chunk
+        |FROM read_parquet('/root/repo/fixtures/t4_chunks_sf001.parquet')""".stripMargin) { (s, dir) =>
       Chunker.chunk(Sectionizer.sectionize(docs2(s, dir), "text2"))
         .orderBy("doc_id", "pos", "chunk_idx")
     }
@@ -825,10 +825,10 @@ object SparkEntry {
     //  - t7's counts are SQL aggregates over that same golden; its n_ids
     //    additionally asserts the xxhash64 chunk ids are collision-free.
     reg("t7_index_stats", oracle =
-      s"""SELECT count(*) AS n_chunks,
+      """SELECT count(*) AS n_chunks,
         |       count(DISTINCT (doc_id, pos, chunk_idx)) AS n_ids,
         |       count(DISTINCT section) AS n_sections
-        |FROM read_parquet('$FixturesDir/t4_chunks_sf001.parquet')""".stripMargin) { (s, dir) =>
+        |FROM read_parquet('/root/repo/fixtures/t4_chunks_sf001.parquet')""".stripMargin) { (s, dir) =>
       val idx = VectorIndex.build(
         docs2(s, dir).select(col("doc_id"), col("text2").as("text")))
       idx.agg(
@@ -6301,14 +6301,7 @@ object SparkEntry {
     * fixtures/<name>_sf001.parquet.
     */
   private def goldenPin(name: String): String =
-    s"SELECT * FROM read_parquet('$FixturesDir/${name}_sf001.parquet')"
-
-  /** Absolute path of the committed fixtures/ directory, so the golden
-    * oracles resolve whatever DuckDB's working directory is. The JVM runs
-    * from the repository root; GRAFT_FIXTURES_DIR overrides the location.
-    */
-  private lazy val FixturesDir: String =
-    sys.env.getOrElse("GRAFT_FIXTURES_DIR", new java.io.File("fixtures").getAbsolutePath)
+    s"SELECT * FROM read_parquet('/root/repo/fixtures/${name}_sf001.parquet')"
 
   /** t3's paragraph split and title test over docs2 (`d2`, `paras`,
     * `sec`), shared by the t3 and q10 oracles.
