@@ -296,6 +296,22 @@ object VectorIndex {
     resolveActive(data, readTombstones(spark, path))
   }
 
+  /** A compact that crashed between swapDir's two renames left the live
+    * dir absent: finish (or sweep) that swap before an op reads it. A
+    * compact staged at the visible `$path.__compact` before staging moved
+    * to the hidden sibling; such a stage is moved to the hidden name first,
+    * so the shared heal installs it instead of dropping the aside.
+    */
+  private def healCompactSwap(
+      fs: org.apache.hadoop.fs.FileSystem, path: String): Unit = {
+    val live = new org.apache.hadoop.fs.Path(path)
+    val legacy = new org.apache.hadoop.fs.Path(s"$path.__compact")
+    val (staged, _) = graft.ops.Layout.swapSiblings(live)
+    if (!fs.exists(live) && fs.exists(legacy) && !fs.exists(staged))
+      fs.rename(legacy, staged)
+    graft.ops.Layout.healOrSweepSwap(fs, live)
+  }
+
   /** Fold tombstones into the data: rewrite active rows, clear the
     * sidecar. Run when the tombstone table — not the index — grows large;
     * the rewrite is the only full-index pass in the MoR lifecycle.
@@ -304,9 +320,7 @@ object VectorIndex {
     import spark.implicits._
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sessionState.newHadoopConf())
-    // a compact that crashed between swapDir's two renames left the live
-    // dir absent: finish (or sweep) that swap before reading it
-    graft.ops.Layout.healOrSweepSwap(fs, new org.apache.hadoop.fs.Path(path))
+    healCompactSwap(fs, path)
     val active = loadActive(spark, path).localCheckpoint(true)
     val n = active.count()
     val staged = graft.ops.Layout.compactStaging(fs, path)
@@ -372,7 +386,7 @@ object VectorIndex {
       spark: SparkSession, path: String, retainFrom: Long): (Long, Long) = {
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sessionState.newHadoopConf())
-    graft.ops.Layout.healOrSweepSwap(fs, new org.apache.hadoop.fs.Path(path)) // see compact
+    healCompactSwap(fs, path)
     retentionHorizon(spark, path).foreach(h => require(retainFrom >= h,
       s"compactRetain: retainFrom $retainFrom is below the existing " +
         s"horizon $h — history there is already folded"))

@@ -404,7 +404,10 @@ class VectorIndexSpec extends SparkSpec {
     assert(active.count() == expected.size, "no duplicate chunk rows")
   }
 
-  test("compact heals a compact that crashed between the swap renames") {
+  // build, upsert and delete, then leave a compact's crash signature by
+  // hand: a complete compacted generation at `stageName`, the live dir
+  // already renamed aside to `.idx.__old`; compact must restore the rows
+  private def compactAfterSwapCrash(stageName: String): Unit = {
     val dir = java.nio.file.Files.createTempDirectory("graft_idx_swapcrash")
     val path = dir.toString + "/idx"
     val d = docs(0 until 6)
@@ -417,20 +420,27 @@ class VectorIndexSpec extends SparkSpec {
     def activeRows(p: String) =
       VectorIndex.loadActive(spark, p).collect().map(_.toString).sorted.toSeq
     val before = activeRows(path)
-    // the crash signature: a complete compacted generation staged at
-    // `.idx.__compact`, the live dir already renamed aside to `.idx.__old`
     val copy = dir.toString + "/copy"
     org.apache.commons.io.FileUtils.copyDirectory(
       new java.io.File(path), new java.io.File(copy))
     VectorIndex.compact(spark, copy)
     java.nio.file.Files.move(
-      java.nio.file.Paths.get(copy), dir.resolve(".idx.__compact"))
+      java.nio.file.Paths.get(copy), dir.resolve(stageName))
     java.nio.file.Files.move(
       java.nio.file.Paths.get(path), dir.resolve(".idx.__old"))
     VectorIndex.compact(spark, path)
     assert(activeRows(path) == before)
-    assert(!java.nio.file.Files.exists(dir.resolve(".idx.__old")))
-    assert(!java.nio.file.Files.exists(dir.resolve(".idx.__compact")))
+    Seq(".idx.__old", ".idx.__compact", "idx.__compact").foreach(n =>
+      assert(!java.nio.file.Files.exists(dir.resolve(n)), s"$n left behind"))
+  }
+
+  test("compact heals a compact that crashed between the swap renames") {
+    compactAfterSwapCrash(".idx.__compact")
+  }
+
+  test("compact heals a crashed compact that staged at the visible sibling") {
+    // the staging name compact used before it moved to the hidden sibling
+    compactAfterSwapCrash("idx.__compact")
   }
 
   test("resolveActive epoch law: tombstone kills <= epoch, revives above") {
