@@ -296,22 +296,6 @@ object VectorIndex {
     resolveActive(data, readTombstones(spark, path))
   }
 
-  /** A compact that crashed between swapDir's two renames left the live
-    * dir absent: finish (or sweep) that swap before an op reads it. A
-    * compact staged at the visible `$path.__compact` before staging moved
-    * to the hidden sibling; such a stage is moved to the hidden name first,
-    * so the shared heal installs it instead of dropping the aside.
-    */
-  private def healCompactSwap(
-      fs: org.apache.hadoop.fs.FileSystem, path: String): Unit = {
-    val live = new org.apache.hadoop.fs.Path(path)
-    val legacy = new org.apache.hadoop.fs.Path(s"$path.__compact")
-    val (staged, _) = graft.ops.Layout.swapSiblings(live)
-    if (!fs.exists(live) && fs.exists(legacy) && !fs.exists(staged))
-      fs.rename(legacy, staged)
-    graft.ops.Layout.healOrSweepSwap(fs, live)
-  }
-
   /** Fold tombstones into the data: rewrite active rows, clear the
     * sidecar. Run when the tombstone table — not the index — grows large;
     * the rewrite is the only full-index pass in the MoR lifecycle.
@@ -320,10 +304,14 @@ object VectorIndex {
     import spark.implicits._
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sessionState.newHadoopConf())
-    healCompactSwap(fs, path)
+    // rename-aside replacement (shared protocol — see Layout.replaceDirs,
+    // which first heals a compact that crashed inside its swap window).
+    // The `_tombstones` sidecar lives inside the old generation's
+    // directory, so it is swapped out (spent) together with the rows it
+    // resolved.
+    graft.ops.Layout.replaceDirs(fs, Seq(path)) { case Seq(staged) =>
     val active = loadActive(spark, path).localCheckpoint(true)
     val n = active.count()
-    val staged = graft.ops.Layout.compactStaging(fs, path)
     active.write.mode("overwrite").partitionBy("section").parquet(staged)
     // a full compact spends EVERY tombstone, so AS OF below the newest
     // surviving epoch would silently serve a partial view (a doc whose
@@ -352,11 +340,8 @@ object VectorIndex {
       math.max(maxEpoch, maxTombEpoch) + 1)
     Seq(horizon).toDF("retain_from")
       .coalesce(1).write.parquet(s"$staged/_retention")
-    // rename-aside swap (shared protocol — see Layout.swapDir). The
-    // `_tombstones` sidecar lives inside the old generation's directory,
-    // so it is swapped out (spent) together with the rows it resolved.
-    graft.ops.Layout.swapDir(fs, path, staged)
     n
+    }
   }
 
   /** Retention-bounded compact — the Delta/Iceberg VACUUM analog
@@ -386,7 +371,7 @@ object VectorIndex {
       spark: SparkSession, path: String, retainFrom: Long): (Long, Long) = {
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sessionState.newHadoopConf())
-    healCompactSwap(fs, path)
+    graft.ops.Layout.replaceDirs(fs, Seq(path)) { case Seq(staged) =>
     retentionHorizon(spark, path).foreach(h => require(retainFrom >= h,
       s"compactRetain: retainFrom $retainFrom is below the existing " +
         s"horizon $h — history there is already folded"))
@@ -408,7 +393,6 @@ object VectorIndex {
     require(after > 0,
       s"compactRetain: no rows survive the fold at $path — delete the " +
         "index directory instead of compacting to empty")
-    val staged = graft.ops.Layout.compactStaging(fs, path)
     folded.write.mode("overwrite").partitionBy("section").parquet(staged)
     // surviving tombstones + the horizon marker ride INSIDE the staged
     // generation (underscore dirs are invisible to the parquet reader),
@@ -420,7 +404,7 @@ object VectorIndex {
     import spark.implicits._
     Seq(retainFrom).toDF("retain_from")
       .coalesce(1).write.parquet(s"$staged/_retention")
-    graft.ops.Layout.swapDir(fs, path, staged)
     (before, after)
+    }
   }
 }

@@ -805,44 +805,14 @@ object Ann extends IndexLifecycle {
     markDeleted(spark, path, ids)
 
   /** Fold tombstones into the lists (anti join — scale-safe at any
-    * tombstone count, unlike the probe-side exclusion) and swap via the
-    * shared rename-aside protocol. Centroids are untouched: the
-    * quantizer stays frozen. Returns (rows before, rows after).
+    * tombstone count, unlike the probe-side exclusion) through the shared
+    * keyed-table compact ([[Layout.compactKeyedTable]], which keeps the
+    * `centroid_id` partitioning). Centroids are untouched: the quantizer
+    * stays frozen. Returns (rows before, rows after).
     */
-  def compactIvf(spark: SparkSession, path: String): (Long, Long) = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    // snapshot sidecar FILES before the anti-join; spend exactly those
-    // at the end, so a deleteIvf concurrent with this compact is kept
-    // for the next one instead of silently revived
-    val tombFiles = Layout.snapshotTombstoneFiles(fs, s"$path/_tombstones")
-    val lists = spark.read.parquet(s"$path/lists")
-    // one ledger pass for both counts + an uncheckpointed single-consumer
-    // rewrite — the Layout.compactKeyedTable fusion (see there): `dead`
-    // is distinct, so count(__dead) is exactly the rows the anti-join
-    // drops, and `live` feeds only the staged write below
-    val dead =
-      if (tombFiles.isEmpty) None
-      else Some(spark.read.parquet(tombFiles.map(_.toString): _*)
-        .select(col("vec_id").cast("long").as("vec_id")).distinct())
-    val cnt = dead.map(dd => lists
-      .join(dd.withColumn("__dead", lit(1)), Seq("vec_id"), "left")
-      .agg(count(lit(1)), count(col("__dead"))).head)
-    val before = cnt.map(_.getLong(0)).getOrElse(lists.count())
-    val after = cnt.map(r => r.getLong(0) - r.getLong(1)).getOrElse(before)
-    val live = dead.map(dd => lists.join(dd, Seq("vec_id"), "left_anti"))
-      .getOrElse(lists)
-    // same refusal as Bm25.compactIndex: an all-dead compact would swap
-    // in a data-file-less partitioned dir that loadIvf cannot read
-    require(after > 0,
-      s"compactIvf: every vector at $path is tombstoned — delete the " +
-        "index directory instead of compacting to empty")
-    live.write.mode("overwrite").partitionBy("centroid_id")
-      .parquet(s"$path/lists.__compact")
-    Layout.swapDir(fs, s"$path/lists", s"$path/lists.__compact")
-    Layout.spendTombstoneFiles(fs, s"$path/_tombstones", tombFiles)
-    (before, after)
-  }
+  def compactIvf(spark: SparkSession, path: String): (Long, Long) =
+    Layout.compactKeyedTable(
+      spark, s"$path/lists", s"$path/_tombstones", "vec_id", "compactIvf")
 
   /** [[appendIvf]] under the batch ledger ([[Layout.ledgeredBatch]]) —
     * the streaming-maintenance wrapper, completing the trio with
@@ -878,9 +848,10 @@ object Ann extends IndexLifecycle {
     * once a streaming sink feeds it: every [[appendIvf]] leaves one file
     * per touched centroid partition, and a year of micro-batches is a
     * footer-read tax on every probe. Each `centroid_id=` partition
-    * directory is bin-packed INDEPENDENTLY via [[Layout.compactFiles]]
-    * (merge set chosen from the file LISTING — partitions already at
-    * target are untouched without a data scan; this per-partition unit
+    * directory is folded INDEPENDENTLY by the size-tiered
+    * [[Layout.compactSmallFiles]] (merge set chosen from the file LISTING
+    * — only size-peer small files are rewritten, settled files move by
+    * rename; this per-partition unit
     * of work is also what bounds a 100 TB maintenance pass). The
     * `_tombstones` sidecar lives at `path/`, not inside the partitions,
     * and the rewrite preserves rows verbatim — probe-side exclusion is

@@ -585,6 +585,9 @@ object Dedup extends IndexLifecycle {
         spark.range(0).select(col("id").as("doc_id"))
       else spark.read.parquet(tombFiles.map(_.toString): _*)
         .select(col("doc_id").cast("long").as("doc_id")).distinct()
+    val tableDdl = Seq("bands" -> BandsDdl, "sigs" -> SigsDdl,
+      "shingles" -> ShinglesDdl, "docs" -> DocsDdl)
+    val counts = Layout.replaceDirs(fs, tableDdl.map(t => s"$path/${t._1}")) { stages =>
     // ONE ledger pass yields both counts (`dead` is distinct, so each
     // docs row matches at most one dead row: count(*) is the old two-job
     // `count()` and count(__dead) the old semi-join count)
@@ -597,20 +600,17 @@ object Dedup extends IndexLifecycle {
       s"compactMinhash: every doc at $path is tombstoned — delete the " +
         "store directory instead of compacting to empty")
     // stage all four rewrites concurrently (independent reads into four
-    // disjoint `.__compact` dirs — guide §2.6), then flip visibility with
-    // the sequential swaps exactly as before
-    val tableDdl = Map("bands" -> BandsDdl, "sigs" -> SigsDdl,
-      "shingles" -> ShinglesDdl, "docs" -> DocsDdl)
-    Layout.mapConcurrently(Seq("bands", "sigs", "shingles", "docs"), 4) { t =>
-      readTable(spark, s"$path/$t", tableDdl(t))
+    // disjoint stages — guide §2.6); visibility flips only at the
+    // sequential swaps after
+    Layout.mapConcurrently(tableDdl.zip(stages), 4) { case ((t, ddl), staged) =>
+      readTable(spark, s"$path/$t", ddl)
         .join(dead, Seq("doc_id"), "left_anti")
-        .write.mode("overwrite").parquet(s"$path/$t.__compact")
+        .write.mode("overwrite").parquet(staged)
     }
-    Seq("bands", "sigs", "shingles", "docs").foreach { t =>
-      Layout.swapDir(fs, s"$path/$t", s"$path/$t.__compact")
+    (before, after)
     }
     Layout.spendTombstoneFiles(fs, s"$path/_tombstones", tombFiles)
-    (before, after)
+    counts
   }
 
   /** Small-file maintenance for the minhash store — the
@@ -620,9 +620,10 @@ object Dedup extends IndexLifecycle {
     * [[graft.ops.CorpusPipeline.nearDupIntakeBatch]]) leaves one file
     * set per batch in each of the four tables, and a year of
     * micro-batches is a footer-read tax on every probe's band join and
-    * verify scan. Each table is bin-packed INDEPENDENTLY via
-    * [[Layout.compactFiles]] (merge set from the file LISTING — tables
-    * already at target are untouched without a data scan). Rows are
+    * verify scan. Each table is folded INDEPENDENTLY by the size-tiered
+    * [[Layout.compactSmallFiles]] (merge set from the file LISTING — only
+    * size-peer small files are rewritten; settled files move by rename,
+    * and a table with nothing to merge is not touched). Rows are
     * preserved verbatim: the `_tombstones` sidecar lives at `path/`,
     * outside the four table dirs, so probe-side exclusion is unaffected
     * and [[compactMinhash]] remains the pass that folds deletes for

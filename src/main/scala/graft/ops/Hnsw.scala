@@ -774,18 +774,21 @@ object Hnsw extends IndexLifecycle {
   def compact(spark: SparkSession, path: String): (Int, Int) = {
     import spark.implicits._
     val p = loadMeta(spark, path)
-    val segDir = new org.apache.hadoop.fs.Path(segPath(path))
-    val fs = segDir.getFileSystem(spark.sessionState.newHadoopConf())
+    val fs = new org.apache.hadoop.fs.Path(segPath(path))
+      .getFileSystem(spark.sessionState.newHadoopConf())
+    // snapshot sidecar FILES before the anti-join; spend exactly those
+    // at the end, so a delete concurrent with this compact is kept for
+    // the next one instead of silently revived
+    val tombFiles = Layout.snapshotTombstoneFiles(fs, tombPath(path))
+    // Layout.replaceDirs heals a crashed earlier compact before the read
+    // below, then swaps the new generation in by rename-aside
+    val counts = Layout.replaceDirs(fs, Seq(segPath(path))) { case Seq(staged) =>
     val segs = spark.read.parquet(segPath(path))
     val before = segs.select(col("shard")).distinct().count().toInt
     // replay-duplicated rows (appendBatch's crash window) fold away here;
     // a same-id row with DIFFERENT content is not an upsert and stays.
     // Tombstoned ids are purged for real (anti join — scale-safe at any
     // tombstone count, unlike the probe-side broadcast set).
-    // snapshot sidecar FILES before the anti-join; spend exactly those
-    // at the end, so a delete concurrent with this compact is kept for
-    // the next one instead of silently revived
-    val tombFiles = Layout.snapshotTombstoneFiles(fs, tombPath(path))
     val vecs0 = segs.select(col("id"), col("vec")).dropDuplicates("id", "vec")
     val vecs =
       if (tombFiles.isEmpty) vecs0
@@ -811,16 +814,11 @@ object Hnsw extends IndexLifecycle {
     require(after > 0,
       s"hnsw compact: every vector at $path is tombstoned — delete the " +
         "index directory instead of compacting to empty")
-    rebuilt.write.partitionBy("shard").mode("overwrite")
-      .parquet(s"${segPath(path)}.__compact")
-    // rename-aside swap (shared protocol, [[Layout.swapDir]]): a driver
-    // crash at any point leaves either the old or the new generation
-    // intact; the no-segments window is a single rename. Single-writer
-    // contract — an overlapping probe that lists segments/ inside the
-    // rename pair may fail and should retry.
-    Layout.swapDir(fs, segPath(path), s"${segPath(path)}.__compact")
-    Layout.spendTombstoneFiles(fs, tombPath(path), tombFiles)
+    rebuilt.write.partitionBy("shard").mode("overwrite").parquet(staged)
     (before, after)
+    }
+    Layout.spendTombstoneFiles(fs, tombPath(path), tombFiles)
+    counts
   }
 
   /** The column types [[write]] pins for `meta/` and `segments/` (the

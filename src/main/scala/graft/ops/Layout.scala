@@ -130,86 +130,6 @@ object Layout {
     stats.where(pred).count()
   }
 
-  /** Small-files compaction stats: (files, bytes) under `path`. */
-  final case class CompactStats(filesBefore: Int, filesAfter: Int, bytes: Long)
-
-  /** Bin-pack a directory of small Parquet files into ~`targetBytes`
-    * files — the lakehouse maintenance pass every streaming/incremental
-    * sink eventually needs (each micro-batch append leaves one file per
-    * partition; a year of 1-minute batches is half a million tiny files
-    * whose footer reads dominate scan time).
-    *
-    * The rewrite uses `coalesce` (narrow, no shuffle): compaction is a
-    * read-concatenate-write, so paying a shuffle to "rebalance" it would
-    * be pure waste. Row order within files may change; Parquet tables
-    * carry no order contract. No-op (returns current stats) when the
-    * directory already meets the target. Not for partitioned layouts —
-    * compact each partition directory separately, which is also what
-    * bounds the unit of work at 100 TB. Refuses directories holding a
-    * `_tombstones/` merge-on-read sidecar (those compact via
-    * [[graft.index.VectorIndex.compact]], which resolves deletes first).
-    */
-  def compactFiles(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String,
-      targetBytes: Long = 128L << 20): CompactStats = {
-    require(targetBytes > 0, "targetBytes must be positive")
-    val hPath = new org.apache.hadoop.fs.Path(path)
-    val fs = hPath.getFileSystem(spark.sessionState.newHadoopConf())
-    // A merge-on-read index keeps its deletes in a `_tombstones/` sidecar
-    // that spark.read.parquet hides: rewriting here would re-materialize
-    // every tombstoned row as live data and the delete below would drop
-    // the sidecar — resurrecting deleted docs. That layout compacts via
-    // VectorIndex.compact, which folds tombstones in.
-    require(!fs.exists(new org.apache.hadoop.fs.Path(hPath, "_tombstones")),
-      s"compactFiles: $path has a _tombstones sidecar (merge-on-read " +
-        "index) — use VectorIndex.compact, which resolves deletes")
-    val leafFiles = {
-      val it = fs.listFiles(hPath, true)
-      val buf = scala.collection.mutable.ArrayBuffer.empty[org.apache.hadoop.fs.LocatedFileStatus]
-      while (it.hasNext) {
-        val f = it.next()
-        val name = f.getPath.getName
-        if (!name.startsWith("_") && !name.startsWith(".")) buf += f
-      }
-      buf.toSeq
-    }
-    val totalBytes = leafFiles.map(_.getLen).sum
-    val targetFiles = math.max(1L, (totalBytes + targetBytes - 1) / targetBytes).toInt
-    if (leafFiles.size <= targetFiles)
-      return CompactStats(leafFiles.size, leafFiles.size, totalBytes)
-    // same swap protocol as the MoR compaction: materialize first (the
-    // rewrite's lineage reads the directory it replaces), then swap
-    // mergeSchema: a directory whose files straddle a schema addition
-    // (e.g. pre-epoch and epoch-stamped appends) must not silently drop
-    // the newer columns in the rewrite
-    val data = spark.read.option("mergeSchema", "true").parquet(path)
-      .coalesce(targetFiles)
-      .localCheckpoint(true)
-    // Stage under a DOT-prefixed sibling: compactFiles runs on partition
-    // directories INSIDE a partitioned read root (compactIvfLists compacts
-    // `lists/centroid_id=N`), and a visible `centroid_id=N.__compact`
-    // sibling would be picked up by partition discovery for the whole
-    // rewrite duration — parsed as a partition VALUE, widening the column
-    // to string or double-counting rows. Spark's FileIndex filters any
-    // path segment starting with `_` or `.`, so the hidden name makes the
-    // staging invisible; readers race only the swap renames.
-    val staged = compactStaging(fs, path)
-    data.write.mode("overwrite").parquet(staged)
-    swapDir(fs, path, staged)
-    val after = {
-      val it = fs.listFiles(hPath, true)
-      var n = 0
-      while (it.hasNext) {
-        val f = it.next()
-        val name = f.getPath.getName
-        if (!name.startsWith("_") && !name.startsWith(".")) n += 1
-      }
-      n
-    }
-    CompactStats(leafFiles.size, after, totalBytes)
-  }
-
   /** [[compactSmallFiles]]' outcome: `rewrittenBytes` is the fold's real
     * cost (the bytes read+rewritten — the size-peer classes that merged);
     * `untouchedFiles` moved by metadata-only rename, never rewritten.
@@ -316,13 +236,22 @@ object Layout {
     *    stage — sweep both;
     *  - live absent + committed tiered stage (`_consumed` manifest) —
     *    a crashed [[compactSmallFiles]]: heal via the manifest;
-    *  - live absent + stage + aside — a crashed [[swapDir]] window: the
-    *    stage was complete before the swap began (every writer stages
+    *  - live absent + stage + aside — a crashed [[replaceDirs]] window:
+    *    the stage was complete before the swap began (every writer stages
     *    fully, then swaps), so finish it — rename staged to live, drop
     *    the aside;
     *  - live absent + aside only — a crashed RETIRE (every row was
     *    condemned): sweep the aside, completing the deletion;
     *  - live absent + stage only — an unreachable uncommitted stage: sweep.
+    *
+    * Earlier releases staged at the VISIBLE `name.__compact` (BM25's
+    * commit reset at `name.__staged`) and parked the aside at the visible
+    * `name.__old`. A visible stage left by a crash inside the swap window
+    * (live absent, hidden aside present) is taken over as the hidden
+    * stage, so the dispatch above installs it rather than reading the
+    * crash as a retire; any other visible leftover is stale and swept —
+    * inside a partitioned read root it would otherwise be parsed as a
+    * partition value.
     *
     * Single-writer contract: callers run this inside a maintenance op,
     * never concurrently with another writer on the same dir.
@@ -331,6 +260,15 @@ object Layout {
       fs: org.apache.hadoop.fs.FileSystem,
       dir: org.apache.hadoop.fs.Path): Unit = {
     val (staged, aside) = swapSiblings(dir)
+    def visible(suffix: String) =
+      new org.apache.hadoop.fs.Path(dir.getParent, s"${dir.getName}.$suffix")
+    val legacyAside = visible("__old")
+    if (fs.exists(legacyAside)) fs.delete(legacyAside, true)
+    Seq(visible("__compact"), visible("__staged")).filter(fs.exists).foreach { l =>
+      if (!fs.exists(dir) && fs.exists(aside) && !fs.exists(staged))
+        fs.rename(l, staged)
+      else fs.delete(l, true)
+    }
     if (fs.exists(dir)) {
       if (fs.exists(aside)) fs.delete(aside, true)
       if (fs.exists(staged)) fs.delete(staged, true)
@@ -343,6 +281,46 @@ object Layout {
       if (fs.exists(staged)) fs.delete(staged, true)
     }
     ()
+  }
+
+  /** The ONE crash-safe directory-replacement protocol of every store
+    * rewrite (compacts, merges' commit flips, evictions, migrations,
+    * partition rewrites). Three steps, in order:
+    *
+    *  1. HEAL each target through [[healOrSweepSwap]], so a rewrite that
+    *     crashed inside an earlier swap window is finished (or its
+    *     leftovers swept) before `stage` reads the target;
+    *  2. run `stage` against the targets' hidden `.{name}.__compact`
+    *     siblings (in target order). Hidden because Spark's FileIndex
+    *     skips `_`/`.`-prefixed path segments: a stage inside a
+    *     partitioned read root (`lists/`, a `sbucket=N` dir) is never
+    *     parsed as a partition value while it is written. `stage` may
+    *     leave a stage unwritten — that target is then left as it is;
+    *  3. SWAP every target whose stage was written, in target order, by
+    *     rename-ASIDE — live → hidden `.{name}.__old`, staged → live,
+    *     drop the aside — so a driver crash at any point leaves either
+    *     generation intact and the no-directory window is one rename,
+    *     which step 1 of the next rewrite heals.
+    *
+    * Single-writer contract: one maintainer rewrites a target at a time;
+    * an overlapping reader that lists a target inside its rename pair may
+    * fail and should retry. A `stage` that throws swaps nothing.
+    */
+  private[graft] def replaceDirs[A](
+      fs: org.apache.hadoop.fs.FileSystem,
+      targets: Seq[String])(stage: Seq[String] => A): A = {
+    val live = targets.map(new org.apache.hadoop.fs.Path(_))
+    live.foreach(healOrSweepSwap(fs, _))
+    val stages = live.map(swapSiblings(_)._1)
+    val out = stage(stages.map(_.toString))
+    live.zip(stages).filter { case (_, s) => fs.exists(s) }.foreach {
+      case (t, s) =>
+        val aside = swapSiblings(t)._2
+        if (fs.exists(t)) fs.rename(t, aside)
+        fs.rename(s, t)
+        fs.delete(aside, true)
+    }
+    out
   }
 
   /** Table-wide VACUUM (round-14 verdict stretch): every maintenance op
@@ -393,9 +371,9 @@ object Layout {
 
   /** SIZE-TIERED minor compaction of a flat directory — the fold whose
     * cost tracks the FRESH bytes, not the accumulated state (round-13
-    * verdict #1: [[compactFiles]] coalesces the WHOLE directory, so a
-    * store that appends small files forever rewrites its settled base on
-    * every trigger — write amplification O(state) per firing). Two laws:
+    * verdict #1: a whole-directory coalesce makes a store that appends
+    * small files forever rewrite its settled base on every trigger —
+    * write amplification O(state) per firing). Two laws:
     *
     *  - files ≥ `targetBytes` are SETTLED: never read, never rewritten —
     *    they hop through the swap by metadata-only rename;
@@ -413,7 +391,7 @@ object Layout {
     *    so a due signal thresholded above that cannot latch on a
     *    directory the fold can no longer shrink.
     *
-    * Swap protocol (single-writer, same reader contract as [[swapDir]]:
+    * Swap protocol (single-writer, same reader contract as [[replaceDirs]]:
     * reads inside the rename window fail loudly and retry, never see
     * partial data): merged outputs land in the hidden staging sibling,
     * a `_consumed` manifest (the merged inputs' names) commits the
@@ -423,9 +401,9 @@ object Layout {
     * preserved across the two hidden siblings, and the next call HEALS:
     * live missing + old + committed stage ⇒ finish the move via the
     * manifest. A crash before the manifest leaves live intact and the
-    * stale stage is swept. Directories with subdirectories or a
-    * `_tombstones` sidecar refuse (use [[compactFiles]] /
-    * [[graft.index.VectorIndex.compact]]).
+    * stale stage is swept. Directories with subdirectories (compact each
+    * partition dir separately) or a `_tombstones` sidecar (use
+    * [[graft.index.VectorIndex.compact]]) refuse.
     */
   def compactSmallFiles(
       spark: org.apache.spark.sql.SparkSession,
@@ -457,7 +435,7 @@ object Layout {
     val entries = fs.listStatus(hPath).toSeq
     require(!entries.exists(e => e.isDirectory && isData(e.getPath.getName)),
       s"compactSmallFiles: $path has subdirectories — this tier compacts " +
-        "flat (bucket/partition) dirs; use compactFiles for nested layouts")
+        "flat (bucket/partition) dirs; compact each partition dir separately")
     val files = entries.filter(e => e.isFile && isData(e.getPath.getName) &&
       e.getLen > 0)
     def sizeClass(len: Long): Int =
@@ -482,9 +460,10 @@ object Layout {
     // peers), not about keeping their outputs apart — combining outputs
     // just settles the result faster, and a per-class job loop was pure
     // scheduler overhead (~16 buckets × classes tiny jobs per fold).
-    // Live dir untouched and fully readable throughout; mergeSchema for
-    // the same straddling-appends reason as compactFiles.
-    // no localCheckpoint (unlike compactFiles): the inputs are explicit
+    // Live dir untouched and fully readable throughout; mergeSchema: a
+    // directory whose files straddle a schema addition (e.g. pre-epoch
+    // and epoch-stamped appends) must not drop the newer columns.
+    // No localCheckpoint: the inputs are explicit
     // FILE paths that exist untouched until the post-swap delete, and the
     // staged write completes before the live dir is mutated — there is no
     // window where a task retry could re-read a replaced source
@@ -872,16 +851,29 @@ object Layout {
     ()
   }
 
-  /** Shared tombstone-folding compact for an UNPARTITIONED id-keyed
-    * parquet table (the SQ8/PQ `codes/` dirs — [[Sq.compactCodes]],
-    * [[Pq.compactCodes]]; the partitioned variant lives in
-    * [[Ann.compactIvf]] because it must preserve `partitionBy`): snapshot
-    * the sidecar's data files, anti-join exactly those ids out of the
-    * table, refuse-to-empty, rename-aside swap, then spend only the
-    * snapshotted files — a delete issued DURING the compact lands new
-    * part files that survive the spend and stay excluded by the next
-    * probe (the [[snapshotTombstoneFiles]] law). Returns (rows before,
-    * rows after).
+  /** The `col=value` partition columns of the parquet table at `dir`,
+    * outermost first — read from the first visible partition dir at each
+    * level (a partitioned write nests every column at every leaf).
+    */
+  private def partitionColumns(
+      fs: org.apache.hadoop.fs.FileSystem,
+      dir: org.apache.hadoop.fs.Path): Seq[String] =
+    fs.listStatus(dir).find(e => e.isDirectory &&
+        isDataName(e.getPath.getName) && e.getPath.getName.contains('='))
+      .map(e => e.getPath.getName.takeWhile(_ != '=') +:
+        partitionColumns(fs, e.getPath))
+      .getOrElse(Seq.empty)
+
+  /** Shared tombstone-folding compact for an id-keyed parquet table (the
+    * SQ8/PQ `codes/` dirs — [[Sq.compactCodes]], [[Pq.compactCodes]] —
+    * and the `centroid_id=`-partitioned IVF `lists/` —
+    * [[Ann.compactIvf]]; the rewrite keeps the table's partition
+    * columns): snapshot the sidecar's data files, anti-join exactly those
+    * ids out of the table, refuse-to-empty, replace the dir
+    * ([[replaceDirs]]), then spend only the snapshotted files — a delete
+    * issued DURING the compact lands new part files that survive the
+    * spend and stay excluded by the next probe (the
+    * [[snapshotTombstoneFiles]] law). Returns (rows before, rows after).
     */
   private[graft] def compactKeyedTable(
       spark: org.apache.spark.sql.SparkSession,
@@ -892,6 +884,7 @@ object Layout {
     val fs = new org.apache.hadoop.fs.Path(dataPath)
       .getFileSystem(spark.sessionState.newHadoopConf())
     val tombFiles = snapshotTombstoneFiles(fs, tombPath)
+    val counts = replaceDirs(fs, Seq(dataPath)) { case Seq(staged) =>
     val data = spark.read.parquet(dataPath)
     // ONE ledger pass yields both counts (`dead` is distinct, so each
     // data row matches at most one dead row): count(*) is the old
@@ -917,20 +910,18 @@ object Layout {
       case None => data
       case Some(dd) => data.join(dd, Seq(idCol), "left_anti")
     }
+    // a partitioned write of zero rows emits no data files, and the
+    // swapped-in dir could not be read
     require(after > 0,
       s"$op: every row at $dataPath is tombstoned — delete the index " +
         "directory instead of compacting to empty")
-    // Stage under the same DOT-prefixed hidden sibling convention as
-    // compactFiles: today's callers compact dirs read directly (codes/),
-    // but a future caller compacting a dir inside a partitioned read
-    // root would have its visible `.__compact` sibling parsed as a
-    // partition value for the whole rewrite — one staging convention for
-    // every swapDir caller (ADVICE r10).
-    val staging = compactStaging(fs, dataPath)
-    live.write.mode("overwrite").parquet(staging)
-    swapDir(fs, dataPath, staging)
-    spendTombstoneFiles(fs, tombPath, tombFiles)
+    live.write.mode("overwrite")
+      .partitionBy(partitionColumns(fs, new org.apache.hadoop.fs.Path(dataPath)): _*)
+      .parquet(staged)
     (before, after)
+    }
+    spendTombstoneFiles(fs, tombPath, tombFiles)
+    counts
   }
 
   /** Shared overwrite-semantics tail for every at-rest `write*` rebuild
@@ -1096,58 +1087,8 @@ object Layout {
     }
   }
 
-  /** The shared hidden staging path for a compact rewrite of `dataPath`
-    * (`.{name}.__compact` sibling), sweeping the LEGACY VISIBLE
-    * `<dataPath>.__compact` a pre-round-11 crash may have stranded —
-    * without the sweep it would sit next to the data dir forever and,
-    * inside a partitioned read root, be parsed as a partition value
-    * (mirrors [[swapDir]]'s legacyOp handling for `.__old`). The hidden
-    * staging itself needs no sweep: the writer opens it with
-    * mode=overwrite.
-    */
-  private[graft] def compactStaging(
-      fs: org.apache.hadoop.fs.FileSystem, dataPath: String): String = {
-    val legacy = new org.apache.hadoop.fs.Path(s"$dataPath.__compact")
-    if (fs.exists(legacy)) fs.delete(legacy, true) // stale pre-r11 leftover
-    val dPath = new org.apache.hadoop.fs.Path(dataPath)
-    new org.apache.hadoop.fs.Path(
-      dPath.getParent, s".${dPath.getName}.__compact").toString
-  }
-
-  /** Shared directory-swap tail of every compact in the repo (file
-    * compaction here, [[graft.index.VectorIndex.compact]],
-    * [[Hnsw.compact]], [[graft.search.Bm25.compactIndex]]): the staged
-    * rewrite at `staged` replaces `target` by rename-ASIDE — live dir →
-    * hidden `.{name}.__old` sibling, staged → live, drop old — so a
-    * driver crash at
-    * any point leaves either the old or the new generation intact and
-    * the no-directory window is a single rename. (The previous
-    * delete-then-rename order had a crash window that stranded the data
-    * in the staged dir with no live view.) Single-writer contract: one
-    * maintainer swaps at a time; an overlapping reader that lists the
-    * target inside the rename pair may fail and should retry.
-    */
-  private[graft] def swapDir(
-      fs: org.apache.hadoop.fs.FileSystem, target: String, staged: String): Unit = {
-    val tp = new org.apache.hadoop.fs.Path(target)
-    val sp = new org.apache.hadoop.fs.Path(staged)
-    // The retired copy parks under a DOT-prefixed name so that when the
-    // target is a partition directory inside a read root (e.g.
-    // `lists/centroid_id=N`), the rename window never exposes a visible
-    // `...__old` sibling to partition discovery (Spark's FileIndex hides
-    // `_`/`.`-prefixed paths). Legacy visible `.__old` leftovers from a
-    // pre-round-10 crash are still swept.
-    val op = new org.apache.hadoop.fs.Path(tp.getParent, s".${tp.getName}.__old")
-    val legacyOp = new org.apache.hadoop.fs.Path(s"$target.__old")
-    if (fs.exists(legacyOp)) fs.delete(legacyOp, true) // stale pre-r10 leftover
-    if (fs.exists(op)) fs.delete(op, true) // stale leftover from a crash
-    if (fs.exists(tp)) fs.rename(tp, op)
-    fs.rename(sp, tp)
-    fs.delete(op, true)
-  }
-
   /** When is maintenance due — the thresholds that close the gap between
-    * "has the primitives" (merge/compact/compactFiles exist in every
+    * "has the primitives" (merge/compact/file compaction exist in every
     * family) and "runs itself" at 100 TB. All knobs are per-index-path;
     * defaults are the Lucene-ish shape: ≤8 segments, ≤10% dead docs,
     * bounded small-file count.

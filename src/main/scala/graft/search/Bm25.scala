@@ -228,7 +228,7 @@ object Bm25 extends graft.ops.IndexLifecycle {
         () => Seq(termBuckets).toDF("term_buckets")
           .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")),
         parallelism = 2)(_())
-      commitSeg(spark, path, 0L, reset = true)
+      resetCommits(spark, path, Seq(0L))
       // a rebuild replaces the WHOLE index state: the previous life's
       // _tombstones sidecar and batches ledger go with it, or loadIndex
       // would silently exclude fresh docs whose ids were once deleted
@@ -273,41 +273,43 @@ object Bm25 extends graft.ops.IndexLifecycle {
   }
 
   /** Write the `_commits/<seg>` marker — the LAST write of every
-    * segment; `reset = true` replaces the whole marker set (writeIndex,
-    * compact) via the rename-aside swap.
+    * appended segment.
     */
   private def commitSeg(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      seg: Long, reset: Boolean = false): Unit = {
-    if (reset) resetCommits(spark, path, Seq(seg))
-    else {
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(spark.sessionState.newHadoopConf())
-      fs.mkdirs(new org.apache.hadoop.fs.Path(commitsPath(path)))
-      fs.create(new org.apache.hadoop.fs.Path(
-        s"${commitsPath(path)}/$seg")).close()
-    }
+      spark: org.apache.spark.sql.SparkSession, path: String, seg: Long): Unit = {
+    val fs = new org.apache.hadoop.fs.Path(path)
+      .getFileSystem(spark.sessionState.newHadoopConf())
+    fs.mkdirs(new org.apache.hadoop.fs.Path(commitsPath(path)))
+    fs.create(new org.apache.hadoop.fs.Path(
+      s"${commitsPath(path)}/$seg")).close()
+  }
+
+  /** Write the marker set `segs` into the `_commits` stage `staged`. */
+  private def stageCommits(
+      fs: org.apache.hadoop.fs.FileSystem, staged: String,
+      segs: Seq[Long]): Unit = {
+    fs.mkdirs(new org.apache.hadoop.fs.Path(staged))
+    segs.foreach(s =>
+      fs.create(new org.apache.hadoop.fs.Path(staged, s.toString)).close())
   }
 
   /** Replace the WHOLE committed-marker set in one rename-aside swap
-    * ([[graft.ops.Layout.swapDir]] — atomic-enough: readers see either
-    * the old set or the new set, never a partial one). Used by
-    * writeIndex/compactIndex (reset to `{0}`) and [[mergeSegments]]
-    * (merged segments out, the merge result in, in ONE flip — committing
-    * the merged segment and retiring its sources separately would open a
-    * window where probes double-count every merged doc).
+    * ([[graft.ops.Layout.replaceDirs]] — atomic-enough: readers see
+    * either the old set or the new set, never a partial one): writeIndex's
+    * reset to `{0}`. [[compactIndex]] and [[mergeSegments]] stage their
+    * marker set ([[stageCommits]]) inside their own replacement — the
+    * merge's flip retires its sources and admits the merge result at
+    * once (committing them separately would open a window where probes
+    * double-count every merged doc).
     */
   private def resetCommits(
       spark: org.apache.spark.sql.SparkSession, path: String,
       segs: Seq[Long]): Unit = {
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sessionState.newHadoopConf())
-    val staged = new org.apache.hadoop.fs.Path(s"${commitsPath(path)}.__staged")
-    if (fs.exists(staged)) fs.delete(staged, true)
-    fs.mkdirs(staged)
-    segs.foreach(s =>
-      fs.create(new org.apache.hadoop.fs.Path(staged, s.toString)).close())
-    graft.ops.Layout.swapDir(fs, commitsPath(path), staged.toString)
+    graft.ops.Layout.replaceDirs(fs, Seq(commitsPath(path))) {
+      case Seq(staged) => stageCommits(fs, staged, segs)
+    }
   }
 
   /** Next segment id: strictly above every committed marker AND every
@@ -495,7 +497,7 @@ object Bm25 extends graft.ops.IndexLifecycle {
   /** Fold tombstones into the at-rest index: rewrite the four tables
     * without the dead docs — postings drop their rows, df/docs/stats
     * recompute exactly — and swap each directory via the shared
-    * rename-aside protocol ([[graft.ops.Layout.swapDir]]; single-writer
+    * rename-aside protocol ([[graft.ops.Layout.replaceDirs]]; single-writer
     * contract). After compact the index is VALUE-IDENTICAL to a
     * from-scratch [[writeIndex]] over the surviving docs (a doc's
     * postings are self-contained, df/stats are plain re-aggregates) —
@@ -518,6 +520,12 @@ object Bm25 extends graft.ops.IndexLifecycle {
       spark.read.parquet(tombFiles.map(_.toString): _*)
         .select(col("doc_id").cast("long").as("doc_id")).distinct()
     else spark.emptyDataset[Long].toDF("doc_id")
+    // the four tables, then the commit reset, replaced in that order by
+    // the shared protocol — which first heals any of the five that an
+    // earlier crash left inside its swap window
+    val counts = graft.ops.Layout.replaceDirs(fs,
+        Seq("postings", "terms", "docs", "stats").map(t => s"$path/$t") :+
+          commitsPath(path)) { case Seq(postingsS, termsS, docsS, statsS, commitsS) =>
     val committed = committedSegs(spark, path)
     require(committed.nonEmpty,
       s"compactIndex: no committed segments at $path")
@@ -563,41 +571,40 @@ object Bm25 extends graft.ops.IndexLifecycle {
     // layout probed 27.7 s vs 19.2 s on the 8-file layout — fewer
     // splits, fewer parallel readers)
     // the four staged rewrites are independent jobs over the
-    // materialized `live`/`docsTbl` into four disjoint `.__compact` dirs
-    // — landed concurrently (guide §2.6); visibility still flips only at
-    // the sequential swaps below, so the crash window is unchanged
+    // materialized `live`/`docsTbl` into four disjoint stages — landed
+    // concurrently (guide §2.6); visibility still flips only at the
+    // sequential swaps after, so the crash window is unchanged
     graft.ops.Layout.mapConcurrently[() => Unit, Unit](Seq(
       () => live.repartition(nBuckets(spark, path) * math.max(1, filesPerBucket),
           col("bucket"),
           pmod(xxhash64(col("doc_id")), lit(math.max(1, filesPerBucket))))
         .withColumn("seg", lit(0L))
         .write.mode("overwrite").partitionBy("seg", "bucket")
-        .parquet(s"$path/postings.__compact"),
+        .parquet(postingsS),
       () => live.groupBy("term").agg(count(lit(1)).as("df"))
         .withColumn("seg", lit(0L))
-        .write.mode("overwrite").partitionBy("seg").parquet(s"$path/terms.__compact"),
+        .write.mode("overwrite").partitionBy("seg").parquet(termsS),
       () => docsTbl.select("doc_id", "dl")
         .withColumn("seg", lit(0L))
-        .write.mode("overwrite").partitionBy("seg").parquet(s"$path/docs.__compact"),
+        .write.mode("overwrite").partitionBy("seg").parquet(docsS),
       () => Seq((n, if (n == 0) 0L else stats.getLong(1)))
         .toDF("n_docs", "tot_dl")
         .withColumn("seg", lit(0L))
         .coalesce(1).write.mode("overwrite").partitionBy("seg")
-        .parquet(s"$path/stats.__compact")),
+        .parquet(statsS)),
       parallelism = 4)(_())
-    Seq("postings", "terms", "docs", "stats").foreach { t =>
-      graft.ops.Layout.swapDir(fs, s"$path/$t", s"$path/$t.__compact")
+    // between the table swaps and the commit reset, readers filtering on
+    // the OLD committed ids over the new seg=0-only tables still see
+    // exactly the compacted data (seg 0 is always in the committed set;
+    // extra ids match no partitions) — benign window
+    stageCommits(fs, commitsS, Seq(0L))
+    (before, n)
     }
-    // between the table swaps and this reset, readers filtering on the
-    // OLD committed ids over the new seg=0-only tables still see exactly
-    // the compacted data (seg 0 is always in the committed set; extra
-    // ids match no partitions) — benign window
-    commitSeg(spark, path, 0L, reset = true)
+    }
     // spend exactly the snapshotted files — deleteDocs concurrent with
     // this compact keeps its (unfolded) tombstones for the next one
     graft.ops.Layout.spendTombstoneFiles(fs, tombPath(path), tombFiles)
-    (before, n)
-    }
+    counts
   }
 
   /** Tiered segment merge — the Lucene merge-policy half [[compactIndex]]
@@ -618,8 +625,9 @@ object Bm25 extends graft.ops.IndexLifecycle {
     * ledgers (doc ids are disjoint across committed segments — the
     * append ledger's law — so df adds), and the commit flip retires the
     * sources and admits the merge in ONE rename-aside swap
-    * ([[resetCommits]]): readers see the old segment set or the new one,
-    * never both (which would double-count every merged doc). A crash
+    * ([[graft.ops.Layout.replaceDirs]]): readers see the old segment set
+    * or the new one, never both (which would double-count every merged
+    * doc). A crash
     * before the flip leaves an invisible orphan; the sources' retired
     * files become garbage reclaimed by the next [[compactIndex]].
     *
@@ -637,6 +645,11 @@ object Bm25 extends graft.ops.IndexLifecycle {
     require(targetSegments >= 1,
       s"mergeSegments: targetSegments must be >= 1, got $targetSegments")
     import spark.implicits._
+    val fs = new org.apache.hadoop.fs.Path(path)
+      .getFileSystem(spark.sessionState.newHadoopConf())
+    // the commit flip's replacement heals a crashed earlier flip BEFORE
+    // the marker set is read
+    graft.ops.Layout.replaceDirs(fs, Seq(commitsPath(path))) { case Seq(staged) =>
     val committed = committedSegs(spark, path)
     if (committed.size <= targetSegments) return (committed.size, committed.size)
     // per-segment doc counts from the stats ledger — segment-count-sized,
@@ -702,8 +715,9 @@ object Bm25 extends graft.ops.IndexLifecycle {
     // from the whole rewrite to one listStatus round-trip.
     val lateCommits = committedSegs(spark, path)
       .filterNot(merge.contains).filterNot(keep.contains)
-    resetCommits(spark, path, (keep ++ lateCommits :+ newSeg).sorted.distinct)
+    stageCommits(fs, staged, (keep ++ lateCommits :+ newSeg).sorted.distinct)
     (committed.size, keep.size + lateCommits.size + 1)
+    }
   }
 
   /** [[appendIndex]] keyed by a batch id for streaming replay (the

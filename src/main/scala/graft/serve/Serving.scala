@@ -485,7 +485,7 @@ object CachedRag {
   * `_batches` stream ledger, `_retention`. A root holding flat data files
   * and no partition dirs is the LEGACY shape each store serves through its
   * own legacy arm. Every mutation follows the house swap discipline
-  * ([[graft.ops.Layout.swapDir]]): a partition rewrite stages then swaps,
+  * ([[graft.ops.Layout.replaceDirs]]): a partition rewrite stages then swaps,
   * an emptied partition retires by rename-aside, and a whole-table
   * migration stages a complete generation (marker and root sidecars
   * included) and swaps the root once. Single-writer, like every
@@ -589,19 +589,16 @@ private[graft] final case class PartitionedTable(prefix: String, marker: String)
     * storage when a partition has grown large.
     */
   def rewriteDir(spark: SparkSession, fs: FileSystem, dir: Path,
-      transform: DataFrame => DataFrame): (Long, Long) = {
-    val before = PartitionedTable.read(spark, dir.toString)
-    val kept = transform(before)
-    val nBefore = before.count()
-    val nAfter = kept.count()
-    if (nAfter == 0L) retire(fs, dir)
-    else if (nAfter < nBefore) {
-      val staged = graft.ops.Layout.compactStaging(fs, dir.toString)
-      kept.write.mode("overwrite").parquet(staged)
-      graft.ops.Layout.swapDir(fs, dir.toString, staged)
+      transform: DataFrame => DataFrame): (Long, Long) =
+    graft.ops.Layout.replaceDirs(fs, Seq(dir.toString)) { case Seq(staged) =>
+      val before = PartitionedTable.read(spark, dir.toString)
+      val kept = transform(before)
+      val nBefore = before.count()
+      val nAfter = kept.count()
+      if (nAfter == 0L) retire(fs, dir)
+      else if (nAfter < nBefore) kept.write.mode("overwrite").parquet(staged)
+      (nBefore, nAfter)
     }
-    (nBefore, nAfter)
-  }
 
   /** [[rewriteDir]] over many partitions, submitted concurrently — the
     * same disjoint-dirs argument as
@@ -629,28 +626,29 @@ private[graft] final case class PartitionedTable(prefix: String, marker: String)
     * write is one streaming pass over the untouched live root —
     * materializing the state through the block manager would cap the
     * rewrite at executor storage — and plans no Exchange. Root sidecars
-    * are copied into the stage ([[installStaged]]), so the stream ledger
-    * survives and a replayed micro-batch still no-ops afterwards.
+    * are copied into the stage ([[PartitionedTable.stageSidecars]]), so
+    * the stream ledger survives and a replayed micro-batch still no-ops
+    * afterwards.
     *
     * Entry first HEALS a previous migration's crashed swap (ADVICE r14
     * #3): a crash inside the swap window leaves the root absent with the
     * staged generation complete (the swap only begins after the staged
     * write, the marker and the sidecar copies all landed), so
-    * [[graft.ops.Layout.healOrSweepSwap]] finishes it and the retry
+    * [[graft.ops.Layout.replaceDirs]] finishes it and the retry
     * proceeds — or no-ops at the same value, which is allowed.
     */
   def migrate(spark: SparkSession, path: String, op: String, value: Long)(
       partition: DataFrame => DataFrame): Unit = {
     val root = new Path(path)
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    graft.ops.Layout.healOrSweepSwap(fs, root)
-    require(fs.exists(root), s"$op: $path does not exist")
-    val column = prefix.stripSuffix("=")
-    val staged = graft.ops.Layout.compactStaging(fs, path)
-    partition(PartitionedTable.read(spark, path).drop(column))
-      .write.mode("overwrite").partitionBy(column).parquet(staged)
-    graft.ops.Layout.writeDigitMarker(fs, new Path(staged), marker, value)
-    PartitionedTable.installStaged(spark, fs, root, staged)
+    graft.ops.Layout.replaceDirs(fs, Seq(path)) { case Seq(staged) =>
+      require(fs.exists(root), s"$op: $path does not exist")
+      val column = prefix.stripSuffix("=")
+      partition(PartitionedTable.read(spark, path).drop(column))
+        .write.mode("overwrite").partitionBy(column).parquet(staged)
+      graft.ops.Layout.writeDigitMarker(fs, new Path(staged), marker, value)
+      PartitionedTable.stageSidecars(spark, fs, root, staged)
+    }
   }
 }
 
@@ -669,13 +667,12 @@ private[graft] object PartitionedTable {
   def read(spark: SparkSession, paths: String*): DataFrame =
     spark.read.option("mergeSchema", "true").parquet(paths: _*)
 
-  /** Install a complete staged generation of `root`: COPY the root
-    * sidecars (hidden `_` entries other than `_SUCCESS`) the stage does
-    * not already hold into it — the live root stays whole until the swap,
-    * so a crash anywhere before it loses nothing — then the single
-    * [[graft.ops.Layout.swapDir]].
+  /** Complete a staged generation of `root` before its swap: COPY the
+    * root sidecars (hidden `_` entries other than `_SUCCESS`) the stage
+    * does not already hold into it — the live root stays whole until the
+    * swap, so a crash anywhere before it loses nothing.
     */
-  def installStaged(spark: SparkSession, fs: FileSystem, root: Path,
+  def stageSidecars(spark: SparkSession, fs: FileSystem, root: Path,
       staged: String): Unit = {
     val conf = spark.sessionState.newHadoopConf()
     fs.listStatus(root).toSeq.map(_.getPath)
@@ -685,7 +682,6 @@ private[graft] object PartitionedTable {
       }
       .foreach(p => org.apache.hadoop.fs.FileUtil.copy(fs, p, fs,
         new Path(staged, p.getName), false, true, conf))
-    graft.ops.Layout.swapDir(fs, root.toString, staged)
   }
 }
 
@@ -1880,6 +1876,7 @@ object ChatLog {
       pred: Column): Long = {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    graft.ops.Layout.replaceDirs(fs, Seq(path)) { case Seq(staged) =>
     requireNotStreamSink(fs, p, path)
     // no localCheckpoint: counts and the staged write all complete
     // against the untouched live dir before the single swap (the same
@@ -1891,19 +1888,20 @@ object ChatLog {
     val kept = before.where(!coalesce(pred, lit(false)))
     val nBefore = before.count()
     val nAfter = kept.count()
-    if (nAfter == nBefore) return 0L
     // ONE protocol for both outcomes: stage the surviving generation
-    // (possibly no data files at all — the loudly-empty contract), then
-    // install it with the root sidecars copied in (the previous
+    // (possibly no data files at all — the loudly-empty contract) with
+    // the root sidecars copied in, then swap it (the previous
     // empty-branch rename-aside had a window that stranded the stream
-    // ledger in the hidden aside with no heal).
-    val staged = graft.ops.Layout.compactStaging(fs, path)
-    if (nAfter == 0L)
-      fs.mkdirs(new org.apache.hadoop.fs.Path(staged))
-    else
-      kept.write.mode("overwrite").parquet(staged)
-    PartitionedTable.installStaged(spark, fs, p, staged)
+    // ledger in the hidden aside with no heal). Nothing staged: no swap.
+    if (nAfter < nBefore) {
+      if (nAfter == 0L)
+        fs.mkdirs(new org.apache.hadoop.fs.Path(staged))
+      else
+        kept.write.mode("overwrite").parquet(staged)
+      PartitionedTable.stageSidecars(spark, fs, p, staged)
+    }
     nBefore - nAfter
+    }
   }
 
   /** Chat-log RETENTION — the log-side twin of
@@ -2378,7 +2376,7 @@ object SemanticCache {
     * simply misses, re-answers, and re-admits — the loop heals itself.
     *
     * Physical rewrite through the house swap discipline (materialize →
-    * hidden dot-prefixed staging → [[graft.ops.Layout.swapDir]]), no
+    * hidden dot-prefixed staging → swap, [[graft.ops.Layout.replaceDirs]]), no
     * tombstone sidecar: cache lookups are plain scans that consult no
     * sidecar, and a cache is bounded by definition (`maxEntries` is an
     * Int for the same reason the broadcast path exists). Single-writer
@@ -2389,6 +2387,9 @@ object SemanticCache {
       cachePath: String,
       maxEntries: Int): (Long, Long) = {
     require(maxEntries > 0, s"evictCache: maxEntries $maxEntries must be > 0")
+    val fs = new org.apache.hadoop.fs.Path(cachePath)
+      .getFileSystem(spark.sessionState.newHadoopConf())
+    graft.ops.Layout.replaceDirs(fs, Seq(cachePath)) { case Seq(staged) =>
     // sized from the store's real bytes (see invalidateCacheBefore)
     graft.ops.Layout.withShuffleSizedTo(spark,
       BigInt(graft.ops.Layout.dirBytes(spark, cachePath)),
@@ -2406,10 +2407,11 @@ object SemanticCache {
     val cutoff = idCutoff(
       stored.select(col("cache_id").cast("long").as("cache_id")),
       before, maxEntries.toLong)
-    val kept = graft.ops.Ann.materializeOnce(
+    graft.ops.Ann.materializeOnce(
       stored.where(col("cache_id").cast("long") >= cutoff))
-    swapInto(spark, cachePath, kept)
+      .write.mode("overwrite").parquet(staged)
     (before, maxEntries.toLong)
+    }
     }
   }
 
@@ -2489,6 +2491,9 @@ object SemanticCache {
       dispositionsPath: String,
       maxEntries: Int): (Long, Long) = {
     require(maxEntries > 0, s"evictCacheLru: maxEntries $maxEntries must be > 0")
+    val fs = new org.apache.hadoop.fs.Path(cachePath)
+      .getFileSystem(spark.sessionState.newHadoopConf())
+    graft.ops.Layout.replaceDirs(fs, Seq(cachePath)) { case Seq(staged) =>
     val stored = spark.read.parquet(cachePath)
     val before = stored.count()
     if (before <= maxEntries) return (before, before)
@@ -2521,10 +2526,11 @@ object SemanticCache {
         keyed.where(col("last_use") > bStar ||
           (col("last_use") === bStar && col("cache_id") >= bandCutoff))
       }
-    val kept = graft.ops.Ann.materializeOnce(
+    graft.ops.Ann.materializeOnce(
       stored.join(keepIds.select("cache_id"), Seq("cache_id"), "left_semi"))
-    swapInto(spark, cachePath, kept)
+      .write.mode("overwrite").parquet(staged)
     (before, maxEntries.toLong)
+    }
   }
 
   /** [[evictCacheLru]]'s incremental recency fold. The disposition
@@ -2538,12 +2544,14 @@ object SemanticCache {
     * them into the state table, swaps it through the hidden staging
     * discipline, then advances the marker (digit-named files, max
     * wins). Max-merge is idempotent, so the ordinary crash windows
-    * (state written / marker unwritten) re-fold harmlessly, and the
-    * rename window INSIDE the state swap is detected — markers without
-    * a state table reset the water mark so every dir still on disk
-    * refolds. Pruning a batch dir after a successful fold is safe (its
-    * recency lives on in the state); prune concurrently with a fold and
-    * a swap-window crash can degrade the pruned dirs' entries to the
+    * (state written / marker unwritten) re-fold harmlessly, a crash in
+    * the rename window INSIDE the state swap is healed at the next fold's
+    * entry ([[graft.ops.Layout.replaceDirs]] installs the complete
+    * stage), and a state table lost any other way is detected — markers
+    * without a state table reset the water mark so every dir still on
+    * disk refolds. Pruning a batch dir after a successful fold is safe
+    * (its recency lives on in the state); prune concurrently with a fold
+    * and a lost state table can degrade the pruned dirs' entries to the
     * never-used default — degrade, not corrupt. Single-writer, like the eviction
     * that calls it. Returns the (cache_id, last_use) table,
     * checkpointed when it folded fresh dirs.
@@ -2557,9 +2565,13 @@ object SemanticCache {
     if (!fs.exists(dp)) return empty
     val statePath = new org.apache.hadoop.fs.Path(
       new org.apache.hadoop.fs.Path(dp, "_recency"), "state").toString
+    // the state swaps through the shared protocol, which first heals a
+    // fold that crashed inside the swap window
+    val (merged, newest) =
+      graft.ops.Layout.replaceDirs(fs, Seq(statePath)) { case Seq(staged) =>
     val stateExists = fs.exists(new org.apache.hadoop.fs.Path(statePath))
-    // markers WITHOUT a state table = a crash inside the state swap's
-    // rename window destroyed the fold — trusting the water mark then
+    // markers WITHOUT a state table = the state was lost (the heal above
+    // recovers a crashed swap) — trusting the water mark then
     // would silently age every previously-folded entry to -1 (inverting
     // LRU for exactly the hot set). Reset the water so every batch dir
     // still on disk refolds; only dirs pruned BEFORE such a crash lose
@@ -2577,12 +2589,12 @@ object SemanticCache {
     val merged = graft.ops.Ann.materializeOnce(
       base.unionByName(fresh)
         .groupBy("cache_id").agg(max(col("last_use")).as("last_use")))
-    val staging = graft.ops.Layout.compactStaging(fs, statePath)
-    merged.write.mode("overwrite").parquet(staging)
-    graft.ops.Layout.swapDir(fs, statePath, staging)
+    merged.write.mode("overwrite").parquet(staged)
+    (merged, newNs.max)
+    }
     // monotone, max wins: a recovery refold whose newest dir was already
     // marked keeps that marker instead of sweeping it with the old ones
-    graft.ops.Layout.advanceRetentionMarker(fs, dp, newNs.max, "_recency")
+    graft.ops.Layout.advanceRetentionMarker(fs, dp, newest, "_recency")
     merged
   }
 
@@ -2719,7 +2731,9 @@ object SemanticCache {
       spark: SparkSession,
       cachePath: String,
       ids: Seq[Long]): (Long, Long) = {
-    import spark.implicits._
+    val fs = new org.apache.hadoop.fs.Path(cachePath)
+      .getFileSystem(spark.sessionState.newHadoopConf())
+    graft.ops.Layout.replaceDirs(fs, Seq(cachePath)) { case Seq(staged) =>
     val stored = spark.read.parquet(cachePath)
     val before = stored.count()
     if (ids.isEmpty) return (before, before)
@@ -2730,8 +2744,9 @@ object SemanticCache {
     require(after > 0,
       s"deleteCacheEntries: every entry at $cachePath would be deleted — " +
         "remove the cache directory instead")
-    swapInto(spark, cachePath, kept)
+    kept.write.mode("overwrite").parquet(staged)
     (before, after)
+    }
   }
 
   /** Index-rebuild INVALIDATION: drop every entry minted BEFORE the
@@ -2755,6 +2770,9 @@ object SemanticCache {
       spark: SparkSession,
       cachePath: String,
       minCacheId: Long): (Long, Long) = {
+    val fs = new org.apache.hadoop.fs.Path(cachePath)
+      .getFileSystem(spark.sessionState.newHadoopConf())
+    graft.ops.Layout.replaceDirs(fs, Seq(cachePath)) { case Seq(staged) =>
     // sweep sized from the store's real bytes (one pass + rewrite)
     graft.ops.Layout.withShuffleSizedTo(spark,
       BigInt(graft.ops.Layout.dirBytes(spark, cachePath)),
@@ -2768,19 +2786,10 @@ object SemanticCache {
     require(after > 0,
       s"invalidateCacheBefore: watermark $minCacheId would empty " +
         s"$cachePath — remove the cache directory instead")
-    swapInto(spark, cachePath, kept)
+    kept.write.mode("overwrite").parquet(staged)
     (before, after)
     }
-  }
-
-  /** Shared rewrite tail: materialized rows → hidden staging → swap. */
-  private def swapInto(
-      spark: SparkSession, cachePath: String, rows: DataFrame): Unit = {
-    val p = new org.apache.hadoop.fs.Path(cachePath)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val staging = graft.ops.Layout.compactStaging(fs, cachePath)
-    rows.write.mode("overwrite").parquet(staging)
-    graft.ops.Layout.swapDir(fs, cachePath, staging)
+    }
   }
 
   /** The shared exact-vs-banded lookup ROUTER — lookup-path selectivity

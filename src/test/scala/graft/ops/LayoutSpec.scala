@@ -96,52 +96,6 @@ class LayoutSpec extends SparkSpec {
     assert(files == 8, s"expected 8 data files, got $files")
   }
 
-  test("compactFiles bin-packs tiny files, preserves rows, no-ops when met") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_compact").toString
-    val path = s"$dir/t"
-    // 40 single-row appends = 40 tiny files (the streaming-sink shape)
-    spark.range(40).coalesce(1).collect() // warm nothing; keep deterministic
-    (0 until 40).foreach { i =>
-      spark.range(i, i + 1).toDF("id").coalesce(1)
-        .write.mode("append").parquet(path)
-    }
-    val before = new java.io.File(path).listFiles()
-      .count(_.getName.endsWith(".parquet"))
-    assert(before == 40, s"setup expected 40 files, got $before")
-
-    val stats = Layout.compactFiles(spark, path, targetBytes = Long.MaxValue)
-    assert(stats.filesBefore == 40 && stats.filesAfter == 1,
-      s"expected 40 -> 1, got $stats")
-    val back = spark.read.parquet(path)
-    assert(back.count() == 40)
-    assert(back.select("id").as[Long].collect().sorted.toSeq == (0L until 40L),
-      "compaction must preserve every row")
-
-    // already met: no rewrite happens (stats echo the current layout)
-    val again = Layout.compactFiles(spark, path, targetBytes = Long.MaxValue)
-    assert(again.filesBefore == 1 && again.filesAfter == 1)
-  }
-
-  test("compactFiles refuses a merge-on-read index (tombstone sidecar)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_compact_mor").toString
-    val path = s"$dir/idx"
-    (0 until 3).foreach { i =>
-      spark.range(i * 10, i * 10 + 10).toDF("id").coalesce(1)
-        .write.mode("append").parquet(path)
-    }
-    // a deletion lands in the sidecar; compactFiles would hide it from the
-    // rewrite and delete it with the directory — resurrecting the doc
-    spark.range(1).selectExpr("5 AS doc_id", "1 AS tomb_epoch")
-      .coalesce(1).write.parquet(s"$path/_tombstones")
-    val e = intercept[IllegalArgumentException] {
-      Layout.compactFiles(spark, path, targetBytes = Long.MaxValue)
-    }
-    assert(e.getMessage.contains("_tombstones"))
-    // the refused directory is untouched: data AND sidecar intact
-    assert(spark.read.parquet(path).count() == 30)
-    assert(spark.read.parquet(s"$path/_tombstones").count() == 1)
-  }
-
   // ---- size-tiered minor compaction (round-13 verdict #1) ----
 
   private def dataFiles(path: String): Seq[(String, Long)] =
@@ -293,20 +247,6 @@ class LayoutSpec extends SparkSpec {
       s"only the accumulating bucket is due: $due")
     // a missing root is quiet (new table, nothing to maintain)
     assert(Layout.dueSubdirs(spark, s"$dir/nope", pol, "sbucket=").isEmpty)
-  }
-
-  test("compactFiles mergeSchema: mixed-schema appends keep late columns") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_compact_ms").toString
-    val path = s"$dir/t"
-    spark.range(5).toDF("id").coalesce(1).write.mode("append").parquet(path)
-    spark.range(5, 10).toDF("id").selectExpr("id", "id * 2 AS epoch")
-      .coalesce(1).write.mode("append").parquet(path)
-    Layout.compactFiles(spark, path, targetBytes = Long.MaxValue)
-    val back = spark.read.option("mergeSchema", "true").parquet(path)
-    assert(back.columns.toSet == Set("id", "epoch"),
-      s"epoch column must survive compaction, got ${back.columns.toSeq}")
-    assert(back.where(col("epoch").isNotNull).count() == 5)
-    assert(back.count() == 10)
   }
 
   test("ledgeredBatch: marker ledger survives a crash-left empty dir, replays no-op") {
@@ -497,7 +437,7 @@ class LayoutSpec extends SparkSpec {
     Layout.clearIndexSidecars(spark, dir) // idempotent on a clean dir
   }
 
-  test("compactStaging sweeps a legacy VISIBLE .__compact leftover before staging") {
+  test("replaceDirs sweeps a legacy VISIBLE .__compact leftover before staging") {
     // ADVICE r11: round 11 moved staging to the hidden dot-prefixed
     // sibling, but a pre-round-11 crash could have stranded a visible
     // `<dataPath>.__compact` — unswept, it would sit there forever and be
@@ -512,10 +452,32 @@ class LayoutSpec extends SparkSpec {
     val legacy = new org.apache.hadoop.fs.Path(s"$data.__compact")
     fs.mkdirs(legacy)
     fs.create(new org.apache.hadoop.fs.Path(legacy, "stranded")).close()
-    val stats = Layout.compactFiles(spark, data, targetBytes = 1L << 30)
-    assert(stats.filesAfter < stats.filesBefore)
+    assert(Layout.compactKeyedTable(spark, data, s"$tmp/_tombstones",
+      "vec_id", "compact") == ((40L, 40L)))
     assert(!fs.exists(legacy), "the legacy visible staging must be swept")
     assert(spark.read.parquet(data).count() == 40L)
+  }
+
+  test("one swap protocol: no store stages or swaps outside Layout.replaceDirs") {
+    // every store rewrite heals, stages and swaps through
+    // Layout.replaceDirs; a hand-built swap elsewhere skips the heal of a
+    // crash inside an earlier swap window and strands its new generation
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala")
+    assert(java.nio.file.Files.isDirectory(root),
+      s"source root not found under ${root.toAbsolutePath}")
+    val banned = Seq("swapDir(", "compactStaging(", ".__compact\"", ".__staged\"")
+    val walk = java.nio.file.Files.walk(root)
+    val hits = try walk.iterator().asScala.toSeq
+      .filter(f => f.toString.endsWith(".scala") &&
+        !f.endsWith(java.nio.file.Paths.get("graft/ops/Layout.scala")))
+      .flatMap { f =>
+        java.nio.file.Files.readAllLines(f).asScala.zipWithIndex.flatMap {
+          case (line, i) => banned.filter(line.contains).map(b => s"$f:${i + 1}: $b")
+        }
+      }
+    finally walk.close()
+    assert(hits.isEmpty, s"swap protocol built outside Layout:\n${hits.mkString("\n")}")
   }
 
   test("vacuum: heals committed crashed swaps, sweeps condemned/uncommitted siblings, never touches live data") {
@@ -549,7 +511,16 @@ class LayoutSpec extends SparkSpec {
     touch(child("partE"), "live_data")
     touch(child(".partE.__old"), "superseded")
     touch(child(".partE.__compact"), "stale_stage")
-    assert(Layout.vacuum(spark, s"$tmp/table") == 5)
+    // F: crash inside the swap window of a release that staged at the
+    // VISIBLE `partF.__compact` — live absent, hidden aside, visible
+    // stage. Heal must install the stage, not read the crash as a retire.
+    touch(child(".partF.__old"), "old_gen")
+    touch(child("partF.__compact"), "new_gen")
+    // G: the same crash of BM25's commit reset, which staged at the
+    // visible `_commits.__staged`
+    touch(child("._commits.__old"), "0", "1", "2")
+    touch(child("_commits.__staged"), "0")
+    assert(Layout.vacuum(spark, s"$tmp/table") == 7)
     // visible names only: the local ChecksumFileSystem shadows every file
     // with a .crc sibling
     def names(p: org.apache.hadoop.fs.Path): Set[String] =
@@ -562,6 +533,9 @@ class LayoutSpec extends SparkSpec {
     assert(!fs.exists(child("partC")) && !fs.exists(child(".partC.__old")))
     assert(!fs.exists(child(".partD.__compact")) && !fs.exists(child("partD")))
     assert(names(child("partE")) == Set("live_data"))
+    assert(names(child("partF")) == Set("new_gen"),
+      s"the visible stage must be installed: ${names(child("partF"))}")
+    assert(names(child("_commits")) == Set("0"))
     val leftovers = fs.listStatus(root).map(_.getPath.getName)
       .filter(_.contains("__")).toSeq
     assert(leftovers.isEmpty, s"no hidden sibling survives a vacuum: $leftovers")
