@@ -1,6 +1,7 @@
 package graft
 
 import graft.functions.{CosineSimilarity, DotProduct, L2Distance, RecursiveSplitGenerator, TopKByDist, WindowTopKRewrite}
+import org.apache.spark.SparkEnv
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
@@ -10,10 +11,15 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * `--conf spark.sql.extensions=graft.GraftExtensions` — the deployment
   * path for a shared cluster, where per-session `register()` calls don't
   * reach SQL-only users (JDBC/Thrift, notebooks).
+  *
+  * On that path it also floors the driver's generated-class cache at
+  * [[GraftExtensions.CodegenCacheFloor]] (see there).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   override def apply(ext: SparkSessionExtensions): Unit = {
+    GraftExtensions.floorCodegenCache()
+
     def info(name: String, usage: String) =
       new ExpressionInfo("graft", null, name, usage, "", "", "", "", "", "", "built-in")
 
@@ -138,4 +144,44 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         "cms_estimate(sketch, item) - point-frequency estimate from a CMS"),
       (es: Seq[Expression]) => graft.functions.CmsEstimate(es(0), es(1))))
   }
+}
+
+object GraftExtensions {
+
+  /** Floor for `spark.sql.codegen.cache.maxEntries`, the size of the
+    * JVM-wide LRU of compiled generated classes (Spark's default: 100).
+    * One engine operation needs more distinct classes than that — counted
+    * with `CodegenMetrics.METRIC_COMPILATION_TIME`, a warm `chatTurn`
+    * compiles about 177 and a corpus build about 130 — so at the default
+    * every class is evicted before its next use and each operation pays
+    * its code generation again (about 8.4 ms per class). 1024 is about
+    * 5.8× the largest measured working set (177 classes). PERF.md,
+    * "Generated-class cache: one operation's working set", has the
+    * compile counts at both sizes and the end-to-end A/B.
+    */
+  val CodegenCacheFloor = 1024
+
+  private val CodegenCacheKey = "spark.sql.codegen.cache.maxEntries"
+
+  /** Set the floor on the live SparkConf unless the deployment set the
+    * key itself (an explicit value always wins, in either direction).
+    *
+    * It takes effect on the `spark.sql.extensions` conf path only: there
+    * Spark applies the extensions after the new SparkContext exists and
+    * before `SharedState` clones its conf, and `CodeGenerator` sizes its
+    * cache once per JVM, at its first use, from that conf. On the
+    * builder-time `withExtensions(new GraftExtensions()(_))` path,
+    * `apply` runs before the context is created (there is no `SparkEnv`
+    * yet, or it belongs to a context that has already generated code), so
+    * the floor cannot reach the cache there; this object does not try to
+    * force `CodeGenerator`'s initialisation.
+    *
+    * Executors on a cluster build their own cache from their own
+    * SparkConf, which this driver-side call does not reach: cluster
+    * deployments set `spark.sql.codegen.cache.maxEntries` in
+    * spark-defaults.
+    */
+  private def floorCodegenCache(): Unit =
+    Option(SparkEnv.get).foreach(
+      _.conf.setIfMissing(CodegenCacheKey, CodegenCacheFloor.toString))
 }

@@ -460,16 +460,16 @@ object Layout {
     // peers), not about keeping their outputs apart — combining outputs
     // just settles the result faster, and a per-class job loop was pure
     // scheduler overhead (~16 buckets × classes tiny jobs per fold).
-    // Live dir untouched and fully readable throughout; mergeSchema: a
-    // directory whose files straddle a schema addition (e.g. pre-epoch
-    // and epoch-stamped appends) must not drop the newer columns.
-    // No localCheckpoint: the inputs are explicit
+    // Live dir untouched and fully readable throughout; merged footer
+    // schema: a directory whose files straddle a schema addition (e.g.
+    // pre-epoch and epoch-stamped appends) must not drop the newer
+    // columns. No localCheckpoint: the inputs are explicit
     // FILE paths that exist untouched until the post-swap delete, and the
     // staged write completes before the live dir is mutated — there is no
     // window where a task retry could re-read a replaced source
     val outFiles =
       math.max(1L, (rewrittenBytes + targetBytes - 1) / targetBytes).toInt
-    spark.read.option("mergeSchema", "true")
+    spark.read.schema(footerSchema(spark, consumedFiles))
       .parquet(consumedFiles.map(_.getPath.toString): _*)
       .coalesce(outFiles)
       .write.mode("overwrite").parquet(stagedP.toString)
@@ -485,6 +485,32 @@ object Layout {
       .count(f => f.isFile && isData(f.getPath.getName) && f.getLen > 0)
     TieredCompactStats(files.size, after,
       files.size - consumed.size, rewrittenBytes)
+  }
+
+  /** The schema a `mergeSchema` read of parquet `files` infers, without
+    * its inference job: the footers are read here on the driver, each
+    * turned into a Spark schema by Spark's footer law
+    * (`ParquetFileFormat.readSchemaFromFooter`: the writer's Spark schema
+    * when the footer carries one, else the parquet converter under this
+    * session's conf) and merged by Spark's `StructType.merge`.
+    */
+  private def footerSchema(
+      spark: org.apache.spark.sql.SparkSession,
+      files: Seq[org.apache.hadoop.fs.FileStatus]
+  ): org.apache.spark.sql.types.StructType = {
+    import org.apache.spark.sql.execution.datasources.parquet.{
+      ParquetFileFormat, ParquetToSparkSchemaConverter}
+    val conf = spark.sessionState.newHadoopConf()
+    val sqlConf = spark.sessionState.conf
+    val converter = new ParquetToSparkSchemaConverter(sqlConf)
+    files.map { f =>
+      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f, conf))
+      val footer = try reader.getFooter finally reader.close()
+      ParquetFileFormat.readSchemaFromFooter(
+        new org.apache.parquet.hadoop.Footer(f.getPath, footer), converter)
+    }.reduceLeft(org.apache.spark.sql.SchemaMerge.merge(
+      _, _, sqlConf.caseSensitiveAnalysis))
   }
 
   /** [[compactSmallFiles]] over many independent directories (the

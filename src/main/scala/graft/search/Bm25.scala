@@ -123,14 +123,16 @@ object Bm25 extends graft.ops.IndexLifecycle {
 
   /** Driver-side bucket ids for literal query terms (evaluated through the
     * SAME Catalyst expression as [[bucketCol]], so they cannot drift from
-    * the written layout).
+    * the written layout). No job: the projection over the local relation
+    * folds on the driver, and the ids dedupe here (a `distinct()` would
+    * plan an Aggregate, two AQE jobs per [[restrictToTerms]]).
     */
   def bucketsFor(spark: org.apache.spark.sql.SparkSession,
       terms: Seq[String], nb: Int): Seq[Int] = {
     import spark.implicits._
     if (terms.isEmpty) Seq.empty
     else terms.toDF("term").select(bucketCol(col("term"), nb).as("b"))
-      .distinct().collect().map(_.getInt(0)).toSeq.sorted
+      .collect().map(_.getInt(0)).distinct.toSeq.sorted
   }
 
   /** Driver-side mirror of [[tokensCol]]'s token law (lowercase,
@@ -182,7 +184,7 @@ object Bm25 extends graft.ops.IndexLifecycle {
     // build shuffles sized from the input docs (×3 bounds the token
     // explode; the bucket-aligned postings write keeps its explicit
     // repartition count either way) — Layout.withShuffleSizedTo
-    graft.ops.Layout.withShuffleSizedTo(spark,
+    val (n, totDl) = graft.ops.Layout.withShuffleSizedTo(spark,
       graft.ops.Layout.planBytes(docs) * 3, disableAqeAtOne = false) {
     // one tokenize+aggregate pass feeds all four tables — persist, or
     // every write below re-runs the corpus build (the double-eval trap)
@@ -200,6 +202,7 @@ object Bm25 extends graft.ops.IndexLifecycle {
         bucketed.select("doc_id", "dl").distinct())
       val stats = docsTbl.agg(count(lit(1)).as("n"), sum("dl").as("tot")).head()
       val n = stats.getLong(0)
+      val totDl = if (n == 0) 0L else stats.getLong(1)
       // Postings write shape — a measured storage-dependent trade:
       //  - filesPerBucket ≥ 1 (default): doc-salted repartition keeps
       //    every output file bucket-pure with buckets × filesPerBucket
@@ -224,7 +227,7 @@ object Bm25 extends graft.ops.IndexLifecycle {
       // instead of the sum
       graft.ops.Layout.mapConcurrently[() => Unit, Unit](Seq(
         () => writeSegment(spark, path, 0L, postingsOut, bucketed, docsTbl,
-          n, if (n == 0) 0L else stats.getLong(1), overwrite = true),
+          n, totDl, overwrite = true),
         () => Seq(termBuckets).toDF("term_buckets")
           .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")),
         parallelism = 2)(_())
@@ -234,9 +237,12 @@ object Bm25 extends graft.ops.IndexLifecycle {
       // would silently exclude fresh docs whose ids were once deleted
       // and appendIndexBatch would no-op previously used batch ids
       graft.ops.Layout.clearIndexSidecars(spark, path)
+      (n, totDl)
     } finally bucketed.unpersist()
     }
-    loadIndex(spark, path)
+    // the driver already holds every load scalar: no read-back of meta
+    // and stats (loadIndex's scan)
+    committedIndex(spark, path, Seq(0L), termBuckets, n, totDl)
   }
 
   // ------------------------------------------------- segment commit law
@@ -382,21 +388,37 @@ object Bm25 extends graft.ops.IndexLifecycle {
     val segs = committedSegs(spark, path)
     require(segs.nonEmpty,
       s"loadIndex: no committed segments at $path — incomplete write?")
+    // ONE collected scan carries all three load scalars: the meta row and
+    // the committed segments' stats rows (both segment-count-sized) in one
+    // union, summed exactly here: no aggregate, so one job and no AQE
+    // stages; with the declared schemas no footer-inference jobs precede
+    // it (every at-rest probe battery pays this per load)
+    val rows = readTable(spark, s"$path/meta", MetaDdl)
+      .select(col("term_buckets"), lit(null).cast("long").as("n_docs"),
+        lit(null).cast("long").as("tot_dl"))
+      .union(readTable(spark, s"$path/stats", StatsDdl)
+        .where(col("seg").isin(segs.map(x => x: Any): _*))
+        .select(lit(null).cast("int").as("term_buckets"),
+          col("n_docs"), col("tot_dl")))
+      .collect()
+    val (metaRows, statRows) = rows.partition(!_.isNullAt(0))
+    require(metaRows.nonEmpty, s"loadIndex: no meta row at $path/meta")
+    def total(i: Int): Long =
+      statRows.foldLeft(0L)((acc, r) => Math.addExact(acc, r.getLong(i)))
+    committedIndex(spark, path, segs, metaRows.head.getInt(0),
+      total(1), total(2))
+  }
+
+  /** The index over the committed segments `segs` of `path`, from load
+    * scalars the caller already holds ([[loadIndex]] scans them,
+    * [[writeIndex]] just computed them).
+    */
+  private def committedIndex(
+      spark: org.apache.spark.sql.SparkSession, path: String,
+      segs: Seq[Long], nb: Int, n: Long, totDl: Long): Index = {
     // readers see COMMITTED segments only (static partition pruning on
     // seg): an append's crash orphans are invisible here
     val segFilter = col("seg").isin(segs.map(x => x: Any): _*)
-    // ONE driver action carries all three load scalars — term_buckets
-    // crossJoined onto the segment-stats fold (both sides are
-    // segment-count-sized); the previous meta.head + stats.head pair was
-    // two jobs, and with the declared schemas no footer-inference jobs
-    // precede them (round-16 loadIndex fast path: every at-rest probe
-    // battery pays this per load)
-    val st = readTable(spark, s"$path/meta", MetaDdl)
-      .crossJoin(readTable(spark, s"$path/stats", StatsDdl).where(segFilter)
-        .agg(sum("n_docs").cast("long").as("__n"),
-          sum("tot_dl").cast("long").as("__t")))
-      .head
-    val nb = st.getInt(0)
     // shared probe-side exclusion (Layout.excludeTombstoned): bounded +
     // loud sidecar read, scan-stage NOT IN for small sets, broadcast
     // anti-join past 1024 ids
@@ -405,9 +427,7 @@ object Bm25 extends graft.ops.IndexLifecycle {
       tombPath(path), "doc_id", MaxTombstones)
     val terms = readTable(spark, s"$path/terms", TermsDdl).where(segFilter)
       .groupBy("term").agg(sum("df").cast("long").as("df"))
-    val n = st.getLong(1)
-    Index(postings, terms, n,
-      if (n == 0) 0.0 else st.getLong(2).toDouble / n, Some(nb))
+    Index(postings, terms, n, if (n == 0) 0.0 else totDl.toDouble / n, Some(nb))
   }
 
   /** Incrementally add `newDocs` to a persisted index — appends only, no

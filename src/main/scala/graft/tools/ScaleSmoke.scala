@@ -22,7 +22,9 @@ object ScaleSmoke {
     val scale = sys.env.getOrElse("SPARK_GRAFT_SCALE", "1.0").toDouble
     val spark = SparkSession.builder()
       .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .withExtensions(new graft.GraftExtensions()(_))
+      // the conf path (not withExtensions): only there does the extension
+      // floor the generated-class cache before the first plan compiles
+      .config("spark.sql.extensions", "graft.GraftExtensions")
       .config("spark.sql.shuffle.partitions", "64")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")

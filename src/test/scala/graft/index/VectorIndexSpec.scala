@@ -11,8 +11,7 @@ class VectorIndexSpec extends SparkSpec {
   }.toDF("doc_id", "text")
 
   test("append adds only new chunks, idempotently") {
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_idx_append").toString + "/idx"
+    val path = tempDir("graft_idx_append").toString + "/idx"
     val base = docs(0 until 20)
     val embedder = VectorIndex.fit(base)
     VectorIndex.write(VectorIndex.buildWith(base, embedder), path)
@@ -31,8 +30,7 @@ class VectorIndexSpec extends SparkSpec {
   }
 
   test("append embeds the delta in the ORIGINAL corpus space") {
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_idx_space").toString + "/idx"
+    val path = tempDir("graft_idx_space").toString + "/idx"
     val base = docs(0 until 10)
     val embedder = VectorIndex.fit(base)
     VectorIndex.write(VectorIndex.buildWith(base, embedder), path)
@@ -49,8 +47,7 @@ class VectorIndexSpec extends SparkSpec {
   }
 
   test("append refuses an embedder with mismatched dimensions") {
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_idx_dims").toString + "/idx"
+    val path = tempDir("graft_idx_dims").toString + "/idx"
     val base = docs(0 until 10)
     val embedder64 = VectorIndex.fit(base)
     VectorIndex.write(VectorIndex.buildWith(base, embedder64), path)
@@ -64,8 +61,7 @@ class VectorIndexSpec extends SparkSpec {
   }
 
   test("first append onto a missing path bootstraps the index") {
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_idx_boot").toString + "/fresh"
+    val path = tempDir("graft_idx_boot").toString + "/fresh"
     val d = docs(0 until 5)
     val embedder = VectorIndex.fit(d)
     val n = VectorIndex.append(spark, d, path, embedder)
@@ -75,8 +71,7 @@ class VectorIndexSpec extends SparkSpec {
 
   test("time travel: loadActiveAsOf reproduces every epoch's snapshot until compact") {
     import org.apache.spark.sql.functions.col
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_idx_asof").toString + "/idx"
+    val path = tempDir("graft_idx_asof").toString + "/idx"
     val d = docs(0 until 4)
     val embedder = VectorIndex.fit(d)
     def snap(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
@@ -118,8 +113,7 @@ class VectorIndexSpec extends SparkSpec {
     // maxSurvivingEpoch + 1: AS OF epochs in [maxSurviving, tombEpoch-1]
     // included the doc pre-compact, so admitting them after the fold
     // would serve exactly the silent partial view the guard refuses
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_idx_deltomb").toString + "/idx"
+    val path = tempDir("graft_idx_deltomb").toString + "/idx"
     val d = docs(0 until 4)
     val embedder = VectorIndex.fit(d)
     VectorIndex.append(spark, d, path, embedder) // pre-epoch files → epoch 0
@@ -137,8 +131,7 @@ class VectorIndexSpec extends SparkSpec {
 
   test("compactRetain: history above the horizon exact, below refused, storage folded") {
     import org.apache.spark.sql.functions.col
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_idx_ret").toString + "/idx"
+    val path = tempDir("graft_idx_ret").toString + "/idx"
     val d = docs(0 until 4)
     val embedder = VectorIndex.fit(d)
     def snap(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
@@ -186,8 +179,7 @@ class VectorIndexSpec extends SparkSpec {
 
   test("MoR lifecycle: delete hides, upsert revives, compact folds") {
     import org.apache.spark.sql.functions.col
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_idx_mor").toString + "/idx"
+    val path = tempDir("graft_idx_mor").toString + "/idx"
     val d = docs(0 until 6)
     val embedder = VectorIndex.fit(d)
     VectorIndex.append(spark, d, path, embedder)
@@ -234,8 +226,7 @@ class VectorIndexSpec extends SparkSpec {
 
   test("upsertDocs is idempotent under same-epoch replay") {
     import org.apache.spark.sql.functions.col
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_idx_replay").toString + "/idx"
+    val path = tempDir("graft_idx_replay").toString + "/idx"
     val d = docs(0 until 4)
     val embedder = VectorIndex.fit(d)
     VectorIndex.append(spark, d, path, embedder)
@@ -256,7 +247,7 @@ class VectorIndexSpec extends SparkSpec {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import org.apache.spark.sql.functions.col
     implicit val sqlC = spark.sqlContext
-    val tmp = java.nio.file.Files.createTempDirectory("graft_upsink").toString
+    val tmp = tempDir("graft_upsink").toString
     val path = s"$tmp/idx"
     val fitted = VectorIndex.fit(docs(0 until 4))
     val mem = MemoryStream[(Long, String)]
@@ -286,7 +277,7 @@ class VectorIndexSpec extends SparkSpec {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import org.apache.spark.sql.functions.col
     implicit val sqlC = spark.sqlContext
-    val tmp = java.nio.file.Files.createTempDirectory("graft_upsink_mx").toString
+    val tmp = tempDir("graft_upsink_mx").toString
     val path = s"$tmp/idx"
     val fitted = VectorIndex.fit(docs(0 until 4))
     val policy = graft.ops.Layout.MaintenancePolicy(
@@ -324,8 +315,7 @@ class VectorIndexSpec extends SparkSpec {
 
   test("upsert with an empty revision still replaces the prior generation") {
     import org.apache.spark.sql.functions.col
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_idx_emptyrev").toString + "/idx"
+    val path = tempDir("graft_idx_emptyrev").toString + "/idx"
     val d = docs(0 until 4)
     val embedder = VectorIndex.fit(d)
     VectorIndex.append(spark, d, path, embedder)
@@ -344,8 +334,7 @@ class VectorIndexSpec extends SparkSpec {
 
   test("compact interleaved with upserts preserves epoch fencing") {
     import org.apache.spark.sql.functions.col
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_idx_ccompact").toString + "/idx"
+    val path = tempDir("graft_idx_ccompact").toString + "/idx"
     val d = docs(0 until 4)
     val embedder = VectorIndex.fit(d)
     VectorIndex.append(spark, d, path, embedder)
@@ -376,8 +365,7 @@ class VectorIndexSpec extends SparkSpec {
 
   test("crash-simulated partial batch + compact + replay converges") {
     import org.apache.spark.sql.functions.{col, lit}
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_idx_crash").toString + "/idx"
+    val path = tempDir("graft_idx_crash").toString + "/idx"
     val d = docs(0 until 4)
     val embedder = VectorIndex.fit(d)
     VectorIndex.append(spark, d, path, embedder)
@@ -408,7 +396,7 @@ class VectorIndexSpec extends SparkSpec {
   // hand: a complete compacted generation at `stageName`, the live dir
   // already renamed aside to `.idx.__old`; compact must restore the rows
   private def compactAfterSwapCrash(stageName: String): Unit = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_idx_swapcrash")
+    val dir = tempDir("graft_idx_swapcrash")
     val path = dir.toString + "/idx"
     val d = docs(0 until 6)
     val embedder = VectorIndex.fit(d)

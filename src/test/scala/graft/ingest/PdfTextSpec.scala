@@ -109,8 +109,7 @@ class PdfTextSpec extends SparkSpec {
   }
 
   test("end-to-end: .pdf files through binaryFile scan and extension dispatch") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_pdf_e2e")
-    dir.toFile.deleteOnExit()
+    val dir = tempDir("graft_pdf_e2e")
     java.nio.file.Files.write(dir.resolve("a.pdf"),
       PdfText.synthesize(Seq("doc a body"), compress = true))
     java.nio.file.Files.write(dir.resolve("b.pdf"),

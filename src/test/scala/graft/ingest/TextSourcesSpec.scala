@@ -26,7 +26,7 @@ class TextSourcesSpec extends SparkSpec {
   }
 
   test("binaryFile dispatch reads a raw dir and routes by extension (S1/S2)") {
-    val dir = Files.createTempDirectory("graft_ingest").toFile
+    val dir = tempDir("graft_ingest").toFile
     Files.writeString(new java.io.File(dir, "a.html").toPath,
       "<html><body><p>doc a</p></body></html>")
     Files.writeString(new java.io.File(dir, "b.xml").toPath,
@@ -43,7 +43,7 @@ class TextSourcesSpec extends SparkSpec {
   }
 
   test("CSV reader with header + schema inference (S5 relational path)") {
-    val dir = Files.createTempDirectory("graft_csv").toFile
+    val dir = tempDir("graft_csv").toFile
     Files.writeString(new java.io.File(dir, "t.csv").toPath,
       "id,name,score\n1,alpha,2.5\n2,beta,4.0\n")
     val df = spark.read
@@ -93,7 +93,7 @@ class TextSourcesSpec extends SparkSpec {
     "doc_id BIGINT, lang STRING, text STRING")
 
   test("jsonlDocs: explicit schema, corrupt lines audited not dropped") {
-    val dir = java.nio.file.Files.createTempDirectory("jsonl").toFile
+    val dir = tempDir("jsonl").toFile
     try {
       java.nio.file.Files.write(
         new java.io.File(dir, "part0.jsonl").toPath,

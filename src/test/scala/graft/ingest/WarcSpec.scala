@@ -144,7 +144,7 @@ class WarcSpec extends SparkSpec {
   }
 
   test("readWarc: one task per file via binaryFile, gzip detected per file") {
-    val dir = java.nio.file.Files.createTempDirectory("warcspec").toFile
+    val dir = tempDir("warcspec").toFile
     try {
       java.nio.file.Files.write(
         new java.io.File(dir, "a.warc").toPath,
@@ -188,7 +188,7 @@ class WarcSpec extends SparkSpec {
   }
 
   test("streaming intake: waves land once, a restart never re-ingests") {
-    val root = java.nio.file.Files.createTempDirectory("warcstream").toFile
+    val root = tempDir("warcstream").toFile
     val landing = new java.io.File(root, "landing"); landing.mkdirs()
     val out = new java.io.File(root, "corpus").getAbsolutePath
     val ckpt = new java.io.File(root, "ckpt").getAbsolutePath

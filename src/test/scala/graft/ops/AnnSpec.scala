@@ -49,7 +49,7 @@ class AnnSpec extends SparkSpec {
 
   test("persisted IVF index prunes partitions when probing") {
     val (assigned, centroids) = Ann.buildIvf(emb, nLists = 4)
-    val path = java.nio.file.Files.createTempDirectory("graft_ivf").toString
+    val path = tempDir("graft_ivf").toString
     Ann.writeIvf(assigned, centroids, path)
     val (lists, cents) = Ann.loadIvf(spark, path)
     val got = Ann.ivfTopK(lists, cents, qv, 10, nProbe = 4)
@@ -65,7 +65,7 @@ class AnnSpec extends SparkSpec {
 
   test("IVF lifecycle: append through the frozen quantizer; delete hides; compact purges") {
     val (assigned, centroids) = Ann.buildIvfSampled(emb, nLists = 4)
-    val path = java.nio.file.Files.createTempDirectory("graft_ivf_lc").toString
+    val path = tempDir("graft_ivf_lc").toString
     // seed + append must equal the one-shot build (the a5b premise): the
     // persisted centroids route appended vectors identically
     Ann.writeIvf(assigned.where(col("vec_id") < 60), centroids, path)
@@ -100,7 +100,7 @@ class AnnSpec extends SparkSpec {
 
   test("appendIvfBatch: ledgered replay no-ops; compactIvfLists bin-packs value-invisibly") {
     val (assigned, centroids) = Ann.buildIvfSampled(emb, nLists = 4)
-    val path = java.nio.file.Files.createTempDirectory("graft_ivf_lb").toString
+    val path = tempDir("graft_ivf_lb").toString
     Ann.writeIvf(assigned.where(col("vec_id") < 60), centroids, path)
     assert(Ann.appendIvfBatch(spark,
       emb.where(col("vec_id") >= 60 && col("vec_id") < 200), path, 1L))
@@ -136,7 +136,7 @@ class AnnSpec extends SparkSpec {
     // drop the already-present ids so the replay is row-exact idempotent,
     // while genuinely new ids in the same delivery still land
     val (assigned, centroids) = Ann.buildIvfSampled(emb, nLists = 4)
-    val path = java.nio.file.Files.createTempDirectory("graft_ivf_cw").toString
+    val path = tempDir("graft_ivf_cw").toString
     Ann.writeIvf(assigned.where(col("vec_id") < 60), centroids, path)
     // simulate the crash: raw append (the data half), no ledger marker
     Ann.appendIvf(spark, emb.where(col("vec_id") >= 60 && col("vec_id") < 200), path)
@@ -160,7 +160,7 @@ class AnnSpec extends SparkSpec {
   test("streamingIvfSink: micro-batches route through the frozen quantizer exactly once") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlC = spark.sqlContext
-    val tmp = java.nio.file.Files.createTempDirectory("graft_ivf_sink").toString
+    val tmp = tempDir("graft_ivf_sink").toString
     val path = s"$tmp/idx"
     val (assigned, centroids) = Ann.buildIvfSampled(emb, nLists = 4)
     Ann.writeIvf(assigned.where(col("vec_id") < 400), centroids, path)
@@ -187,7 +187,7 @@ class AnnSpec extends SparkSpec {
   test("streamingIvfSink with a maintenance policy compacts tombstones away mid-stream") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlC = spark.sqlContext
-    val tmp = java.nio.file.Files.createTempDirectory("graft_ivf_selfmx").toString
+    val tmp = tempDir("graft_ivf_selfmx").toString
     val path = s"$tmp/idx"
     val (assigned, centroids) = Ann.buildIvfSampled(emb, nLists = 4)
     Ann.writeIvf(assigned.where(col("vec_id") < 450), centroids, path)
@@ -219,7 +219,7 @@ class AnnSpec extends SparkSpec {
 
   test("writeIvf rebuild clears the previous life's tombstones and batch ledger") {
     val (assigned, centroids) = Ann.buildIvfSampled(emb, nLists = 4)
-    val path = java.nio.file.Files.createTempDirectory("graft_ivf_rb").toString
+    val path = tempDir("graft_ivf_rb").toString
     Ann.writeIvf(assigned, centroids, path)
     val top = exactTop10.head
     Ann.deleteIvf(spark, path, Seq(top))

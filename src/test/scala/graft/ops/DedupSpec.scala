@@ -221,8 +221,7 @@ class DedupSpec extends SparkSpec {
     // corpus (ids % 3 != 0) persisted once; the batch (% 3 == 0) probes
     // the store — output must match the exact cross-split jaccard (the
     // d19 premise: banding recall ≈ 1 at j >= 0.8 with 32x4 bands)
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_mh_store").toString + "/idx"
+    val path = tempDir("graft_mh_store").toString + "/idx"
     val corpus = fixtureDocs.where($"doc_id" % 3 =!= 0)
     val batch = fixtureDocs.where($"doc_id" % 3 === 0)
     Dedup.writeMinhash(corpus, path, shingleSize = 1, numHashes = 128, bands = 32)
@@ -254,8 +253,7 @@ class DedupSpec extends SparkSpec {
     // packing folds them per table (merge set from the listing) without
     // moving a single probe value — deletes stay in the sidecar, so the
     // tombstoned exclusion survives the rewrite verbatim
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_mh_pack").toString + "/idx"
+    val path = tempDir("graft_mh_pack").toString + "/idx"
     Dedup.writeMinhash(fixtureDocs.where($"doc_id" % 3 =!= 0), path,
       shingleSize = 1, numHashes = 128, bands = 32)
     for (b <- 0 until 3)
@@ -280,8 +278,7 @@ class DedupSpec extends SparkSpec {
   }
 
   test("estimated store probe: exact twins hit all positions, error law holds") {
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_mh_est").toString + "/idx"
+    val path = tempDir("graft_mh_est").toString + "/idx"
     val corpus = fixtureDocs.where($"doc_id" % 3 =!= 0)
     val batch = fixtureDocs.where($"doc_id" % 3 === 0)
     Dedup.writeMinhash(corpus, path, shingleSize = 1, numHashes = 128, bands = 32)
@@ -594,8 +591,7 @@ class DedupSpec extends SparkSpec {
     // jobs (measured same-run: 156 jobs / ~31 s per batch unfused vs
     // 59 / ~7 s fused). AQE off so exchange
     // materialization doesn't hide the action count.
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft_ndi_jobs").toString + "/store"
+    val tmp = tempDir("graft_ndi_jobs").toString + "/store"
     Dedup.writeMinhash(
       Seq((100L, "alpha beta gamma delta epsilon"),
         (101L, "one two three four five six")).toDF("doc_id", "text"),
@@ -968,8 +964,7 @@ class DedupSpec extends SparkSpec {
   }
 
   test("minhash store delete hides partners; compact purges and equals from-scratch") {
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_mh_del").toString + "/idx"
+    val path = tempDir("graft_mh_del").toString + "/idx"
     val corpus = fixtureDocs.where($"doc_id" % 3 =!= 0)
     val batch = fixtureDocs.where($"doc_id" % 3 === 0)
     Dedup.writeMinhash(corpus, path, shingleSize = 1, numHashes = 128, bands = 32)
@@ -991,8 +986,7 @@ class DedupSpec extends SparkSpec {
     val (before, after) = Dedup.compactMinhash(spark, path)
     assert(before - after == partners.size.toLong,
       s"expected ${partners.size} purged, got $before -> $after")
-    val fresh = java.nio.file.Files
-      .createTempDirectory("graft_mh_del_f").toString + "/idx"
+    val fresh = tempDir("graft_mh_del_f").toString + "/idx"
     Dedup.writeMinhash(corpus.where(!col("doc_id").isin(partners: _*)), fresh,
       shingleSize = 1, numHashes = 128, bands = 32)
     def probeAll(p: String) =
@@ -1011,8 +1005,7 @@ class DedupSpec extends SparkSpec {
   }
 
   test("minhash store ledger records zero-shingle docs (no eternal replay)") {
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_mh_ledger").toString + "/idx"
+    val path = tempDir("graft_mh_ledger").toString + "/idx"
     Dedup.writeMinhash(
       Seq((1L, "alpha beta gamma"), (2L, "")).toDF("doc_id", "text"),
       path, shingleSize = 3, numHashes = 128, bands = 32)
@@ -1034,8 +1027,7 @@ class DedupSpec extends SparkSpec {
   test("minhash store built from an INT doc_id: append, probe and delete read it back") {
     // the declared readers expect BIGINT ids: a store written with the
     // caller's INT column uncast failed every later read
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_mh_int").toString + "/idx"
+    val path = tempDir("graft_mh_int").toString + "/idx"
     val intDocs = fixtureDocs.select(col("doc_id").cast("int").as("doc_id"), col("text"))
     val corpus = intDocs.where(col("doc_id") % 3 =!= 0)
     val batch = intDocs.where(col("doc_id") % 3 === 0)
@@ -1048,8 +1040,7 @@ class DedupSpec extends SparkSpec {
       .as[(Long, Long)].collect().toSet
     val pairs = probe()
     // the same probe over a store built from the BIGINT ids
-    val longPath = java.nio.file.Files
-      .createTempDirectory("graft_mh_long").toString + "/idx"
+    val longPath = tempDir("graft_mh_long").toString + "/idx"
     Dedup.writeMinhash(fixtureDocs.where($"doc_id" % 3 =!= 0), longPath,
       shingleSize = 1, numHashes = 128, bands = 32)
     assert(pairs.nonEmpty && pairs == Dedup.nearDupesAgainstStore(spark,

@@ -56,7 +56,7 @@ class HnswSpec extends SparkSpec {
   }
 
   test("at-rest probe returns exactly the transient build's results") {
-    val path = java.nio.file.Files.createTempDirectory("graft_hnsw").toString + "/idx"
+    val path = tempDir("graft_hnsw").toString + "/idx"
     val p = Hnsw.Params(m = 8, efConstruction = 80, efSearch = 64, numShards = 4)
     Hnsw.write(emb, path, p)
     val transient =
@@ -68,7 +68,7 @@ class HnswSpec extends SparkSpec {
   }
 
   test("append adds new segments: new ids reachable, old results unchanged") {
-    val path = java.nio.file.Files.createTempDirectory("graft_hnsw_app").toString + "/idx"
+    val path = tempDir("graft_hnsw_app").toString + "/idx"
     val p = Hnsw.Params(m = 8, efConstruction = 80, efSearch = 64, numShards = 2)
     Hnsw.write(emb, path, p)
     val before = Hnsw.probe(spark, path, qs, 5)
@@ -92,7 +92,7 @@ class HnswSpec extends SparkSpec {
   }
 
   test("mergeSegments: tail shards fold into one generation, exact under exhaustive beam") {
-    val path = java.nio.file.Files.createTempDirectory("graft_hnsw_mrg").toString + "/idx"
+    val path = tempDir("graft_hnsw_mrg").toString + "/idx"
     // exhaustive beam (efSearch >= total population) => probe is exact
     // kNN regardless of graph structure — the a12/a13 oracle regime, so
     // merge must be BIT-invisible here
@@ -135,7 +135,7 @@ class HnswSpec extends SparkSpec {
   }
 
   test("mergeSegments on a routed index keeps the cell-alignment law") {
-    val path = java.nio.file.Files.createTempDirectory("graft_hnsw_mrgr").toString + "/idx"
+    val path = tempDir("graft_hnsw_mrgr").toString + "/idx"
     val p = Hnsw.Params(m = 8, efConstruction = 80, efSearch = 2048, numShards = 4)
     Hnsw.writeRouted(emb.where(col("vec_id") < 500), path, p)
     (0 until 2).foreach { b =>
@@ -200,7 +200,7 @@ class HnswSpec extends SparkSpec {
   }
 
   test("routed: nProbe=all with exhaustive ef is exact; nProbe=1 recalls the cluster") {
-    val path = java.nio.file.Files.createTempDirectory("graft_hnsw_rt").toString + "/idx"
+    val path = tempDir("graft_hnsw_rt").toString + "/idx"
     val p = Hnsw.Params(m = 8, efConstruction = 80, efSearch = 400, numShards = 4)
     Hnsw.writeRouted(emb, path, p)
     val exact = exactTopK(10)
@@ -218,7 +218,7 @@ class HnswSpec extends SparkSpec {
   }
 
   test("routed probe scans only the routed shard directories") {
-    val path = java.nio.file.Files.createTempDirectory("graft_hnsw_pr").toString + "/idx"
+    val path = tempDir("graft_hnsw_pr").toString + "/idx"
     Hnsw.writeRouted(emb, path, Hnsw.Params(numShards = 4))
     val q1 = qs.where(col("query_id") === 3)
     val out = Hnsw.probeRouted(spark, path, q1, 5, nProbe = 1)
@@ -230,7 +230,7 @@ class HnswSpec extends SparkSpec {
   }
 
   test("compact merges append segments back to the canonical shard count") {
-    val path = java.nio.file.Files.createTempDirectory("graft_hnsw_cp").toString + "/idx"
+    val path = tempDir("graft_hnsw_cp").toString + "/idx"
     val p = Hnsw.Params(m = 8, efConstruction = 80, efSearch = 400, numShards = 2)
     Hnsw.write(emb.where(col("vec_id") < 300), path, p)
     Hnsw.append(spark, emb.where(col("vec_id") >= 300 && col("vec_id") < 450), path)
@@ -246,7 +246,7 @@ class HnswSpec extends SparkSpec {
   }
 
   test("compact swap: stale __old crash leftover is cleaned, view stays intact") {
-    val path = java.nio.file.Files.createTempDirectory("graft_hnsw_sw").toString + "/idx"
+    val path = tempDir("graft_hnsw_sw").toString + "/idx"
     val p = Hnsw.Params(m = 8, efConstruction = 80, efSearch = 400, numShards = 2)
     Hnsw.write(emb.where(col("vec_id") < 300), path, p)
     Hnsw.append(spark, emb.where(col("vec_id") >= 300), path)
@@ -265,7 +265,7 @@ class HnswSpec extends SparkSpec {
   }
 
   test("routed append: new vectors visible to routed probes BEFORE any compact") {
-    val path = java.nio.file.Files.createTempDirectory("graft_hnsw_rta").toString + "/idx"
+    val path = tempDir("graft_hnsw_rta").toString + "/idx"
     val p = Hnsw.Params(m = 8, efConstruction = 80, efSearch = 400, numShards = 4)
     Hnsw.writeRouted(emb.where(col("vec_id") < 500), path, p)
     // append a twin of vector 77 under a new id — it must route to 77's
@@ -294,7 +294,7 @@ class HnswSpec extends SparkSpec {
   }
 
   test("compact re-routes through the persisted router on a routed index") {
-    val path = java.nio.file.Files.createTempDirectory("graft_hnsw_cpr").toString + "/idx"
+    val path = tempDir("graft_hnsw_cpr").toString + "/idx"
     val p = Hnsw.Params(m = 8, efConstruction = 80, efSearch = 400, numShards = 4)
     Hnsw.writeRouted(emb.where(col("vec_id") < 500), path, p)
     Hnsw.append(spark, emb.where(col("vec_id") >= 500), path)
@@ -309,7 +309,7 @@ class HnswSpec extends SparkSpec {
   }
 
   test("appendBatch is idempotent per batch id; duplicate segments never duplicate hits") {
-    val path = java.nio.file.Files.createTempDirectory("graft_hnsw_ab").toString + "/idx"
+    val path = tempDir("graft_hnsw_ab").toString + "/idx"
     val p = Hnsw.Params(m = 8, efConstruction = 80, efSearch = 400, numShards = 2)
     Hnsw.write(emb.where(col("vec_id") < 500), path, p)
     val batch = emb.where(col("vec_id") >= 500)
@@ -344,7 +344,7 @@ class HnswSpec extends SparkSpec {
   test("streamingHnswSink: micro-batches append segments exactly once") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlC = spark.sqlContext
-    val tmp = java.nio.file.Files.createTempDirectory("graft_hnsw_sink").toString
+    val tmp = tempDir("graft_hnsw_sink").toString
     val path = s"$tmp/idx"
     val p = Hnsw.Params(m = 8, efConstruction = 80, efSearch = 400, numShards = 2)
     Hnsw.write(emb.where(col("vec_id") < 550), path, p)
@@ -370,7 +370,7 @@ class HnswSpec extends SparkSpec {
   test("streamingHnswSink with a maintenance policy folds shard generations") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlC = spark.sqlContext
-    val tmp = java.nio.file.Files.createTempDirectory("graft_hnsw_selfmx").toString
+    val tmp = tempDir("graft_hnsw_selfmx").toString
     val path = s"$tmp/idx"
     val p = Hnsw.Params(m = 8, efConstruction = 80, efSearch = 400, numShards = 2)
     Hnsw.write(emb.where(col("vec_id") < 550), path, p)
@@ -401,7 +401,7 @@ class HnswSpec extends SparkSpec {
   }
 
   test("delete hides ids with full k, compact purges, re-append revives") {
-    val path = java.nio.file.Files.createTempDirectory("graft_hnsw_del").toString + "/idx"
+    val path = tempDir("graft_hnsw_del").toString + "/idx"
     val p = Hnsw.Params(m = 8, efConstruction = 80, efSearch = 400, numShards = 2)
     Hnsw.write(emb, path, p)
     val exact = exactTopK(10)
@@ -432,7 +432,7 @@ class HnswSpec extends SparkSpec {
     assert(revived.toSeq == q77exact.take(10).toSeq,
       "post-revive view must equal the original exact view")
     // routed probe honors tombstones too
-    val rpath = java.nio.file.Files.createTempDirectory("graft_hnsw_delr").toString + "/idx"
+    val rpath = tempDir("graft_hnsw_delr").toString + "/idx"
     Hnsw.writeRouted(emb, rpath, p)
     Hnsw.delete(spark, rpath, Seq(77L))
     val rhits = Hnsw.probeRouted(spark, rpath, qs.where(col("query_id") === 77), 5, nProbe = 4)
@@ -444,7 +444,7 @@ class HnswSpec extends SparkSpec {
     // indirect but structural: a corpus of 600 with m=8 should produce a
     // multi-level graph whose stored max level is small (< 8) and whose
     // level-0 population dominates
-    val path = java.nio.file.Files.createTempDirectory("graft_hnsw_lvl").toString + "/idx"
+    val path = tempDir("graft_hnsw_lvl").toString + "/idx"
     Hnsw.write(emb, path, Hnsw.Params(numShards = 1))
     val levels = spark.read.parquet(s"$path/segments")
       .groupBy("level").count().collect()

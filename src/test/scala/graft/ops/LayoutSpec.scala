@@ -82,7 +82,7 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("writeZOrdered: round-trips with nFiles files, rows intact") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_zorder").toString
+    val dir = tempDir("graft_zorder").toString
     val pts = spark.range(512).select(
       col("id"),
       pmod(xxhash64(col("id")), lit(64)).as("x"),
@@ -105,7 +105,7 @@ class LayoutSpec extends SparkSpec {
       .map(f => (f.getName, f.length)).sortBy(_._1)
 
   test("compactSmallFiles: size peers merge; settled and lone-class bases hop untouched") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_tiered").toString
+    val dir = tempDir("graft_tiered").toString
     val path = s"$dir/t"
     // a SETTLED file (>= targetBytes) and a sub-target MERGED BASE in its
     // own size class — the two shapes a fold must never rewrite
@@ -146,7 +146,7 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("compactSmallFiles: refuses nested dirs, tombstone sidecars, and a missing dir") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_tiered_ref").toString
+    val dir = tempDir("graft_tiered_ref").toString
     val nested = s"$dir/nested"
     spark.range(3).withColumn("p", col("id") % 2)
       .write.partitionBy("p").parquet(nested)
@@ -169,7 +169,7 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("compactSmallFiles: heals a crash between live-aside and the final rename") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_tiered_heal").toString
+    val dir = tempDir("graft_tiered_heal").toString
     val path = s"$dir/t"
     spark.range(5000).select(sha2(col("id").cast("string"), 256).as("v"))
       .coalesce(1).write.mode("append").parquet(path)
@@ -210,7 +210,7 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("compactSmallFiles mergeSchema: straddling appends keep late columns") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_tiered_ms").toString
+    val dir = tempDir("graft_tiered_ms").toString
     val path = s"$dir/t"
     spark.range(5).toDF("id").coalesce(1).write.mode("append").parquet(path)
     spark.range(5, 10).selectExpr("id", "id * 2 AS epoch")
@@ -223,7 +223,7 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("dueSubdirs: the per-bucket signal fires only on the accumulating bucket") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_due").toString
+    val dir = tempDir("graft_due").toString
     val root = s"$dir/mem"
     def appendN(bucket: Int, n: Int): Unit =
       (0 until n).foreach { i =>
@@ -250,7 +250,7 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("ledgeredBatch: marker ledger survives a crash-left empty dir, replays no-op") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ledger").toString
+    val dir = tempDir("graft_ledger").toString
     val ledger = s"$dir/batches"
     // a crash during the old parquet ledger's FIRST write left an
     // existing-but-footerless dir that wedged every replay on schema
@@ -273,7 +273,7 @@ class LayoutSpec extends SparkSpec {
     // marker read (fs.exists) cannot see them, so without migration a
     // streaming replay would re-apply every previously applied batch —
     // duplicate segments, doc-id disjointness violated
-    val dir = java.nio.file.Files.createTempDirectory("graft_ledger_mig").toString
+    val dir = tempDir("graft_ledger_mig").toString
     val ledger = s"$dir/batches"
     Seq(7L, 9L).toDF("batch_id").coalesce(1).write.parquet(ledger)
     var applied = 0
@@ -291,7 +291,7 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("excludeTombstoned: int-typed sidecar ids exclude without ClassCastException") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_tomb_int").toString
+    val dir = tempDir("graft_tomb_int").toString
     val tomb = s"$dir/_tombstones"
     Seq(1, 3).toDF("id").write.parquet(tomb) // INT id column
     val df = spark.range(5).toDF("id")
@@ -301,7 +301,7 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("excludeTombstoned: a delete after a cached load is visible (cache invalidates)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_tomb_cache").toString
+    val dir = tempDir("graft_tomb_cache").toString
     val tomb = s"$dir/_tombstones"
     Seq(1L).toDF("id").write.mode("append").parquet(tomb)
     val df = spark.range(5).toDF("id")
@@ -317,7 +317,7 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("spendTombstoneFiles: deletes issued mid-compact survive the spend") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_tomb_spend").toString
+    val dir = tempDir("graft_tomb_spend").toString
     val tomb = s"$dir/_tombstones"
     Seq(1L).toDF("id").coalesce(1).write.mode("append").parquet(tomb)
     val fs = new org.apache.hadoop.fs.Path(tomb)
@@ -346,11 +346,11 @@ class LayoutSpec extends SparkSpec {
       maxSegments = 3, maxTombstones = 4, maxTombstoneFraction = 0.5,
       maxSmallFiles = 2, smallFileBytes = 1L << 20)
     // a bare dir: nothing due
-    val clean = Files.createTempDirectory("graft_mx_clean").toString
+    val clean = tempDir("graft_mx_clean").toString
     val s0 = Layout.maintenanceDue(spark, clean, policy)
     assert(!s0.anyDue && s0.segments == 1 && s0.tombstones == 0)
     // segments via _commits markers: due strictly PAST the max
-    val seg = Files.createTempDirectory("graft_mx_seg").toString
+    val seg = tempDir("graft_mx_seg").toString
     val fs = fsOf(seg)
     fs.mkdirs(new org.apache.hadoop.fs.Path(s"$seg/_commits"))
     (0 until 3).foreach(i =>
@@ -360,7 +360,7 @@ class LayoutSpec extends SparkSpec {
     val s1 = Layout.maintenanceDue(spark, seg, policy)
     assert(s1.mergeDue && s1.segments == 4, "past max: merge due")
     // the HNSW convention: segments/shard=N partition dirs
-    val hn = Files.createTempDirectory("graft_mx_hnsw").toString
+    val hn = tempDir("graft_mx_hnsw").toString
     (0 until 5).foreach(i =>
       fsOf(hn).mkdirs(new org.apache.hadoop.fs.Path(s"$hn/segments/shard=$i")))
     assert(Layout.maintenanceDue(spark, hn, policy).segments == 5)
@@ -368,7 +368,7 @@ class LayoutSpec extends SparkSpec {
     assert(Layout.maintenanceDue(spark, hn, policy,
       segmentCount = Some(2)).segments == 2)
     // tombstones: absolute budget, then the fraction law when totalIds known
-    val tb = Files.createTempDirectory("graft_mx_tomb").toString
+    val tb = tempDir("graft_mx_tomb").toString
     Seq(1L, 2L, 3L, 4L).toDF("doc_id").write.parquet(s"$tb/_tombstones")
     assert(!Layout.maintenanceDue(spark, tb, policy).compactDue, "at budget: not due")
     assert(Layout.maintenanceDue(spark, tb, policy,
@@ -376,7 +376,7 @@ class LayoutSpec extends SparkSpec {
     Seq(5L).toDF("doc_id").write.mode("append").parquet(s"$tb/_tombstones")
     assert(Layout.maintenanceDue(spark, tb, policy).compactDue, "past budget: due")
     // small files: sidecars/ledgers/staging don't count
-    val sf = Files.createTempDirectory("graft_mx_files").toString
+    val sf = tempDir("graft_mx_files").toString
     Seq(1L).toDF("x").repartition(2).write.parquet(s"$sf/data")
     assert(!Layout.maintenanceDue(spark, sf, policy).fileCompactDue)
     Seq(2L).toDF("x").write.parquet(s"$sf/data2")
@@ -390,8 +390,7 @@ class LayoutSpec extends SparkSpec {
     import graft.search.Bm25
     val docs = (1L to 40L).map(i => (i, s"token$i shared corpus words"))
       .toDF("doc_id", "text")
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_mx_loop").toString + "/idx"
+    val path = tempDir("graft_mx_loop").toString + "/idx"
     Bm25.writeIndex(docs.where(col("doc_id") <= 10), "doc_id", "text", path)
     (1 to 3).foreach { b =>
       Bm25.appendIndexBatch(spark,
@@ -426,7 +425,7 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("clearIndexSidecars: removes tombstones and batch ledger, tolerates absence") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_sidecar_clear").toString
+    val dir = tempDir("graft_sidecar_clear").toString
     Seq(1L).toDF("id").write.parquet(s"$dir/_tombstones")
     assert(Layout.ledgeredBatch(spark, s"$dir/batches", 0L) {})
     Layout.clearIndexSidecars(spark, dir)
@@ -443,7 +442,7 @@ class LayoutSpec extends SparkSpec {
     // `<dataPath>.__compact` — unswept, it would sit there forever and be
     // parsed as a partition value inside a partitioned read root
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft_legacy_stg").toString
+    val tmp = tempDir("graft_legacy_stg").toString
     val data = s"$tmp/codes"
     (1L to 40L).map(i => (i, s"row $i")).toDF("vec_id", "payload")
       .repartition(8).write.parquet(data)
@@ -481,7 +480,7 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("vacuum: heals committed crashed swaps, sweeps condemned/uncommitted siblings, never touches live data") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_vacuum").toString
+    val tmp = tempDir("graft_vacuum").toString
     val root = new org.apache.hadoop.fs.Path(s"$tmp/table")
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
     fs.mkdirs(root)
@@ -595,7 +594,7 @@ class LayoutSpec extends SparkSpec {
     assert(spark.conf.get("spark.sql.adaptive.enabled") == aqe)
     // planBytes: a parquet-backed frame reports a real (small) size; an
     // unresolvable estimate reports the safe huge default
-    val tmp2 = java.nio.file.Files.createTempDirectory("graft_wss").toString
+    val tmp2 = tempDir("graft_wss").toString
     spark.range(100).toDF("id").write.mode("overwrite").parquet(s"$tmp2/t")
     val pb = Layout.planBytes(spark.read.parquet(s"$tmp2/t"))
     assert(pb > 0 && pb < BigInt(advisory),

@@ -97,7 +97,7 @@ class PqSpec extends SparkSpec {
   }
 
   test("at rest: write/load round-trip is value-identical to the transient path") {
-    val path = java.nio.file.Files.createTempDirectory("graft_pq").toString + "/idx"
+    val path = tempDir("graft_pq").toString + "/idx"
     Pq.write(codes, model, path)
     val (loadedCodes, loadedModel) = Pq.load(spark, path)
     assert(loadedModel.dims == model.dims && loadedModel.m == model.m &&
@@ -190,7 +190,7 @@ class PqSpec extends SparkSpec {
   }
 
   test("lifecycle: append encodes through the FROZEN codebooks; delete hides; compact purges") {
-    val path = java.nio.file.Files.createTempDirectory("graft_pq_lc").toString + "/idx"
+    val path = tempDir("graft_pq_lc").toString + "/idx"
     val seed = emb.where(col("vec_id") < 300)
     val m = Pq.fitSampled(seed, dims = 64, m = 8, k = 8, maxIter = 10)
     Pq.write(Pq.encode(seed, m), m, path)
@@ -238,7 +238,7 @@ class PqSpec extends SparkSpec {
   test("streamingPqSink: micro-batches encode through the frozen codebooks exactly once") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlC = spark.sqlContext
-    val tmp = java.nio.file.Files.createTempDirectory("graft_pq_sink").toString
+    val tmp = tempDir("graft_pq_sink").toString
     val path = s"$tmp/idx"
     val seed = emb.where(col("vec_id") < 300)
     val m = Pq.fitSampled(seed, dims = 64, m = 8, k = 8, maxIter = 10)
@@ -273,7 +273,7 @@ class PqSpec extends SparkSpec {
     // fired it, so the relative-path target was untested).
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlC = spark.sqlContext
-    val tmp = java.nio.file.Files.createTempDirectory("graft_pq_fcx").toString
+    val tmp = tempDir("graft_pq_fcx").toString
     val path = s"$tmp/idx"
     val seed = emb.where(col("vec_id") < 300)
     val m = Pq.fitSampled(seed, dims = 64, m = 8, k = 8, maxIter = 10)
@@ -309,7 +309,7 @@ class PqSpec extends SparkSpec {
 
   test("appendCodesBatch: crash-window replay (codes written, marker missing) appends nothing") {
     // ledgeredBatch's residual window, PQ arm (the SqSpec twin)
-    val path = java.nio.file.Files.createTempDirectory("graft_pq_cw").toString + "/idx"
+    val path = tempDir("graft_pq_cw").toString + "/idx"
     val seed = emb.where(col("vec_id") < 300)
     val m = Pq.fitSampled(seed, dims = 64, m = 8, k = 8, maxIter = 10)
     Pq.write(Pq.encode(seed, m), m, path)

@@ -75,7 +75,7 @@ class SqSpec extends SparkSpec {
   }
 
   test("at rest: writeCodes/loadModel/sqProbe round-trip is value-identical") {
-    val path = java.nio.file.Files.createTempDirectory("graft_sq").toString + "/idx"
+    val path = tempDir("graft_sq").toString + "/idx"
     val written = Sq.writeCodes(emb, path)
     val loaded = Sq.loadModel(spark, path)
     assert(loaded.mins.toSeq == written.mins.toSeq &&
@@ -100,7 +100,7 @@ class SqSpec extends SparkSpec {
   }
 
   test("lifecycle: append encodes through the FROZEN bounds; delete hides; compact purges") {
-    val path = java.nio.file.Files.createTempDirectory("graft_sq_lc").toString + "/idx"
+    val path = tempDir("graft_sq_lc").toString + "/idx"
     val seed = emb.where(col("vec_id") < 300)
     val model = Sq.writeCodes(seed, path)
     Sq.appendCodes(spark, emb.where(col("vec_id") >= 300), path)
@@ -140,7 +140,7 @@ class SqSpec extends SparkSpec {
   test("streamingSqSink: micro-batches encode through the frozen bounds exactly once") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlC = spark.sqlContext
-    val tmp = java.nio.file.Files.createTempDirectory("graft_sq_sink").toString
+    val tmp = tempDir("graft_sq_sink").toString
     val path = s"$tmp/idx"
     val seed = emb.where(col("vec_id") < 300)
     val model = Sq.writeCodes(seed, path)
@@ -176,7 +176,7 @@ class SqSpec extends SparkSpec {
     // signal at maxSmallFiles = 100000; this one makes it FIRE.
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlC = spark.sqlContext
-    val tmp = java.nio.file.Files.createTempDirectory("graft_sq_fcx").toString
+    val tmp = tempDir("graft_sq_fcx").toString
     val path = s"$tmp/idx"
     val model = Sq.writeCodes(emb.where(col("vec_id") < 300), path)
     // every parquet file here is tiny, so smallFiles counts ALL data files
@@ -216,7 +216,7 @@ class SqSpec extends SparkSpec {
     // ledgeredBatch's residual window: the codes landed but the marker
     // didn't. The redelivered batch must fold to zero new rows
     // (freshBatchRows) while genuinely new ids in the same delivery land
-    val path = java.nio.file.Files.createTempDirectory("graft_sq_cw").toString + "/idx"
+    val path = tempDir("graft_sq_cw").toString + "/idx"
     Sq.writeCodes(emb.where(col("vec_id") < 200), path)
     Sq.appendCodes(spark, emb.where(col("vec_id") >= 200 && col("vec_id") < 300), path)
     assert(Sq.appendCodesBatch(spark, emb.where(col("vec_id") >= 200), path, 1L))
@@ -226,7 +226,7 @@ class SqSpec extends SparkSpec {
   }
 
   test("appendCodes refuses a batch drifted outside the frozen bounds") {
-    val path = java.nio.file.Files.createTempDirectory("graft_sq_oob").toString + "/idx"
+    val path = tempDir("graft_sq_oob").toString + "/idx"
     Sq.writeCodes(emb.where(col("vec_id") < 300), path)
     val drifted = emb.where(col("vec_id") >= 300)
       .withColumn("embedding",
@@ -242,7 +242,7 @@ class SqSpec extends SparkSpec {
   }
 
   test("writeCodes rebuild clears the previous life's tombstones and batch ledger") {
-    val path = java.nio.file.Files.createTempDirectory("graft_sq_rb").toString + "/idx"
+    val path = tempDir("graft_sq_rb").toString + "/idx"
     Sq.writeCodes(emb, path)
     Sq.deleteCodes(spark, path, Seq(5L))
     assert(Layout.ledgeredBatch(spark, s"$path/batches", 7L) {})

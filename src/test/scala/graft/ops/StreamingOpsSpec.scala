@@ -65,7 +65,7 @@ class StreamingOpsSpec extends SparkSpec {
 
   test("streamingDriftAlerts: closed shifted window alerts, stable window stays silent") {
     implicit val sqlC = spark.sqlContext
-    val tmp = Files.createTempDirectory("graft_drift_sink").toString
+    val tmp = tempDir("graft_drift_sink").toString
     // frozen reference: 8 low / 2 high (the deploy-time histogram)
     val ref = Seq((0L, 8L), (1L, 2L)).toDF("bin", "c")
     val mem = MemoryStream[(Timestamp, Double)]
@@ -229,7 +229,7 @@ class StreamingOpsSpec extends SparkSpec {
   }
 
   test("events file stream reads the fixture with normalized timestamps") {
-    val watch = Files.createTempDirectory("graft_events").toString
+    val watch = tempDir("graft_events").toString
     Files.copy(
       java.nio.file.Paths.get("/root/testdata/sf0.001/events.parquet"),
       java.nio.file.Paths.get(watch, "events.parquet"))
@@ -494,8 +494,8 @@ class StreamingOpsSpec extends SparkSpec {
 
   test("streaming index sink: micro-batches append; re-delivery converges") {
     implicit val sqlC = spark.sqlContext
-    val path = Files.createTempDirectory("graft_stream_idx").toString + "/idx"
-    val ckpt = Files.createTempDirectory("graft_stream_ckpt").toString
+    val path = tempDir("graft_stream_idx").toString + "/idx"
+    val ckpt = tempDir("graft_stream_ckpt").toString
     val base = Seq((100L,
       "SECTION BASE\n\nseed paragraph about spark shuffles and joins"))
       .toDF("doc_id", "text")
@@ -528,8 +528,8 @@ class StreamingOpsSpec extends SparkSpec {
 
   test("streaming RAG serving answers a question stream from the static index") {
     implicit val sqlC = spark.sqlContext
-    val out = Files.createTempDirectory("graft_rag_out").toString + "/answers"
-    val ckpt = Files.createTempDirectory("graft_rag_ckpt").toString
+    val out = tempDir("graft_rag_out").toString + "/answers"
+    val ckpt = tempDir("graft_rag_ckpt").toString
     val corpus = Seq(
       (1L, "SECTION SPARK\n\nspark shuffles data between stages when grouping"),
       (2L, "SECTION DUCKS\n\nducks swim in the pond every morning")
@@ -555,8 +555,8 @@ class StreamingOpsSpec extends SparkSpec {
 
   test("chat-log streaming sink appends parquet rows") {
     implicit val sqlC = spark.sqlContext
-    val out = Files.createTempDirectory("graft_chatlog").toString
-    val ckpt = Files.createTempDirectory("graft_ckpt").toString
+    val out = tempDir("graft_chatlog").toString
+    val ckpt = tempDir("graft_ckpt").toString
     val mem = MemoryStream[(String, String, String, Timestamp)]
     val rows = mem.toDF().toDF("user", "message", "response", "ts")
     val q = StreamingOps.chatLogSink(rows, out, ckpt).start()
@@ -581,7 +581,7 @@ class StreamingOpsSpec extends SparkSpec {
 
   test("chatLogSinkPartitioned: ledgered day-layout appends; retention rides the loop, horizon-bounded log") {
     implicit val sqlC = spark.sqlContext
-    val tmp = Files.createTempDirectory("graft_chatlogp").toString
+    val tmp = tempDir("graft_chatlogp").toString
     val (out, ckpt) = (s"$tmp/log", s"$tmp/ckpt")
     val mem = MemoryStream[(String, String, String, Long)]
     val rows = mem.toDF().toDF("user", "message", "response", "ts")
@@ -617,7 +617,7 @@ class StreamingOpsSpec extends SparkSpec {
 
   test("streamingCacheIntake: hits short-circuit, misses admitted, replayed micro-batch converges") {
     implicit val sqlC = spark.sqlContext
-    val tmp = Files.createTempDirectory("graft_sci").toString
+    val tmp = tempDir("graft_sci").toString
     val (cache, out) = (s"$tmp/cache", s"$tmp/out")
     val v1 = Array(1.0f, 0.0f); val v2 = Array(0.0f, 1.0f); val v3 = Array(0.6f, 0.8f)
     // no pre-seeding: batch 0 bootstraps the store
@@ -655,7 +655,7 @@ class StreamingOpsSpec extends SparkSpec {
 
   test("streamingCacheIntake cacheMaxEntries: the store stays capped, FIFO by minted id") {
     implicit val sqlC = spark.sqlContext
-    val tmp = Files.createTempDirectory("graft_sci_cap").toString
+    val tmp = tempDir("graft_sci_cap").toString
     val (cache, out) = (s"$tmp/cache", s"$tmp/out")
     val vs = (1 to 5).map(i =>
       Array(math.cos(i * 0.9).toFloat, math.sin(i * 0.9).toFloat))
@@ -679,7 +679,7 @@ class StreamingOpsSpec extends SparkSpec {
   test("streamingNearDupIntake: corpus dups dropped, survivors admitted, state carries") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlC = spark.sqlContext
-    val tmp = java.nio.file.Files.createTempDirectory("graft_ndi").toString
+    val tmp = tempDir("graft_ndi").toString
     val store = s"$tmp/store"
     Dedup.writeMinhash(
       Seq((100L, "alpha beta gamma delta epsilon"),
@@ -720,7 +720,7 @@ class StreamingOpsSpec extends SparkSpec {
     // makes compact due), and the freed identity must be re-admittable
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlC = spark.sqlContext
-    val tmp = java.nio.file.Files.createTempDirectory("graft_ndi_mx").toString
+    val tmp = tempDir("graft_ndi_mx").toString
     val store = s"$tmp/store"
     Dedup.writeMinhash(
       Seq((100L, "alpha beta gamma delta epsilon"),

@@ -112,7 +112,7 @@ class SwapCrashSpec extends SparkSpec {
   for (s <- stores; (signature, stageOf) <- stages)
     test(s"${s.op} heals a crash between the swap renames ($signature)") {
       import java.nio.file.{Files, Paths}
-      val dir = Files.createTempDirectory("graft_swap_crash").toString
+      val dir = tempDir("graft_swap_crash").toString
       val (path, ref) = (s"$dir/store", s"$dir/ref")
       s.build(path)
       org.apache.commons.io.FileUtils.copyDirectory(

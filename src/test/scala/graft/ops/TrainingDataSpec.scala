@@ -291,7 +291,7 @@ class TrainingDataSpec extends SparkSpec {
   }
 
   test("writeShards/loadShards: layout round-trips, one shard reads pruned") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_shards").toString
+    val tmp = tempDir("graft_shards").toString
     val sharded = TrainingData.shardAssign(corpus(200), nShards = 4)
     TrainingData.writeShards(sharded, tmp, capacity = 64L, nShards = 4)
     val (docs, manifest) = TrainingData.loadShards(spark, tmp)

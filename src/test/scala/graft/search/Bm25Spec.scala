@@ -133,8 +133,7 @@ class Bm25Spec extends SparkSpec {
   }
 
   test("at rest: write/load round-trip is value-invisible") {
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_bm25_rt").toString + "/idx"
+    val path = tempDir("graft_bm25_rt").toString + "/idx"
     val mem = Bm25.buildIndex(corpus, "doc_id", "text")
     val disk = Bm25.writeIndex(corpus, "doc_id", "text", path, termBuckets = 4)
     assert(disk.nDocs == mem.nDocs)
@@ -157,8 +156,7 @@ class Bm25Spec extends SparkSpec {
   }
 
   test("at rest: append merges stats/df exactly and is doc-idempotent") {
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_bm25_app").toString + "/idx"
+    val path = tempDir("graft_bm25_app").toString + "/idx"
     Bm25.writeIndex(corpus, "doc_id", "text", path, termBuckets = 4)
     val delta = Seq(
       (2L, "overlapping doc must be ignored"),
@@ -184,8 +182,7 @@ class Bm25Spec extends SparkSpec {
   }
 
   test("delete hides docs (stale stats — Lucene law); compact equals from-scratch") {
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_bm25_del").toString + "/idx"
+    val path = tempDir("graft_bm25_del").toString + "/idx"
     Bm25.writeIndex(corpus, "doc_id", "text", path, termBuckets = 4)
     Bm25.deleteDocs(spark, path, Seq(1L, 2L))
     val marked = Bm25.loadIndex(spark, path)
@@ -232,8 +229,7 @@ class Bm25Spec extends SparkSpec {
   }
 
   test("phraseMatchesIndexed: index-served df is value-identical to the scan path") {
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_bm25_ph").toString + "/idx"
+    val path = tempDir("graft_bm25_ph").toString + "/idx"
     Bm25.writeIndex(corpus, "doc_id", "text", path, termBuckets = 4)
     val idx = Bm25.loadIndex(spark, path)
     // mixed batch: a phrase whose rarest term is unambiguous, one where
@@ -250,8 +246,7 @@ class Bm25Spec extends SparkSpec {
   }
 
   test("segment commit law: an uncommitted append is invisible and replays cleanly") {
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_bm25_seg").toString + "/idx"
+    val path = tempDir("graft_bm25_seg").toString + "/idx"
     Bm25.writeIndex(corpus, "doc_id", "text", path, termBuckets = 4)
     val delta = Seq((4L, "fig grape"), (5L, "grape melon")).toDF("doc_id", "text")
     assert(Bm25.appendIndex(spark, delta, path, "doc_id", "text") == 2L)
@@ -287,8 +282,7 @@ class Bm25Spec extends SparkSpec {
   }
 
   test("appendIndexBatch is idempotent per batch id (streaming ledger law)") {
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_bm25_ab").toString + "/idx"
+    val path = tempDir("graft_bm25_ab").toString + "/idx"
     Bm25.writeIndex(corpus, "doc_id", "text", path, termBuckets = 4)
     val delta = Seq((4L, "fig grape"), (5L, "grape melon")).toDF("doc_id", "text")
     assert(Bm25.appendIndexBatch(spark, delta, path, 1L, "doc_id", "text"))
@@ -300,8 +294,7 @@ class Bm25Spec extends SparkSpec {
   }
 
   test("writeIndex rebuild clears the previous life's tombstones and batch ledger") {
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_bm25_rb").toString + "/idx"
+    val path = tempDir("graft_bm25_rb").toString + "/idx"
     Bm25.writeIndex(corpus, "doc_id", "text", path, termBuckets = 4)
     Bm25.deleteDocs(spark, path, Seq(0L))
     val delta = Seq((4L, "fig grape")).toDF("doc_id", "text")
@@ -322,8 +315,7 @@ class Bm25Spec extends SparkSpec {
   }
 
   test("mergeSegments: tiered merge is value-invisible, flips commits atomically") {
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_bm25_mrg").toString + "/idx"
+    val path = tempDir("graft_bm25_mrg").toString + "/idx"
     Bm25.writeIndex(corpus, "doc_id", "text", path, termBuckets = 4)
     Bm25.appendIndex(spark, Seq((4L, "fig grape")).toDF("doc_id", "text"),
       path, "doc_id", "text")
@@ -364,8 +356,7 @@ class Bm25Spec extends SparkSpec {
     assert(!hits.contains(5L), "tombstone must exclude through a merged segment")
     // and a later FULL compact (spends tombstones) equals from-scratch
     Bm25.compactIndex(spark, path)
-    val fresh = java.nio.file.Files
-      .createTempDirectory("graft_bm25_mrg_f").toString + "/idx"
+    val fresh = tempDir("graft_bm25_mrg_f").toString + "/idx"
     Bm25.writeIndex(Seq(
       (0L, "apple banana apple"), (1L, "banana cherry"),
       (2L, "cherry cherry cherry durian"),
@@ -385,7 +376,7 @@ class Bm25Spec extends SparkSpec {
     // the b6/ep4 staleness gap round 6 flagged, closed end to end: after
     // Bm25.deleteDocs + Hnsw.delete, neither channel may resurrect the
     // doc through the fused rank list
-    val root = java.nio.file.Files.createTempDirectory("graft_hyb_del").toString
+    val root = tempDir("graft_hyb_del").toString
     Bm25.writeIndex(corpus, "doc_id", "text", s"$root/bm25", termBuckets = 4)
     val emb = corpus.select(col("doc_id").as("vec_id"),
       transform(sequence(lit(0), lit(7)),
@@ -413,7 +404,7 @@ class Bm25Spec extends SparkSpec {
   test("streamingBm25Sink: micro-batches append exactly once") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlC = spark.sqlContext
-    val tmp = java.nio.file.Files.createTempDirectory("graft_bm25_sink").toString
+    val tmp = tempDir("graft_bm25_sink").toString
     val path = s"$tmp/idx"
     Bm25.writeIndex(corpus, "doc_id", "text", path, termBuckets = 4)
     val mem = MemoryStream[(Long, String)]
@@ -437,7 +428,7 @@ class Bm25Spec extends SparkSpec {
   test("streamingBm25Sink with a maintenance policy merges itself under segment growth") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlC = spark.sqlContext
-    val tmp = java.nio.file.Files.createTempDirectory("graft_bm25_selfmx").toString
+    val tmp = tempDir("graft_bm25_selfmx").toString
     val path = s"$tmp/idx"
     Bm25.writeIndex(corpus, "doc_id", "text", path, termBuckets = 4)
     val policy = graft.ops.Layout.MaintenancePolicy(
@@ -469,8 +460,7 @@ class Bm25Spec extends SparkSpec {
   }
 
   test("at rest: probe restricted to query terms prunes bucket partitions") {
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_bm25_prune").toString + "/idx"
+    val path = tempDir("graft_bm25_prune").toString + "/idx"
     Bm25.writeIndex(corpus, "doc_id", "text", path, termBuckets = 8)
     val idx = Bm25.loadIndex(spark, path)
     val qs = Seq((0L, "apple cherry")).toDF("query_id", "query_text")
@@ -613,7 +603,7 @@ class Bm25Spec extends SparkSpec {
       (4L, "gamma title", "unrelated body prose entirely")
     ).toDF("doc_id", "title", "body")
     val specs = Seq(("title", 2.5, 0.6), ("body", 1.0, 0.75))
-    val tmp = java.nio.file.Files.createTempDirectory("graft_bm25f_ar").toString
+    val tmp = tempDir("graft_bm25f_ar").toString
     Bm25.writeIndex(docs, "doc_id", "title", s"$tmp/title")
     Bm25.writeIndex(docs, "doc_id", "body", s"$tmp/body")
     val qs = Seq((0L, "alpha body")).toDF("query_id", "query_text")
@@ -646,7 +636,7 @@ class Bm25Spec extends SparkSpec {
       (2L, "alpha topic", "body about something else entirely"),
       (3L, "other title", "alpha discussed in the body as well")
     ).toDF("doc_id", "title", "body")
-    val tmp = java.nio.file.Files.createTempDirectory("graft_bm25f_xdel").toString
+    val tmp = tempDir("graft_bm25f_xdel").toString
     Bm25.writeIndex(docs, "doc_id", "title", s"$tmp/title")
     Bm25.writeIndex(docs, "doc_id", "body", s"$tmp/body")
     val qs = Seq((0L, "alpha body")).toDF("query_id", "query_text")
@@ -672,7 +662,7 @@ class Bm25Spec extends SparkSpec {
     val a = Seq((1L, "alpha", "beta")).toDF("doc_id", "title", "body")
     val b = Seq((1L, "alpha", "beta"), (2L, "gamma", "delta"))
       .toDF("doc_id", "title", "body")
-    val tmp = java.nio.file.Files.createTempDirectory("graft_bm25f_ref").toString
+    val tmp = tempDir("graft_bm25f_ref").toString
     Bm25.writeIndex(a, "doc_id", "title", s"$tmp/title")
     Bm25.writeIndex(b, "doc_id", "body", s"$tmp/body")
     val qs = Seq((0L, "alpha")).toDF("query_id", "query_text")

@@ -90,7 +90,7 @@ class ServingSpec extends SparkSpec {
   }
 
   test("chat-log batch sink appends across writes") {
-    val out = java.nio.file.Files.createTempDirectory("chatlog_batch").toString
+    val out = tempDir("chatlog_batch").toString
     val r1 = ChatLog.record(
       Seq(("u1", "hi")).toDF("u", "m"), col("u"), col("m"), lit("ok"),
       lit("2024-02-01 00:00:00"))
@@ -190,8 +190,7 @@ class ServingSpec extends SparkSpec {
   test("cache intake: misses inserted, replay converges, next batch hits admissions") {
     import org.apache.spark.sql.functions.col
     val v1 = Array(1.0f, 0.0f); val v2 = Array(0.0f, 1.0f); val v3 = Array(0.6f, 0.8f)
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft_ci").toString + "/cache"
+    val tmp = tempDir("graft_ci").toString + "/cache"
     Seq((7L, v1)).toDF("cache_id", "embedding").write.parquet(tmp)
     val b1 = Seq((100L, v1), (101L, v2)).toDF("query_id", "query_vec")
     val d1 = SemanticCache.intakeBatch(spark, b1, tmp, minCos = 0.95)
@@ -219,8 +218,7 @@ class ServingSpec extends SparkSpec {
   test("cache intake: a batch of identical questions inserts ONE entry, losers hit the winner") {
     import org.apache.spark.sql.functions.col
     val v1 = Array(1.0f, 0.0f); val v2 = Array(0.0f, 1.0f)
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft_ci_wb").toString + "/cache"
+    val tmp = tempDir("graft_ci_wb").toString + "/cache"
     Seq((7L, v2)).toDF("cache_id", "embedding").write.parquet(tmp)
     // three copies of the same novel question + one distinct novel one
     val b1 = Seq((100L, v1), (101L, v1), (102L, v1), (103L, Array(0.8f, -0.6f)))
@@ -250,8 +248,7 @@ class ServingSpec extends SparkSpec {
     val deg = math.toRadians(14.0) // cos 14deg ~ .970 >= .95; cos 28deg ~ .883 < .95
     val b = Array(math.cos(deg).toFloat, math.sin(deg).toFloat)
     val c = Array(math.cos(2 * deg).toFloat, math.sin(2 * deg).toFloat)
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft_ci_chain").toString + "/cache"
+    val tmp = tempDir("graft_ci_chain").toString + "/cache"
     val batch = Seq((1L, a), (2L, b), (3L, c)).toDF("query_id", "query_vec")
     val d = SemanticCache.intakeBatch(spark, batch, tmp, minCos = 0.95)
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getBoolean(3))).toMap
@@ -262,8 +259,7 @@ class ServingSpec extends SparkSpec {
   }
 
   test("cache intake: bootstraps an absent store path (no pre-seeding required)") {
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft_ci_boot").toString + "/cache"
+    val tmp = tempDir("graft_ci_boot").toString + "/cache"
     val b1 = Seq((1L, Array(1.0f, 0.0f))).toDF("query_id", "query_vec")
     val d1 = SemanticCache.intakeBatch(spark, b1, tmp, minCos = 0.95)
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getBoolean(3))).toMap
@@ -273,8 +269,7 @@ class ServingSpec extends SparkSpec {
 
   test("cache intake: id collision with a DIFFERENT embedding fails loudly, replays don't") {
     val v1 = Array(1.0f, 0.0f); val v2 = Array(0.0f, 1.0f)
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft_ci_clash").toString + "/cache"
+    val tmp = tempDir("graft_ci_clash").toString + "/cache"
     // seed an entry squatting on the id batch query 500 would mint
     Seq((1000500L, v1)).toDF("cache_id", "embedding").write.parquet(tmp)
     // replay-shaped reuse (same embedding) is legal and converges
@@ -293,8 +288,7 @@ class ServingSpec extends SparkSpec {
     import org.apache.spark.sql.functions.col
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     def freshCache(): String = {
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_ci_route").toString + "/cache"
+      val tmp = tempDir("graft_ci_route").toString + "/cache"
       emb.where(col("vec_id") % 7 === 0)
         .select(col("vec_id").as("cache_id"), col("embedding")).write.parquet(tmp)
       tmp
@@ -314,7 +308,7 @@ class ServingSpec extends SparkSpec {
   test("streamingCachedRag: hits served from store, misses answered + admitted, redelivery converges") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlC = spark.sqlContext
-    val tmp = java.nio.file.Files.createTempDirectory("graft_scrag").toString
+    val tmp = tempDir("graft_scrag").toString
     val (cache, out) = (s"$tmp/cache", s"$tmp/out")
     val v1 = Array(1.0f, 0.0f); val v2 = Array(0.0f, 1.0f)
     Seq((7L, v1, "stored answer one")).toDF("cache_id", "embedding", "answer")
@@ -356,8 +350,7 @@ class ServingSpec extends SparkSpec {
 
   test("cache eviction: FIFO by minted id, at-cap no-op, evicted question re-admits") {
     import org.apache.spark.sql.functions.col
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft_ci_evict").toString + "/cache"
+    val tmp = tempDir("graft_ci_evict").toString + "/cache"
     val vecs = (1L to 6L).map(i =>
       (i, Array(math.cos(i * 0.7).toFloat, math.sin(i * 0.7).toFloat), s"ans $i"))
     vecs.toDF("cache_id", "embedding", "answer").write.parquet(tmp)
@@ -379,8 +372,7 @@ class ServingSpec extends SparkSpec {
   }
 
   test("cache delete: takedown removes entries physically, refuses to empty, no-ops on unknown ids") {
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft_ci_del").toString + "/cache"
+    val tmp = tempDir("graft_ci_del").toString + "/cache"
     Seq((1L, Array(1.0f, 0.0f), "a"), (2L, Array(0.0f, 1.0f), "b"))
       .toDF("cache_id", "embedding", "answer").write.parquet(tmp)
     assert(SemanticCache.deleteCacheEntries(spark, tmp, Seq(2L, 99L)) == ((2L, 1L)))
@@ -396,8 +388,7 @@ class ServingSpec extends SparkSpec {
   }
 
   test("invalidateCacheBefore: stale-mint sweep, boundary survives, no-op never rewrites, heals on re-ask") {
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft_ci_inval").toString + "/cache"
+    val tmp = tempDir("graft_ci_inval").toString + "/cache"
     Seq(
       (100L, Array(1.0f, 0.0f), "old a"),
       (200L, Array(0.0f, 1.0f), "old b"),
@@ -442,8 +433,7 @@ class ServingSpec extends SparkSpec {
         concat(lit("computed: "), col("question")).as("answer"),
         lit(0.5).as("cost"))
     def run(maxExact: Long): Map[Long, (String, Boolean, Long, Double)] = {
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_crag_route").toString + "/cache"
+      val tmp = tempDir("graft_crag_route").toString + "/cache"
       emb.where(col("vec_id") % 7 === 0)
         .select(col("vec_id").as("cache_id"), col("embedding"),
           concat(lit("seed "), col("vec_id")).as("answer")).write.parquet(tmp)
@@ -479,8 +469,7 @@ class ServingSpec extends SparkSpec {
   }
 
   test("cache eviction boundary: cap 1 keeps exactly the newest entry") {
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft_ci_evict1").toString + "/cache"
+    val tmp = tempDir("graft_ci_evict1").toString + "/cache"
     (1L to 5L).map(i => (i, Array(i.toFloat, 1.0f), s"ans $i"))
       .toDF("cache_id", "embedding", "answer").write.parquet(tmp)
     assert(SemanticCache.evictCache(spark, tmp, maxEntries = 1) == ((5L, 1L)))
@@ -491,7 +480,7 @@ class ServingSpec extends SparkSpec {
 
   test("LRU eviction: a hit refreshes, an unhit entry ages out, absent history degrades to FIFO") {
     import org.apache.spark.sql.functions.col
-    val tmp = java.nio.file.Files.createTempDirectory("graft_ci_lru").toString
+    val tmp = tempDir("graft_ci_lru").toString
     val cache = s"$tmp/cache"
     val disp = s"$tmp/disp"
     def seed(): Unit = {
@@ -540,7 +529,7 @@ class ServingSpec extends SparkSpec {
 
   test("chatTurn: memory composes — prompts grow, a re-ask hits at cost 0, appends land") {
     import org.apache.spark.sql.functions.col
-    val tmp = java.nio.file.Files.createTempDirectory("graft_chat").toString
+    val tmp = tempDir("graft_chat").toString
     val (cache, mem) = (s"$tmp/cache", s"$tmp/mem")
     val v1 = Array(1.0f, 0.0f)
     val answerMisses: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame =
@@ -578,7 +567,7 @@ class ServingSpec extends SparkSpec {
     // the dir itself may be PRUNED — recency lives on. Without the
     // sidecar the second eviction below would see no history at all and
     // FIFO would keep the wrong entry.
-    val tmp = java.nio.file.Files.createTempDirectory("graft_ci_lruinc").toString
+    val tmp = tempDir("graft_ci_lruinc").toString
     val (cache, disp) = (s"$tmp/cache", s"$tmp/disp")
     (1L to 3L).map(i => (i, Array(i.toFloat, 1.0f), s"ans $i"))
       .toDF("cache_id", "embedding", "answer").write.parquet(cache)
@@ -604,7 +593,7 @@ class ServingSpec extends SparkSpec {
 
   test("pruneDispositions: folded dirs retire, LRU/report unchanged, below-horizon reads refuse") {
     import org.apache.spark.sql.functions.col
-    val root = java.nio.file.Files.createTempDirectory("graft_prune").toString
+    val root = tempDir("graft_prune").toString
     val disp = s"$root/disp"
     (1 to 4).foreach { b =>
       Seq((100L + b, b % 2 == 0, 0.25))
@@ -650,7 +639,7 @@ class ServingSpec extends SparkSpec {
     // but no state — trusting the water mark then would age every
     // previously-folded entry to -1 (inverting LRU for the hot set);
     // the fold must instead refold every dir still on disk
-    val disp = java.nio.file.Files.createTempDirectory("graft_foldrec").toString + "/disp"
+    val disp = tempDir("graft_foldrec").toString + "/disp"
     Seq((5L, true, 2L)).toDF("cache_id", "hit", "batch")
       .write.partitionBy("batch").parquet(disp)
     def fold() = SemanticCache.foldRecency(spark, disp)
@@ -667,7 +656,7 @@ class ServingSpec extends SparkSpec {
   }
 
   test("chatTurn refuses two questions for one session in a single turn") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_chat_2q").toString
+    val tmp = tempDir("graft_chat_2q").toString
     val answerMisses: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame =
       missQ => missQ.select(col("query_id"), col("question"),
         col("question").as("answer"), lit(0.5).as("cost"))
@@ -684,7 +673,7 @@ class ServingSpec extends SparkSpec {
 
   test("chatTurn memoryWindow: the prompt is bounded by the c9 law, the log and turn numbers are not") {
     import org.apache.spark.sql.functions.col
-    val tmp = java.nio.file.Files.createTempDirectory("graft_chat_win").toString
+    val tmp = tempDir("graft_chat_win").toString
     val (cache, mem) = (s"$tmp/cache", s"$tmp/mem")
     val v1 = Array(1.0f, 0.0f)
     val answerMisses: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame =
@@ -712,7 +701,7 @@ class ServingSpec extends SparkSpec {
     // turns converge to a bounded file count per bucket dir, and neither
     // the log nor the dispositions change.
     import org.apache.spark.sql.functions.col
-    val tmp = java.nio.file.Files.createTempDirectory("graft_chat_maint").toString
+    val tmp = tempDir("graft_chat_maint").toString
     val (cache, mem) = (s"$tmp/cache", s"$tmp/mem")
     val answerMisses: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame =
       missQ => missQ.select(col("query_id"), col("question"),
@@ -755,7 +744,7 @@ class ServingSpec extends SparkSpec {
 
   test("chat memory bucketing: reads touch only the arriving sessions' bucket dirs") {
     import org.apache.spark.sql.functions.col
-    val tmp = java.nio.file.Files.createTempDirectory("graft_chat_bkt").toString
+    val tmp = tempDir("graft_chat_bkt").toString
     val (cache, mem) = (s"$tmp/cache", s"$tmp/mem")
     val answerMisses: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame =
       missQ => missQ.select(col("query_id"), col("question"),
@@ -791,7 +780,7 @@ class ServingSpec extends SparkSpec {
 
   test("chat memory fan-out is a table constant: a mismatched memoryBuckets param cannot lose history") {
     import org.apache.spark.sql.functions.col
-    val tmp = java.nio.file.Files.createTempDirectory("graft_chat_nb").toString
+    val tmp = tempDir("graft_chat_nb").toString
     val (cache, mem) = (s"$tmp/cache", s"$tmp/mem")
     val answerMisses: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame =
       missQ => missQ.select(col("query_id"), col("question"),
@@ -813,7 +802,7 @@ class ServingSpec extends SparkSpec {
 
   test("chat memory legacy layout: a flat pre-bucketing table keeps working") {
     import org.apache.spark.sql.functions.col
-    val tmp = java.nio.file.Files.createTempDirectory("graft_chat_legacy").toString
+    val tmp = tempDir("graft_chat_legacy").toString
     val (cache, mem) = (s"$tmp/cache", s"$tmp/mem")
     // a table written by the PRE-layout code: flat files at the root
     Seq(("s1", 0L, "user", "old q"), ("s1", 1L, "assistant", "old a"))
@@ -846,7 +835,7 @@ class ServingSpec extends SparkSpec {
 
   test("deleteSessions: only the victim's rows go; untouched buckets keep their files; return is brand-new") {
     import org.apache.spark.sql.functions.col
-    val tmp = java.nio.file.Files.createTempDirectory("graft_chat_del").toString
+    val tmp = tempDir("graft_chat_del").toString
     val (cache, mem) = (s"$tmp/cache", s"$tmp/mem")
     // three sessions: victim + a BUCKET-MATE (same dir — the rewrite must
     // keep it) + one in a different dir (must stay byte-untouched)
@@ -900,7 +889,7 @@ class ServingSpec extends SparkSpec {
 
   test("deleteSessions: a markerless bucketed table gets the full sweep — never a part-miss") {
     import org.apache.spark.sql.functions.col
-    val tmp = java.nio.file.Files.createTempDirectory("graft_chat_delnm").toString
+    val tmp = tempDir("graft_chat_delnm").toString
     val mem = s"$tmp/mem"
     // written directly with partitionBy under an 8-way fan-out and NO
     // _nbuckets marker: targeting via any trusted parameter could hash
@@ -929,7 +918,7 @@ class ServingSpec extends SparkSpec {
 
   test("deletion is null-safe: null-keyed rows survive deleteSessions and deleteUsers") {
     import org.apache.spark.sql.functions.col
-    val tmp = java.nio.file.Files.createTempDirectory("graft_null_del").toString
+    val tmp = tempDir("graft_null_del").toString
     // memory table with a null-session row sharing the victim's bucket
     // set (the full sweep visits every dir): `!isin` alone is NULL for a
     // null key — the row would silently vanish and inflate the count
@@ -956,7 +945,7 @@ class ServingSpec extends SparkSpec {
 
   test("rebucketMemoryTable: widen fan-out — replay identical, one marker, ledger preserved, turns continue") {
     import org.apache.spark.sql.functions.col
-    val tmp = java.nio.file.Files.createTempDirectory("graft_chat_rb").toString
+    val tmp = tempDir("graft_chat_rb").toString
     val (cache, mem) = (s"$tmp/cache", s"$tmp/mem")
     def ask(sid: String, qid: Long, buckets: Int) = ChatRag.chatTurn(spark,
       Seq((sid, qid, s"q $sid $qid",
@@ -998,7 +987,7 @@ class ServingSpec extends SparkSpec {
 
   test("rebucketMemoryTable: migrates a legacy flat table (the from-nothing special case)") {
     import org.apache.spark.sql.functions.col
-    val tmp = java.nio.file.Files.createTempDirectory("graft_chat_mig").toString
+    val tmp = tempDir("graft_chat_mig").toString
     val (cache, mem) = (s"$tmp/cache", s"$tmp/mem")
     Seq(("s1", 0L, "user", "old q"), ("s1", 1L, "assistant", "old a"),
       ("s2", 0L, "user", "other q"), ("s2", 1L, "assistant", "other a"))
@@ -1032,7 +1021,7 @@ class ServingSpec extends SparkSpec {
 
   test("pruneIdleSessions: newest-turn horizon; live sessions keep old rows; untimed sessions kept") {
     import org.apache.spark.sql.functions.col
-    val tmp = java.nio.file.Files.createTempDirectory("graft_chat_idle").toString
+    val tmp = tempDir("graft_chat_idle").toString
     val (cache, mem) = (s"$tmp/cache", s"$tmp/mem")
     def ask(sid: String, qid: Long, ts: Option[Long]) = ChatRag.chatTurn(spark,
       Seq((sid, qid, s"q $sid $qid",
@@ -1066,7 +1055,7 @@ class ServingSpec extends SparkSpec {
 
   test("ChatLog.deleteUsers: filter-rewrite with sidecars preserved; streaming-sink dirs refuse") {
     import org.apache.spark.sql.functions.col
-    val tmp = java.nio.file.Files.createTempDirectory("graft_log_del").toString
+    val tmp = tempDir("graft_log_del").toString
     val log = s"$tmp/log"
     ChatLog.append(Seq(("alice", "hi", "hello", 1L), ("bob", "yo", "hey", 2L))
       .toDF("user", "message", "response", "ts"), log)
@@ -1105,7 +1094,7 @@ class ServingSpec extends SparkSpec {
 
   test("ChatLog.pruneBefore: ts horizon retires old records; null ts conservatively kept") {
     import org.apache.spark.sql.functions.col
-    val tmp = java.nio.file.Files.createTempDirectory("graft_log_ret").toString
+    val tmp = tempDir("graft_log_ret").toString
     val log = s"$tmp/log"
     ChatLog.append(Seq(("a", "old", "r1", Some(100L)), ("b", "new", "r2", Some(900L)),
       ("c", "untimed", "r3", None))
@@ -1126,7 +1115,7 @@ class ServingSpec extends SparkSpec {
 
   test("recency sidecar: tracked from birth, gates idle-retention scans, scan-equivalent, rebuilt on rewrite") {
     import org.apache.spark.sql.functions.col
-    val tmp = java.nio.file.Files.createTempDirectory("graft_recency").toString
+    val tmp = tempDir("graft_recency").toString
     val (cache, mem) = (s"$tmp/cache", s"$tmp/mem")
     def ask(sid: String, qid: Long, ts: Option[Long]) = ChatRag.chatTurn(spark,
       Seq((sid, qid, s"q $sid $qid",
@@ -1222,7 +1211,7 @@ class ServingSpec extends SparkSpec {
     // triggers a scan and refresh never runs — without the appendDelta
     // fold, one log file accumulates per turn FOREVER and both the gate
     // and the append degrade back to O(total turns)
-    val tmp = java.nio.file.Files.createTempDirectory("graft_recfold").toString
+    val tmp = tempDir("graft_recfold").toString
     val bucket = new org.apache.hadoop.fs.Path(s"$tmp/sbucket=0")
     val fs = bucket.getFileSystem(spark.sessionState.newHadoopConf())
     fs.mkdirs(bucket)
@@ -1251,7 +1240,7 @@ class ServingSpec extends SparkSpec {
   test("ChatLog day assignment floors negative ts — pruneBefore can retire pre-epoch rows") {
     // SQL div truncates toward zero: a negative ts would land in day 0,
     // ABOVE pruneBefore's floorDiv horizon, surviving every prune
-    val tmp = java.nio.file.Files.createTempDirectory("graft_negday").toString
+    val tmp = tempDir("graft_negday").toString
     val log = s"$tmp/log"
     val rows = Seq(("u1", "old", "r", -100L), ("u2", "new", "r", 2500L))
       .toDF("user", "message", "response", "ts")
@@ -1285,7 +1274,7 @@ class ServingSpec extends SparkSpec {
 
   test("memoryReport: table stats + markers in one row; empty and legacy tables report, never refuse") {
     import org.apache.spark.sql.functions.col
-    val tmp = java.nio.file.Files.createTempDirectory("graft_memrep").toString
+    val tmp = tempDir("graft_memrep").toString
     // a nonexistent table reports zeros/nulls — the report is how an
     // operator ASKS what exists
     val r0 = ChatRag.memoryReport(spark, s"$tmp/nope").head()
@@ -1319,7 +1308,7 @@ class ServingSpec extends SparkSpec {
 
   test("ChatLog day layout: pruneBefore drops whole partitions metadata-only, rewrites only the boundary day") {
     import org.apache.spark.sql.functions.col
-    val tmp = java.nio.file.Files.createTempDirectory("graft_log_day").toString
+    val tmp = tempDir("graft_log_day").toString
     val log = s"$tmp/log"
     // width 100 (a logical-clock "day"): ts 10/50 → day 0, 110 → day 1,
     // 250 → day 2, None → the null partition
@@ -1378,7 +1367,7 @@ class ServingSpec extends SparkSpec {
 
   test("ChatLog.repartitionByDay: migrates a legacy flat log; retention then drops partitions") {
     import org.apache.spark.sql.functions.col
-    val tmp = java.nio.file.Files.createTempDirectory("graft_log_mig").toString
+    val tmp = tempDir("graft_log_mig").toString
     val log = s"$tmp/log"
     // the legacy flat shape (pre-layout writer)
     Seq(("a", "old", "r", 10L), ("b", "mid", "r", 150L), ("c", "new", "r", 290L))
@@ -1413,7 +1402,7 @@ class ServingSpec extends SparkSpec {
 
   test("ChatLog.compactSmallDayFiles: the hot day folds, cold days settle, values invariant") {
     import org.apache.spark.sql.functions.col
-    val tmp = java.nio.file.Files.createTempDirectory("graft_logfold").toString
+    val tmp = tempDir("graft_logfold").toString
     val log = s"$tmp/log"
     // 20 appends into the same hot day (+ one cold day) = 21 tiny files
     (1 to 20).foreach { i =>
@@ -1448,7 +1437,7 @@ class ServingSpec extends SparkSpec {
 
   test("ChatLog.report: log stats + layout metadata; legacy and empty logs report, never refuse") {
     import org.apache.spark.sql.functions.col
-    val tmp = java.nio.file.Files.createTempDirectory("graft_logrep").toString
+    val tmp = tempDir("graft_logrep").toString
     // nonexistent: zeros/nulls
     val r0 = ChatLog.report(spark, s"$tmp/nope").head()
     assert(r0.getLong(0) == 0L && r0.isNullAt(8) && r0.getLong(10) == 0L)
@@ -1478,7 +1467,7 @@ class ServingSpec extends SparkSpec {
 
   test("crashed retire/swap leftovers: the next lifecycle op heals or sweeps them (ADVICE r14)") {
     import org.apache.spark.sql.functions.col
-    val tmp = java.nio.file.Files.createTempDirectory("graft_crash").toString
+    val tmp = tempDir("graft_crash").toString
     val mem = s"$tmp/mem"
     Seq(("s1", 0L, "user", "keep"), ("s2", 0L, "user", "forget"))
       .toDF("session_id", "turn", "role", "content")
@@ -1580,7 +1569,7 @@ class ServingSpec extends SparkSpec {
 
   test("pruneIdleSessions: mixed stamping keeps the session (any null ts = age unknown)") {
     import org.apache.spark.sql.functions.col
-    val tmp = java.nio.file.Files.createTempDirectory("graft_mixed").toString
+    val tmp = tempDir("graft_mixed").toString
     val mem = s"$tmp/mem"
     // s1: an OLD stamped turn plus a NEWER untimed one (turnTsOf returned
     // None for that batch) — max(ts) over the stamped subset says idle,
@@ -1612,7 +1601,7 @@ class ServingSpec extends SparkSpec {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import org.apache.spark.sql.functions.col
     implicit val sqlC = spark.sqlContext
-    val tmp = java.nio.file.Files.createTempDirectory("graft_schat").toString
+    val tmp = tempDir("graft_schat").toString
     val (cache, mem, out) = (s"$tmp/cache", s"$tmp/mem", s"$tmp/out")
     val v1 = Array(1.0f, 0.0f)
     val answerMisses: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame =
@@ -1653,7 +1642,7 @@ class ServingSpec extends SparkSpec {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import org.apache.spark.sql.functions.col
     implicit val sqlC = spark.sqlContext
-    val tmp = java.nio.file.Files.createTempDirectory("graft_schatlog").toString
+    val tmp = tempDir("graft_schatlog").toString
     val (cache, mem, out, log) = (s"$tmp/cache", s"$tmp/mem", s"$tmp/out", s"$tmp/log")
     val v1 = Array(1.0f, 0.0f); val v2 = Array(0.0f, 1.0f)
     val answerMisses: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame =
@@ -1700,7 +1689,7 @@ class ServingSpec extends SparkSpec {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import org.apache.spark.sql.functions.col
     implicit val sqlC = spark.sqlContext
-    val tmp = java.nio.file.Files.createTempDirectory("graft_schatret").toString
+    val tmp = tempDir("graft_schatret").toString
     val (cache, mem, out) = (s"$tmp/cache", s"$tmp/mem", s"$tmp/out")
     val v1 = Array(1.0f, 0.0f); val v2 = Array(0.0f, 1.0f)
     val answerMisses: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame =
@@ -1741,7 +1730,7 @@ class ServingSpec extends SparkSpec {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import org.apache.spark.sql.functions.col
     implicit val sqlC = spark.sqlContext
-    val tmp = java.nio.file.Files.createTempDirectory("graft_scrag_lru").toString
+    val tmp = tempDir("graft_scrag_lru").toString
     val (cache, out) = (s"$tmp/cache", s"$tmp/out")
     val (v1, v2, v3) = (Array(1.0f, 0.0f), Array(0.0f, 1.0f), Array(0.6f, 0.8f))
     val answerMisses: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame =
@@ -1770,7 +1759,7 @@ class ServingSpec extends SparkSpec {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import org.apache.spark.sql.functions.col
     implicit val sqlC = spark.sqlContext
-    val tmp = java.nio.file.Files.createTempDirectory("graft_scrag_ret").toString
+    val tmp = tempDir("graft_scrag_ret").toString
     val (cache, out) = (s"$tmp/cache", s"$tmp/out")
     val answerMisses: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame =
       missQ => missQ.select(col("query_id"), col("question"),
@@ -1818,7 +1807,7 @@ class ServingSpec extends SparkSpec {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import org.apache.spark.sql.functions.col
     implicit val sqlC = spark.sqlContext
-    val tmp = java.nio.file.Files.createTempDirectory("graft_scrag_led").toString
+    val tmp = tempDir("graft_scrag_led").toString
     val (cache, out) = (s"$tmp/cache", s"$tmp/out")
     // a NON-deterministic answerer (the live-LLM stand-in): each pipeline
     // construction stamps a fresh generation counter into the answer
@@ -1863,7 +1852,7 @@ class ServingSpec extends SparkSpec {
     }
 
   test("cachedAnswerBatch all-hit batch: answerMisses never runs, answers come from the store") {
-    val cache = java.nio.file.Files.createTempDirectory("graft_pass_hit").toString + "/cache"
+    val cache = tempDir("graft_pass_hit").toString + "/cache"
     Seq((7L, Array(1.0f, 0.0f), "stored seven"), (8L, Array(0.0f, 1.0f), "stored eight"))
       .toDF("cache_id", "embedding", "answer").write.parquet(cache)
     val calls = new java.util.concurrent.atomic.AtomicInteger(0)
@@ -1877,7 +1866,7 @@ class ServingSpec extends SparkSpec {
   }
 
   test("cachedAnswerBatch all-miss batch with in-batch near-duplicates: one insert, the loser hits the winner") {
-    val cache = java.nio.file.Files.createTempDirectory("graft_pass_dup").toString + "/cache"
+    val cache = tempDir("graft_pass_dup").toString + "/cache"
     val calls = new java.util.concurrent.atomic.AtomicInteger(0)
     val got = passRows(CachedRag.cachedAnswerBatch(spark,
       Seq((5L, "q five", Array(1.0f, 0.0f)), (6L, "q six", Array(0.99f, 0.05f)))
@@ -1893,7 +1882,7 @@ class ServingSpec extends SparkSpec {
   }
 
   test("cachedAnswerBatch replayed batch: identical dispositions through own-id exclusion") {
-    val cache = java.nio.file.Files.createTempDirectory("graft_pass_replay").toString + "/cache"
+    val cache = tempDir("graft_pass_replay").toString + "/cache"
     Seq((7L, Array(1.0f, 0.0f), "stored seven")).toDF("cache_id", "embedding", "answer")
       .write.parquet(cache)
     val batch = Seq((1L, "q one", Array(1.0f, 0.0f)), (2L, "q two", Array(0.0f, 1.0f)),
@@ -1911,7 +1900,7 @@ class ServingSpec extends SparkSpec {
   }
 
   test("route gate: the footer bound takes the exact visible count's route just above and below it") {
-    val cache = java.nio.file.Files.createTempDirectory("graft_pass_route").toString + "/cache"
+    val cache = tempDir("graft_pass_route").toString + "/cache"
     // 4 raw rows in two files; 2 of them are this batch's own minted ids
     // (a crash-replay), so the visible store holds 2
     Seq((7L, Array(1.0f, 0.0f)), (8L, Array(0.0f, 1.0f))).toDF("cache_id", "embedding")
@@ -1947,8 +1936,7 @@ class ServingSpec extends SparkSpec {
     // the job-scheduling overhead compounds — this pins the TOTAL job
     // count (body + one consumer action) so a refactor that quietly adds
     // per-batch jobs fails loudly instead of surfacing as st18 latency.
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft_ci_budget").toString + "/cache"
+    val tmp = tempDir("graft_ci_budget").toString + "/cache"
     Seq((7L, Array(1.0f, 0.0f), "seed")).toDF("cache_id", "embedding", "answer")
       .write.parquet(tmp)
     val batch = Seq(
@@ -1970,8 +1958,7 @@ class ServingSpec extends SparkSpec {
     // quietly adds per-batch driver actions fails loudly instead of
     // surfacing as st19 latency (the intakeBatch budget's rationale, one
     // level up)
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft_crag_budget").toString + "/cache"
+    val tmp = tempDir("graft_crag_budget").toString + "/cache"
     Seq((7L, Array(1.0f, 0.0f), "seed answer"))
       .toDF("cache_id", "embedding", "answer").write.parquet(tmp)
     val batch = Seq(
@@ -1997,7 +1984,7 @@ class ServingSpec extends SparkSpec {
     // the composition's whole per-turn driver-action cost — the number
     // st20's latency is made of: the cache pass's jobs plus the turn's
     // own history aggregate and bucketed append.
-    val tmp = java.nio.file.Files.createTempDirectory("graft_ct_budget").toString
+    val tmp = tempDir("graft_ct_budget").toString
     val (cache, mem) = (s"$tmp/cache", s"$tmp/mem")
     val batch = Seq(
       ("s1", 1L, "q one", Array(1.0f, 0.0f)),
@@ -2020,8 +2007,7 @@ class ServingSpec extends SparkSpec {
 
   test("cache intake: carryCols persist payload columns on inserted entries") {
     import org.apache.spark.sql.functions.col
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft_ci_carry").toString + "/cache"
+    val tmp = tempDir("graft_ci_carry").toString + "/cache"
     val b1 = Seq((1L, Array(1.0f, 0.0f), "ans one"), (2L, Array(0.0f, 1.0f), "ans two"))
       .toDF("query_id", "query_vec", "answer")
     SemanticCache.intakeBatch(spark, b1, tmp, minCos = 0.95, carryCols = Seq("answer"))
