@@ -98,6 +98,11 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       info("simhash64", "simhash64(tokens) - 64-bit SimHash of a token array"),
       (es: Seq[Expression]) => graft.functions.SimHash64(es.head)))
     ext.injectFunction((
+      FunctionIdentifier("word_tokens"),
+      info("word_tokens",
+        "word_tokens(text) - lowercase [a-z0-9] word tokens; empty for null"),
+      (es: Seq[Expression]) => graft.functions.WordTokens(es.head)))
+    ext.injectFunction((
       FunctionIdentifier("vector_norm"),
       info("vector_norm", "vector_norm(vec) - L2 norm of a float vector"),
       (es: Seq[Expression]) => graft.functions.VectorNorm(es.head)))

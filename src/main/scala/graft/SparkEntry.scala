@@ -68,8 +68,7 @@ object SparkEntry {
   private val indexCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def cachedIndex(kind: String, dir: String)(build: String => Unit): String =
     indexCache.computeIfAbsent(s"$kind|$dir", { _ =>
-      val root = java.nio.file.Files
-        .createTempDirectory(s"graft_idx_$kind").toString + "/idx"
+      val root = scratchDir(s"graft_idx_$kind").toString + "/idx"
       build(root)
       root
     })
@@ -120,8 +119,7 @@ object SparkEntry {
     import graft.serve.Config
     val docs = T(s, dir, "documents")
     val emb = T(s, dir, "embeddings")
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft_ep5").toString + "/cache"
+    val tmp = scratchDir("graft_ep5").toString + "/cache"
     emb.where(col("vec_id") === 7)
       .select(lit(500007L).as("cache_id"), col("embedding"),
         lit(s"[${Config.AgentName}] precomputed answer for doc 7").as("answer"))
@@ -208,8 +206,7 @@ object SparkEntry {
       // parquet path, not a cached DataFrame: the memo must survive
       // session turnover in one JVM (the indexCache discipline — a
       // cached plan is bound to the SparkContext that built it)
-      val out = java.nio.file.Files
-        .createTempDirectory("graft_missans").toString + "/answers"
+      val out = scratchDir("graft_missans").toString + "/answers"
       priced.coalesce(1).write.parquet(out)
       out
     })
@@ -235,13 +232,11 @@ object SparkEntry {
   private def cachedChatPrefix(s: SparkSession, dir: String, key: String)(
       build: String => Unit): String = {
     val proto = chatPrefixCache.computeIfAbsent(s"$dir#$key", { _ =>
-      val p = deleteRecursivelyOnExit(
-        java.nio.file.Files.createTempDirectory(s"graft_proto_$key")).toString
+      val p = scratchDir(s"graft_proto_$key").toString
       build(p)
       p
     })
-    val root = deleteRecursivelyOnExit(
-      java.nio.file.Files.createTempDirectory(s"graft_$key")).toString
+    val root = scratchDir(s"graft_$key").toString
     val conf = s.sessionState.newHadoopConf()
     val fs = new org.apache.hadoop.fs.Path(proto).getFileSystem(conf)
     fs.listStatus(new org.apache.hadoop.fs.Path(proto)).foreach { e =>
@@ -443,23 +438,32 @@ object SparkEntry {
 
   private def sqlEsc(s: String): String = s.replace("'", "''")
 
-  /** Register a scaffold temp dir for recursive deletion at JVM exit.
-    * `File.deleteOnExit` removes only EMPTY directories — useless for
-    * these dirs, which are populated with fixture files after creation
-    * (ADVICE r13) — so a shutdown hook walks the tree newest-first.
+  /** A fresh scratch dir under `java.io.tmpdir` for a query's stores and
+    * scaffolds — the ONE way query bodies get a directory. Each is
+    * deleted, with everything in it, when the JVM exits: a registered
+    * query returns a lazy frame that may still read its dir after the
+    * body returns, so nothing earlier is safe. `File.deleteOnExit` would
+    * remove only EMPTY directories, so one shutdown hook walks every
+    * registered tree newest-first.
     */
-  private def deleteRecursivelyOnExit(d: java.nio.file.Path): java.nio.file.Path = {
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      import java.nio.file.Files
+  private def scratchDir(prefix: String): java.nio.file.Path = {
+    val d = java.nio.file.Files.createTempDirectory(prefix)
+    scratchDirs.add(d)
+    d
+  }
+
+  private lazy val scratchDirs = {
+    val dirs = new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
+    Runtime.getRuntime.addShutdownHook(new Thread(() => dirs.forEach { d =>
       import scala.jdk.CollectionConverters._
-      if (Files.exists(d)) {
-        val walk = Files.walk(d)
+      if (java.nio.file.Files.exists(d)) {
+        val walk = java.nio.file.Files.walk(d)
         try walk.sorted(java.util.Comparator.reverseOrder())
-          .iterator().asScala.foreach(p => Files.deleteIfExists(p))
+          .iterator().asScala.foreach(p => java.nio.file.Files.deleteIfExists(p))
         finally walk.close()
       }
     }))
-    d
+    dirs
   }
 
   /** s1_raw_ingest's file-scaffold dirs, one per fixture dir per JVM. */
@@ -1002,7 +1006,7 @@ object SparkEntry {
       // (TF-IDF embed + tie laws), pinned like ep2/ep3.
       import java.nio.file.Files
       val tmp = SparkEntry.ep8ScaffoldDirs.computeIfAbsent(dir, _ => {
-        val d = deleteRecursivelyOnExit(Files.createTempDirectory("graft_ep8_"))
+        val d = scratchDir("graft_ep8_")
         graft.ingest.Warc.toWarcBlobs(
           docs2(s, dir).where(col("doc_id") < 100).select(
             pmod(col("doc_id"), lit(4)).cast("string").as("shard"),
@@ -1051,7 +1055,7 @@ object SparkEntry {
       // docs survive untouched. Deterministic (splitter + xxhash ids),
       // pinned like ep8.
       import java.nio.file.{Files, Paths}
-      val root = Files.createTempDirectory("graft_st21").toString
+      val root = scratchDir("graft_st21").toString
       val (land, idx) = (s"$root/land", s"$root/idx")
       Files.createDirectories(Paths.get(land))
       def warcWave(docsDf: DataFrame, wave: Int): Unit =
@@ -1134,7 +1138,7 @@ object SparkEntry {
       // one scaffold dir per (JVM, fixture): Bench re-runs each query for
       // medians and must not leak a fresh directory per invocation
       val tmp = SparkEntry.s1ScaffoldDirs.computeIfAbsent(dir, _ =>
-        deleteRecursivelyOnExit(Files.createTempDirectory("graft_s1_")))
+        scratchDir("graft_s1_"))
       tmp.toFile.listFiles().foreach(_.delete())
       T(s, dir, "documents").where(col("doc_id") < 50)
         .select("doc_id", "text").collect().foreach { r =>
@@ -1339,8 +1343,7 @@ object SparkEntry {
       // insertion miss, a replayed-own-id leak, or a within-batch
       // resolve drift all break the hash
       val emb = T(s, dir, "embeddings")
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_cache_intake").toString + "/cache"
+      val tmp = scratchDir("graft_cache_intake").toString + "/cache"
       emb.where(pmod(col("vec_id"), lit(7)) === 0)
         .select(col("vec_id").as("cache_id"), col("embedding"))
         .write.parquet(tmp)
@@ -1373,8 +1376,7 @@ object SparkEntry {
       // to c11's and its full DuckDB recompute applies verbatim — the
       // deep-AND route gets a CORRECTNESS row without a golden pin
       val emb = T(s, dir, "embeddings")
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_cache_intake_b").toString + "/cache"
+      val tmp = scratchDir("graft_cache_intake_b").toString + "/cache"
       emb.where(pmod(col("vec_id"), lit(7)) === 0)
         .select(col("vec_id").as("cache_id"), col("embedding"))
         .write.parquet(tmp)
@@ -1427,8 +1429,7 @@ object SparkEntry {
       // eviction law, and the delete — every surviving (cache_id,
       // answer) row is hash-compared
       val emb = T(s, dir, "embeddings")
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_cache_evict").toString + "/cache"
+      val tmp = scratchDir("graft_cache_evict").toString + "/cache"
       emb.where(pmod(col("vec_id"), lit(7)) === 0)
         .select(col("vec_id").as("cache_id"), col("embedding"),
           concat(lit("seed "), col("vec_id")).as("answer"))
@@ -1474,8 +1475,7 @@ object SparkEntry {
       // cap. Everything derives from the embeddings fixture, so the row
       // is a full recompute, not a pin.
       val emb = T(s, dir, "embeddings")
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_c12b").toString
+      val root = scratchDir("graft_c12b").toString
       val (cachePath, disp) = (s"$root/cache", s"$root/disp")
       emb.where(pmod(col("vec_id"), lit(7)) === 0)
         .select(col("vec_id").as("cache_id"), col("embedding"),
@@ -2811,8 +2811,7 @@ object SparkEntry {
       import graft.ops.CorpusPipeline
       val docs = T(s, dir, "documents").where(col("doc_id") < 60)
         .select("doc_id", "text")
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_mh_intake").toString + "/idx"
+      val tmp = scratchDir("graft_mh_intake").toString + "/idx"
       Dedup.writeMinhash(docs.where(pmod(col("doc_id"), lit(3)) =!= 0), tmp,
         shingleSize = 1, numHashes = 128, bands = 32)
       val s1 = CorpusPipeline.nearDupIntakeBatch(s,
@@ -2830,8 +2829,7 @@ object SparkEntry {
       // → golden-pinned like the other hash-native operators; the
       // estimator-vs-exact error law lives in DedupSpec
       val docs = T(s, dir, "documents").where(col("doc_id") < 60)
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_mh_est").toString + "/idx"
+      val tmp = scratchDir("graft_mh_est").toString + "/idx"
       Dedup.writeMinhash(docs.where(pmod(col("doc_id"), lit(3)) =!= 0), tmp,
         shingleSize = 1, numHashes = 128, bands = 32)
       Dedup.nearDupesAgainstStoreEstimated(
@@ -2848,8 +2846,7 @@ object SparkEntry {
       // Same recall premise as d5b (banding miss ≈ 5e-8 at j≥0.8), so
       // the oracle is the exact cross-split jaccard, recomputed whole
       val docs = T(s, dir, "documents").where(col("doc_id") < 60)
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_mh_store").toString + "/idx"
+      val tmp = scratchDir("graft_mh_store").toString + "/idx"
       Dedup.writeMinhash(docs.where(pmod(col("doc_id"), lit(3)) =!= 0), tmp,
         shingleSize = 1, numHashes = 128, bands = 32)
       Dedup.nearDupesAgainstStore(
@@ -2867,8 +2864,7 @@ object SparkEntry {
       // so both the probe-side exclusion and the compact's physical purge
       // are hash-checked end to end
       val docs = T(s, dir, "documents").where(col("doc_id") < 60)
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_mh_store_del").toString + "/idx"
+      val tmp = scratchDir("graft_mh_store_del").toString + "/idx"
       Dedup.writeMinhash(docs.where(pmod(col("doc_id"), lit(3)) =!= 0), tmp,
         shingleSize = 1, numHashes = 128, bands = 32)
       Dedup.deleteMinhash(s, tmp, Seq(17L, 20L))
@@ -3987,8 +3983,7 @@ object SparkEntry {
       // premise as a9/a9b (rerank=48 over 500 vectors; SqSpec pins pool
       // recall 1.0), now carried through every lifecycle transition
       val emb = T(s, dir, "embeddings")
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_sq_lc").toString + "/idx"
+      val tmp = scratchDir("graft_sq_lc").toString + "/idx"
       // the lifecycle's eager op sequence runs here at construction —
       // shuffles sized from the embedding input (Layout.withShuffleSizedTo,
       // ×4 bounds every intermediate; AQE kept for the probe joins)
@@ -4026,8 +4021,7 @@ object SparkEntry {
       // the full lifecycle, so any drift in append routing, probe-side
       // exclusion, or the compact's anti-join breaks the hash
       val emb = T(s, dir, "embeddings")
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_pq_lc").toString + "/idx"
+      val tmp = scratchDir("graft_pq_lc").toString + "/idx"
       // sized like a9c (see there)
       Layout.withShuffleSizedTo(s, Layout.planBytes(emb) * 4,
         disableAqeAtOne = false) {
@@ -4085,8 +4079,7 @@ object SparkEntry {
       // oracle applies and the write/append/probe round-trip is proven
       // value-invisible
       val emb = T(s, dir, "embeddings")
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_hnsw_idx").toString + "/idx"
+      val tmp = scratchDir("graft_hnsw_idx").toString + "/idx"
       val p = Hnsw.Params(m = 8, efConstruction = 80, efSearch = 200, numShards = 4)
       Hnsw.write(emb.where(col("vec_id") < 400), tmp, p)
       Hnsw.append(s, emb.where(col("vec_id") >= 400), tmp)
@@ -4107,8 +4100,7 @@ object SparkEntry {
       // graph structure — a13's brute-force oracle applies verbatim, and
       // the merge is proven value-invisible end to end
       val emb = T(s, dir, "embeddings")
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_hnsw_mrg").toString + "/idx"
+      val tmp = scratchDir("graft_hnsw_mrg").toString + "/idx"
       val p = Hnsw.Params(m = 8, efConstruction = 80, efSearch = 200, numShards = 2)
       Hnsw.write(emb.where(col("vec_id") < 350), tmp, p)
       Seq(350, 400, 450).foreach { lo =>
@@ -4278,8 +4270,7 @@ object SparkEntry {
       // fold is value-invisible at and above the horizon. Below it, the
       // query itself asserts the loud refusal. Builds fresh (lifecycle
       // under test).
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_idx_ret").toString + "/idx"
+      val tmp = scratchDir("graft_idx_ret").toString + "/idx"
       val data = T(s, dir, "embeddings").select(
         col("vec_id").as("chunk_id"),
         expr("vec_id div 10").as("doc_id"),
@@ -4724,8 +4715,7 @@ object SparkEntry {
       // to live docs. Builds fresh (lifecycle under test, no cache).
       import graft.search.Bm25
       import s.implicits._
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_bm25_del").toString + "/idx"
+      val tmp = scratchDir("graft_bm25_del").toString + "/idx"
       Bm25.writeIndex(T(s, dir, "documents"), "doc_id", "text", tmp,
         termBuckets = 16)
       Bm25.deleteDocs(s, tmp, Seq(3L, 7L))
@@ -4760,8 +4750,7 @@ object SparkEntry {
       // not just asserted
       import graft.search.Bm25
       import s.implicits._
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_bm25_cp").toString + "/idx"
+      val tmp = scratchDir("graft_bm25_cp").toString + "/idx"
       Bm25.writeIndex(T(s, dir, "documents"), "doc_id", "text", tmp,
         termBuckets = 16)
       Bm25.deleteDocs(s, tmp, Seq(3L, 7L))
@@ -4799,8 +4788,7 @@ object SparkEntry {
       import graft.search.Bm25
       import s.implicits._
       val docs = T(s, dir, "documents")
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_bm25_mrg").toString + "/idx"
+      val tmp = scratchDir("graft_bm25_mrg").toString + "/idx"
       // seed holds ~2/3 of the corpus (the big head); three small appends
       Bm25.writeIndex(docs.where(pmod(col("doc_id"), lit(3)) < 2),
         "doc_id", "text", tmp, termBuckets = 16)
@@ -4844,8 +4832,7 @@ object SparkEntry {
       import graft.search.Bm25
       import s.implicits._
       val docs = T(s, dir, "documents")
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_bm25_st").toString + "/idx"
+      val tmp = scratchDir("graft_bm25_st").toString + "/idx"
       Bm25.writeIndex(docs.where(pmod(col("doc_id"), lit(3)) === 0),
         "doc_id", "text", tmp, termBuckets = 16)
       Bm25.appendIndexBatch(s,
@@ -4879,8 +4866,7 @@ object SparkEntry {
       // applies verbatim (the a5b/st11 symmetry law, now with the
       // ledger in the loop)
       val emb = T(s, dir, "embeddings")
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_ivf_st").toString + "/idx"
+      val tmp = scratchDir("graft_ivf_st").toString + "/idx"
       val (assigned, centroids) = Ann.buildIvfSampled(emb, nLists = 8)
       Ann.writeIvf(assigned.where(col("vec_id") < 200), centroids, tmp)
       Ann.appendIvfBatch(s,
@@ -4911,8 +4897,7 @@ object SparkEntry {
       // provably exact regardless of the (bounded, guard-checked) clamp
       // drift on appended values
       val emb = T(s, dir, "embeddings")
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_sq_st").toString + "/idx"
+      val tmp = scratchDir("graft_sq_st").toString + "/idx"
       val odd = emb.where(pmod(col("vec_id"), lit(2)) === 1)
       Sq.writeCodes(emb.where(pmod(col("vec_id"), lit(2)) === 0), tmp)
       Sq.appendCodesBatch(s, odd.where(col("vec_id") < 250), tmp, 1L)
@@ -4936,8 +4921,7 @@ object SparkEntry {
       // applies VERBATIM — routing drift, a ledger miss, or a replay
       // double-append all break the hash
       val emb = T(s, dir, "embeddings")
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_pq_st").toString + "/idx"
+      val tmp = scratchDir("graft_pq_st").toString + "/idx"
       val model = Pq.fitSampled(emb, dims = 64, m = 8, k = 16, maxIter = 10)
       Pq.write(Pq.encode(emb.where(col("vec_id") < 300), model), model, tmp)
       Pq.appendCodesBatch(s,
@@ -4969,8 +4953,7 @@ object SparkEntry {
       // efSearch=200 ≥ every segment's population the beam exhausts each
       // graph, so a13's brute-force oracle applies verbatim
       val emb = T(s, dir, "embeddings")
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_hnsw_st").toString + "/idx"
+      val tmp = scratchDir("graft_hnsw_st").toString + "/idx"
       val p = Hnsw.Params(m = 8, efConstruction = 80, efSearch = 200, numShards = 4)
       Hnsw.write(emb.where(col("vec_id") < 300), tmp, p)
       Hnsw.appendBatch(s,
@@ -5132,8 +5115,7 @@ object SparkEntry {
       // row, so ep5's full-chain oracle applies verbatim
       import graft.serve.CachedRag
       val (tmp, queries, answerMisses) = cachedRagFixture(s, dir)
-      val out = java.nio.file.Files
-        .createTempDirectory("graft_st19").toString + "/disp"
+      val out = scratchDir("graft_st19").toString + "/disp"
       CachedRag.cachedRagBatchBody(s, queries, tmp, out, 1L,
         minCos = 0.95, answerMisses)
       val b2q = queries.select((col("query_id") + 100).as("query_id"),
@@ -5165,8 +5147,7 @@ object SparkEntry {
       // the entire sequential state — cache AND memory — in CTEs.
       import graft.serve.ChatRag
       val (tmp, queries, answerMisses) = cachedRagFixture(s, dir)
-      val mem = java.nio.file.Files
-        .createTempDirectory("graft_ep6").toString + "/memory"
+      val mem = scratchDir("graft_ep6").toString + "/memory"
       val t0 = ChatRag.chatTurn(s,
         queries.where(col("query_id").isin(3, 7))
           .withColumn("session_id",
@@ -5196,7 +5177,7 @@ object SparkEntry {
       // for row, so its sequential cache+memory oracle applies verbatim
       import graft.serve.ChatRag
       val (tmp, queries, answerMisses) = cachedRagFixture(s, dir)
-      val root = java.nio.file.Files.createTempDirectory("graft_st20").toString
+      val root = scratchDir("graft_st20").toString
       val (mem, out) = (s"$root/memory", s"$root/disp")
       ChatRag.chatTurnBody(s,
         queries.where(col("query_id").isin(3, 7))
@@ -5419,8 +5400,7 @@ object SparkEntry {
       import s.implicits._
       val docs = T(s, dir, "documents")
       val emb = T(s, dir, "embeddings")
-      val root = deleteRecursivelyOnExit(
-        java.nio.file.Files.createTempDirectory("graft_c17")).toString
+      val root = scratchDir("graft_c17").toString
       val (mem, cache) = (s"$root/memory", s"$root/cache")
       val echo: DataFrame => DataFrame = missQ =>
         missQ.select(col("query_id"), col("question"),
@@ -5534,8 +5514,7 @@ object SparkEntry {
       // pure-SQL VALUES replay — a migration that lost a row, a
       // partition drop that clipped an above-horizon day, or a delete
       // that missed a live partition breaks the oracle.
-      val root = deleteRecursivelyOnExit(
-        java.nio.file.Files.createTempDirectory("graft_c18")).toString
+      val root = scratchDir("graft_c18").toString
       c18LogBuild(s, dir, root)
       s.read.parquet(s"$root/log")
         .select("user", "message", "response", "ts")
@@ -5679,8 +5658,7 @@ object SparkEntry {
       // applies — a delete that leaks through either half's probe-side
       // exclusion, or a compact that revives/loses rows, breaks it
       val emb = T(s, dir, "embeddings")
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_ivfpq_lc").toString
+      val tmp = scratchDir("graft_ivfpq_lc").toString
       val (ivfPath, pqPath) = (s"$tmp/ivf", s"$tmp/pq")
       // sized like a9c (see there)
       Layout.withShuffleSizedTo(s, Layout.planBytes(emb) * 4,
@@ -5878,8 +5856,7 @@ object SparkEntry {
       // law's oracle)
       import graft.ops.CorpusPipeline
       val emb = T(s, dir, "embeddings")
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_st18").toString
+      val root = scratchDir("graft_st18").toString
       val cachePath = s"$root/cache"
       val out = s"$root/disp"
       emb.where(pmod(col("vec_id"), lit(5)) === 0)

@@ -16,6 +16,10 @@ object Verify {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+      // the deployment path: graft functions injected and Spark's
+      // generated-class cache floored (GraftExtensions.CodegenCacheFloor),
+      // so repeated queries reuse their compiled plans
+      .config("spark.sql.extensions", "graft.GraftExtensions")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()

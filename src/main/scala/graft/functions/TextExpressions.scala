@@ -1,10 +1,12 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, ExpressionColumn, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode}
-import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.util.{ArrayData, CollationSupport, GenericArrayData}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, DoubleType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -236,6 +238,102 @@ object SimHash64 {
   }
 }
 
+/** Lowercase word tokens of a string: the token law every text operator
+  * shares ([[graft.search.Bm25.tokensCol]] — BM25 build, append and
+  * probe, the overlap reranker, snippets, generation eval, text
+  * analytics). The law is the reference composition
+  * `filter(split(lower(coalesce(t, '')), '[^a-z0-9]+'), t -> length(t) > 0)`:
+  * null and empty input give an empty array, never null.
+  *
+  * The composition it replaces ran its `filter` lambda in the expression
+  * interpreter (higher-order functions do not take part in whole-stage
+  * codegen) and its regex split per row. Here the generated code is one
+  * static call per row ([[WordTokens.tokens]]): a byte scan that emits
+  * the ASCII letter/digit runs, lowercased. A row holding any non-ASCII
+  * byte takes the exact reference computation instead — Spark's own
+  * `lower` (same collation and ICU case-mapping switch as `Lower`), then
+  * the same `[a-z0-9]` run scan over the lowered bytes — so characters
+  * whose lowercase is ASCII (U+212A KELVIN SIGN → `k`) tokenize exactly
+  * as the reference does.
+  */
+case class WordTokens(child: Expression)
+    extends UnaryExpression with ExpectsInputTypes {
+  override def prettyName: String = "word_tokens"
+  override def inputTypes: Seq[DataType] = Seq(StringType)
+  override def dataType: DataType = ArrayType(StringType, containsNull = false)
+  override def nullable: Boolean = false
+
+  private def collationId: Int = child.dataType.asInstanceOf[StringType].collationId
+  // read once per expression instance, like `Lower`
+  private lazy val useICU: Boolean =
+    SQLConf.get.getConf(SQLConf.ICU_CASE_MAPPINGS_ENABLED)
+
+  override def eval(input: InternalRow): Any =
+    WordTokens.tokens(child.eval(input).asInstanceOf[UTF8String], collationId, useICU)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val c = child.genCode(ctx)
+    ev.copy(code = code"""
+      ${c.code}
+      ${classOf[ArrayData].getName} ${ev.value} = graft.functions.WordTokens.tokens(
+        ${c.isNull} ? null : ${c.value}, $collationId, $useICU);""",
+      isNull = FalseLiteral)
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): WordTokens =
+    copy(child = newChild)
+}
+
+object WordTokens {
+  private val NoTokens = new GenericArrayData(Array.empty[Any])
+
+  /** Shared by the interpreted eval and the generated Java. */
+  def tokens(s: UTF8String, collationId: Int, useICU: Boolean): ArrayData =
+    if (s == null) NoTokens
+    else {
+      val fast = runs(s, ascii = true)
+      if (fast != null) fast
+      else runs(CollationSupport.Lower.exec(s, collationId, useICU), ascii = false)
+    }
+
+  /** The `[a-z0-9]` runs of `s` as tokens. With `ascii`, `s` is raw
+    * input: `[A-Z]` also belongs to a run and is lowercased, and the
+    * first non-ASCII byte aborts the scan (null — the caller lowers the
+    * row through Spark). Without it, `s` is already lowered and every
+    * byte outside `[a-z0-9]` (UTF-8 continuation and lead bytes
+    * included) separates, as the reference split does.
+    */
+  private def runs(s: UTF8String, ascii: Boolean): ArrayData = {
+    val n = s.numBytes()
+    val out = scala.collection.mutable.ArrayBuffer.empty[Any]
+    var start = 0
+    var i = 0
+    while (i <= n) {
+      val b: Byte = if (i < n) s.getByte(i) else 0
+      if (b < 0 && ascii) return null
+      val inRun = (b >= 'a' && b <= 'z') || (b >= '0' && b <= '9') ||
+        (ascii && b >= 'A' && b <= 'Z')
+      if (!inRun) {
+        if (i > start) out += lowerAscii(s, start, i)
+        start = i + 1
+      }
+      i += 1
+    }
+    if (out.isEmpty) NoTokens else new GenericArrayData(out.toArray)
+  }
+
+  private def lowerAscii(s: UTF8String, from: Int, until: Int): UTF8String = {
+    val bytes = new Array[Byte](until - from)
+    var j = 0
+    while (j < bytes.length) {
+      val b = s.getByte(from + j)
+      bytes(j) = if (b >= 'A' && b <= 'Z') (b + ('a' - 'A')).toByte else b
+      j += 1
+    }
+    UTF8String.fromBytes(bytes)
+  }
+}
+
 object TextExpressions {
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
@@ -247,6 +345,7 @@ object TextExpressions {
     reg.createOrReplaceTempFunction(
       "phrase_count", es => PhraseCount(es.head, es(1)), "built-in")
     reg.createOrReplaceTempFunction("simhash64", es => SimHash64(es.head), "built-in")
+    reg.createOrReplaceTempFunction("word_tokens", es => WordTokens(es.head), "built-in")
   }
 
   def pdfExtract(c: Column): Column = call_function("pdf_extract", c)
@@ -255,4 +354,9 @@ object TextExpressions {
   def xlsxPack(c: Column): Column = call_function("xlsx_pack", c)
   def phraseCount(tokens: Column, phrase: Column): Column =
     call_function("phrase_count", tokens, phrase)
+  /** [[WordTokens]] over `text`; built as an expression instance, so it
+    * needs no registration in the calling session.
+    */
+  def wordTokens(text: Column): Column =
+    ExpressionColumn(WordTokens(ExpressionColumn.expression(text)))
 }

@@ -61,6 +61,23 @@ object Ann extends IndexLifecycle {
     } else df.localCheckpoint(true)
   }
 
+  /** Free the blocks [[materializeOnce]] (or any `localCheckpoint`)
+    * pinned under `df` once its consumers have run, instead of when
+    * ContextCleaner next sees the frame collected. A checkpoint's blocks
+    * live in the RDD its plan's `LogicalRDD` holds, not in the cache
+    * manager, so `Dataset.unpersist()` alone cannot reach them; a
+    * persisted frame (`graft.resilientMaterialize`) is unpersisted too.
+    */
+  private[graft] def release(df: DataFrame): Unit = {
+    df.queryExecution.analyzed.foreach {
+      case lr: org.apache.spark.sql.execution.LogicalRDD =>
+        lr.rdd.unpersist(blocking = false)
+      case _ => ()
+    }
+    if (df.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
+      df.unpersist(blocking = false)
+  }
+
   /** True when `df` reads nothing but driver rows (a `LocalRelation`) or
     * a materialized checkpoint, under column renames and literals only:
     * re-running such a plan per consumer re-reads pinned rows and

@@ -1219,16 +1219,9 @@ object Dedup extends IndexLifecycle {
         return labels.toDF("id", "comp")
       }
     }
-    // A localCheckpoint's blocks live in an RDD referenced by the plan's
-    // LogicalRDD, not in the cache manager, so Dataset.unpersist() cannot
-    // reach them — without this, every round's label set would stay pinned
-    // in executor storage for the life of the session.
-    def freeCkpt(df: DataFrame): Unit =
-      df.queryExecution.analyzed.foreach {
-        case lr: org.apache.spark.sql.execution.LogicalRDD =>
-          lr.rdd.unpersist(blocking = false)
-        case _ => ()
-      }
+    // each round frees the previous round's checkpoint (Ann.release) —
+    // without it, every round's label set would stay pinned in executor
+    // storage for the life of the session
     // size the per-round shuffles from the counted edge set (~48 B/row
     // upper bound), not the cluster constant — see
     // Layout.withShuffleSizedTo; min-label propagation is
@@ -1255,7 +1248,7 @@ object Dedup extends IndexLifecycle {
             (coalesce(col("ncomp"), col("comp")) < col("comp")).as("__changed"))
           .localCheckpoint(true)
         converged = updated.where(col("__changed")).isEmpty
-        freeCkpt(labels)
+        Ann.release(labels)
         labels = updated.drop("__changed")
         i += 1
       }
@@ -1291,12 +1284,6 @@ object Dedup extends IndexLifecycle {
     * (count equality + one-sided except).
     */
   def connectedComponentsStar(pairs: DataFrame, maxIter: Int = 30): DataFrame = {
-    def freeCkpt(df: DataFrame): Unit =
-      df.queryExecution.analyzed.foreach {
-        case lr: org.apache.spark.sql.execution.LogicalRDD =>
-          lr.rdd.unpersist(blocking = false)
-        case _ => ()
-      }
     val nodes = pairs.select(col("id_a").as("id"))
       .union(pairs.select(col("id_b").as("id"))).distinct()
     // canonical undirected edges as (u = max, v = min); both star steps
@@ -1341,7 +1328,7 @@ object Dedup extends IndexLifecycle {
       val next = smallStar(largeStar(edges)).localCheckpoint(true)
       converged = next.count() == edges.count() &&
         next.exceptAll(edges).isEmpty
-      freeCkpt(edges)
+      Ann.release(edges)
       edges = next
       i += 1
     }

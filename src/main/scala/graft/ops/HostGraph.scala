@@ -35,13 +35,6 @@ object HostGraph {
     * the output is an authority ORDER rather than a probability
     * distribution; ranks still converge and compare.
     */
-  private def freeCkpt(df: DataFrame): Unit =
-    df.queryExecution.analyzed.foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
-
   def pageRank(
       edges0: DataFrame,
       iterations: Int = 10,
@@ -81,14 +74,14 @@ object HostGraph {
       for (_ <- 1 to iterations) {
         val next = iterationStep(edges, bases, outdeg, ranks, dampingPct)
           .localCheckpoint(true)
-        freeCkpt(ranks)
+        Ann.release(ranks)
         ranks = next
       }
       // the returned frame is itself a checkpoint — the loop scaffolding's
       // blocks can go now
-      freeCkpt(nodes)
-      freeCkpt(bases)
-      freeCkpt(outdeg)
+      Ann.release(nodes)
+      Ann.release(bases)
+      Ann.release(outdeg)
       ranks
     } finally edges.unpersist()
     }
@@ -144,10 +137,10 @@ object HostGraph {
       for (_ <- 1 to iterations) {
         val next = iterationStep(edges, bases, outdeg, ranks, dampingPct)
           .localCheckpoint(true)
-        freeCkpt(ranks)
+        Ann.release(ranks)
         ranks = next
       }
-      freeCkpt(nodes); freeCkpt(seedNodes); freeCkpt(bases); freeCkpt(outdeg)
+      Ann.release(nodes); Ann.release(seedNodes); Ann.release(bases); Ann.release(outdeg)
       ranks
     } finally edges.unpersist()
     }
@@ -236,20 +229,20 @@ object HostGraph {
             .groupBy(col("dst").as("node"))
             .agg(sum(col("hub_scaled")).as("raw")),
           nodes, scale, "auth_scaled")
-        if (auths != null) freeCkpt(auths)
+        if (auths != null) Ann.release(auths)
         auths = nextAuth
         val nextHub = normalizeStep(
           edgesD.join(auths.withColumnRenamed("node", "dst"), "dst")
             .groupBy(col("src").as("node"))
             .agg(sum(col("auth_scaled")).as("raw")),
           nodes, scale, "hub_scaled")
-        freeCkpt(hubs)
+        Ann.release(hubs)
         hubs = nextHub
       }
       val out = hubs.join(auths, "node")
         .select(col("node"), col("hub_scaled"), col("auth_scaled"))
         .localCheckpoint(true)
-      freeCkpt(nodes); freeCkpt(hubs); freeCkpt(auths)
+      Ann.release(nodes); Ann.release(hubs); Ann.release(auths)
       out
     } finally { edgesD.unpersist(); edgesS.unpersist() }
     }
@@ -268,7 +261,7 @@ object HostGraph {
     val out = filled
       .select(col("node"), expr(s"(raw * $scale) div $mx").as(outCol))
       .localCheckpoint(true)
-    freeCkpt(filled)
+    Ann.release(filled)
     out
   }
 

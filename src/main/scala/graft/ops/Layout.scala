@@ -709,30 +709,42 @@ object Layout {
     ()
   }
 
-  /** `(nFiles, bytes)` over the table's VISIBLE data files — one
-    * recursive listing skipping every `_`/`.`-prefixed path segment
-    * (sidecars, staging, stream metadata) and zero-length commit
-    * markers. The layout-metadata half of the report ops.
+  /** `(path segments below root, length)` of every VISIBLE data file
+    * under `root`: a `listStatus` walk that neither descends into nor
+    * returns a `_`/`.`-prefixed entry (sidecars, ledgers, staging,
+    * stream metadata — the names Spark's file index skips). Not
+    * `listFiles(root, true)`: on the local filesystem without native
+    * Hadoop libraries, every `LocatedFileStatus` that builds loads its
+    * permission by forking `ls -ld <file>`, and these listings need only
+    * names and lengths.
+    */
+  private[graft] def visibleFiles(
+      fs: org.apache.hadoop.fs.FileSystem,
+      root: org.apache.hadoop.fs.Path): Seq[(List[String], Long)] = {
+    def walk(dir: org.apache.hadoop.fs.Path,
+        rel: List[String]): Seq[(List[String], Long)] =
+      fs.listStatus(dir).toSeq.flatMap { st =>
+        val name = st.getPath.getName
+        if (name.startsWith("_") || name.startsWith(".")) Nil
+        else if (st.isDirectory) walk(st.getPath, rel :+ name)
+        else Seq((rel :+ name, st.getLen))
+      }
+    if (fs.exists(root)) walk(root, Nil) else Nil
+  }
+
+  /** `(nFiles, bytes)` over the table's VISIBLE data files
+    * ([[visibleFiles]]), skipping zero-length commit markers. The
+    * layout-metadata half of the report ops.
     */
   def visibleFileStats(
       fs: org.apache.hadoop.fs.FileSystem,
       root: org.apache.hadoop.fs.Path): (Long, Long) = {
-    if (!fs.exists(root)) return (0L, 0L)
-    val it = fs.listFiles(root, true)
-    var (nf, b) = (0L, 0L)
-    val rootQ = fs.makeQualified(root).toString
-    while (it.hasNext) {
-      val f = it.next()
-      val rel = f.getPath.toString.stripPrefix(rootQ).stripPrefix("/")
-      val hidden = rel.split('/').exists(s =>
-        s.startsWith("_") || s.startsWith("."))
-      if (!hidden && f.getLen > 0) { nf += 1; b += f.getLen }
-    }
-    (nf, b)
+    val lens = visibleFiles(fs, root).map(_._2).filter(_ > 0)
+    (lens.size.toLong, lens.sum)
   }
 
   /** The per-subdirectory file-compact due signal (round-13 verdict #1a):
-    * ONE recursive listing of `root` — the same walk
+    * ONE walk of `root` ([[visibleFiles]]) — the same walk
     * [[maintenanceDue]]'s table-wide `smallFiles` count pays — grouped by
     * first-level partition dir, returning the dirs whose OWN small-file
     * count trips `policy.maxSmallFiles`. A table-wide signal over a
@@ -747,21 +759,12 @@ object Layout {
       dirPrefix: String): Seq[String] = {
     val hp = new org.apache.hadoop.fs.Path(root)
     val fs = hp.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(hp)) return Seq.empty
-    val rootQ = fs.makeQualified(hp).toString
-    val counts = scala.collection.mutable.Map.empty[String, Int]
-    val it = fs.listFiles(hp, true)
-    while (it.hasNext) {
-      val f = it.next()
-      val rel = f.getPath.toString.stripPrefix(rootQ).stripPrefix("/")
-      val segs = rel.split('/')
-      val hidden = segs.exists(s => s.startsWith("_") || s.startsWith("."))
-      if (!hidden && segs.length >= 2 && segs.head.startsWith(dirPrefix) &&
-          f.getLen > 0 && f.getLen < policy.smallFileBytes)
-        counts.updateWith(segs.head)(c => Some(c.getOrElse(0) + 1))
-    }
-    counts.toSeq.filter(_._2 > policy.maxSmallFiles).map(_._1).sorted
-      .map(d => new org.apache.hadoop.fs.Path(hp, d).toString)
+    visibleFiles(fs, hp).collect {
+      case (dir :: _ :: _, len) if dir.startsWith(dirPrefix) &&
+          len > 0 && len < policy.smallFileBytes => dir
+    }.groupBy(identity).collect {
+      case (dir, files) if files.size > policy.maxSmallFiles => dir
+    }.toSeq.sorted.map(d => new org.apache.hadoop.fs.Path(hp, d).toString)
   }
 
   /** The distinct dead-id set of a tombstone sidecar (empty when the
@@ -1194,26 +1197,12 @@ object Layout {
       .getOrElse(1)
     val tombstones =
       tombstonedIds(spark, s"$path/_tombstones", idCol).length.toLong
-    val smallFiles =
-      if (!fs.exists(hp)) 0
-      else {
-        val it = fs.listFiles(hp, true)
-        var n = 0
-        while (it.hasNext) {
-          val f = it.next()
-          // skip sidecars/ledgers/staging the same way Spark's FileIndex
-          // does: any path SEGMENT under the root starting with _ or .
-          val rel = f.getPath.toString.stripPrefix(fs.makeQualified(hp).toString)
-          val hidden = rel.split('/').exists(seg =>
-            seg.startsWith("_") || seg.startsWith("."))
-          // zero-byte files are ledger MARKERS (`batches/<id>`), not data
-          // files — no compaction can remove them, so counting them made
-          // fileCompactDue latch permanently once a stream outlived the
-          // budget and the sink re-ran its file compact every batch
-          if (!hidden && f.getLen > 0 && f.getLen < policy.smallFileBytes) n += 1
-        }
-        n
-      }
+    // zero-byte files are ledger MARKERS (`batches/<id>`), not data
+    // files — no compaction can remove them, so counting them made
+    // fileCompactDue latch permanently once a stream outlived the budget
+    // and the sink re-ran its file compact every batch
+    val smallFiles = visibleFiles(fs, hp)
+      .count { case (_, len) => len > 0 && len < policy.smallFileBytes }
     val fracDue = totalIds.exists(t =>
       t > 0 && tombstones.toDouble / t >= policy.maxTombstoneFraction)
     MaintenanceStatus(

@@ -38,10 +38,12 @@ object Bm25 extends graft.ops.IndexLifecycle {
 
 
   /** Lowercase word tokens; the same closed token law the oracle reruns
-    * (`[^a-z0-9]+` split on the lowercased text).
+    * (`[^a-z0-9]+` split on the lowercased text, empty tokens dropped,
+    * null text → no tokens), evaluated by the codegen'd
+    * [[graft.functions.WordTokens]] kernel.
     */
   def tokensCol(text: Column): Column =
-    filter(split(lower(coalesce(text, lit(""))), "[^a-z0-9]+"), t => length(t) > 0)
+    graft.functions.TextExpressions.wordTokens(text)
 
   /** Inverted index.
     *
@@ -94,11 +96,24 @@ object Bm25 extends graft.ops.IndexLifecycle {
     Index(postings, terms, n, if (n == 0) 0.0 else stats.getLong(1).toDouble / n)
   }
 
-  /** The postings computation shared by [[buildIndex]] (in-memory),
-    * [[writeIndex]], and [[appendIndex]] — see [[buildIndex]] for the
-    * single-exchange shape.
+  /** The in-memory postings of [[buildIndex]], aggregated on their
+    * natural keys — see [[buildIndex]] for the single-exchange shape.
     */
   private[graft] def rawPostings(docs: DataFrame, idCol: String, textCol: String): DataFrame =
+    docTerms(docs, idCol, textCol)
+      .groupBy("doc_id", "dl", "term")
+      .agg(count(lit(1)).as("tf"))
+      .select("doc_id", "term", "tf", "dl")
+
+  /** One `(doc_id, dl, term)` row per token occurrence, each doc
+    * tokenized ONCE: `dl` is `size` of the same token array the explode
+    * reads. The explode is the OUTER form (its empty-doc null row is
+    * dropped right after) because Spark's `InferFiltersFromGenerate`
+    * copies a plain explode's input into a `size(tokens) > 0` filter
+    * below the projection, which evaluates the tokenizer a second time
+    * per doc.
+    */
+  private def docTerms(docs: DataFrame, idCol: String, textCol: String): DataFrame =
     docs
       .select(
         col(idCol).cast("long").as("doc_id"),
@@ -106,10 +121,44 @@ object Bm25 extends graft.ops.IndexLifecycle {
       .select(
         col("doc_id"),
         size(col("__toks")).cast("long").as("dl"),
-        explode(col("__toks")).as("term"))
-      .groupBy("doc_id", "dl", "term")
-      .agg(count(lit(1)).as("tf"))
-      .select("doc_id", "term", "tf", "dl")
+        explode_outer(col("__toks")).as("term"))
+      .where(col("term").isNotNull)
+
+  /** The at-rest postings `(doc_id, term, tf, dl, bucket)` of
+    * [[writeIndex]] and [[appendIndex]], behind ONE postings-sized
+    * exchange that is already the write's bucket alignment: token rows
+    * are hash-partitioned on `(bucket, salt)` (salt = doc hash mod
+    * `filesPerBucket`), and the tf aggregate groups on
+    * `(bucket, salt, doc_id, dl, term)` — a superset of the partitioning
+    * keys, so it needs no exchange of its own (bucket and salt are
+    * functions of term and doc_id: the values are the natural-key
+    * aggregate's). Every partition holds whole `(bucket, salt)` groups,
+    * so the partitioned write lands bucket-pure files, at most
+    * `filesPerBucket` per bucket — exactly one at 1. The partition count
+    * is `buckets × filesPerBucket`, capped at the session's (sized)
+    * shuffle width: a build that fits one partition writes its bucket
+    * files from one task instead of paying a task (conf
+    * deserialization, committer set-up) per bucket.
+    * `filesPerBucket ≤ 0` skips the alignment and aggregates on the
+    * natural keys (see [[writeIndex]]).
+    */
+  private[graft] def bucketedPostings(
+      docs: DataFrame, idCol: String, textCol: String,
+      termBuckets: Int, filesPerBucket: Int): DataFrame = {
+    val terms = docTerms(docs, idCol, textCol)
+      .withColumn("bucket", bucketCol(col("term"), termBuckets))
+    val grouped =
+      if (filesPerBucket <= 0) terms.groupBy("bucket", "doc_id", "dl", "term")
+      else terms
+        .withColumn("__salt", pmod(xxhash64(col("doc_id")), lit(filesPerBucket)))
+        .repartition(
+          math.min(termBuckets * filesPerBucket,
+            docs.sparkSession.sessionState.conf.numShufflePartitions),
+          col("bucket"), col("__salt"))
+        .groupBy("bucket", "__salt", "doc_id", "dl", "term")
+    grouped.agg(count(lit(1)).as("tf"))
+      .select("doc_id", "term", "tf", "dl", "bucket")
+  }
 
   // ------------------------------------------------------------- at rest
 
@@ -182,55 +231,56 @@ object Bm25 extends graft.ops.IndexLifecycle {
     val spark = docs.sparkSession
     import spark.implicits._
     // build shuffles sized from the input docs (×3 bounds the token
-    // explode; the bucket-aligned postings write keeps its explicit
-    // repartition count either way) — Layout.withShuffleSizedTo
+    // explode) — Layout.withShuffleSizedTo; the bucket-aligned postings
+    // exchange takes that width up to buckets × filesPerBucket. The build
+    // has no join for AQE to re-plan, so a build that fits one partition
+    // runs without it: one job per query instead of one per shuffle stage
     val (n, totDl) = graft.ops.Layout.withShuffleSizedTo(spark,
-      graft.ops.Layout.planBytes(docs) * 3, disableAqeAtOne = false) {
-    // one tokenize+aggregate pass feeds all four tables — persist, or
-    // every write below re-runs the corpus build (the double-eval trap)
-    val bucketed = rawPostings(docs, idCol, textCol)
-      .withColumn("bucket", bucketCol(col("term"), termBuckets))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+      graft.ops.Layout.planBytes(docs) * 3) {
+      // ONE tokenize pass and ONE postings-sized exchange feed all four
+      // tables, materialized once (the checkpoint keeps the
+      // bucket-aligned partitioning the postings write needs), or every
+      // write below re-runs the corpus build (the double-eval trap).
+      // Postings write shape — a measured storage-dependent trade:
+      //  - filesPerBucket ≥ 1 (default): the exchange is doc-salted, so
+      //    every output file is bucket-pure, at most filesPerBucket per
+      //    bucket, from at most buckets × filesPerBucket write tasks. At
+      //    sf0.1 this was 448 → 14 files and −25% write time; on object
+      //    stores / HDFS, bounding file count is what keeps the metadata
+      //    layer alive at 100 TB.
+      //  - filesPerBucket ≤ 0: the aggregate's own natural-key exchange
+      //    (partitions × buckets small files). On LOCAL disk, where
+      //    small files are unpriced, this won once the postings were big
+      //    enough that a separate alignment exchange dominated (measured
+      //    45 s vs 107 s at 125M postings, local[32]) — the wrong default
+      //    for a real cluster, offered for local pipelines.
+      val bucketed = graft.ops.Ann.materializeOnce(
+        bucketedPostings(docs, idCol, textCol, termBuckets, filesPerBucket))
       // ONE postings aggregation feeds the docs/ table AND (N, tot_dl):
       // sum(tf) over a doc's postings is its token count (tf counts the
       // same token array dl sizes), so the stats fold rides the docs
       // ledger (doc-count-sized) instead of paying a second
-      // postings-sized count_distinct pass (the round-15 fusion; was two
-      // full passes over `bucketed` per build)
+      // postings-sized count_distinct pass
       val docsTbl = graft.ops.Ann.materializeOnce(
         bucketed.select("doc_id", "dl").distinct())
       val stats = docsTbl.agg(count(lit(1)).as("n"), sum("dl").as("tot")).head()
       val n = stats.getLong(0)
       val totDl = if (n == 0) 0L else stats.getLong(1)
-      // Postings write shape — a measured storage-dependent trade:
-      //  - filesPerBucket ≥ 1 (default): doc-salted repartition keeps
-      //    every output file bucket-pure with buckets × filesPerBucket
-      //    write tasks. At sf0.1 this was 448 → 14 files and −25% write
-      //    time; on object stores / HDFS, bounding file count is what
-      //    keeps the metadata layer alive at 100 TB.
-      //  - filesPerBucket ≤ 0: skip the alignment shuffle and write from
-      //    the aggregate's natural partitioning (partitions × buckets
-      //    small files). On LOCAL disk, where small files are unpriced,
-      //    this wins once the postings are big enough that the extra
-      //    exchange dominates (measured 45 s vs 107 s at 125M postings,
-      //    local[32]) — the wrong default for a real cluster, offered
-      //    for local pipelines.
-      val postingsOut =
-        if (filesPerBucket <= 0) bucketed
-        else bucketed.repartition(termBuckets * filesPerBucket, col("bucket"),
-          pmod(xxhash64(col("doc_id")), lit(math.max(1, filesPerBucket))))
       // meta rides the same concurrent wave as the four segment tables
       // (guide §2.6 overlap): the commit marker below is still the LAST
       // write, so readers never see a half-built index — same crash
       // window as the sequential ordering, 5 small jobs' wall ≈ the max
       // instead of the sum
       graft.ops.Layout.mapConcurrently[() => Unit, Unit](Seq(
-        () => writeSegment(spark, path, 0L, postingsOut, bucketed, docsTbl,
+        () => writeSegment(spark, path, 0L, bucketed, docsTbl,
           n, totDl, overwrite = true),
         () => Seq(termBuckets).toDF("term_buckets")
           .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")),
         parallelism = 2)(_())
+      // every table is written: free both materializations now, not when
+      // ContextCleaner next sees them collected (a build's checkpoints
+      // would otherwise stay pinned into the next build)
+      Seq(bucketed, docsTbl).foreach(graft.ops.Ann.release)
       resetCommits(spark, path, Seq(0L))
       // a rebuild replaces the WHOLE index state: the previous life's
       // _tombstones sidecar and batches ledger go with it, or loadIndex
@@ -238,7 +288,6 @@ object Bm25 extends graft.ops.IndexLifecycle {
       // and appendIndexBatch would no-op previously used batch ids
       graft.ops.Layout.clearIndexSidecars(spark, path)
       (n, totDl)
-    } finally bucketed.unpersist()
     }
     // the driver already holds every load scalar: no read-back of meta
     // and stats (loadIndex's scan)
@@ -334,9 +383,9 @@ object Bm25 extends graft.ops.IndexLifecycle {
     ((committedSegs(spark, path) ++ dirSegs) :+ -1L).max + 1
   }
 
-  /** The four table writes of one segment (postings already bucketed;
-    * `docsTbl` the pre-materialized `(doc_id, dl)` ledger rows; marker
-    * NOT written here — callers commit last). The writes land
+  /** The four table writes of one segment (`postings` materialized and
+    * bucket-aligned; `docsTbl` the pre-materialized `(doc_id, dl)` ledger
+    * rows; marker NOT written here — callers commit last). The writes land
     * CONCURRENTLY (guide §2.6): they are independent jobs over already
     * materialized inputs targeting four disjoint directories, and the
     * `_commits/<seg>` marker — the only thing that makes them visible —
@@ -349,8 +398,7 @@ object Bm25 extends graft.ops.IndexLifecycle {
       spark: org.apache.spark.sql.SparkSession,
       path: String,
       seg: Long,
-      postingsOut: DataFrame,
-      bucketed: DataFrame,
+      postings: DataFrame,
       docsTbl: DataFrame,
       nDocs: Long,
       totDl: Long,
@@ -358,9 +406,9 @@ object Bm25 extends graft.ops.IndexLifecycle {
     import spark.implicits._
     val mode = if (overwrite) "overwrite" else "append"
     graft.ops.Layout.mapConcurrently[() => Unit, Unit](Seq(
-      () => postingsOut.withColumn("seg", lit(seg))
+      () => postings.withColumn("seg", lit(seg))
         .write.mode(mode).partitionBy("seg", "bucket").parquet(s"$path/postings"),
-      () => bucketed.groupBy("term").agg(count(lit(1)).as("df"))
+      () => postings.groupBy("term").agg(count(lit(1)).as("df"))
         .withColumn("seg", lit(seg))
         .write.mode(mode).partitionBy("seg").parquet(s"$path/terms"),
       () => docsTbl.select("doc_id", "dl")
@@ -469,10 +517,10 @@ object Bm25 extends graft.ops.IndexLifecycle {
     // materialize ONCE before any write: the delta's lineage reads the
     // docs/ ledger this append is about to extend (same swap discipline
     // as VectorIndex.append), and the four writes below must not each
-    // re-run the tokenize+aggregate build
+    // re-run the tokenize+aggregate build. One bucket-aligned exchange:
+    // one file per (seg, bucket)
     val postings = graft.ops.Ann.materializeOnce(
-      rawPostings(fresh, "doc_id", textCol)
-        .withColumn("bucket", bucketCol(col("term"), nb)))
+      bucketedPostings(fresh, "doc_id", textCol, nb, filesPerBucket = 1))
     // one aggregation feeds the docs/ ledger AND (n, tot_dl) — the same
     // sum(tf) == sum(dl) fusion as writeIndex (one postings pass, not two)
     val docsTbl = graft.ops.Ann.materializeOnce(
@@ -484,9 +532,9 @@ object Bm25 extends graft.ops.IndexLifecycle {
     // so a crash anywhere above leaves an invisible orphan, never a
     // half-applied append readers can see
     val seg = nextSegId(spark, path)
-    writeSegment(spark, path, seg,
-      postings.repartition(col("bucket")), postings, docsTbl,
+    writeSegment(spark, path, seg, postings, docsTbl,
       n, stats.getLong(1), overwrite = false)
+    Seq(postings, docsTbl).foreach(graft.ops.Ann.release)
     commitSeg(spark, path, seg)
     n
     }

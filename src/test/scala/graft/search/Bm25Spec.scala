@@ -479,21 +479,100 @@ class Bm25Spec extends SparkSpec {
       Seq((0L, "zucchini")).toDF("query_id", "query_text"), none, 5).count() == 0)
   }
 
+  /** Every physical node of `p`, through adaptive plans, query stages
+    * and subqueries. */
+  private def planNodes(
+      p: org.apache.spark.sql.execution.SparkPlan): Seq[org.apache.spark.sql.execution.SparkPlan] = {
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    val inner = p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case q: QueryStageExec => Seq(q.plan)
+      case _ => p.children ++ p.subqueries
+    }
+    p +: inner.flatMap(planNodes)
+  }
+
+  /** The executed plans of every query `body` runs on this session. */
+  private def executedPlans(body: => Unit): Seq[org.apache.spark.sql.execution.SparkPlan] = {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[
+      org.apache.spark.sql.execution.SparkPlan]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit = {
+        plans.add(qe.executedPlan); ()
+      }
+      override def onFailure(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+    }
+    org.apache.spark.ListenerBusDrain.drain(spark.sparkContext)
+    spark.listenerManager.register(listener)
+    try {
+      body
+      org.apache.spark.ListenerBusDrain.drain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    import scala.jdk.CollectionConverters._
+    plans.asScala.toSeq
+  }
+
   test("index build plan: no window stage, one postings exchange") {
     // buildIndex checkpoints the postings (the probe/terms/stats reuse),
-    // which hides the build plan — assert on the raw build subtree, the
-    // plan the checkpoint materializes
-    val raw = Bm25.rawPostings(corpus, "doc_id", "text")
-    val plan = raw.queryExecution.executedPlan.toString
-    assert(!plan.contains("Window ["),
-      s"dl must come from size(tokens), not a doc-partitioned window:\n$plan")
-    assert(plan.linesIterator.count(_.contains("Exchange hashpartitioning")) == 1,
-      s"postings must need exactly one keyed exchange:\n$plan")
+    // which hides the build plan — assert on the raw build subtrees, the
+    // plans the checkpoints materialize: the in-memory build's natural-key
+    // aggregate and the at-rest build's bucket-aligned one
+    for (raw <- Seq(Bm25.rawPostings(corpus, "doc_id", "text"),
+        Bm25.bucketedPostings(corpus, "doc_id", "text", 8, 2))) {
+      val plan = raw.queryExecution.executedPlan.toString
+      assert(!plan.contains("Window ["),
+        s"dl must come from size(tokens), not a doc-partitioned window:\n$plan")
+      assert(plan.linesIterator.count(_.contains("Exchange hashpartitioning")) == 1,
+        s"postings must need exactly one keyed exchange:\n$plan")
+    }
     // and the built index serves from the materialization, not a rebuild
     val idx = Bm25.buildIndex(corpus, "doc_id", "text")
     assert(idx.postings.queryExecution.analyzed.collect {
       case _: org.apache.spark.sql.execution.LogicalRDD => true
     }.nonEmpty, "postings must read the checkpointed build")
+    // writeIndex end to end: every query it runs reads one checkpointed
+    // tokenize pass — no columnar cache, no interpreted lambda, and the
+    // tokenizer evaluated exactly once over the doc scan (no inferred
+    // size(tokens) > 0 filter re-tokenizing below the explode)
+    // (from a file scan: over a local relation the tokenizer would fold
+    // into the driver-side LocalTableScan)
+    val dir = tempDir("graft_bm25_plan")
+    corpus.write.parquet(s"$dir/docs")
+    val docs = spark.read.parquet(s"$dir/docs")
+    val plans = executedPlans {
+      Bm25.writeIndex(docs, "doc_id", "text", s"$dir/idx", termBuckets = 4)
+    }
+    val nodes = plans.flatMap(planNodes)
+    assert(plans.nonEmpty)
+    assert(!nodes.exists(
+      _.isInstanceOf[org.apache.spark.sql.execution.columnar.InMemoryTableScanExec]),
+      s"writeIndex must not scan an InMemoryRelation:\n${plans.mkString("\n")}")
+    def exprs[T](f: PartialFunction[org.apache.spark.sql.catalyst.expressions.Expression, T]) =
+      nodes.flatMap(_.expressions.flatMap(_.collect(f)))
+    assert(exprs {
+      case l: org.apache.spark.sql.catalyst.expressions.LambdaFunction => l
+    }.isEmpty, s"writeIndex must run no lambdafunction:\n${plans.mkString("\n")}")
+    assert(exprs { case w: graft.functions.WordTokens => w }.size == 1,
+      s"the doc scan must tokenize once:\n${plans.mkString("\n")}")
+  }
+
+  test("at rest: postings write one file per (seg, bucket) at filesPerBucket = 1") {
+    val docs = (0L until 200L).map(i => (i, s"w${i % 37} w${i % 11} common x$i"))
+      .toDF("doc_id", "text")
+    for (fpb <- Seq(1, 3)) {
+      val path = s"${tempDir("graft_bm25_files")}/idx"
+      Bm25.writeIndex(docs, "doc_id", "text", path, termBuckets = 8, filesPerBucket = fpb)
+      val bucketDirs = new java.io.File(s"$path/postings/seg=0").listFiles()
+        .filter(_.getName.startsWith("bucket="))
+      assert(bucketDirs.length == 8, s"every bucket holds postings: ${bucketDirs.toSeq}")
+      bucketDirs.foreach { d =>
+        val n = d.listFiles().count(_.getName.endsWith(".parquet"))
+        if (fpb == 1) assert(n == 1, s"$d: $n files, want 1")
+        else assert(n >= 1 && n <= fpb, s"$d: $n files, want 1..$fpb")
+      }
+    }
   }
 
   test("rrfFuse single-list fusion preserves the input order") {
