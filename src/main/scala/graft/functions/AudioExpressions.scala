@@ -50,9 +50,8 @@ case class WavRms(left: Expression, right: Expression)
 
 object AudioExpressions {
   def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("wav_pack", es => WavPack(es(0), es(1)), "built-in")
-    reg.createOrReplaceTempFunction("wav_rms", es => WavRms(es(0), es(1)), "built-in")
+    VectorFunctions.registerIfAbsent(spark, "wav_pack", es => WavPack(es(0), es(1)))
+    VectorFunctions.registerIfAbsent(spark, "wav_rms", es => WavRms(es(0), es(1)))
   }
 
   def wavPack(samples: Column, rate: Column): Column =

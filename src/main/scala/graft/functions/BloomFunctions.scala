@@ -27,9 +27,8 @@ import org.apache.spark.util.sketch.BloomFilter
 object BloomFunctions {
 
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bloom_might_contain",
-      es => BloomFilterMightContain(es.head, es(1)), "built-in")
+    VectorFunctions.registerIfAbsent(spark, "bloom_might_contain",
+      es => BloomFilterMightContain(es.head, es(1)))
 
   /** `bloom_might_contain(filterBytes, longKey)` — true when `longKey`
     * MAY be in the serialized filter (no false negatives).

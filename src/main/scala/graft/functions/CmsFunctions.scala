@@ -143,10 +143,9 @@ object CmsFunctions {
     * (idempotent).
     */
   def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction(
-      "cms_merge", es => CmsMerge(es.head).toAggregateExpression(), "built-in")
-    reg.createOrReplaceTempFunction(
-      "cms_estimate", es => CmsEstimate(es(0), es(1)), "built-in")
+    VectorFunctions.registerIfAbsent(spark, "cms_merge",
+      es => CmsMerge(es.head).toAggregateExpression())
+    VectorFunctions.registerIfAbsent(spark, "cms_estimate",
+      es => CmsEstimate(es(0), es(1)))
   }
 }

@@ -212,13 +212,9 @@ object MinHashAggregate {
     * (idempotent).
     */
   def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "minhash_sig",
-      es => MinHashSig(es(0), es(1)).toAggregateExpression(),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "sig_match_count",
-      es => SigMatchCount(es(0), es(1)),
-      "built-in")
+    VectorFunctions.registerIfAbsent(spark, "minhash_sig",
+      es => MinHashSig(es(0), es(1)).toAggregateExpression())
+    VectorFunctions.registerIfAbsent(spark, "sig_match_count",
+      es => SigMatchCount(es(0), es(1)))
   }
 }

@@ -61,8 +61,6 @@ case class RecursiveSplitGenerator(
 object RecursiveSplitGenerator {
   /** Registers `recursive_split(text, size, overlap)` (idempotent). */
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "recursive_split",
-      es => RecursiveSplitGenerator(es(0), es(1), es(2)),
-      "built-in")
+    VectorFunctions.registerIfAbsent(spark, "recursive_split",
+      es => RecursiveSplitGenerator(es(0), es(1), es(2)))
 }

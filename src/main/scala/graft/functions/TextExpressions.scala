@@ -336,16 +336,15 @@ object WordTokens {
 
 object TextExpressions {
   def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("pdf_extract", es => PdfExtract(es.head), "built-in")
-    reg.createOrReplaceTempFunction(
-      "compression_ratio", es => CompressionRatio(es.head), "built-in")
-    reg.createOrReplaceTempFunction("xlsx_extract", es => XlsxExtract(es.head), "built-in")
-    reg.createOrReplaceTempFunction("xlsx_pack", es => XlsxPack(es.head), "built-in")
-    reg.createOrReplaceTempFunction(
-      "phrase_count", es => PhraseCount(es.head, es(1)), "built-in")
-    reg.createOrReplaceTempFunction("simhash64", es => SimHash64(es.head), "built-in")
-    reg.createOrReplaceTempFunction("word_tokens", es => WordTokens(es.head), "built-in")
+    VectorFunctions.registerIfAbsent(spark, "pdf_extract", es => PdfExtract(es.head))
+    VectorFunctions.registerIfAbsent(spark, "compression_ratio",
+      es => CompressionRatio(es.head))
+    VectorFunctions.registerIfAbsent(spark, "xlsx_extract", es => XlsxExtract(es.head))
+    VectorFunctions.registerIfAbsent(spark, "xlsx_pack", es => XlsxPack(es.head))
+    VectorFunctions.registerIfAbsent(spark, "phrase_count",
+      es => PhraseCount(es.head, es(1)))
+    VectorFunctions.registerIfAbsent(spark, "simhash64", es => SimHash64(es.head))
+    VectorFunctions.registerIfAbsent(spark, "word_tokens", es => WordTokens(es.head))
   }
 
   def pdfExtract(c: Column): Column = call_function("pdf_extract", c)

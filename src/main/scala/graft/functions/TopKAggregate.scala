@@ -129,8 +129,6 @@ case class TopKByDist(
 object TopKAggregate {
   /** Registers `topk_by_dist(dist, id, k)` (idempotent). */
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "topk_by_dist",
-      es => TopKByDist(es(0), es(1), es(2)).toAggregateExpression(),
-      "built-in")
+    VectorFunctions.registerIfAbsent(spark, "topk_by_dist",
+      es => TopKByDist(es(0), es(1), es(2)).toAggregateExpression())
 }

@@ -386,22 +386,32 @@ object RpBandKeyExpr {
 
 object VectorFunctions {
 
+  /** Register `name` unless the session already has it — the one
+    * registration path of every graft function. A session started through
+    * [[graft.GraftExtensions]] holds every name from its start, so the
+    * per-operation `register` calls add nothing there (replacing a
+    * registered function logs a WARN per name and call).
+    */
+  private[graft] def registerIfAbsent(spark: SparkSession, name: String,
+      builder: Seq[Expression] => Expression): Unit = {
+    val reg = spark.sessionState.functionRegistry
+    if (!reg.functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier(name)))
+      reg.createOrReplaceTempFunction(name, builder, "built-in")
+  }
+
   /** Register the vector expressions in the session function registry so they
     * are callable from both the Column API (via [[l2Distance]] etc.) and SQL.
     * Idempotent.
     */
   def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("l2_distance", es => L2Distance(es.head, es(1)), "built-in")
-    reg.createOrReplaceTempFunction("dot_product", es => DotProduct(es.head, es(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "cosine_similarity", es => CosineSimilarity(es.head, es(1)), "built-in")
-    reg.createOrReplaceTempFunction("vector_norm", es => VectorNorm(es.head), "built-in")
-    reg.createOrReplaceTempFunction("unit_vector", es => UnitVector(es.head), "built-in")
-    reg.createOrReplaceTempFunction("unit_vector_f", es => UnitVectorF(es.head), "built-in")
-    reg.createOrReplaceTempFunction(
-      "dot_product_d", es => DotProductDouble(es.head, es(1)), "built-in")
-    reg.createOrReplaceTempFunction("rp_band_key", buildRpBandKey, "built-in")
+    registerIfAbsent(spark, "l2_distance", es => L2Distance(es.head, es(1)))
+    registerIfAbsent(spark, "dot_product", es => DotProduct(es.head, es(1)))
+    registerIfAbsent(spark, "cosine_similarity", es => CosineSimilarity(es.head, es(1)))
+    registerIfAbsent(spark, "vector_norm", es => VectorNorm(es.head))
+    registerIfAbsent(spark, "unit_vector", es => UnitVector(es.head))
+    registerIfAbsent(spark, "unit_vector_f", es => UnitVectorF(es.head))
+    registerIfAbsent(spark, "dot_product_d", es => DotProductDouble(es.head, es(1)))
+    registerIfAbsent(spark, "rp_band_key", buildRpBandKey)
     TopKAggregate.register(spark)
     CmsFunctions.register(spark)
     TextExpressions.register(spark)

@@ -58,11 +58,9 @@ case class AviFrames(child: Expression)
 
 object VideoExpressions {
   def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction(
-      "avi_pack", es => AviPack(es(0), es(1), es(2), es(3)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "avi_frames", es => AviFrames(es.head), "built-in")
+    VectorFunctions.registerIfAbsent(spark, "avi_pack",
+      es => AviPack(es(0), es(1), es(2), es(3)))
+    VectorFunctions.registerIfAbsent(spark, "avi_frames", es => AviFrames(es.head))
   }
 
   def aviPack(frames: Column, width: Column, height: Column, fps: Column): Column =

@@ -2,6 +2,7 @@ package graft.index
 
 import graft.embed.{Embedder, HashingTfIdfEmbedder}
 import graft.transform.{Chunker, Sectionizer}
+import graft.ops.Layout
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -49,10 +50,27 @@ object VectorIndex {
   }
 
   def write(index: DataFrame, path: String): Unit =
-    index.write.mode("overwrite").partitionBy("section").parquet(path)
+    stored(index).write.mode("overwrite").partitionBy("section").parquet(path)
 
   def load(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    Layout.readTable(spark, DataDdl, path)
+
+  /** The stored row: [[graft.model.IndexedChunk]]'s columns plus the
+    * nullable merge-on-read `epoch` ([[upsertDocs]]); `section` is the
+    * partition directory. Files written before `epoch` existed read it as
+    * null, which the resolution law reads as epoch 0.
+    */
+  private val DataDdl = org.apache.spark.sql.Encoders
+    .product[graft.model.IndexedChunk].schema.add("epoch", "bigint").toDDL
+  private val TombDdl = "doc_id BIGINT, tomb_epoch BIGINT"
+  private val RetentionDdl = "retain_from BIGINT"
+
+  /** Rows as the writers store them: ids as BIGINT, whatever integral
+    * type the caller's doc ids carry, so [[DataDdl]] reads every file.
+    */
+  private def stored(rows: DataFrame): DataFrame =
+    rows.withColumn("chunk_id", col("chunk_id").cast("long"))
+      .withColumn("doc_id", col("doc_id").cast("long"))
 
   /** Fit the index embedder on a corpus — kept separate from [[build]] so
     * the SAME fitted instance can later embed deltas ([[append]]) and
@@ -138,7 +156,7 @@ object VectorIndex {
       val appended = fresh.localCheckpoint(true)
       val n = appended.count()
       if (n > 0)
-        appended.write.mode("append").partitionBy("section").parquet(path)
+        stored(appended).write.mode("append").partitionBy("section").parquet(path)
       n
     } finally delta.unpersist()
   }
@@ -200,11 +218,7 @@ object VectorIndex {
           s"history below it was folded by compactRetain; earliest " +
           s"readable view is AS OF ${h - 1}")
     }
-    val raw = spark.read.option("mergeSchema", "true").parquet(path)
-    val data =
-      if (raw.columns.contains("epoch")) raw
-      else raw.withColumn("epoch", lit(null).cast("long"))
-    resolveActiveAsOf(data, readTombstones(spark, path), asOf)
+    resolveActiveAsOf(load(spark, path), readTombstones(spark, path), asOf)
   }
 
   private def retentionPath(path: String) = s"$path/_retention"
@@ -214,7 +228,8 @@ object VectorIndex {
     val p = new org.apache.hadoop.fs.Path(retentionPath(path))
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
     if (!fs.exists(p)) None
-    else Some(spark.read.parquet(retentionPath(path)).head.getLong(0))
+    else Some(Layout.readTable(spark, RetentionDdl, retentionPath(path))
+      .head.getLong(0))
   }
 
   private def tombPath(path: String) = s"$path/_tombstones"
@@ -222,7 +237,7 @@ object VectorIndex {
   private def readTombstones(spark: SparkSession, path: String): DataFrame = {
     val p = new org.apache.hadoop.fs.Path(tombPath(path))
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(p)) spark.read.parquet(tombPath(path))
+    if (fs.exists(p)) Layout.readTable(spark, TombDdl, tombPath(path))
     else spark.range(0)
       .select(col("id").as("doc_id"), lit(0L).as("tomb_epoch"))
   }
@@ -259,14 +274,10 @@ object VectorIndex {
     val hPath = new org.apache.hadoop.fs.Path(path)
     val fs = hPath.getFileSystem(spark.sessionState.newHadoopConf())
     val delta0 =
-      if (fs.exists(hPath)) {
-        val sameEpoch = spark.read.option("mergeSchema", "true").parquet(path)
-        if (sameEpoch.columns.contains("epoch"))
-          built.join(
-            sameEpoch.where(col("epoch") === epoch).select("chunk_id"),
-            Seq("chunk_id"), "left_anti")
-        else built
-      } else built
+      if (fs.exists(hPath))
+        built.join(load(spark, path).where(col("epoch") === epoch)
+          .select("chunk_id"), Seq("chunk_id"), "left_anti")
+      else built
     val delta = delta0.localCheckpoint(true)
     // Tombstone ids come from the INPUT doc set, not the built chunks: a
     // revision that chunks to zero rows (empty/whitespace text) must still
@@ -281,20 +292,15 @@ object VectorIndex {
     deleteDocs(spark, ids, path, epoch - 1)
     val n = delta.count()
     if (n > 0)
-      delta.write.mode("append").partitionBy("section").parquet(path)
+      stored(delta).write.mode("append").partitionBy("section").parquet(path)
     n
   }
 
   /** Read the index with deletes resolved. Old files without the `epoch`
     * column surface it as null → epoch 0 under the resolution law.
     */
-  def loadActive(spark: SparkSession, path: String): DataFrame = {
-    val raw = spark.read.option("mergeSchema", "true").parquet(path)
-    val data =
-      if (raw.columns.contains("epoch")) raw
-      else raw.withColumn("epoch", lit(null).cast("long"))
-    resolveActive(data, readTombstones(spark, path))
-  }
+  def loadActive(spark: SparkSession, path: String): DataFrame =
+    resolveActive(load(spark, path), readTombstones(spark, path))
 
   /** Fold tombstones into the data: rewrite active rows, clear the
     * sidecar. Run when the tombstone table — not the index — grows large;
@@ -309,7 +315,7 @@ object VectorIndex {
     // The `_tombstones` sidecar lives inside the old generation's
     // directory, so it is swapped out (spent) together with the rows it
     // resolved.
-    graft.ops.Layout.replaceDirs(fs, Seq(path)) { case Seq(staged) =>
+    Layout.replaceDirs(fs, Seq(path)) { case Seq(staged) =>
     val active = loadActive(spark, path).localCheckpoint(true)
     val n = active.count()
     active.write.mode("overwrite").partitionBy("section").parquet(staged)
@@ -325,8 +331,7 @@ object VectorIndex {
     // existing horizon, so loadActiveAsOf refuses those reads loudly,
     // exactly like compactRetain.
     val maxEpoch =
-      if (!active.columns.contains("epoch")) 0L
-      else active.agg(max(coalesce(col("epoch"), lit(0L)))).head match {
+      active.agg(max(coalesce(col("epoch"), lit(0L)))).head match {
         case r if r.isNullAt(0) => 0L
         case r => r.getLong(0)
       }
@@ -371,14 +376,11 @@ object VectorIndex {
       spark: SparkSession, path: String, retainFrom: Long): (Long, Long) = {
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sessionState.newHadoopConf())
-    graft.ops.Layout.replaceDirs(fs, Seq(path)) { case Seq(staged) =>
+    Layout.replaceDirs(fs, Seq(path)) { case Seq(staged) =>
     retentionHorizon(spark, path).foreach(h => require(retainFrom >= h,
       s"compactRetain: retainFrom $retainFrom is below the existing " +
         s"horizon $h — history there is already folded"))
-    val raw = spark.read.option("mergeSchema", "true").parquet(path)
-    val data =
-      if (raw.columns.contains("epoch")) raw
-      else raw.withColumn("epoch", lit(null).cast("long"))
+    val data = load(spark, path)
     val before = data.count()
     val tombs = readTombstones(spark, path)
     // the folded base: rows alive at retainFrom-1, ORIGINAL epochs kept

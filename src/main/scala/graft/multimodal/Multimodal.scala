@@ -165,7 +165,7 @@ object Multimodal {
       media: DataFrame,
       dims: Int = 64,
       decoder: MediaDecoder = FakeDecoder): DataFrame = {
-    // composite-key bounds enforced loudly (the MaxTombstones stance):
+    // composite-key bounds enforced loudly (the tombstone-cap stance):
     // silently aliasing frame 2^20 of video N onto video N+1 would
     // corrupt attribution with no error
     val keyed = videoFrames(media)

@@ -763,7 +763,9 @@ object Ann extends IndexLifecycle {
     Layout.mapConcurrently[() => Unit, Unit](Seq(
       () => assigned.write.mode("overwrite")
         .partitionBy("centroid_id").parquet(s"$path/lists"),
-      () => centroids.write.mode("overwrite").parquet(s"$path/centroids")),
+      () => centroids.select(col("centroid_id").cast("int"),
+          col("centroid").cast("array<float>"))
+        .write.mode("overwrite").parquet(s"$path/centroids")),
       parallelism = 2)(_())
     // rebuild = whole-state replace: drop the previous life's
     // _tombstones sidecar and batches ledger (Layout.clearIndexSidecars
@@ -779,13 +781,16 @@ object Ann extends IndexLifecycle {
   def loadIvf(spark: SparkSession, path: String): (DataFrame, DataFrame) =
     (Layout.excludeTombstoned(
       spark, spark.read.parquet(s"$path/lists"), s"$path/_tombstones", "vec_id"),
-      spark.read.parquet(s"$path/centroids"))
+      Layout.readTable(spark, CentroidsDdl, s"$path/centroids"))
+
+  /** The coarse-quantizer table [[writeIvf]] fixes — also the HNSW
+    * router's, which [[buildIvfSampled]] trains. */
+  private[ops] val CentroidsDdl = "centroid_id INT, centroid ARRAY<FLOAT>"
 
   /** The stored coarse quantizer, positionally indexed by centroid_id. */
   private def loadIvfCentroids(spark: SparkSession, path: String): Array[Array[Float]] = {
-    val rows = spark.read.parquet(s"$path/centroids")
-      .select(col("centroid_id").cast("int"), col("centroid")).collect()
-      .sortBy(_.getInt(0))
+    val rows = Layout.readTable(spark, CentroidsDdl, s"$path/centroids")
+      .collect().sortBy(_.getInt(0))
     rows.zipWithIndex.foreach { case (r, i) =>
       require(r.getInt(0) == i,
         s"loadIvf: centroid ids not dense at $path (${r.getInt(0)} at position $i)")

@@ -545,31 +545,8 @@ object CorpusPipeline {
     graft.serve.SemanticCache
       .intakeBatch(spark, batch, cachePath, minCos, idOffset)
       .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
-    // optional size cap, applied AFTER the insert (the runs-itself
-    // stance): FIFO eviction by minted id, or — evictLru — recency
-    // folded from the landed disposition dirs (see
-    // [[graft.serve.CachedRag.cachedRagBatchBody]]); an at/below-cap
-    // pass costs one count. Legal under the sink's single-writer law.
-    cacheMaxEntries.foreach { cap =>
-      if (evictLru)
-        graft.serve.SemanticCache.evictCacheLru(spark, cachePath, outPath, cap)
-      else graft.serve.SemanticCache.evictCache(spark, cachePath, cap)
-    }
-    // disposition retention, same wiring + guard as
-    // [[graft.serve.CachedRag.cachedRagBatchBody]] (round 13)
-    retainBatches.foreach { keep =>
-      require(keep > 0, s"retainBatches $keep must be > 0")
-      val lruActive = evictLru && cacheMaxEntries.nonEmpty
-      if (batchId + 1 > keep) {
-        if (lruActive) {
-          graft.serve.SemanticCache.foldRecency(spark, outPath); ()
-        }
-        graft.serve.SemanticCache.pruneDispositions(spark, outPath,
-          batchId + 1 - keep, requireFolded = lruActive)
-      }
-      ()
-    }
-    ()
+    graft.serve.SemanticCache.afterBatch(spark, cachePath, outPath, batchId,
+      cacheMaxEntries, evictLru, retainBatches)
   }
 
   /** Streaming semantic-cache intake — the serving tier's continuous

@@ -362,15 +362,10 @@ object Dedup extends IndexLifecycle {
   // --------------------------------------------- at-rest signature store
 
   // Fixed store-table schemas: the write side pins these shapes, so
-  // readers declare them instead of paying a footer-inference driver JOB
-  // per spark.read.parquet (guide §6 metadata cost — the intake path
-  // reads meta+docs per micro-batch and the probes read bands/shingles/
-  // sigs per call; same recipe as Bm25.readTable).
-  private def readTable(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String, ddl: String): DataFrame =
-    spark.read.schema(
-      org.apache.spark.sql.types.StructType.fromDDL(ddl)).parquet(path)
+  // readers declare them (Layout.readTable) instead of paying a
+  // footer-inference driver JOB per read — the intake path reads
+  // meta+docs per micro-batch and the probes read bands/shingles/sigs
+  // per call.
   private val MetaDdl = "shingle_size INT, num_hashes INT, bands INT"
   private val DocsDdl = "doc_id BIGINT"
   private val BandsDdl = "doc_id BIGINT, band INT, band_key BIGINT"
@@ -384,7 +379,7 @@ object Dedup extends IndexLifecycle {
   private[graft] def readMinhashMeta(
       spark: org.apache.spark.sql.SparkSession,
       path: String): org.apache.spark.sql.Row =
-    readTable(spark, s"$path/meta", MetaDdl)
+    Layout.readTable(spark, MetaDdl, s"$path/meta")
       .select("shingle_size", "num_hashes", "bands").head
 
   /** The store's `docs/` append-idempotency ledger — schema'd read shared
@@ -392,7 +387,7 @@ object Dedup extends IndexLifecycle {
     */
   private[graft] def readMinhashDocs(
       spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
-    readTable(spark, s"$path/docs", DocsDdl).select("doc_id")
+    Layout.readTable(spark, DocsDdl, s"$path/docs").select("doc_id")
 
   /** Persist the corpus's minhash state under `path` — the signature
     * store a continuous-crawl pipeline keeps so each NEW batch is
@@ -480,9 +475,9 @@ object Dedup extends IndexLifecycle {
       path: String,
       idCol: String = "doc_id",
       textCol: String = "text"): Long = {
-    val meta = readTable(spark, s"$path/meta", MetaDdl)
+    val meta = Layout.readTable(spark, MetaDdl, s"$path/meta")
       .select("shingle_size", "num_hashes", "bands").head
-    val existing = readTable(spark, s"$path/docs", DocsDdl).select("doc_id")
+    val existing = Layout.readTable(spark, DocsDdl, s"$path/docs").select("doc_id")
     // append shuffles sized from the delta + the docs ledger's real
     // bytes (Layout.withShuffleSizedTo; ×4 bounds the shingle explode)
     Layout.withShuffleSizedTo(spark,
@@ -547,7 +542,7 @@ object Dedup extends IndexLifecycle {
   private def storedBands(
       spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
     Layout.excludeTombstoned(spark,
-      readTable(spark, s"$path/bands", BandsDdl),
+      Layout.readTable(spark, BandsDdl, s"$path/bands"),
       s"$path/_tombstones", "doc_id")
 
   /** Mark corpus docs deleted in the signature store — the
@@ -580,18 +575,14 @@ object Dedup extends IndexLifecycle {
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sessionState.newHadoopConf())
     val tombFiles = Layout.snapshotTombstoneFiles(fs, s"$path/_tombstones")
-    val dead =
-      if (tombFiles.isEmpty)
-        spark.range(0).select(col("id").as("doc_id"))
-      else spark.read.parquet(tombFiles.map(_.toString): _*)
-        .select(col("doc_id").cast("long").as("doc_id")).distinct()
+    val dead = Layout.deadIds(spark, tombFiles, "doc_id")
     val tableDdl = Seq("bands" -> BandsDdl, "sigs" -> SigsDdl,
       "shingles" -> ShinglesDdl, "docs" -> DocsDdl)
     val counts = Layout.replaceDirs(fs, tableDdl.map(t => s"$path/${t._1}")) { stages =>
     // ONE ledger pass yields both counts (`dead` is distinct, so each
     // docs row matches at most one dead row: count(*) is the old two-job
     // `count()` and count(__dead) the old semi-join count)
-    val cnt = readTable(spark, s"$path/docs", DocsDdl)
+    val cnt = Layout.readTable(spark, DocsDdl, s"$path/docs")
       .join(dead.withColumn("__dead", lit(1)), Seq("doc_id"), "left")
       .agg(count(lit(1)), count("__dead")).head
     val before = cnt.getLong(0)
@@ -603,7 +594,7 @@ object Dedup extends IndexLifecycle {
     // disjoint stages — guide §2.6); visibility flips only at the
     // sequential swaps after
     Layout.mapConcurrently(tableDdl.zip(stages), 4) { case ((t, ddl), staged) =>
-      readTable(spark, s"$path/$t", ddl)
+      Layout.readTable(spark, ddl, s"$path/$t")
         .join(dead, Seq("doc_id"), "left_anti")
         .write.mode("overwrite").parquet(staged)
     }
@@ -675,7 +666,7 @@ object Dedup extends IndexLifecycle {
       textCol: String = "text",
       minJaccard: Double = 0.8,
       maxBucketSize: Long = 1L << 20): DataFrame = {
-    val meta = readTable(spark, s"$path/meta", MetaDdl)
+    val meta = Layout.readTable(spark, MetaDdl, s"$path/meta")
       .select("shingle_size", "num_hashes", "bands").head
     val exploded = Ann.materializeOnce(
       shingleExplode(batch, idCol, textCol, meta.getInt(0))
@@ -734,7 +725,7 @@ object Dedup extends IndexLifecycle {
       .where(col("batch_id") =!= col("corpus_id"))
       .select("batch_id", "corpus_id")
       .distinct()
-    val corpusSets = readTable(spark, s"$path/shingles", ShinglesDdl)
+    val corpusSets = Layout.readTable(spark, ShinglesDdl, s"$path/shingles")
       .join(cand.select(col("corpus_id").as("doc_id")).distinct(),
         Seq("doc_id"), "left_semi")
       .groupBy("doc_id").agg(collect_set(col("__h")).as("__shc"))
@@ -774,7 +765,7 @@ object Dedup extends IndexLifecycle {
       textCol: String = "text",
       minJaccardEst: Double = 0.8,
       maxBucketSize: Long = 1L << 20): DataFrame = {
-    val meta = readTable(spark, s"$path/meta", MetaDdl)
+    val meta = Layout.readTable(spark, MetaDdl, s"$path/meta")
       .select("shingle_size", "num_hashes", "bands").head
     val numHashes = meta.getInt(1)
     val batchSigs = Ann.materializeOnce(
@@ -800,7 +791,7 @@ object Dedup extends IndexLifecycle {
     // rows; the exact probe is immune (collect_set), this one must fold
     // them or emit duplicate pairs. Duplicates are always exact row
     // copies (same doc → same signature), so any copy is the right one.
-    val corpusSigs = readTable(spark, s"$path/sigs", SigsDdl)
+    val corpusSigs = Layout.readTable(spark, SigsDdl, s"$path/sigs")
       .join(cand.select(col("corpus_id").as("doc_id")).distinct(),
         Seq("doc_id"), "left_semi")
       .dropDuplicates("doc_id")

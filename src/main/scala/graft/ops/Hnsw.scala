@@ -4,7 +4,6 @@ import scala.collection.mutable
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** Sharded HNSW graph ANN — the graph-walk member of the ANN family next
   * to the bucketing/quantization members ([[Ann]] LSH/RP/IVF, [[Pq]],
@@ -365,6 +364,13 @@ object Hnsw extends IndexLifecycle {
   private def metaPath(path: String) = s"$path/meta"
   private def segPath(path: String) = s"$path/segments"
 
+  // The columns [[write]] fixes for `meta/` and `segments/` ([[HnswRow]];
+  // `shard` is the partition directory), read through Layout.readTable.
+  private val MetaDdl =
+    "m INT, ef_construction INT, ef_search INT, num_shards INT, seed BIGINT"
+  private val SegmentDdl =
+    "id BIGINT, vec ARRAY<FLOAT>, level INT, links ARRAY<ARRAY<BIGINT>>, shard INT"
+
   /** Shared build: a `(shard, id, vec)` frame → at-rest adjacency rows,
     * one graph per shard built inside its task (sorted by id for the
     * deterministic insertion order every path relies on).
@@ -439,8 +445,8 @@ object Hnsw extends IndexLifecycle {
       vecCol: String = "embedding"): Unit = {
     Ann.requireIntegralId(index, idCol, "hnsw.append")
     val p = loadMeta(spark, path)
-    val maxShard = spark.read.parquet(segPath(path))
-      .agg(max(col("shard").cast("int"))).head.getInt(0)
+    val maxShard = Layout.readTable(spark, SegmentDdl, segPath(path))
+      .agg(max(col("shard"))).head.getInt(0)
     val rp = new org.apache.hadoop.fs.Path(routerPath(path))
     val fs = rp.getFileSystem(spark.sessionState.newHadoopConf())
     val sharded =
@@ -542,7 +548,7 @@ object Hnsw extends IndexLifecycle {
     val k = math.min(counts.length, counts.length - targetShards + p.numShards)
     val mergeShards = counts.take(k).map(_._1).toSeq
     val maxShard = counts.map(_._1).max
-    val vecs = spark.read.parquet(segPath(path))
+    val vecs = Layout.readTable(spark, SegmentDdl, segPath(path))
       .where(col("shard").isin(mergeShards.map(x => x: Any): _*))
       .select(col("id"), col("vec"))
       .dropDuplicates("id", "vec") // replayed-append copies fold here
@@ -571,7 +577,6 @@ object Hnsw extends IndexLifecycle {
   }
 
   private def tombPath(path: String) = tombstonesPath(path)
-  private val MaxTombstones = 1 << 22
 
   /** Mark ids deleted. Graphs are never rewritten (mark-delete, the
     * hnswlib/Lucene stance): probes keep TRAVERSING deleted nodes — they
@@ -585,26 +590,6 @@ object Hnsw extends IndexLifecycle {
     */
   def delete(spark: SparkSession, path: String, ids: Seq[Long]): Unit =
     markDeleted(spark, path, ids)
-
-  /** The probe-side tombstone set (empty when none). */
-  private def loadTombstones(spark: SparkSession, path: String): Set[Long] = {
-    val tp = new org.apache.hadoop.fs.Path(tombPath(path))
-    val fs = tp.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(tp)) Set.empty
-    else {
-      // distinct BEFORE the cap (repeated deletes of the same ids must
-      // not trip the refusal), id cast to long (an int-id sidecar must
-      // not ClassCastException at probe time) — the
-      // Layout.excludeTombstoned discipline
-      val rows = spark.read.parquet(tombPath(path))
-        .select(col("id").cast("long")).distinct()
-        .limit(MaxTombstones + 1).collect()
-      require(rows.length <= MaxTombstones,
-        s"hnsw probe: more than $MaxTombstones tombstones at $path — " +
-          "compact the index before probing")
-      rows.map(_.getLong(0)).toSet
-    }
-  }
 
   // ------------------------------------------------- routed (clustered)
 
@@ -624,8 +609,7 @@ object Hnsw extends IndexLifecycle {
 
   private def loadCentroids(
       spark: SparkSession, path: String): Array[(Int, Array[Float])] =
-    spark.read.parquet(routerPath(path))
-      .select(col("centroid_id").cast("int"), col("centroid"))
+    Layout.readTable(spark, Ann.CentroidsDdl, routerPath(path))
       .collect().map(r => (r.getInt(0), r.getSeq[Float](1).toArray))
       .sortBy(_._1)
 
@@ -731,10 +715,10 @@ object Hnsw extends IndexLifecycle {
       .filter(s => cells.contains(s % meta.numShards))
     val nShards = meta.numShards
     val qb = spark.sparkContext.broadcast(routed)
-    val tb = spark.sparkContext.broadcast(loadTombstones(spark, path))
-    spark.read.schema(segmentSchema).parquet(segPath(path))
+    val tb = spark.sparkContext.broadcast(
+      Layout.tombstonedIds(spark, tombPath(path), "id").toSet)
+    Layout.readTable(spark, SegmentDdl, segPath(path))
       .where(col("shard").isin(wanted.map(Integer.valueOf): _*))
-      .select(col("shard").cast("int"), col("id"), col("vec"), col("level"), col("links"))
       .as[HnswRow]
       .groupByKey(_.shard)
       .flatMapGroups { (shard, rows) =>
@@ -783,7 +767,7 @@ object Hnsw extends IndexLifecycle {
     // Layout.replaceDirs heals a crashed earlier compact before the read
     // below, then swaps the new generation in by rename-aside
     val counts = Layout.replaceDirs(fs, Seq(segPath(path))) { case Seq(staged) =>
-    val segs = spark.read.parquet(segPath(path))
+    val segs = Layout.readTable(spark, SegmentDdl, segPath(path))
     val before = segs.select(col("shard")).distinct().count().toInt
     // replay-duplicated rows (appendBatch's crash window) fold away here;
     // a same-id row with DIFFERENT content is not an upsert and stays.
@@ -792,10 +776,7 @@ object Hnsw extends IndexLifecycle {
     val vecs0 = segs.select(col("id"), col("vec")).dropDuplicates("id", "vec")
     val vecs =
       if (tombFiles.isEmpty) vecs0
-      else vecs0.join(
-        spark.read.parquet(tombFiles.map(_.toString): _*)
-          .select(col("id").cast("long").as("id")).distinct(),
-        Seq("id"), "left_anti")
+      else vecs0.join(Layout.deadIds(spark, tombFiles, "id"), Seq("id"), "left_anti")
     val routed = fs.exists(new org.apache.hadoop.fs.Path(routerPath(path)))
     val sharded =
       if (!routed)
@@ -821,22 +802,8 @@ object Hnsw extends IndexLifecycle {
     counts
   }
 
-  /** The column types [[write]] pins for `meta/` and `segments/` (the
-    * segment files' `shard` is the partition directory). Readers declare
-    * them instead of inferring them, which costs a job per read.
-    */
-  private val metaSchema = StructType(Seq(
-    StructField("m", IntegerType), StructField("ef_construction", IntegerType),
-    StructField("ef_search", IntegerType), StructField("num_shards", IntegerType),
-    StructField("seed", LongType)))
-  private val segmentSchema = StructType(Seq(
-    StructField("id", LongType), StructField("vec", ArrayType(FloatType)),
-    StructField("level", IntegerType),
-    StructField("links", ArrayType(ArrayType(LongType))),
-    StructField("shard", IntegerType)))
-
   def loadMeta(spark: SparkSession, path: String): Params = {
-    val r = spark.read.schema(metaSchema).parquet(metaPath(path)).head
+    val r = Layout.readTable(spark, MetaDdl, metaPath(path)).head
     Params(r.getAs[Int]("m"), r.getAs[Int]("ef_construction"),
       r.getAs[Int]("ef_search"), r.getAs[Int]("num_shards"), r.getAs[Long]("seed"))
   }
@@ -860,9 +827,9 @@ object Hnsw extends IndexLifecycle {
     val ef = if (efSearch > 0) efSearch else meta.efSearch
     val qb = spark.sparkContext.broadcast(
       collectQueries(queries, queryIdCol, queryVecCol))
-    val tb = spark.sparkContext.broadcast(loadTombstones(spark, path))
-    spark.read.schema(segmentSchema).parquet(segPath(path))
-      .select(col("shard").cast("int"), col("id"), col("vec"), col("level"), col("links"))
+    val tb = spark.sparkContext.broadcast(
+      Layout.tombstonedIds(spark, tombPath(path), "id").toSet)
+    Layout.readTable(spark, SegmentDdl, segPath(path))
       .as[HnswRow]
       .groupByKey(_.shard)
       .flatMapGroups { (_, rows) =>

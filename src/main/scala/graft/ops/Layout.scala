@@ -584,7 +584,10 @@ object Layout {
     * The override is plain session conf, visible to jobs planned by
     * OTHER threads inside the scope: intended for the single-writer
     * maintenance ops (their own `mapConcurrently` fan-outs inherit the
-    * sizing) — do not wrap around unrelated concurrent queries.
+    * sizing) — do not wrap around unrelated concurrent queries. The
+    * serving entry points `ChatRag.chatTurn`, `CachedRag.cachedAnswerBatch`
+    * and `SemanticCache.intakeBatch` run inside it too, so they carry the
+    * same single-caller-per-session caveat (ROADMAP direction 2).
     */
   private[graft] def withShuffleSizedTo[A](
       spark: org.apache.spark.sql.SparkSession, bytes: BigInt,
@@ -767,6 +770,59 @@ object Layout {
     }.toSeq.sorted.map(d => new org.apache.hadoop.fs.Path(hp, d).toString)
   }
 
+  /** The ONE reader of a store table whose columns the library's own
+    * writer fixes: `ddl` is declared once beside that writer, and the read
+    * takes it instead of inferring the schema — a schema-less
+    * `spark.read.parquet` runs one footer-reading driver JOB per call,
+    * and a `mergeSchema` read reads every footer. Columns the files lack
+    * read as null (files written before a nullable column existed); an
+    * INT column declared BIGINT widens on read. Partition columns (`seg`,
+    * `shard`, `section`, ...) are declared like data columns and come
+    * last.
+    *
+    * Tables whose columns the CALLER chooses keep their plain read, since
+    * no declaration covers them:
+    *  - the IVF `lists` (the caller's index rows plus `centroid_id`);
+    *  - the SQ/PQ `codes`, whose id column the caller names;
+    *  - the semantic cache store, whose whole-row rewrites carry the
+    *    caller's `carryCols`;
+    *  - the cache disposition history (the caller's batch columns);
+    *  - the conversation stores: memory appends straddle an optional `ts`
+    *    and the chat log carries caller-chosen columns, so
+    *    `PartitionedTable.read` stays their one `mergeSchema` read.
+    */
+  private[graft] def readTable(
+      spark: org.apache.spark.sql.SparkSession,
+      ddl: String,
+      paths: String*): DataFrame =
+    spark.read.schema(org.apache.spark.sql.types.StructType.fromDDL(ddl))
+      .parquet(paths: _*)
+
+  /** The tombstone-sidecar reader behind both uses — the probe side
+    * ([[tombstonedIds]]) and the compact side ([[deadIds]]): the distinct
+    * ids of the sidecar `paths` under the declared `idCol BIGINT`, so a
+    * sidecar written with an INT id column widens instead of failing.
+    * Distinct BEFORE any cap: repeated deletes of the same ids append
+    * duplicate rows.
+    */
+  private def readDeadIds(
+      spark: org.apache.spark.sql.SparkSession,
+      paths: Seq[String],
+      idCol: String): DataFrame =
+    readTable(spark, s"`$idCol` BIGINT", paths: _*).distinct()
+
+  /** A compact's dead ids: the distinct ids of the sidecar files it
+    * snapshotted ([[snapshotTombstoneFiles]]) — an empty frame when there
+    * are none. Compacts anti-join this frame, which stays scale-safe at
+    * any tombstone count (the probe-side cap does not apply).
+    */
+  private[graft] def deadIds(
+      spark: org.apache.spark.sql.SparkSession,
+      tombFiles: Seq[org.apache.hadoop.fs.Path],
+      idCol: String): DataFrame =
+    if (tombFiles.isEmpty) spark.range(0).select(col("id").as(idCol))
+    else readDeadIds(spark, tombFiles.map(_.toString), idCol)
+
   /** The distinct dead-id set of a tombstone sidecar (empty when the
     * sidecar doesn't exist), memoized on the sidecar's FILE SIGNATURE
     * (names + lengths + mtimes — a cheap listStatus): repeated loadIndex
@@ -789,13 +845,7 @@ object Layout {
       tombCache.get(tombPath) match {
         case Some((cachedSig, ids)) if cachedSig == sig => ids
         case _ =>
-          // distinct BEFORE the cap: repeated deletes of the same ids
-          // append duplicate rows, which must neither trip the
-          // compact-first refusal nor bloat the driver collect. The id
-          // column is cast to long so a sidecar written with an int id
-          // column cannot ClassCastException at probe time.
-          val rows = spark.read.parquet(tombPath)
-            .select(col(idCol).cast("long").as(idCol)).distinct()
+          val rows = readDeadIds(spark, Seq(tombPath), idCol)
             .limit(maxTombstones + 1).collect()
           require(rows.length <= maxTombstones,
             s"probe: more than $maxTombstones tombstones at $tombPath — " +
@@ -819,8 +869,8 @@ object Layout {
     * predicate (pushed into the parquet scan); past 1024 ids a literal
     * In is prohibitive to even construct, so a broadcast anti-join takes
     * over (hash probe per row, no shuffle of the big side). Compaction
-    * paths must NOT use this — they anti-join the raw sidecar
-    * directly, scale-safe at any tombstone count.
+    * paths must NOT use this — they anti-join [[deadIds]], scale-safe at
+    * any tombstone count.
     */
   private[graft] def excludeTombstoned(
       spark: org.apache.spark.sql.SparkSession,
@@ -924,9 +974,7 @@ object Layout {
     // guide-§1.2 fusion, two data passes and a checkpoint down to one
     // pass.
     val dead =
-      if (tombFiles.isEmpty) None
-      else Some(spark.read.parquet(tombFiles.map(_.toString): _*)
-        .select(col(idCol).cast("long").as(idCol)).distinct())
+      if (tombFiles.isEmpty) None else Some(deadIds(spark, tombFiles, idCol))
     val cnt = dead match {
       case None => null
       case Some(dd) => data

@@ -318,17 +318,20 @@ object Pq extends IndexLifecycle {
     Layout.clearIndexSidecars(spark, path)
   }
 
+  // the `meta/` and `codebooks/` tables [[write]] fixes
+  private val MetaDdl = "dims INT, m INT, k INT"
+  private val CodebooksDdl = "j INT, c INT, centroid ARRAY<FLOAT>"
+
   /** The stored fine quantizer alone — the m·k codebook rows are
     * driver-bounded by construction. Shared by [[load]] (probe side) and
     * [[appendCodes]] (which must encode through the FROZEN codebooks
     * without paying the code-table read).
     */
   def loadModel(spark: org.apache.spark.sql.SparkSession, path: String): PqModel = {
-    val meta = spark.read.parquet(s"$path/meta").select("dims", "m", "k").head
+    val meta = Layout.readTable(spark, MetaDdl, s"$path/meta").head
     val (dims, m, k) = (meta.getInt(0), meta.getInt(1), meta.getInt(2))
     val codebooks = Array.ofDim[Array[Float]](m, k)
-    spark.read.parquet(s"$path/codebooks").select("j", "c", "centroid")
-      .collect()
+    Layout.readTable(spark, CodebooksDdl, s"$path/codebooks").collect()
       .foreach(r => codebooks(r.getInt(0))(r.getInt(1)) = r.getSeq[Float](2).toArray)
     (0 until m).foreach { j =>
       (0 until k).foreach { c =>

@@ -317,8 +317,11 @@ object Sq extends IndexLifecycle {
     Layout.compactKeyedTable(
       spark, s"$path/codes", s"$path/_tombstones", idCol, "sq.compactCodes")
 
+  /** The `model/` row [[writeCodes]] fixes. */
+  private val ModelDdl = "mins ARRAY<DOUBLE>, maxs ARRAY<DOUBLE>"
+
   def loadModel(spark: org.apache.spark.sql.SparkSession, path: String): SqModel = {
-    val r = spark.read.parquet(s"$path/model").select("mins", "maxs").head
+    val r = Layout.readTable(spark, ModelDdl, s"$path/model").head
     SqModel(r.getSeq[Double](0).toArray, r.getSeq[Double](1).toArray)
   }
 

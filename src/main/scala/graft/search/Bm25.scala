@@ -2,6 +2,7 @@ package graft.search
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.ops.Layout.readTable
 
 /** Okapi BM25 keyword retrieval over an inverted-index table, plus
   * reciprocal-rank-fusion for hybrid (keyword + vector) search.
@@ -297,17 +298,10 @@ object Bm25 extends graft.ops.IndexLifecycle {
   // ------------------------------------------------- segment commit law
 
   // Fixed table schemas: the writer side above pins these shapes, so
-  // readers declare them instead of inferring — every
-  // `spark.read.parquet` without a schema pays one driver JOB of footer
-  // reading per call (guide §6 metadata cost), and the at-rest probe
-  // batteries reload these four tables on every load/maintenance pass
-  // (measured: loadIndex 7 jobs → 3, 0.38 → 0.22 s warm). `seg`/`bucket`
-  // are partition-directory values and keep their inferred INT type.
-  private def readTable(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String, ddl: String): DataFrame =
-    spark.read.schema(
-      org.apache.spark.sql.types.StructType.fromDDL(ddl)).parquet(path)
+  // readers declare them (graft.ops.Layout.readTable) instead of
+  // inferring — the at-rest probe batteries reload these tables on every
+  // load/maintenance pass (measured: loadIndex 7 jobs → 3, 0.38 → 0.22 s
+  // warm). `seg`/`bucket` are partition-directory values.
   private val MetaDdl = "term_buckets INT"
   private val PostingsDdl =
     "doc_id BIGINT, term STRING, tf BIGINT, dl BIGINT, seg INT, bucket INT"
@@ -441,10 +435,10 @@ object Bm25 extends graft.ops.IndexLifecycle {
     // union, summed exactly here: no aggregate, so one job and no AQE
     // stages; with the declared schemas no footer-inference jobs precede
     // it (every at-rest probe battery pays this per load)
-    val rows = readTable(spark, s"$path/meta", MetaDdl)
+    val rows = readTable(spark, MetaDdl, s"$path/meta")
       .select(col("term_buckets"), lit(null).cast("long").as("n_docs"),
         lit(null).cast("long").as("tot_dl"))
-      .union(readTable(spark, s"$path/stats", StatsDdl)
+      .union(readTable(spark, StatsDdl, s"$path/stats")
         .where(col("seg").isin(segs.map(x => x: Any): _*))
         .select(lit(null).cast("int").as("term_buckets"),
           col("n_docs"), col("tot_dl")))
@@ -471,9 +465,9 @@ object Bm25 extends graft.ops.IndexLifecycle {
     // loud sidecar read, scan-stage NOT IN for small sets, broadcast
     // anti-join past 1024 ids
     val postings = graft.ops.Layout.excludeTombstoned(
-      spark, readTable(spark, s"$path/postings", PostingsDdl).where(segFilter),
-      tombPath(path), "doc_id", MaxTombstones)
-    val terms = readTable(spark, s"$path/terms", TermsDdl).where(segFilter)
+      spark, readTable(spark, PostingsDdl, s"$path/postings").where(segFilter),
+      tombPath(path), "doc_id")
+    val terms = readTable(spark, TermsDdl, s"$path/terms").where(segFilter)
       .groupBy("term").agg(sum("df").cast("long").as("df"))
     Index(postings, terms, n, if (n == 0) 0.0 else totDl.toDouble / n, Some(nb))
   }
@@ -500,7 +494,7 @@ object Bm25 extends graft.ops.IndexLifecycle {
     val committed = committedSegs(spark, path)
     // the ledger reads COMMITTED docs only: ids shipped by a crashed
     // (uncommitted) append are re-indexed cleanly as a NEW segment
-    val existing = readTable(spark, s"$path/docs", DocsDdl)
+    val existing = readTable(spark, DocsDdl, s"$path/docs")
       .where(col("seg").isin(committed.map(x => x: Any): _*))
       .select("doc_id")
     // append shuffles sized from the delta docs + the ledger's real
@@ -541,11 +535,10 @@ object Bm25 extends graft.ops.IndexLifecycle {
   }
 
   private def tombPath(path: String) = tombstonesPath(path)
-  private val MaxTombstones = 1 << 22
 
   private def nBuckets(
       spark: org.apache.spark.sql.SparkSession, path: String): Int =
-    readTable(spark, s"$path/meta", MetaDdl).head.getInt(0)
+    readTable(spark, MetaDdl, s"$path/meta").head.getInt(0)
 
   /** Mark docs deleted in a persisted index — the [[Hnsw.delete]] /
     * Lucene mark-delete stance: no postings file is touched; [[loadIndex]]
@@ -584,10 +577,7 @@ object Bm25 extends graft.ops.IndexLifecycle {
     // the spend below, instead of being silently revived by a
     // whole-directory delete
     val tombFiles = graft.ops.Layout.snapshotTombstoneFiles(fs, tombPath(path))
-    val dead = if (tombFiles.nonEmpty)
-      spark.read.parquet(tombFiles.map(_.toString): _*)
-        .select(col("doc_id").cast("long").as("doc_id")).distinct()
-    else spark.emptyDataset[Long].toDF("doc_id")
+    val dead = graft.ops.Layout.deadIds(spark, tombFiles, "doc_id")
     // the four tables, then the commit reset, replaced in that order by
     // the shared protocol — which first heals any of the five that an
     // earlier crash left inside its swap window
@@ -609,7 +599,7 @@ object Bm25 extends graft.ops.IndexLifecycle {
     // (uncommitted) segments are excluded from the rewrite and vanish
     // with the directory swap — compact is also the orphan reclaimer.
     val live = graft.ops.Ann.materializeOnce(
-      readTable(spark, s"$path/postings", PostingsDdl)
+      readTable(spark, PostingsDdl, s"$path/postings")
         .where(segFilter).drop("seg")
         .join(dead, Seq("doc_id"), "left_anti"))
     // one postings aggregation feeds the rewritten docs/ ledger AND
@@ -623,7 +613,7 @@ object Bm25 extends graft.ops.IndexLifecycle {
     // doc ids (the append ledger's law), so sum(n_docs) IS the distinct
     // count — segment-count-sized input instead of a corpus scan+shuffle
     // (the guide's "don't pay a pass for a number a ledger already holds")
-    val before = readTable(spark, s"$path/stats", StatsDdl).where(segFilter)
+    val before = readTable(spark, StatsDdl, s"$path/stats").where(segFilter)
       .agg(coalesce(sum("n_docs"), lit(0L)).cast("long")).head.getLong(0)
     val n = stats.getLong(0)
     // refuse compacting to EMPTY: a dynamically-partitioned write of zero
@@ -724,7 +714,7 @@ object Bm25 extends graft.ops.IndexLifecycle {
     // nothing postings-sized is read to pick the merge set
     val committedFilter = col("seg").isin(committed.map(x => x: Any): _*)
     // seg is a partition column and infers as int — cast before collect
-    val sizes = readTable(spark, s"$path/stats", StatsDdl).where(committedFilter)
+    val sizes = readTable(spark, StatsDdl, s"$path/stats").where(committedFilter)
       .groupBy(col("seg").cast("long").as("seg"))
       .agg(sum("n_docs").cast("long").as("n"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -743,7 +733,7 @@ object Bm25 extends graft.ops.IndexLifecycle {
     // ledger-algebra writes hide under the postings re-home.
     // terms/docs/stats: exact ledger algebra over the merged segments —
     // no tokenization, no corpus read
-    val st = readTable(spark, s"$path/stats", StatsDdl).where(segFilter)
+    val st = readTable(spark, StatsDdl, s"$path/stats").where(segFilter)
       .agg(sum("n_docs").cast("long"), sum("tot_dl").cast("long")).head
     // the re-home is sized from the merged segments' ledgered token
     // count (tot_dl ≈ postings rows; ~32 B/posting row) — exactly the
@@ -752,18 +742,18 @@ object Bm25 extends graft.ops.IndexLifecycle {
     graft.ops.Layout.withShuffleSizedTo(spark,
       BigInt(st.getLong(1)) * 32, disableAqeAtOne = false) {
     graft.ops.Layout.mapConcurrently[() => Unit, Unit](Seq(
-      () => readTable(spark, s"$path/postings", PostingsDdl)
+      () => readTable(spark, PostingsDdl, s"$path/postings")
         .where(segFilter).drop("seg")
         .repartition(nBuckets(spark, path) * math.max(1, filesPerBucket),
           col("bucket"),
           pmod(xxhash64(col("doc_id")), lit(math.max(1, filesPerBucket))))
         .withColumn("seg", lit(newSeg))
         .write.mode("append").partitionBy("seg", "bucket").parquet(s"$path/postings"),
-      () => readTable(spark, s"$path/terms", TermsDdl).where(segFilter)
+      () => readTable(spark, TermsDdl, s"$path/terms").where(segFilter)
         .groupBy("term").agg(sum("df").cast("long").as("df"))
         .withColumn("seg", lit(newSeg))
         .write.mode("append").partitionBy("seg").parquet(s"$path/terms"),
-      () => readTable(spark, s"$path/docs", DocsDdl)
+      () => readTable(spark, DocsDdl, s"$path/docs")
         .where(segFilter).drop("seg")
         .withColumn("seg", lit(newSeg))
         .write.mode("append").partitionBy("seg").parquet(s"$path/docs"),
@@ -1227,9 +1217,9 @@ object Bm25 extends graft.ops.IndexLifecycle {
     val segs = committedSegs(spark, path)
     graft.ops.Layout.excludeTombstoned(
       spark,
-      readTable(spark, s"$path/docs", DocsDdl)
+      readTable(spark, DocsDdl, s"$path/docs")
         .where(col("seg").isin(segs.map(x => x: Any): _*)),
-      tombPath(path), "doc_id", MaxTombstones)
+      tombPath(path), "doc_id")
       .select("doc_id", "dl")
   }
 
@@ -1273,11 +1263,10 @@ object Bm25 extends graft.ops.IndexLifecycle {
     // in SOME field indexes but not all would silently vanish from every
     // probe through the inner dl join — not as a delete, as a dropped
     // row indistinguishable from an empty-field doc. The sidecar id sets
-    // are MaxTombstones-bounded (and memoized on file signature), so the
+    // are bounded by the probe-side cap (and memoized on file signature), so the
     // comparison is a cheap driver set-diff; refuse loudly instead.
     val deadSets = fields.map(f =>
-      graft.ops.Layout.tombstonedIds(spark, tombPath(f.path), "doc_id",
-        MaxTombstones).toSet)
+      graft.ops.Layout.tombstonedIds(spark, tombPath(f.path), "doc_id").toSet)
     if (deadSets.distinct.size > 1) {
       val union = deadSets.reduce(_ union _)
       val partial = union.filterNot(id => deadSets.forall(_.contains(id)))

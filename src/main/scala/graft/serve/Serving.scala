@@ -310,6 +310,11 @@ object CachedRag {
     *
     * Returns a driver-local `(query_id, question, answer, hit, cache_id,
     * cost)`.
+    *
+    * Concurrent calls on one `SparkSession` can leave its shuffle conf
+    * changed for good: the sizing inside runs through
+    * [[graft.ops.Layout.withShuffleSizedTo]], which saves, sets and
+    * restores shared session conf. Serialize callers (ROADMAP direction 2).
     */
   def cachedAnswerBatch(
       spark: SparkSession,
@@ -393,39 +398,8 @@ object CachedRag {
       retainBatches: Option[Int] = None): Unit = {
     cachedAnswerBatch(spark, batch, cachePath, minCos, answerMisses, idOffset)
       .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
-    // optional size cap AFTER serving the batch. Default FIFO by minted
-    // id (evicted questions miss + re-admit on their next ask);
-    // evictLru = true folds recency from the dispositions THIS loop just
-    // landed (`outPath`'s batch dirs ARE the history), so a hot entry
-    // survives caps a FIFO would age out.
-    cacheMaxEntries.foreach { cap =>
-      if (evictLru) SemanticCache.evictCacheLru(spark, cachePath, outPath, cap)
-      else SemanticCache.evictCache(spark, cachePath, cap)
-    }
-    // disposition retention rides the same loop (round-13: the loop that
-    // lands one batch dir forever also retires them): keep the newest
-    // `retainBatches` dirs. Under an active LRU cap the fold's
-    // high-water IS this batch (the eviction above just folded), so the
-    // folded-only guard holds and recency survives every prune; a
-    // FIFO/uncapped deployment that opts in accepts losing the pruned
-    // window's recency and report rows (the documented retention trade —
-    // requireFolded = false). The horizon trails the checkpoint by a
-    // full window, so a crash-replayed LAST batch never reaches a
-    // pruned dir (it would simply re-land its own).
-    retainBatches.foreach { keep =>
-      require(keep > 0, s"retainBatches $keep must be > 0")
-      val lruActive = evictLru && cacheMaxEntries.nonEmpty
-      if (batchId + 1 > keep) {
-        // the eviction's under-cap early return skips its fold — advance
-        // the water explicitly (incremental, idempotent) so the
-        // folded-only guard can never refuse mid-stream
-        if (lruActive) { SemanticCache.foldRecency(spark, outPath); () }
-        SemanticCache.pruneDispositions(spark, outPath, batchId + 1 - keep,
-          requireFolded = lruActive)
-      }
-      ()
-    }
-    ()
+    SemanticCache.afterBatch(spark, cachePath, outPath, batchId,
+      cacheMaxEntries, evictLru, retainBatches)
   }
 
   /** The streaming serving loop: a stream of
@@ -784,6 +758,11 @@ object ChatRag {
     * write shares the memory append's replay contract: at-least-once
     * inside the ledger's residual crash window, exactly-once on the
     * normal streaming path.
+    *
+    * Concurrent calls on one `SparkSession` can leave its shuffle conf
+    * changed for good: the sizing inside runs through
+    * [[graft.ops.Layout.withShuffleSizedTo]], which saves, sets and
+    * restores shared session conf. Serialize callers (ROADMAP direction 2).
     */
   def chatTurn(
       spark: SparkSession,
@@ -2218,6 +2197,11 @@ object SemanticCache {
     * d8 selectivity law (exact product for small miss sets, RP-banded
     * candidates + exact verify above 10k — never a quadratic nested
     * loop); the insert is O(misses).
+    *
+    * Concurrent calls on one `SparkSession` can leave its shuffle conf
+    * changed for good: the sizing inside runs through
+    * [[graft.ops.Layout.withShuffleSizedTo]], which saves, sets and
+    * restores shared session conf. Serialize callers (ROADMAP direction 2).
     */
   def intakeBatch(
       spark: SparkSession,
@@ -2578,7 +2562,9 @@ object SemanticCache {
     // their recency (they degrade to the never-used default — prune
     // after a successful fold, not concurrently with one).
     val water = foldWater(fs, dp, stateExists)
-    val base = if (stateExists) spark.read.parquet(statePath) else empty
+    val base =
+      if (stateExists) graft.ops.Layout.readTable(spark, RecencyDdl, statePath)
+      else empty
     val newNs = batchNumbers(fs, dp).filter(_ > water)
     if (newNs.isEmpty) return base
     val fresh = newNs.map { n =>
@@ -2597,6 +2583,9 @@ object SemanticCache {
     graft.ops.Layout.advanceRetentionMarker(fs, dp, newest, "_recency")
     merged
   }
+
+  /** The `_recency/state` table [[foldRecency]] writes. */
+  private val RecencyDdl = "cache_id BIGINT, last_use BIGINT"
 
   /** The disposition history's `batch=<n>` dir numbers, ascending. */
   private def batchNumbers(
@@ -2665,6 +2654,56 @@ object SemanticCache {
     prune.foreach(n =>
       fs.delete(new org.apache.hadoop.fs.Path(dp, s"batch=$n"), true))
     (batchNs.size, batchNs.size - prune.size)
+  }
+
+  /** The post-batch tail of both streaming serving loops
+    * ([[CachedRag.cachedRagBatchBody]],
+    * [[graft.ops.CorpusPipeline.cacheIntakeBatchBody]]), run after batch
+    * `batchId`'s dispositions landed at `outPath/batch=<id>/`.
+    *
+    * First the optional size cap. Default FIFO by minted id (evicted
+    * questions miss + re-admit on their next ask); `evictLru` folds
+    * recency from the dispositions the loop just landed (`outPath`'s
+    * batch dirs ARE the history), so a hot entry survives caps a FIFO
+    * would age out. An at/below-cap pass costs one count.
+    *
+    * Then disposition retention (the loop that lands one batch dir
+    * forever also retires them): keep the newest `retainBatches` dirs.
+    * Under an active LRU cap the fold's high-water IS this batch, so the
+    * folded-only guard holds and recency survives every prune; a
+    * FIFO/uncapped deployment that opts in accepts losing the pruned
+    * window's recency and report rows (the documented retention trade —
+    * `requireFolded = false`). The horizon trails the checkpoint by a
+    * full window, so a crash-replayed LAST batch never reaches a pruned
+    * dir (it would simply re-land its own). Legal under the loops'
+    * single-writer law.
+    */
+  private[graft] def afterBatch(
+      spark: SparkSession,
+      cachePath: String,
+      outPath: String,
+      batchId: Long,
+      cacheMaxEntries: Option[Int],
+      evictLru: Boolean,
+      retainBatches: Option[Int]): Unit = {
+    cacheMaxEntries.foreach { cap =>
+      if (evictLru) evictCacheLru(spark, cachePath, outPath, cap)
+      else evictCache(spark, cachePath, cap)
+    }
+    retainBatches.foreach { keep =>
+      require(keep > 0, s"retainBatches $keep must be > 0")
+      val lruActive = evictLru && cacheMaxEntries.nonEmpty
+      if (batchId + 1 > keep) {
+        // the eviction's under-cap early return skips its fold — advance
+        // the water explicitly (incremental, idempotent) so the
+        // folded-only guard can never refuse mid-stream
+        if (lruActive) { foldRecency(spark, outPath); () }
+        pruneDispositions(spark, outPath, batchId + 1 - keep,
+          requireFolded = lruActive)
+      }
+      ()
+    }
+    ()
   }
 
   /** The disposition history as a DataFrame (partition-discovered

@@ -292,12 +292,41 @@ class LayoutSpec extends SparkSpec {
 
   test("excludeTombstoned: int-typed sidecar ids exclude without ClassCastException") {
     val dir = tempDir("graft_tomb_int").toString
-    val tomb = s"$dir/_tombstones"
-    Seq(1, 3).toDF("id").write.parquet(tomb) // INT id column
+    // ids 1 and 3 (one repeated) in an INT id column, an earlier writer's shape
+    def intSidecar(at: String): String = {
+      Seq(1, 3, 3).toDF("id").write.parquet(s"$at/_tombstones"); s"$at/_tombstones"
+    }
+    val tomb = intSidecar(dir)
     val df = spark.range(5).toDF("id")
     val live = Layout.excludeTombstoned(spark, df, tomb, "id")
       .select("id").as[Long].collect().toSet
     assert(live == Set(0L, 2L, 4L))
+    // the compact side reads the same sidecar through the same reader:
+    // distinct ids, widened to BIGINT
+    val fs = new org.apache.hadoop.fs.Path(tomb)
+      .getFileSystem(spark.sessionState.newHadoopConf())
+    val dead = Layout.deadIds(spark, Layout.snapshotTombstoneFiles(fs, tomb), "id")
+    assert(dead.schema("id").dataType == org.apache.spark.sql.types.LongType)
+    assert(dead.as[Long].collect().sorted.toSeq == Seq(1L, 3L))
+    assert(Layout.deadIds(spark, Nil, "id").count() == 0L)
+    // a keyed-table compact folds it
+    val data = s"$dir/codes"
+    spark.range(5).toDF("id").write.parquet(data)
+    assert(Layout.compactKeyedTable(spark, data, tomb, "id", "compact") == ((5L, 3L)))
+    assert(spark.read.parquet(data).as[Long].collect().toSet == Set(0L, 2L, 4L))
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(tomb)), "the sidecar is spent")
+    // and so do an HNSW probe and compact
+    val hnsw = s"$dir/hnsw"
+    val vecs = spark.range(5).select(col("id").as("vec_id"),
+      array(col("id").cast("float"), lit(0f)).as("embedding"))
+    Hnsw.write(vecs, hnsw, Hnsw.Params(numShards = 1))
+    intSidecar(hnsw)
+    val q = Seq((0L, Seq(0f, 0f))).toDF("query_id", "query_vec")
+    assert(Hnsw.probe(spark, hnsw, q, 5).select("vec_id").as[Long].collect().toSet ==
+      Set(0L, 2L, 4L))
+    Hnsw.compact(spark, hnsw)
+    assert(spark.read.parquet(s"$hnsw/segments").select("id").as[Long].collect().toSet ==
+      Set(0L, 2L, 4L))
   }
 
   test("excludeTombstoned: a delete after a cached load is visible (cache invalidates)") {
@@ -477,6 +506,46 @@ class LayoutSpec extends SparkSpec {
       }
     finally walk.close()
     assert(hits.isEmpty, s"swap protocol built outside Layout:\n${hits.mkString("\n")}")
+  }
+
+  test("one declared-schema reader: no mergeSchema, readTable or tombstone read outside its owner") {
+    // library-written store tables read through Layout.readTable under
+    // their declared columns, and tombstone sidecars through Layout's one
+    // reader; only the conversation stores' PartitionedTable.read still
+    // merges footer schemas
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala")
+    assert(java.nio.file.Files.isDirectory(root),
+      s"source root not found under ${root.toAbsolutePath}")
+    val layout = java.nio.file.Paths.get("graft/ops/Layout.scala")
+    val walk = java.nio.file.Files.walk(root)
+    val hits = try walk.iterator().asScala.toSeq
+      .filter(_.toString.endsWith(".scala"))
+      .flatMap { f =>
+        val lines = java.nio.file.Files.readAllLines(f).asScala.toIndexedSeq
+        lines.indices.flatMap { i =>
+          val line = lines(i)
+          // the mergeSchema read must sit directly under
+          // `def read(` inside `object PartitionedTable`
+          def inPartitionedTableRead = {
+            val before = lines.take(i)
+            before.lastIndexWhere(_.contains("def ")) ==
+              before.lastIndexWhere(_.contains("def read(")) &&
+              before.lastIndexWhere(_.contains("object ")) ==
+              before.lastIndexWhere(_.contains("object PartitionedTable"))
+          }
+          val bad =
+            (if (line.contains("\"mergeSchema\"") && !inPartitionedTableRead)
+              Seq("\"mergeSchema\"") else Nil) ++
+            (if (!f.endsWith(layout))
+              Seq("def readTable", "loadTombstones", "MaxTombstones")
+                .filter(line.contains)
+            else Nil)
+          bad.map(b => s"$f:${i + 1}: $b")
+        }
+      }
+    finally walk.close()
+    assert(hits.isEmpty, s"store reads outside their one reader:\n${hits.mkString("\n")}")
   }
 
   test("vacuum: heals committed crashed swaps, sweeps condemned/uncommitted siblings, never touches live data") {
