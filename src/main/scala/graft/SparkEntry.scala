@@ -2646,16 +2646,10 @@ object SparkEntry {
       // exact transitive-closure dedup: one representative per connected
       // component of the jaccard pair graph (oracled against a DuckDB
       // recursive CTE — a genuine oracle for an iterative Spark algorithm).
-      // Shuffles sized from the DOCS input (Layout.withShuffleSizedTo —
-      // every internal frame is bounded by a small multiple of the doc
-      // text; the pair-graph's own join-product estimate is useless);
-      // the CC loop's first action executes the whole pair pipeline, so
-      // the gate must wrap construction
+      // dropNearDupsCC sizes its shuffles from the docs it resolves
       val docs = T(s, dir, "documents").where(col("doc_id") < 60)
-      Layout.withShuffleSizedTo(s, Layout.planBytes(docs) * 4) {
-        val pairs = Dedup.jaccardPairs(docs, minSim = 0.8)
-        Dedup.dropNearDupsCC(docs, pairs).select("doc_id").orderBy("doc_id")
-      }
+      val pairs = Dedup.jaccardPairs(docs, minSim = 0.8)
+      Dedup.dropNearDupsCC(docs, pairs).select("doc_id").orderBy("doc_id")
     }
     reg("d17_neardup_resolve_hashed", oracle =
       s"""${ccCtes(200)}
@@ -2672,21 +2666,17 @@ object SparkEntry {
       // prob ~5e-8 at 0.8, the d5b argument), emitting every doc's
       // component and keep decision, not just the survivor list
       val docs = T(s, dir, "documents").where(col("doc_id") < 200)
-      // docs-derived shuffle sizing (see d9's note): the banding/verify
-      // pipeline executes eagerly inside connectedComponents' first count
-      Layout.withShuffleSizedTo(s, Layout.planBytes(docs) * 4) {
-        val pairs = Dedup.minHashPairsHashed(docs, shingleSize = 1,
-          numHashes = 128, bands = 32, minJaccard = 0.8)
-        // hybrid CC: post-banding pair sets are driver-small even for huge
-        // corpora — union-find below the threshold, distributed loop above
-        // (d9/d10 keep the pure distributed paths under oracle)
-        val comps = Dedup.connectedComponents(pairs, smallGraphCollect = 1L << 20)
-        docs.select(col("doc_id"))
-          .join(comps.withColumnRenamed("id", "doc_id"), Seq("doc_id"), "left")
-          .select(col("doc_id"), coalesce(col("comp"), col("doc_id")).as("comp"))
-          .withColumn("kept", col("doc_id") === col("comp"))
-          .orderBy("doc_id")
-      }
+      val pairs = Dedup.minHashPairsHashed(docs, shingleSize = 1,
+        numHashes = 128, bands = 32, minJaccard = 0.8)
+      // hybrid CC: post-banding pair sets are driver-small even for huge
+      // corpora — union-find below the threshold, distributed loop above
+      // (d9/d10 keep the pure distributed paths under oracle). A constant
+      // score makes every member tie, so the keeper is the min id: the
+      // min-label rule, through the op that sizes its own shuffles
+      Dedup.resolveNearDupsBy(docs.withColumn("quality", lit(0)), pairs,
+          smallGraphCollect = 1L << 20)
+        .select("doc_id", "comp", "kept")
+        .orderBy("doc_id")
     }
     reg("d18_quality_resolve", oracle =
       s"""${ccCtes(200)},
@@ -2708,16 +2698,13 @@ object SparkEntry {
       // keeps its highest-quality member (ties -> min id) instead of the
       // min id — the RefinedWeb/FineWeb "keep the best copy" resolve rule
       val docs = T(s, dir, "documents").where(col("doc_id") < 200)
-      // docs-derived shuffle sizing (see d9's note)
-      Layout.withShuffleSizedTo(s, Layout.planBytes(docs) * 4) {
-        val scored = docs.select(col("doc_id"),
-          TextAnalytics.qualityScore(col("text")).as("quality"))
-        val pairs = Dedup.minHashPairsHashed(docs, shingleSize = 1,
-          numHashes = 128, bands = 32, minJaccard = 0.8)
-        Dedup.resolveNearDupsBy(scored, pairs, smallGraphCollect = 1L << 20)
-          .select(col("doc_id"), col("comp"), col("quality"), col("kept"))
-          .orderBy("doc_id")
-      }
+      val scored = docs.select(col("doc_id"),
+        TextAnalytics.qualityScore(col("text")).as("quality"))
+      val pairs = Dedup.minHashPairsHashed(docs, shingleSize = 1,
+        numHashes = 128, bands = 32, minJaccard = 0.8)
+      Dedup.resolveNearDupsBy(scored, pairs, smallGraphCollect = 1L << 20)
+        .select(col("doc_id"), col("comp"), col("quality"), col("kept"))
+        .orderBy("doc_id")
     }
     reg("d10_cc_star", oracle =
       s"""${ccCtes(60)}
@@ -2726,11 +2713,11 @@ object SparkEntry {
       // the same DuckDB recursive-CTE transitive closure as d9 — full
       // (id, comp) labels, not just the dedup survivors
       val docs = T(s, dir, "documents").where(col("doc_id") < 60)
-      // deliberately NOT wrapped in withShuffleSizedTo: the star loop's
-      // per-round count + exceptAll convergence actions measured 50%
-      // SLOWER at a 1-partition plan (with or without AQE) — the
-      // alternation needs the parallel rounds more than it suffers the
-      // tiny-task overhead, unlike the min-label loop (d9, −14% wrapped)
+      // unsized on purpose: the star loop's per-round count + exceptAll
+      // convergence actions measured 50% SLOWER at a 1-partition plan
+      // (with or without AQE) — the alternation needs the parallel rounds
+      // more than it suffers the tiny-task overhead, unlike the
+      // min-label loop (d9, −14% sized)
       val pairs = Dedup.jaccardPairs(docs, minSim = 0.8)
       Dedup.connectedComponentsStar(pairs).orderBy("id")
     }
@@ -3984,11 +3971,6 @@ object SparkEntry {
       // recall 1.0), now carried through every lifecycle transition
       val emb = T(s, dir, "embeddings")
       val tmp = scratchDir("graft_sq_lc").toString + "/idx"
-      // the lifecycle's eager op sequence runs here at construction —
-      // shuffles sized from the embedding input (Layout.withShuffleSizedTo,
-      // ×4 bounds every intermediate; AQE kept for the probe joins)
-      Layout.withShuffleSizedTo(s, Layout.planBytes(emb) * 4,
-        disableAqeAtOne = false) {
       Sq.writeCodes(emb.where(pmod(col("vec_id"), lit(2)) === 0), tmp)
       Sq.appendCodes(s, emb.where(pmod(col("vec_id"), lit(2)) === 1), tmp)
       Sq.deleteCodes(s, tmp, Seq(130L, 340L, 30L))
@@ -4005,7 +3987,6 @@ object SparkEntry {
         compacted.collect().map(_.toString).toSeq,
         "marked-codes and compacted-codes probes must agree")
       compacted
-      }
     }
 
     // a7c: seeded codebooks (not SQL-expressible) + the same lifecycle —
@@ -4022,9 +4003,6 @@ object SparkEntry {
       // exclusion, or the compact's anti-join breaks the hash
       val emb = T(s, dir, "embeddings")
       val tmp = scratchDir("graft_pq_lc").toString + "/idx"
-      // sized like a9c (see there)
-      Layout.withShuffleSizedTo(s, Layout.planBytes(emb) * 4,
-        disableAqeAtOne = false) {
       val seed = emb.where(pmod(col("vec_id"), lit(2)) === 0)
       val model = Pq.fitSampled(seed, dims = 64, m = 8, k = 16, maxIter = 10)
       Pq.write(Pq.encode(seed, model), model, tmp)
@@ -4046,7 +4024,6 @@ object SparkEntry {
         compacted.collect().map(_.toString).toSeq,
         "marked-codes and compacted-codes probes must agree")
       compacted
-      }
     }
 
     // a12/a13: exact-by-construction at fixture scale (efSearch >= shard
@@ -5660,9 +5637,6 @@ object SparkEntry {
       val emb = T(s, dir, "embeddings")
       val tmp = scratchDir("graft_ivfpq_lc").toString
       val (ivfPath, pqPath) = (s"$tmp/ivf", s"$tmp/pq")
-      // sized like a9c (see there)
-      Layout.withShuffleSizedTo(s, Layout.planBytes(emb) * 4,
-        disableAqeAtOne = false) {
       val seed = emb.where(pmod(col("vec_id"), lit(2)) === 0)
       val odd = emb.where(pmod(col("vec_id"), lit(2)) === 1)
       val (assigned, centroids) = Ann.buildIvfSampled(seed, nLists = 4)
@@ -5692,7 +5666,6 @@ object SparkEntry {
         compacted.collect().map(_.toString).toSeq,
         "marked and compacted composite probes must agree")
       compacted
-      }
     }
 
     reg("a4_lsh_batch", oracle =

@@ -40,33 +40,24 @@ object Ann extends IndexLifecycle {
   }
 
   /** Materialize a subtree ONCE before multiple consumers (the
-    * double-execution class measured at −30% on a6). Default is
-    * `localCheckpoint` — executor-local blocks, fastest, but the lineage
-    * is truncated so an executor loss (spot nodes, dynamic allocation)
-    * fails the job unrecoverably. Clusters where that trade is wrong set
-    * `graft.resilientMaterialize=true` to switch every such site to
-    * persist(MEMORY_AND_DISK)+count: recomputable lineage, one extra
-    * pass. Blocks are freed by ContextCleaner when the frame is dropped,
-    * either way. A frame that is already local (see [[isLocal]]) is
-    * returned as is: pinning it again costs a job and buys nothing.
+    * double-execution class measured at −30% on a6) as an eager
+    * `localCheckpoint`: executor-local blocks, fastest, but the lineage
+    * is truncated, so an executor loss (spot nodes, dynamic allocation)
+    * fails the job — the same trade as every other `localCheckpoint` in
+    * the library. Blocks are freed by [[release]] or by ContextCleaner
+    * when the frame is dropped. A frame that is already local (see
+    * [[isLocal]]) is returned as is: pinning it again costs a job and
+    * buys nothing.
     */
-  private[graft] def materializeOnce(df: DataFrame): DataFrame = {
-    val resilient = df.sparkSession.conf
-      .getOption("graft.resilientMaterialize").exists(_.toBoolean)
-    if (isLocal(df)) df
-    else if (resilient) {
-      val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      p.count()
-      p
-    } else df.localCheckpoint(true)
-  }
+  private[graft] def materializeOnce(df: DataFrame): DataFrame =
+    if (isLocal(df)) df else df.localCheckpoint(true)
 
   /** Free the blocks [[materializeOnce]] (or any `localCheckpoint`)
     * pinned under `df` once its consumers have run, instead of when
     * ContextCleaner next sees the frame collected. A checkpoint's blocks
     * live in the RDD its plan's `LogicalRDD` holds, not in the cache
     * manager, so `Dataset.unpersist()` alone cannot reach them; a
-    * persisted frame (`graft.resilientMaterialize`) is unpersisted too.
+    * persisted frame is unpersisted too.
     */
   private[graft] def release(df: DataFrame): Unit = {
     df.queryExecution.analyzed.foreach {
@@ -114,8 +105,7 @@ object Ann extends IndexLifecycle {
     // is not reused across jobs; measured 2.6 → 1.8 s warm on a6 at
     // sf0.1). The blocks are candidate-volume-sized (what the join must
     // consume anyway) and ContextCleaner frees them when the result frame
-    // is dropped. materializeOnce honors graft.resilientMaterialize for
-    // clusters with dynamic allocation (recomputable lineage).
+    // is dropped.
     val candIds = materializeOnce(candIds0)
     if (candIds.limit(cap + 1).count() <= cap) broadcast(candIds) else candIds
   }

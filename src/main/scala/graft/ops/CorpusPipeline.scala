@@ -388,15 +388,15 @@ object CorpusPipeline {
     val (shingleSize, numHashes, bands) =
       (meta.getInt(0), meta.getInt(1), meta.getInt(2))
     // every shuffle in the intake sized from the REAL store bytes (file
-    // listing) + the batch's plan estimate (×4 bounds the shingle
-    // explode) instead of the cluster constant: the checkpoints/appends
+    // listing) + the batch's shingle explode estimate instead of the
+    // cluster constant: the checkpoints/appends
     // below are this function's own actions, so the scope covers the
     // whole micro-batch (Layout.withShuffleSizedTo — measured 61 → 25
     // jobs, 3.3 → 1.7 s warm per batch at sf0.1). An unknown batch
     // estimate or a grown store disables the shrink — same plan as
     // before at scale.
     Layout.withShuffleSizedTo(spark,
-      BigInt(Layout.dirBytes(spark, storePath)) + Layout.planBytes(batch) * 4) {
+      BigInt(Layout.dirBytes(spark, storePath)) + Dedup.shingleExplodeBytes(batch)) {
     // ONE shingle-explode and ONE signature aggregate for the whole
     // batch, materialized up front and shared by all three stages. The
     // unfused composition (probe → resolve → append as standalone calls)

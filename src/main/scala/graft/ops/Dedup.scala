@@ -319,6 +319,14 @@ object Dedup extends IndexLifecycle {
     docs.select(col(idCol), explode(sh).as("__h"))
   }
 
+  /** Upper-bound bytes of [[shingleExplode]] over `docs` (4× the doc
+    * frame's plan estimate) — the shuffle sizing
+    * ([[Layout.withShuffleSizedTo]]) of every op whose shuffles carry
+    * shingle rows: the minhash store's build and appends, the intake
+    * batch, and the pair search feeding the component resolves.
+    */
+  private[graft] def shingleExplodeBytes(docs: DataFrame): BigInt = Layout.planBytes(docs) * 4
+
   /** `(idCol, __sig ARRAY<LONG>)` minhash signatures via the single
     * array-buffered [[graft.functions.MinHashSig]] aggregate. The
     * previous shape — `numHashes` unrolled `min(xxhash64(__h, p))`
@@ -416,10 +424,10 @@ object Dedup extends IndexLifecycle {
       s"writeMinhash: numHashes $numHashes must be a multiple of bands $bands")
     val spark = docs.sparkSession
     import spark.implicits._
-    // store-build shuffles sized from the input docs (×4 bounds the
-    // shingle explode) — Layout.withShuffleSizedTo; the checkpoints and
-    // five writes below are this function's own actions
-    Layout.withShuffleSizedTo(spark, Layout.planBytes(docs) * 4) {
+    // store-build shuffles sized from the shingle explode's estimate —
+    // Layout.withShuffleSizedTo; the checkpoints and five writes below
+    // are this function's own actions
+    Layout.withShuffleSizedTo(spark, shingleExplodeBytes(docs)) {
     val exploded = Ann.materializeOnce(
       shingleExplode(docs, idCol, textCol, shingleSize)
         .repartition(col(idCol))
@@ -478,11 +486,11 @@ object Dedup extends IndexLifecycle {
     val meta = Layout.readTable(spark, MetaDdl, s"$path/meta")
       .select("shingle_size", "num_hashes", "bands").head
     val existing = Layout.readTable(spark, DocsDdl, s"$path/docs").select("doc_id")
-    // append shuffles sized from the delta + the docs ledger's real
-    // bytes (Layout.withShuffleSizedTo; ×4 bounds the shingle explode)
+    // append shuffles sized from the delta's shingle explode + the docs
+    // ledger's real bytes (Layout.withShuffleSizedTo)
     Layout.withShuffleSizedTo(spark,
       BigInt(Layout.dirBytes(spark, s"$path/docs")) +
-        Layout.planBytes(newDocs) * 4) {
+        shingleExplodeBytes(newDocs)) {
     // materialize the fresh id set BEFORE any write: it is both the
     // return count and the ledger delta, and its lineage reads the
     // docs/ ledger the append below extends
@@ -1140,6 +1148,10 @@ object Dedup extends IndexLifecycle {
     docs.join(losers, Seq(idCol), "left_anti")
   }
 
+  /** Upper-bound bytes of one row of [[connectedComponents]]' label and
+    * edge frames (two longs plus row overhead). */
+  private val CcEdgeRowBytes = 48L
+
   /** Exact connected components over the near-dup candidate pair graph:
     * returns `(id, comp)` where `comp` is the minimum id reachable through
     * any chain of pairs. Iterative min-label propagation — one keyed
@@ -1213,11 +1225,11 @@ object Dedup extends IndexLifecycle {
     // each round frees the previous round's checkpoint (Ann.release) —
     // without it, every round's label set would stay pinned in executor
     // storage for the life of the session
-    // size the per-round shuffles from the counted edge set (~48 B/row
-    // upper bound), not the cluster constant — see
-    // Layout.withShuffleSizedTo; min-label propagation is
-    // partition-invariant, so labels are identical either way
-    try Layout.withShuffleSizedTo(pairs.sparkSession, BigInt(m) * 48) {
+    // size the per-round shuffles from the counted edge set, not the
+    // cluster constant — see Layout.withShuffleSizedTo; min-label
+    // propagation is partition-invariant, so labels are identical either
+    // way
+    try Layout.withShuffleSizedTo(pairs.sparkSession, BigInt(m) * CcEdgeRowBytes) {
       var labels = edges.select(col("src").as("id")).distinct()
         .withColumn("comp", col("id"))
         .localCheckpoint(true)
@@ -1334,6 +1346,9 @@ object Dedup extends IndexLifecycle {
   /** Near-dup resolution by exact transitive closure: keep one
     * representative (the minimum id) per connected component of the pair
     * graph. Docs not in any pair pass through untouched.
+    *
+    * The min-label path sizes its shuffles from `docs` (see
+    * [[sizedByDocs]]); the `star` path keeps the session's width.
     */
   def dropNearDupsCC(
       docs: DataFrame,
@@ -1343,10 +1358,11 @@ object Dedup extends IndexLifecycle {
       star: Boolean = false): DataFrame = {
     // both algorithms return identical (id, comp=min id) labels; `star`
     // picks the O(log n)-round contraction for graphs whose diameter may
-    // exceed maxIter propagation rounds (see connectedComponentsStar)
+    // exceed maxIter propagation rounds (see connectedComponentsStar),
+    // whose rounds measured 50% slower at a 1-partition plan
     val labels =
       if (star) connectedComponentsStar(pairs, maxIter)
-      else connectedComponents(pairs, maxIter)
+      else sizedByDocs(docs)(connectedComponents(pairs, maxIter))
     val losers = labels
       .where(col("id") =!= col("comp"))
       .select(col("id").as(idCol))
@@ -1362,7 +1378,8 @@ object Dedup extends IndexLifecycle {
     *
     * Emits EVERY doc with its component, score, and keep decision —
     * singletons keep themselves — so the caller can audit what a drop
-    * decision cost, not just receive the survivors.
+    * decision cost, not just receive the survivors. Shuffles are sized
+    * from `docs` (see [[sizedByDocs]]).
     */
   def resolveNearDupsBy(
       docs: DataFrame,
@@ -1371,7 +1388,8 @@ object Dedup extends IndexLifecycle {
       scoreCol: String = "quality",
       maxIter: Int = 20,
       smallGraphCollect: Long = 0L): DataFrame = {
-    val labels = connectedComponents(pairs, maxIter, smallGraphCollect)
+    val labels = sizedByDocs(docs)(
+      connectedComponents(pairs, maxIter, smallGraphCollect))
     val labeled = docs
       .select(col(idCol), col(scoreCol))
       .join(labels.withColumnRenamed("id", idCol), Seq(idCol), "left")
@@ -1384,6 +1402,16 @@ object Dedup extends IndexLifecycle {
       .withColumn("kept", col("__rn") === 1)
       .drop("__rn")
   }
+
+  /** Run a component resolve's label computation with its shuffles
+    * sized from the DOCS it resolves ([[shingleExplodeBytes]]): every
+    * frame of the pair search is bounded by the docs' shingle explode,
+    * while the pair graph's own join-product estimate is useless. The
+    * labels' first action (`edges.count()`) runs the whole pair
+    * pipeline, so the scope covers it too.
+    */
+  private def sizedByDocs[A](docs: DataFrame)(labels: => A): A =
+    Layout.withShuffleSizedTo(docs.sparkSession, shingleExplodeBytes(docs))(labels)
 
   // -------------------------------------------- embedding cosine near-dup
 

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import scala.collection.mutable
 
 /** Multi-dimensional data layout: Z-order (Morton) clustering for
   * min/max-stat file skipping.
@@ -581,41 +582,63 @@ object Layout {
     * is used (keyed aggregates/joins, integer-grid algebra), so results
     * are identical either way — the oracle re-asserts that per query.
     *
-    * The override is plain session conf, visible to jobs planned by
-    * OTHER threads inside the scope: intended for the single-writer
-    * maintenance ops (their own `mapConcurrently` fan-outs inherit the
-    * sizing) — do not wrap around unrelated concurrent queries. The
-    * serving entry points `ChatRag.chatTurn`, `CachedRag.cachedAnswerBatch`
-    * and `SemanticCache.intakeBatch` run inside it too, so they carry the
-    * same single-caller-per-session caveat (ROADMAP direction 2).
+    * The override is plain session conf. A scope changes it only while
+    * no other thread's scope is active on the same session, and the
+    * thread that set the values is the one that restores them; a scope
+    * entered while another thread's is active runs its body unchanged
+    * (the no-shrink direction above). So overlapping scopes — concurrent
+    * `ChatRag.chatTurn`s, or an op's own `mapConcurrently` workers — can
+    * never leave the session changed, and no scope waits for another.
+    * Same-thread nesting shrinks further and restores the outer value. Jobs
+    * that other threads plan OUTSIDE any scope while one is active still
+    * see its values.
     */
   private[graft] def withShuffleSizedTo[A](
       spark: org.apache.spark.sql.SparkSession, bytes: BigInt,
       disableAqeAtOne: Boolean = true)(body: => A): A = {
-    val conf = spark.conf
-    val cur = conf.get("spark.sql.shuffle.partitions").toInt
-    val advisory = math.max(1L, spark.sessionState.conf.getConf(
-      org.apache.spark.sql.internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES))
-    val wanted = (bytes.max(1) + advisory - 1) / advisory
-    if (wanted >= cur || wanted > Int.MaxValue) body
-    else {
-      val parts = wanted.toInt
-      // `disableAqeAtOne = false` keeps AQE for bodies whose intermediate
-      // frames carry unbounded join-product stats (e.g. checkpointed pair
-      // graphs): there the STATIC planner would pick sort-merge joins a
-      // runtime re-plan turns into broadcasts, and that costs more than
-      // the per-stage AQE jobs save (measured +54% on d10's star loop)
-      val aqeOff = disableAqeAtOne && parts == 1
-      val prevAqe = conf.get("spark.sql.adaptive.enabled")
-      conf.set("spark.sql.shuffle.partitions", parts)
-      if (aqeOff) conf.set("spark.sql.adaptive.enabled", "false")
-      try body
-      finally {
-        conf.set("spark.sql.shuffle.partitions", cur)
-        if (aqeOff) conf.set("spark.sql.adaptive.enabled", prevAqe)
+    val me = Thread.currentThread
+    // register this scope and learn, in the same step, whether it is alone;
+    // only a scope that is alone reads the values it will restore
+    val alone = sizingScopes.synchronized {
+      val depth = sizingScopes.getOrElseUpdate(spark, mutable.Map.empty)
+      depth(me) = depth.getOrElse(me, 0) + 1
+      depth.size == 1
+    }
+    try if (!alone) body else {
+      val conf = spark.conf
+      val cur = conf.get("spark.sql.shuffle.partitions").toInt
+      val advisory = math.max(1L, spark.sessionState.conf.getConf(
+        org.apache.spark.sql.internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES))
+      val wanted = (bytes.max(1) + advisory - 1) / advisory
+      if (wanted >= cur || wanted > Int.MaxValue) body
+      else {
+        val parts = wanted.toInt
+        // `disableAqeAtOne = false` keeps AQE for bodies whose intermediate
+        // frames carry unbounded join-product stats (e.g. checkpointed pair
+        // graphs): there the STATIC planner would pick sort-merge joins a
+        // runtime re-plan turns into broadcasts, and that costs more than
+        // the per-stage AQE jobs save (measured +54% on d10's star loop)
+        val aqeOff = disableAqeAtOne && parts == 1
+        val prevAqe = conf.get("spark.sql.adaptive.enabled")
+        conf.set("spark.sql.shuffle.partitions", parts)
+        if (aqeOff) conf.set("spark.sql.adaptive.enabled", "false")
+        try body
+        finally {
+          conf.set("spark.sql.shuffle.partitions", cur)
+          if (aqeOff) conf.set("spark.sql.adaptive.enabled", prevAqe)
+        }
       }
+    } finally sizingScopes.synchronized {
+      val depth = sizingScopes(spark)
+      if (depth(me) == 1) depth.remove(me) else depth(me) -= 1
+      if (depth.isEmpty) sizingScopes.remove(spark)
     }
   }
+
+  /** Active [[withShuffleSizedTo]] scopes: session → entering thread →
+    * nesting depth. */
+  private val sizingScopes =
+    mutable.Map.empty[org.apache.spark.sql.SparkSession, mutable.Map[Thread, Int]]
 
   /** Run `f` over every item on a bounded pool and return the results in
     * item order — the ONE copy of the maintenance fan-out protocol

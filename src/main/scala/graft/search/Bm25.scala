@@ -85,8 +85,7 @@ object Bm25 extends graft.ops.IndexLifecycle {
     // materialized once: the (N, avgdl) scalar probe below is an action,
     // and terms/df plus every later probe read this same subtree — without
     // the checkpoint the tokenize+aggregate build re-runs per consumer
-    // (the maybeBroadcast double-execution class, measured −30% there);
-    // honors graft.resilientMaterialize (see Ann.materializeOnce)
+    // (the maybeBroadcast double-execution class, measured −30% there)
     val postings = graft.ops.Ann.materializeOnce(rawPostings(docs, idCol, textCol))
     val terms = postings.groupBy("term").agg(count(lit(1)).as("df"))
     // exactly two scalars cross the driver — bounded by construction
@@ -140,24 +139,19 @@ object Bm25 extends graft.ops.IndexLifecycle {
     * shuffle width: a build that fits one partition writes its bucket
     * files from one task instead of paying a task (conf
     * deserialization, committer set-up) per bucket.
-    * `filesPerBucket ≤ 0` skips the alignment and aggregates on the
-    * natural keys (see [[writeIndex]]).
     */
   private[graft] def bucketedPostings(
       docs: DataFrame, idCol: String, textCol: String,
       termBuckets: Int, filesPerBucket: Int): DataFrame = {
-    val terms = docTerms(docs, idCol, textCol)
+    docTerms(docs, idCol, textCol)
       .withColumn("bucket", bucketCol(col("term"), termBuckets))
-    val grouped =
-      if (filesPerBucket <= 0) terms.groupBy("bucket", "doc_id", "dl", "term")
-      else terms
-        .withColumn("__salt", pmod(xxhash64(col("doc_id")), lit(filesPerBucket)))
-        .repartition(
-          math.min(termBuckets * filesPerBucket,
-            docs.sparkSession.sessionState.conf.numShufflePartitions),
-          col("bucket"), col("__salt"))
-        .groupBy("bucket", "__salt", "doc_id", "dl", "term")
-    grouped.agg(count(lit(1)).as("tf"))
+      .withColumn("__salt", pmod(xxhash64(col("doc_id")), lit(filesPerBucket)))
+      .repartition(
+        math.min(termBuckets * filesPerBucket,
+          docs.sparkSession.sessionState.conf.numShufflePartitions),
+        col("bucket"), col("__salt"))
+      .groupBy("bucket", "__salt", "doc_id", "dl", "term")
+      .agg(count(lit(1)).as("tf"))
       .select("doc_id", "term", "tf", "dl", "bucket")
   }
 
@@ -229,32 +223,26 @@ object Bm25 extends graft.ops.IndexLifecycle {
       termBuckets: Int = 64,
       filesPerBucket: Int = 1): Index = {
     require(termBuckets > 0, s"termBuckets must be positive, got $termBuckets")
+    requireFilesPerBucket(filesPerBucket)
     val spark = docs.sparkSession
     import spark.implicits._
-    // build shuffles sized from the input docs (×3 bounds the token
-    // explode) — Layout.withShuffleSizedTo; the bucket-aligned postings
-    // exchange takes that width up to buckets × filesPerBucket. The build
-    // has no join for AQE to re-plan, so a build that fits one partition
-    // runs without it: one job per query instead of one per shuffle stage
+    // build shuffles sized from the token explode's estimate —
+    // Layout.withShuffleSizedTo; the bucket-aligned postings exchange
+    // takes that width up to buckets × filesPerBucket. The build has no
+    // join for AQE to re-plan, so a build that fits one partition runs
+    // without it: one job per query instead of one per shuffle stage
     val (n, totDl) = graft.ops.Layout.withShuffleSizedTo(spark,
-      graft.ops.Layout.planBytes(docs) * 3) {
+      tokenExplodeBytes(docs)) {
       // ONE tokenize pass and ONE postings-sized exchange feed all four
       // tables, materialized once (the checkpoint keeps the
       // bucket-aligned partitioning the postings write needs), or every
       // write below re-runs the corpus build (the double-eval trap).
-      // Postings write shape — a measured storage-dependent trade:
-      //  - filesPerBucket ≥ 1 (default): the exchange is doc-salted, so
-      //    every output file is bucket-pure, at most filesPerBucket per
-      //    bucket, from at most buckets × filesPerBucket write tasks. At
-      //    sf0.1 this was 448 → 14 files and −25% write time; on object
-      //    stores / HDFS, bounding file count is what keeps the metadata
-      //    layer alive at 100 TB.
-      //  - filesPerBucket ≤ 0: the aggregate's own natural-key exchange
-      //    (partitions × buckets small files). On LOCAL disk, where
-      //    small files are unpriced, this won once the postings were big
-      //    enough that a separate alignment exchange dominated (measured
-      //    45 s vs 107 s at 125M postings, local[32]) — the wrong default
-      //    for a real cluster, offered for local pipelines.
+      // Postings write shape: the exchange is doc-salted, so every
+      // output file is bucket-pure, at most filesPerBucket per bucket,
+      // from at most buckets × filesPerBucket write tasks. At sf0.1 this
+      // was 448 → 14 files and −25% write time; on object stores / HDFS,
+      // bounding file count is what keeps the metadata layer alive at
+      // 100 TB.
       val bucketed = graft.ops.Ann.materializeOnce(
         bucketedPostings(docs, idCol, textCol, termBuckets, filesPerBucket))
       // ONE postings aggregation feeds the docs/ table AND (N, tot_dl):
@@ -308,6 +296,16 @@ object Bm25 extends graft.ops.IndexLifecycle {
   private val TermsDdl = "term STRING, df BIGINT, seg INT"
   private val DocsDdl = "doc_id BIGINT, dl BIGINT, seg INT"
   private val StatsDdl = "n_docs BIGINT, tot_dl BIGINT, seg INT"
+
+  // Byte estimates for the writers' shuffle sizing
+  // (graft.ops.Layout.withShuffleSizedTo), metadata-only upper bounds:
+  // the token explode of a doc frame carries at most 3× its bytes, and
+  // an at-rest posting row is ~32 B.
+  private def tokenExplodeBytes(docs: DataFrame): BigInt = graft.ops.Layout.planBytes(docs) * 3
+  private val PostingRowBytes = 32L
+
+  private def requireFilesPerBucket(filesPerBucket: Int): Unit =
+    require(filesPerBucket > 0, s"filesPerBucket must be positive, got $filesPerBucket")
 
   private def commitsPath(path: String) = s"$path/_commits"
 
@@ -497,13 +495,13 @@ object Bm25 extends graft.ops.IndexLifecycle {
     val existing = readTable(spark, DocsDdl, s"$path/docs")
       .where(col("seg").isin(committed.map(x => x: Any): _*))
       .select("doc_id")
-    // append shuffles sized from the delta docs + the ledger's real
-    // bytes (Layout.withShuffleSizedTo): the postings write keeps its
-    // explicit bucket-aligned repartition either way; only the implicit
-    // aggregate/join fan-outs shrink on KB-scale deltas
+    // append shuffles sized from the delta's token explode + the
+    // ledger's real bytes (Layout.withShuffleSizedTo): the postings write
+    // keeps its explicit bucket-aligned repartition either way; only the
+    // implicit aggregate/join fan-outs shrink on KB-scale deltas
     graft.ops.Layout.withShuffleSizedTo(spark,
       BigInt(graft.ops.Layout.dirBytes(spark, s"$path/docs")) +
-        graft.ops.Layout.planBytes(newDocs) * 3,
+        tokenExplodeBytes(newDocs),
       disableAqeAtOne = false) {
     val fresh = newDocs
       .withColumn("doc_id", col(idCol).cast("long"))
@@ -569,6 +567,7 @@ object Bm25 extends graft.ops.IndexLifecycle {
       spark: org.apache.spark.sql.SparkSession,
       path: String,
       filesPerBucket: Int = 1): (Long, Long) = {
+    requireFilesPerBucket(filesPerBucket)
     import spark.implicits._
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sessionState.newHadoopConf())
@@ -633,9 +632,8 @@ object Bm25 extends graft.ops.IndexLifecycle {
     // concurrently (guide §2.6); visibility still flips only at the
     // sequential swaps after, so the crash window is unchanged
     graft.ops.Layout.mapConcurrently[() => Unit, Unit](Seq(
-      () => live.repartition(nBuckets(spark, path) * math.max(1, filesPerBucket),
-          col("bucket"),
-          pmod(xxhash64(col("doc_id")), lit(math.max(1, filesPerBucket))))
+      () => live.repartition(nBuckets(spark, path) * filesPerBucket,
+          col("bucket"), pmod(xxhash64(col("doc_id")), lit(filesPerBucket)))
         .withColumn("seg", lit(0L))
         .write.mode("overwrite").partitionBy("seg", "bucket")
         .parquet(postingsS),
@@ -702,6 +700,7 @@ object Bm25 extends graft.ops.IndexLifecycle {
       filesPerBucket: Int = 1): (Int, Int) = {
     require(targetSegments >= 1,
       s"mergeSegments: targetSegments must be >= 1, got $targetSegments")
+    requireFilesPerBucket(filesPerBucket)
     import spark.implicits._
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sessionState.newHadoopConf())
@@ -736,17 +735,15 @@ object Bm25 extends graft.ops.IndexLifecycle {
     val st = readTable(spark, StatsDdl, s"$path/stats").where(segFilter)
       .agg(sum("n_docs").cast("long"), sum("tot_dl").cast("long")).head
     // the re-home is sized from the merged segments' ledgered token
-    // count (tot_dl ≈ postings rows; ~32 B/posting row) — exactly the
-    // tiered-merge premise that bytes rewritten track the small tail,
-    // never the whole index
+    // count (tot_dl ≈ postings rows) — exactly the tiered-merge premise
+    // that bytes rewritten track the small tail, never the whole index
     graft.ops.Layout.withShuffleSizedTo(spark,
-      BigInt(st.getLong(1)) * 32, disableAqeAtOne = false) {
+      BigInt(st.getLong(1)) * PostingRowBytes, disableAqeAtOne = false) {
     graft.ops.Layout.mapConcurrently[() => Unit, Unit](Seq(
       () => readTable(spark, PostingsDdl, s"$path/postings")
         .where(segFilter).drop("seg")
-        .repartition(nBuckets(spark, path) * math.max(1, filesPerBucket),
-          col("bucket"),
-          pmod(xxhash64(col("doc_id")), lit(math.max(1, filesPerBucket))))
+        .repartition(nBuckets(spark, path) * filesPerBucket,
+          col("bucket"), pmod(xxhash64(col("doc_id")), lit(filesPerBucket)))
         .withColumn("seg", lit(newSeg))
         .write.mode("append").partitionBy("seg", "bucket").parquet(s"$path/postings"),
       () => readTable(spark, TermsDdl, s"$path/terms").where(segFilter)

@@ -310,11 +310,6 @@ object CachedRag {
     *
     * Returns a driver-local `(query_id, question, answer, hit, cache_id,
     * cost)`.
-    *
-    * Concurrent calls on one `SparkSession` can leave its shuffle conf
-    * changed for good: the sizing inside runs through
-    * [[graft.ops.Layout.withShuffleSizedTo]], which saves, sets and
-    * restores shared session conf. Serialize callers (ROADMAP direction 2).
     */
   def cachedAnswerBatch(
       spark: SparkSession,
@@ -758,11 +753,6 @@ object ChatRag {
     * write shares the memory append's replay contract: at-least-once
     * inside the ledger's residual crash window, exactly-once on the
     * normal streaming path.
-    *
-    * Concurrent calls on one `SparkSession` can leave its shuffle conf
-    * changed for good: the sizing inside runs through
-    * [[graft.ops.Layout.withShuffleSizedTo]], which saves, sets and
-    * restores shared session conf. Serialize callers (ROADMAP direction 2).
     */
   def chatTurn(
       spark: SparkSession,
@@ -810,10 +800,10 @@ object ChatRag {
       b -> fs.exists(new org.apache.hadoop.fs.Path(mp, s"sbucket=$b"))).toMap
     val bucketDirs = touched.keys.toSeq.sorted.filter(preExists)
       .map(b => new org.apache.hadoop.fs.Path(mp, s"sbucket=$b"))
-    // size the turn's own shuffles from the touched buckets' REAL bytes +
-    // sessions × a generous serving-row width. The cache pass sizes
-    // itself (its answerMisses touches caller-owned tables). Nothing in
-    // these scopes re-joins a checkpoint, so AQE may go at one partition.
+    // size the memory aggregate's shuffle from the touched buckets' REAL
+    // bytes + sessions × a generous serving-row width. The cache pass
+    // sizes itself (its answerMisses touches caller-owned tables). The
+    // aggregate re-joins no checkpoint, so AQE may go at one partition.
     val sliceBytes =
       if (!bucketed) graft.ops.Layout.dirBytes(spark, memoryPath)
       else bucketDirs.map(d => fs.getContentSummary(d).getLength).sum
@@ -857,7 +847,8 @@ object ChatRag {
         },
       StructType(questions0.schema("session_id") +: StructField("turn", LongType) +:
         served.schema.fields.toSeq :+ StructField("n_prompt_msgs", LongType)))
-    graft.ops.Layout.withShuffleSizedTo(spark, turnBytes) {
+    // The rest of the turn plans no Exchange (local-relation appends,
+    // the fold's coalesce rewrites, the log write), so it runs unsized.
     // the C4 append, AFTER the output is pinned. Each session's new turn
     // numbers sit above its ask-time max by construction, so a replay
     // whose append never landed re-mints the same numbers; one whose
@@ -936,7 +927,6 @@ object ChatRag {
       ChatLog.append(stamped.coalesce(1), lp, chatLogWidth)
     }
     out
-    }
   }
 
   /** One streaming micro-batch of chat turns: [[chatTurn]] landed at
@@ -2197,11 +2187,6 @@ object SemanticCache {
     * d8 selectivity law (exact product for small miss sets, RP-banded
     * candidates + exact verify above 10k — never a quadratic nested
     * loop); the insert is O(misses).
-    *
-    * Concurrent calls on one `SparkSession` can leave its shuffle conf
-    * changed for good: the sizing inside runs through
-    * [[graft.ops.Layout.withShuffleSizedTo]], which saves, sets and
-    * restores shared session conf. Serialize callers (ROADMAP direction 2).
     */
   def intakeBatch(
       spark: SparkSession,

@@ -614,6 +614,29 @@ class DedupSpec extends SparkSpec {
       .as[Long].collect().toSet == Set(100L, 101L, 2L))
   }
 
+  test("dropNearDupsCC sizes itself: a plain call runs d9's registered job count") {
+    // the op owns its shuffle sizing, so a library caller runs what the
+    // registered query measures; with the sizing in the registry the
+    // plain call ran 23 jobs against the registered 18 on sf0.01
+    val dir = tempDir("graft_d9_jobs").toString
+    (0L until 80L).map(i => (i, s"shared words for cluster ${i % 7} and more of them " +
+        (if (i % 3 == 0) "" else s"tail$i")))
+      .toDF("doc_id", "text").write.parquet(s"$dir/documents.parquet")
+    def run(body: => org.apache.spark.sql.DataFrame) =
+      ListenerBusDrain.jobsOf(spark.sparkContext)(body.collect().toSeq)
+    val (registered, registeredJobs) =
+      run(graft.SparkEntry.queries("d9_cc_resolution")(spark, dir))
+    val (plain, plainJobs) = run {
+      val docs = spark.read.parquet(s"$dir/documents.parquet").where(col("doc_id") < 60)
+      Dedup.dropNearDupsCC(docs, Dedup.jaccardPairs(docs, minSim = 0.8))
+        .select("doc_id").orderBy("doc_id")
+    }
+    assert(plain == registered)
+    assert(plain.size < 60, "the fixture must hold near-dup components")
+    assert(plainJobs == registeredJobs,
+      s"plain dropNearDupsCC ran $plainJobs jobs, the registered d9 $registeredJobs")
+  }
+
   test("connected components resolve transitive near-dup chains exactly") {
     // two components: {1,2,3} connected only through 3, and a 4-chain
     // {10,11,12,13}; greedy keep-lowest would keep both 1 AND 2

@@ -548,6 +548,41 @@ class LayoutSpec extends SparkSpec {
     assert(hits.isEmpty, s"store reads outside their one reader:\n${hits.mkString("\n")}")
   }
 
+  test("shuffle sizing lives in the ops: no registry scope, no bare size multiplier") {
+    // a library caller of an op runs at the width the bench measures
+    // only while the op owns its sizing; every byte estimate is a named
+    // per-store-family estimate, declared beside that family's writer
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala")
+    assert(java.nio.file.Files.isDirectory(root),
+      s"source root not found under ${root.toAbsolutePath}")
+    val registry = Seq(java.nio.file.Paths.get("graft/SparkEntry.scala"),
+      java.nio.file.Paths.get("graft/tools"))
+    val sized = "(?:planBytes|dirBytes)\\("
+    val literalProduct = (s"$sized(?:[^()]|\\([^()]*\\))*\\)\\)?\\s*\\*\\s*\\d|" +
+      s"\\d\\s*\\*\\s*(?:BigInt\\()?[\\w.]*$sized").r
+    val namedEstimate = "def \\w+Bytes\\(".r
+    val walk = java.nio.file.Files.walk(root)
+    val hits = try walk.iterator().asScala.toSeq
+      .filter(_.toString.endsWith(".scala"))
+      .flatMap { f =>
+        val rel = root.relativize(f)
+        java.nio.file.Files.readAllLines(f).asScala.zipWithIndex.flatMap {
+          case (line, i) =>
+            val scope =
+              if (registry.exists(rel.startsWith) && line.contains("withShuffleSizedTo"))
+                Seq("withShuffleSizedTo") else Nil
+            val bare =
+              if (literalProduct.findFirstIn(line).isDefined &&
+                namedEstimate.findFirstIn(line).isEmpty) Seq("bare size multiplier")
+              else Nil
+            (scope ++ bare).map(b => s"$f:${i + 1}: $b")
+        }
+      }
+    finally walk.close()
+    assert(hits.isEmpty, s"shuffle sizing outside the ops' named estimates:\n${hits.mkString("\n")}")
+  }
+
   test("vacuum: heals committed crashed swaps, sweeps condemned/uncommitted siblings, never touches live data") {
     val tmp = tempDir("graft_vacuum").toString
     val root = new org.apache.hadoop.fs.Path(s"$tmp/table")
@@ -668,5 +703,55 @@ class LayoutSpec extends SparkSpec {
     val pb = Layout.planBytes(spark.read.parquet(s"$tmp2/t"))
     assert(pb > 0 && pb < BigInt(advisory),
       s"parquet-backed planBytes must be the real file size, got $pb")
+  }
+
+  private def partitions = spark.conf.get("spark.sql.shuffle.partitions")
+  private def advisoryBytes = BigInt(spark.sessionState.conf.getConf(
+    org.apache.spark.sql.internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES))
+
+  test("withShuffleSizedTo: overlapping scopes on two threads leave the session unchanged") {
+    val (cur, aqe) = (partitions, spark.conf.get("spark.sql.adaptive.enabled"))
+    assume(cur.toInt > 2, s"needs a session wider than 2 partitions, got $cur")
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    val (aIn, bIn, aOut) = (new CountDownLatch(1), new CountDownLatch(1), new CountDownLatch(1))
+    def await(l: CountDownLatch): Unit =
+      assert(l.await(60, TimeUnit.SECONDS), "latch timed out")
+    @volatile var bSaw = ""
+    def thread(body: => Unit) = {
+      val err = new java.util.concurrent.atomic.AtomicReference[Throwable]()
+      val t = new Thread(() => try body catch { case e: Throwable => err.set(e) })
+      t.start()
+      (t, err)
+    }
+    // A enters a 2-partition scope, B a 1-partition scope, A exits, B exits
+    val a = thread {
+      Layout.withShuffleSizedTo(spark, advisoryBytes * 2) { aIn.countDown(); await(bIn) }
+      aOut.countDown()
+    }
+    val b = thread {
+      await(aIn)
+      Layout.withShuffleSizedTo(spark, BigInt(1)) {
+        bSaw = partitions; bIn.countDown(); await(aOut)
+      }
+    }
+    Seq(a, b).foreach { case (t, err) =>
+      t.join(120000)
+      assert(!t.isAlive, "scope thread hung")
+      Option(err.get).foreach(e => throw e)
+    }
+    // nothing outlived both scopes, and B ran its body unchanged inside A's
+    assert(partitions == cur, s"shuffle partitions left at $partitions, was $cur")
+    assert(spark.conf.get("spark.sql.adaptive.enabled") == aqe)
+    assert(bSaw == "2", s"B's body saw $bSaw partitions")
+  }
+
+  test("withShuffleSizedTo: scopes inside an op's mapConcurrently workers neither block nor resize") {
+    val cur = partitions
+    val seen = Layout.withShuffleSizedTo(spark, BigInt(1)) {
+      Layout.mapConcurrently(1 to 3, parallelism = 3)(_ =>
+        Layout.withShuffleSizedTo(spark, advisoryBytes * 2)(partitions))
+    }
+    assert(seen == Seq("1", "1", "1"), s"workers saw $seen")
+    assert(partitions == cur)
   }
 }

@@ -573,6 +573,14 @@ class Bm25Spec extends SparkSpec {
         else assert(n >= 1 && n <= fpb, s"$d: $n files, want 1..$fpb")
       }
     }
+    // every writer of the layout refuses a non-positive file count
+    val path = s"${tempDir("graft_bm25_files")}/idx"
+    Seq(() => Bm25.writeIndex(docs, "doc_id", "text", path, filesPerBucket = 0),
+      () => Bm25.compactIndex(spark, path, filesPerBucket = 0),
+      () => Bm25.mergeSegments(spark, path, filesPerBucket = 0)).foreach { op =>
+      val e = intercept[IllegalArgumentException](op())
+      assert(e.getMessage.contains("filesPerBucket"), e.getMessage)
+    }
   }
 
   test("rrfFuse single-list fusion preserves the input order") {
