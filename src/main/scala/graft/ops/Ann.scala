@@ -597,6 +597,7 @@ object Ann extends IndexLifecycle {
           val exactMass = nRows.toDouble * (nRows - 1) / 2.0
           if (candMass >= exactFallbackBar * exactMass) {
             return Dedup.cosinePairsExactUnchecked(emb, idCol, vecCol, minCos)
+              .orderBy(col("id_a"), col("id_b"))
           }
           val hotRows = probeRow.getSeq[org.apache.spark.sql.Row](1)
           Some(emb.sparkSession.createDataFrame(

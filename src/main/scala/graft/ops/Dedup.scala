@@ -1469,9 +1469,11 @@ object Dedup extends IndexLifecycle {
       minCos: Double = 0.95,
       maxExactRows: Int = 1 << 16): DataFrame = {
     requireSmall(emb, maxExactRows, "cosinePairsExact")
-    cosinePairsExactUnchecked(emb, idCol, vecCol, minCos)
+    cosinePairsExactUnchecked(emb, idCol, vecCol, minCos).orderBy(col("id_a"), col("id_b"))
   }
 
+  /** [[cosinePairsExact]]'s pairs in no particular order, without its
+    * size guard: a caller that promises an order sorts. */
   private[ops] def cosinePairsExactUnchecked(
       emb: DataFrame, idCol: String, vecCol: String, minCos: Double): DataFrame = {
     val a = emb.select(col(idCol).as("id_a"), col(vecCol).as("va"))
@@ -1480,7 +1482,6 @@ object Dedup extends IndexLifecycle {
       .withColumn("cos", VectorFunctions.cosineSimilarity(col("va"), col("vb")))
       .where(col("cos") >= minCos)
       .select(col("id_a"), col("id_b"), round(col("cos"), 6).as("cos"))
-      .orderBy(col("id_a"), col("id_b"))
   }
 
   /** The exact cosine joins are O(n²): refuse inputs past `maxExactRows`
@@ -1625,10 +1626,12 @@ object Dedup extends IndexLifecycle {
     // so the same probe is not paid twice
     cosinePairsCounted(emb, emb.limit(maxExactRows + 1).count(), idCol,
       vecCol, minCos, maxExactRows, nTables, nProjs)
+      .orderBy(col("id_a"), col("id_b"))
 
   /** [[cosinePairsAuto]] for a caller that already knows `emb`'s row
     * count (a driver-pinned serving batch): the branch is decided without
-    * the probe job.
+    * the probe job. The exact branch's pairs come in no particular order
+    * (the serving resolve aggregates them; no range sort is paid).
     */
   private[graft] def cosinePairsCounted(
       emb: DataFrame,

@@ -493,25 +493,71 @@ object Layout {
     * turned into a Spark schema by Spark's footer law
     * (`ParquetFileFormat.readSchemaFromFooter`: the writer's Spark schema
     * when the footer carries one, else the parquet converter under this
-    * session's conf) and merged by Spark's `StructType.merge`.
+    * session's conf) and merged by Spark's `StructType.merge` in path
+    * order, the order Spark's inference folds them in.
     */
-  private def footerSchema(
+  private[graft] def footerSchema(
       spark: org.apache.spark.sql.SparkSession,
       files: Seq[org.apache.hadoop.fs.FileStatus]
   ): org.apache.spark.sql.types.StructType = {
     import org.apache.spark.sql.execution.datasources.parquet.{
       ParquetFileFormat, ParquetToSparkSchemaConverter}
-    val conf = spark.sessionState.newHadoopConf()
     val sqlConf = spark.sessionState.conf
     val converter = new ParquetToSparkSchemaConverter(sqlConf)
+    val byPath = files.sortBy(_.getPath.toString)
+    byPath.iterator.zip(readFooters(spark, byPath.iterator, rowGroups = false))
+      .map { case (f, footer) =>
+        ParquetFileFormat.readSchemaFromFooter(
+          new org.apache.parquet.hadoop.Footer(f.getPath, footer), converter)
+      }.reduceLeft(org.apache.spark.sql.SchemaMerge.merge(
+        _, _, sqlConf.caseSensitiveAnalysis))
+  }
+
+  /** The parquet footers of `files`, read one by one as the iterator is
+    * consumed, through the session's Hadoop conf: the session's
+    * `spark.hadoop.*` and `parquet.*` settings reach the read, and no
+    * footer pays for a fresh `Configuration` (the one-argument
+    * `ParquetFileReader.open` builds one per call, which parses the
+    * Hadoop default XML resources again — 6.6–9.5 ms CPU per footer,
+    * against 0.13–0.31 ms through the held conf; PERF.md). Without
+    * `rowGroups` the row-group metadata is skipped: enough for a schema,
+    * not for a row count.
+    */
+  private[graft] def readFooters(
+      spark: org.apache.spark.sql.SparkSession,
+      files: Iterator[org.apache.hadoop.fs.FileStatus],
+      rowGroups: Boolean): Iterator[org.apache.parquet.hadoop.metadata.ParquetMetadata] = {
+    val conf = spark.sessionState.newHadoopConf()
     files.map { f =>
+      val options = org.apache.parquet.HadoopReadOptions.builder(conf, f.getPath)
+      if (!rowGroups) options.withMetadataFilter(
+        org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS)
       val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f, conf))
-      val footer = try reader.getFooter finally reader.close()
-      ParquetFileFormat.readSchemaFromFooter(
-        new org.apache.parquet.hadoop.Footer(f.getPath, footer), converter)
-    }.reduceLeft(org.apache.spark.sql.SchemaMerge.merge(
-      _, _, sqlConf.caseSensitiveAnalysis))
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f, conf), options.build())
+      try reader.getFooter finally reader.close()
+    }
+  }
+
+  /** `c IN ids` over a per-call set of long ids, bound into the plan by
+    * reference. Spark keeps an `isin` of at most 10 values as an `In` and
+    * inlines its long literals into the generated source, so every new id
+    * set compiles new classes; an `InSet` of longs is evaluated against a
+    * set the generated code holds as a reference object, so a warm call
+    * with new ids compiles nothing. A parquet scan still takes it as the
+    * pushed filter `In(c, [...])`. `c` is read as LONG; on an INT column
+    * Spark unwraps that cast and compiles the set into a `switch` again.
+    */
+  private[graft] def inIds(c: Column, ids: Iterable[Long]): Column =
+    org.apache.spark.sql.ExpressionColumn(
+      org.apache.spark.sql.catalyst.expressions.InSet(
+        org.apache.spark.sql.ExpressionColumn.expression(c.cast("long")),
+        ids.iterator.map(Long.box).toSet[Any]))
+
+  /** A footer's row count: the sum of its row groups' counts (read with
+    * `rowGroups = true`). */
+  private[graft] def footerRows(footer: org.apache.parquet.hadoop.metadata.ParquetMetadata): Long = {
+    import scala.jdk.CollectionConverters._
+    footer.getBlocks.asScala.iterator.map(_.getRowCount).sum
   }
 
   /** [[compactSmallFiles]] over many independent directories (the

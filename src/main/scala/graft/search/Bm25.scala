@@ -800,8 +800,13 @@ object Bm25 extends graft.ops.IndexLifecycle {
 
   /** Restrict a loaded index to the buckets holding `queryTerms` — a
     * static partition-pruning filter on the postings scan (the plan's
-    * `PartitionFilters: [bucket IN (...)]`), so a probe reads ONLY the
-    * query terms' bucket directories. No-op on an in-memory index.
+    * `PartitionFilters: [array_contains([...], bucket)]`), so a probe
+    * reads ONLY the query terms' bucket directories. The bucket set rides
+    * as one array literal, which generated code holds by reference: an
+    * INT `isin` (or `InSet`, to which Spark unwraps a cast) compiles its
+    * values into a `switch`, in the pruning predicate and in the filter
+    * the optimizer infers on the query-term side — new code for every
+    * new term set. No-op on an in-memory index.
     */
   def restrictToTerms(index: Index, queryTerms: Seq[String]): Index =
     index.termBuckets match {
@@ -809,7 +814,7 @@ object Bm25 extends graft.ops.IndexLifecycle {
         val bs = bucketsFor(index.postings.sparkSession, queryTerms, nb)
         index.copy(postings =
           if (bs.isEmpty) index.postings.where(lit(false))
-          else index.postings.where(col("bucket").isin(bs.map(x => x: Any): _*)))
+          else index.postings.where(array_contains(typedLit(bs.toArray), col("bucket"))))
       case None => index
     }
 

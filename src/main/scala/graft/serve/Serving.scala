@@ -353,8 +353,8 @@ object CachedRag {
       }
     val answers = Pinned.keyed(
       if (hits.isEmpty) Nil
-      else SemanticCache.readStore(spark, cachePath, vecType, withAnswer = true)
-        .where(col("cache_id").isin(hits.map(_.get(1)).distinct: _*))
+      else SemanticCache.readStoreIds(spark, cachePath, vecType,
+          hits.map(_.getLong(1)), withAnswer = true)
         .select("cache_id", "answer").collect().toSeq, 0)
     val hitRows = for (h <- hits; a <- answers(h.get(1)); q <- qById(h.get(0)))
       yield Row(h.get(0), q.getAs[Any]("question"), a.get(1), true, h.get(1), 0.0)
@@ -837,15 +837,17 @@ object ChatRag {
         cachePath, minCos, answerMisses, idOffset)
     val qById = Pinned.keyed(qRows, questions0.schema.fieldIndex("query_id"))
     // a null session matches no memory or prompt row and is not output
-    val out = Pinned(spark,
+    val outRows =
       for (d <- served.collect().toSeq; q <- qById(d.get(0)) if !q.isNullAt(sIdx))
         yield {
           val st = memStats.get(q.get(sIdx))
           val turn = st.filterNot(_.isNullAt(2)).fold(0L)(_.getLong(2) + 1)
           Row(q.get(sIdx), turn, d.get(0), d.get(1), d.get(2), d.get(3),
             d.get(4), d.get(5), 3L + 2L * st.fold(0L)(_.getLong(1)))
-        },
-      StructType(questions0.schema("session_id") +: StructField("turn", LongType) +:
+        }
+    val sessionField = questions0.schema("session_id")
+    val out = Pinned(spark, outRows,
+      StructType(sessionField +: StructField("turn", LongType) +:
         served.schema.fields.toSeq :+ StructField("n_prompt_msgs", LongType)))
     // The rest of the turn plans no Exchange (local-relation appends,
     // the fold's coalesce rewrites, the log write), so it runs unsized.
@@ -860,19 +862,18 @@ object ChatRag {
     // `turnTs` stamps an append-time `ts` column, the age signal of
     // [[pruneIdleSessions]]; unstamped callers write the original 4
     // columns, and every rewrite reads mixed tables through
-    // PartitionedTable.read.
-    val appendBase = out.select(col("session_id"),
-        explode(array(
-          struct(col("turn"), lit("user").as("role"),
-            col("question").as("content")),
-          struct((col("turn") + 1).as("turn"), lit("assistant").as("role"),
-            col("answer").as("content")))).as("__m"))
-      .select(col("session_id"), col("__m.turn").as("turn"),
-        col("__m.role").as("role"), col("__m.content").as("content"))
-    val appendRows = turnTs match {
-      case Some(ts) => appendBase.withColumn("ts", lit(ts))
-      case None => appendBase
-    }
+    // PartitionedTable.read. The rows are built here on the driver, `ts`
+    // carried in them: a per-turn literal in a plan would make every
+    // turn compile new code.
+    val stamp = turnTs.toSeq
+    val appendRows = Pinned(spark,
+      outRows.flatMap { r =>
+        Seq(Row.fromSeq(Seq(r.get(0), r.getLong(1), "user", r.get(3)) ++ stamp),
+          Row.fromSeq(Seq(r.get(0), r.getLong(1) + 1, "assistant", r.get(4)) ++ stamp))
+      },
+      StructType(Seq(sessionField, StructField("turn", LongType),
+        StructField("role", StringType), StructField("content", StringType)) ++
+        stamp.map(_ => StructField("ts", LongType))))
     // bucketed: ONE task writes one file per TOUCHED bucket; a session's
     // user+assistant pair shares a bucket, so each session's turn stays
     // all-or-nothing within one file commit. Legacy: one flat file.
@@ -915,16 +916,17 @@ object ChatRag {
       }
       ()
     }
-    // the C5 trail (see the chatLog doc note above): `out` is already
-    // materialized, so the log write re-serves nothing
+    // the C5 trail (see the chatLog doc note above): the turn's output
+    // rows are on the driver, so the log write re-serves nothing
     chatLog.foreach { lp =>
-      val rec = out.select(col("session_id").cast("string").as("user"),
-        col("question").as("message"), col("answer").as("response"))
-      val stamped = turnTs match {
-        case Some(ts) => rec.withColumn("ts", lit(ts))
-        case None => rec.withColumn("ts", lit(null).cast("long"))
-      }
-      ChatLog.append(stamped.coalesce(1), lp, chatLogWidth)
+      val ts: Any = turnTs.orNull
+      val rec = Pinned(spark,
+        outRows.map(r => Row(r.get(0), r.get(3), r.get(4), ts)),
+        StructType(Seq(sessionField, served.schema("question"),
+          served.schema("answer"), StructField("ts", LongType))))
+      ChatLog.append(rec.select(col("session_id").cast("string").as("user"),
+        col("question").as("message"), col("answer").as("response"), col("ts"))
+        .coalesce(1), lp, chatLogWidth)
     }
     out
   }
@@ -2296,8 +2298,8 @@ object SemanticCache {
     val dups =
       if (!store.exists || insertRows.isEmpty) Nil
       else Pinned(spark,
-          for (o <- readStore(spark, store.path, vecType)
-                .where(col("cache_id").isin(insertRows.map(_.get(0)): _*))
+          for (o <- readStoreIds(spark, store.path, vecType,
+                  insertRows.filterNot(_.isNullAt(0)).map(_.getLong(0)))
                 .collect().toSeq;
               n <- insertById(o.get(0)))
             yield Row(o.get(0), o.get(1), n.get(1)),
@@ -2892,15 +2894,11 @@ object SemanticCache {
       store: StoreListing,
       nBatch: Long,
       maxExactProduct: Long)(visibleCount: => Long): Long = {
-    val conf = spark.sessionState.newHadoopConf()
     val cap = maxExactProduct / math.max(1L, nBatch)
     var rows = 0L
-    val files = store.files.iterator
-    while (files.hasNext && rows <= cap) {
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(files.next(), conf))
-      try rows += r.getRecordCount finally r.close()
-    }
+    val footers = graft.ops.Layout.readFooters(spark, store.files.iterator, rowGroups = true)
+    while (footers.hasNext && rows <= cap)
+      rows += graft.ops.Layout.footerRows(footers.next())
     if (math.max(1L, rows) <= cap) rows else visibleCount
   }
 
@@ -2917,6 +2915,17 @@ object SemanticCache {
         (if (withAnswer) Seq(StructField("answer", StringType)) else Nil)))
       .parquet(cachePath)
   }
+
+  /** [[readStore]] of the entries with the given ids — the hit-answer
+    * fetch and the intake's collision read. The micro-batch-bounded id
+    * set is pushed into the parquet scan (`In(cache_id, ...)`) and bound
+    * by reference, so a turn with new ids compiles nothing.
+    */
+  private[graft] def readStoreIds(spark: SparkSession, cachePath: String,
+      vecType: org.apache.spark.sql.types.DataType, ids: Iterable[Long],
+      withAnswer: Boolean = false): DataFrame =
+    readStore(spark, cachePath, vecType, withAnswer)
+      .where(graft.ops.Layout.inIds(col("cache_id"), ids))
 
   /** Step 1 of the intake and of the serving pass: the micro-batch is
     * pinned ONCE and every later step reads that copy; the store minus
@@ -2943,8 +2952,9 @@ object SemanticCache {
         batch0.select(col(queryIdCol).cast("long").as("cache_id"),
           col(queryVecCol).as("embedding")).limit(0)
     val ownIds = batch0.where(col(queryIdCol).isNotNull)
-      .select((col(queryIdCol) + idOffset).cast("long")).collect().map(_.get(0))
-    val visible = stored.where(col("cache_id").isNull || !col("cache_id").isin(ownIds: _*))
+      .select((col(queryIdCol) + idOffset).cast("long")).collect().map(_.getLong(0))
+    val visible = stored.where(col("cache_id").isNull ||
+      !graft.ops.Layout.inIds(col("cache_id"), ownIds))
     val nStore = routeStoreCount(spark, store, nBatch, maxExactProduct)(visible.count())
     // AQE may go at one partition on the exact route only: the banded
     // lookup's checkpoint-rejoin plan trips the analyzer with AQE off

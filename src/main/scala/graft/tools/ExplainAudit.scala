@@ -40,8 +40,11 @@ object ExplainAudit {
     val qs = SparkEntry.queries
     var failed = 0
 
-    def audit(name: String)(checks: (String, String => Boolean)*): Unit = {
-      val df = qs(name)(spark, sfDir)
+    def audit(name: String)(checks: (String, String => Boolean)*): Unit =
+      auditPlan(name, qs(name)(spark, sfDir))(checks: _*)
+
+    def auditPlan(name: String, df: org.apache.spark.sql.DataFrame)(
+        checks: (String, String => Boolean)*): Unit = {
       val plan = df.queryExecution.executedPlan.toString
       checks.foreach { case (desc, p) =>
         val ok = p(plan)
@@ -137,31 +140,46 @@ object ExplainAudit {
         (p => !p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin")),
       "normalize is the codegen unit_vector_f, no UDF anywhere" ->
         (p => p.contains("unit_vector_f") && !p.contains("UDF(")))
+    // the serving pass's id-filtered store reads (the hit-answer fetch
+    // and the intake's collision read) run inside the pass, so their
+    // plans are audited on the reads themselves, over a small store
+    val idStoreDir = java.nio.file.Files.createTempDirectory("graft_audit_cache")
+    val idStore = s"$idStoreDir/cache"
+    locally {
+      import spark.implicits._
+      Seq((1L, Array(1.0f, 0.0f), "a1"), (2L, Array(0.0f, 1.0f), "a2"))
+        .toDF("cache_id", "embedding", "answer").write.parquet(idStore)
+    }
+    val pushesIdSet: String => Boolean =
+      "PushedFilters: \\[[^\\]]*In\\(cache_id".r.findFirstIn(_).isDefined
+    def idRead(withAnswer: Boolean) =
+      graft.serve.SemanticCache.readStoreIds(spark, idStore,
+        org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.FloatType),
+        Seq(1L, 3L, 5L), withAnswer)
     audit("ep5_cached_rag")(
-      // the final plan is the composed serving loop's TAIL: the lookup
-      // dispositions, miss pipeline, and intake all run behind
-      // checkpoints at construction (their shapes are audited standalone
+      // the final plan is the composed serving loop's TAIL: the lookup,
+      // miss pipeline, intake and answer join all run on rows pinned on
+      // the driver during the pass (their shapes are audited standalone
       // — c10's codegen cosine, b5/b11b's pruned postings, b9's rerank),
-      // so what remains is checkpoint scans + the store answer joins
-      "dispositions and priced answers read from checkpoints, no UDF in the serving tail" ->
-        (p => p.contains("ExistingRDD") && !p.contains("UDF(")),
+      // so what remains is local rows under the batch sort
+      "dispositions and priced answers are driver-pinned rows, no UDF in the serving tail" ->
+        (p => p.contains("LocalTableScan") && !p.contains("UDF(")),
       "no shuffled cartesian in the composed serving loop" ->
         (p => !p.contains("CartesianProduct")),
-      "answer serving joins are broadcast (store is the working set)" ->
-        (p => p.contains("BroadcastHashJoin")),
-      // round-11 verdict #2: the hit-answer fetch must push the
-      // micro-batch-bounded hit ids into the post-intake store SCAN (the
-      // b11b term-set discipline) — without it the join shuffles the
-      // full store per micro-batch at banded scale
-      "hit-answer fetch pushes cache_id IN (...) into the store scan" ->
-        (p => p.contains("In(cache_id") || p.contains("EqualTo(cache_id")))
+      "answers joined on the driver: no join and no store scan in the serving tail" ->
+        (p => !p.contains("Join") && !p.contains("FileScan")))
+    // round-11 verdict #2: the hit-answer fetch must push the
+    // micro-batch-bounded hit ids into the post-intake store SCAN (the
+    // b11b term-set discipline) — without it the fetch scans the full
+    // store per micro-batch at banded scale
+    auditPlan("ep5_cached_rag", idRead(withAnswer = true))(
+      "hit-answer fetch pushes cache_id IN (...) into the store scan" -> pushesIdSet)
     audit("ep6_chat_rag")(
-      // the chat composition's heavy stages (lookup, miss pipeline,
-      // intake, prompt counting) all run behind checkpoints at
-      // construction; the registered tail is checkpoint scans + the
-      // final projection
-      "chat tail reads checkpoints, no UDF anywhere" ->
-        (p => p.contains("ExistingRDD") && !p.contains("UDF(")),
+      // the chat composition's stages (lookup, miss pipeline, intake,
+      // prompt counting) all run during the turn; the registered tail is
+      // the turns' driver-pinned rows + the final projection
+      "chat tail is driver-pinned rows, no UDF anywhere" ->
+        (p => p.contains("LocalTableScan") && !p.contains("UDF(")),
       "no cartesian in the chat composition" ->
         (p => !p.contains("CartesianProduct")))
     audit("c13_cache_report")(
@@ -169,9 +187,10 @@ object ExplainAudit {
         (p => p.contains("HashAggregate")),
       "mint-cost join broadcast (cache-bounded build side)" ->
         (p => p.contains("BroadcastHashJoin")),
-      "no cartesian in the report" -> (p => !p.contains("CartesianProduct")),
-      "the underlying hit fetches carry the IN pushdown" ->
-        (p => p.contains("In(cache_id") || p.contains("EqualTo(cache_id")))
+      "no cartesian in the report" -> (p => !p.contains("CartesianProduct")))
+    auditPlan("c13_cache_report", idRead(withAnswer = false))(
+      "the intake's collision read carries the IN pushdown" -> pushesIdSet)
+    org.apache.hadoop.fs.FileUtil.fullyDelete(idStoreDir.toFile)
     audit("a4_lsh_batch")(
       "band-bucket candidate join is broadcast-hash" ->
         (p => p.contains("BroadcastHashJoin")),

@@ -508,6 +508,54 @@ class LayoutSpec extends SparkSpec {
     assert(hits.isEmpty, s"swap protocol built outside Layout:\n${hits.mkString("\n")}")
   }
 
+  test("one footer reader: ParquetFileReader.open only inside Layout.readFooters") {
+    // the one-argument open parses a fresh Hadoop conf per footer and
+    // ignores the session's settings; every footer read goes through the
+    // reader that holds the session conf
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala")
+    assert(java.nio.file.Files.isDirectory(root),
+      s"source root not found under ${root.toAbsolutePath}")
+    val layout = java.nio.file.Paths.get("graft/ops/Layout.scala")
+    val walk = java.nio.file.Files.walk(root)
+    val hits = try walk.iterator().asScala.toSeq
+      .filter(_.toString.endsWith(".scala"))
+      .flatMap { f =>
+        val lines = java.nio.file.Files.readAllLines(f).asScala.toIndexedSeq
+        lines.indices.filter(i => lines(i).contains("ParquetFileReader.open(")).filterNot { i =>
+          val before = lines.take(i)
+          f.endsWith(layout) && before.lastIndexWhere(_.contains("def ")) ==
+            before.lastIndexWhere(_.contains("def readFooters("))
+        }.map(i => s"$f:${i + 1}")
+      }
+    finally walk.close()
+    assert(hits.isEmpty, s"footer reads outside Layout.readFooters:\n${hits.mkString("\n")}")
+  }
+
+  test("readFooters: summed row count and merged schema match Spark's reads of a mixed-schema dir") {
+    val dir = tempDir("graft_footers").toString + "/t"
+    Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "s").write.parquet(dir)
+    Seq((4L, 0.5)).toDF("id", "x").write.mode("append").parquet(dir)
+    spark.range(5, 105).select(col("id"), (col("id") % 7).cast("int").as("k"))
+      .repartition(3).write.mode("append").parquet(dir)
+    val p = new org.apache.hadoop.fs.Path(dir)
+    val files = p.getFileSystem(spark.sessionState.newHadoopConf()).listStatus(p).toSeq
+      .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
+    assert(files.size >= 5)
+    val rows = Layout.readFooters(spark, files.iterator, rowGroups = true)
+      .map(Layout.footerRows).sum
+    assert(rows == spark.read.parquet(dir).count())
+    assert(rows == 104L)
+    // without row groups the footer still carries the schema, not the count
+    assert(Layout.readFooters(spark, files.iterator, rowGroups = false)
+      .map(Layout.footerRows).sum == 0L)
+    // a file read makes every column nullable; the footers keep the writer's
+    val merged = spark.read.option("mergeSchema", "true").parquet(dir).schema
+    assert(org.apache.spark.sql.types.StructType(Layout.footerSchema(spark, files)
+      .fields.map(_.copy(nullable = true))) == merged)
+    assert(merged.fieldNames.toSet == Set("id", "s", "x", "k"))
+  }
+
   test("one declared-schema reader: no mergeSchema, readTable or tombstone read outside its owner") {
     // library-written store tables read through Layout.readTable under
     // their declared columns, and tombstone sidecars through Layout's one
