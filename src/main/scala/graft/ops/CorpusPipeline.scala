@@ -387,16 +387,16 @@ object CorpusPipeline {
     val meta = Dedup.readMinhashMeta(spark, storePath)
     val (shingleSize, numHashes, bands) =
       (meta.getInt(0), meta.getInt(1), meta.getInt(2))
-    // every shuffle in the intake sized from the REAL store bytes (file
-    // listing) + the batch's shingle explode estimate instead of the
-    // cluster constant: the checkpoints/appends
-    // below are this function's own actions, so the scope covers the
-    // whole micro-batch (Layout.withShuffleSizedTo — measured 61 → 25
-    // jobs, 3.3 → 1.7 s warm per batch at sf0.1). An unknown batch
-    // estimate or a grown store disables the shrink — same plan as
-    // before at scale.
-    Layout.withShuffleSizedTo(spark,
-      BigInt(Layout.dirBytes(spark, storePath)) + Dedup.shingleExplodeBytes(batch)) {
+    // the whole micro-batch runs in one partition while the REAL store
+    // bytes (file listing) + the batch's shingle explode estimate fit one
+    // (Layout.fitsOnePartition): the batch and every store read are
+    // coalesced, so no step plans an exchange (measured 61 → 25 jobs,
+    // 3.3 → 1.7 s warm per batch at sf0.1 against the cluster-constant
+    // width). An unknown batch estimate or a grown store keeps the
+    // session's width — same plan as before at scale.
+    val single = Layout.onePartitionWhen(Layout.fitsOnePartition(spark,
+      Layout.dirBytes(spark, storePath) + Dedup.shingleExplodeBytes(batch))) _
+    val input = single(batch)
     // ONE shingle-explode and ONE signature aggregate for the whole
     // batch, materialized up front and shared by all three stages. The
     // unfused composition (probe → resolve → append as standalone calls)
@@ -405,11 +405,11 @@ object CorpusPipeline {
     // ~12 s of pure scheduling at sf0.1) IS the intake latency, not the
     // data. Checkpointing before the append also severs lineage from the
     // store this batch mutates (the VectorIndex.append swap discipline).
-    val exploded = Ann.materializeOnce(
+    val exploded = single(Ann.materializeOnce(single(
       Dedup.shingleExplode(batch, idCol, textCol, shingleSize)
-        .repartition(col(idCol)))
-    val sigs = Ann.materializeOnce(
-      Dedup.signatureTable(exploded, idCol, numHashes))
+        .repartition(col(idCol)))))
+    val sigs = single(Ann.materializeOnce(
+      Dedup.signatureTable(exploded, idCol, numHashes)))
     val batchBands = Dedup.bandsOfSigs(sigs, idCol, numHashes, bands)
     // 1. corpus near-dups. The hot-bucket guard is ON by default again
     // (it silently flipped off in round 9): since Dedup.guardHotBuckets
@@ -425,42 +425,42 @@ object CorpusPipeline {
     // scale, where every join side auto-broadcasts, that replication is
     // a cascade of broadcast-build jobs (measured: the probe/resolve DAG
     // re-ran ~4x, 167 jobs/batch). Checkpointed, each DAG runs once.
-    val ownIds = batch.select(col(idCol).as("corpus_id")).distinct()
+    val ownIds = input.select(col(idCol).as("corpus_id")).distinct()
     // the probe folds STRAIGHT into the after-corpus id set (round-16:
     // one checkpoint and one plan where corpusDups + afterCorpusIds were
     // two — the corpus-dup ids were only ever consumed as "batch minus
     // them", and `survivors` below re-derives the same set membership
     // via a semi-join on afterCorpusIds, set-identical because every
     // probe hit is a batch id)
-    val afterCorpusIds = Ann.materializeOnce(
-      batch.select(idCol).distinct()
-        .join(Dedup.storeProbeExact(spark, storePath,
+    val afterCorpusIds = single(Ann.materializeOnce(
+      input.select(idCol).distinct()
+        .join(single(Dedup.storeProbeExact(spark, storePath,
             exploded.select(col(idCol).as("batch_id"), col("__h")),
             batchBands.select(col(idCol).as("batch_id"), col("band"), col("band_key")),
-            minJaccard, storeMaxBucketSize)
+            minJaccard, storeMaxBucketSize))
           .join(broadcast(ownIds), Seq("corpus_id"), "left_anti")
           .select(col("batch_id").as(idCol)).distinct(),
-          Seq(idCol), "left_anti"))
+          Seq(idCol), "left_anti")))
     // 2. within-batch resolve over the SAME parts, restricted to the
     // corpus survivors (shingling/signatures are per-doc, so filtering
     // the batch-wide tables is exactly re-deriving them from afterCorpus)
-    val losers = Ann.materializeOnce(
+    val losers = single(Ann.materializeOnce(single(
       Dedup.pairsFromBanded(
         exploded.join(afterCorpusIds, Seq(idCol), "left_semi"),
         batchBands.join(afterCorpusIds, Seq(idCol), "left_semi")
           .repartition(col("band"), col("band_key")),
         idCol, minJaccard, maxBucketSize = 1L << 20)
         .select(col("id_b").cast(batch.schema(idCol).dataType).as(idCol))
-        .distinct())
-    val survivors = Ann.materializeOnce(
-      batch.join(afterCorpusIds, Seq(idCol), "left_semi")
-        .join(losers, Seq(idCol), "left_anti"))
+        .distinct())))
+    val survivors = single(Ann.materializeOnce(
+      input.join(afterCorpusIds, Seq(idCol), "left_semi")
+        .join(losers, Seq(idCol), "left_anti")))
     // 3. append the survivors through the docs/ ledger — the same parts
     // again, filtered to fresh ids (doc-idempotent, data before ledger)
-    val existing = Dedup.readMinhashDocs(spark, storePath)
-    val freshIds = Ann.materializeOnce(
+    val existing = single(Dedup.readMinhashDocs(spark, storePath))
+    val freshIds = single(Ann.materializeOnce(
       survivors.select(col(idCol).as("doc_id")).distinct()
-        .join(existing, Seq("doc_id"), "left_anti"))
+        .join(existing, Seq("doc_id"), "left_anti")))
     if (freshIds.count() > 0)
       Dedup.appendPartsToStore(storePath, freshIds,
         exploded.select(col(idCol).as("doc_id"), col("__h"))
@@ -469,7 +469,6 @@ object CorpusPipeline {
           .join(freshIds, Seq("doc_id"), "left_semi"),
         numHashes, bands)
     survivors
-    }
   }
 
   /** Streaming continuous-crawl intake over the signature store: each

@@ -320,8 +320,8 @@ object Dedup extends IndexLifecycle {
   }
 
   /** Upper-bound bytes of [[shingleExplode]] over `docs` (4× the doc
-    * frame's plan estimate) — the shuffle sizing
-    * ([[Layout.withShuffleSizedTo]]) of every op whose shuffles carry
+    * frame's plan estimate) — the one-partition test
+    * ([[Layout.fitsOnePartition]]) of every op whose shuffles carry
     * shingle rows: the minhash store's build and appends, the intake
     * batch, and the pair search feeding the component resolves.
     */
@@ -424,19 +424,19 @@ object Dedup extends IndexLifecycle {
       s"writeMinhash: numHashes $numHashes must be a multiple of bands $bands")
     val spark = docs.sparkSession
     import spark.implicits._
-    // store-build shuffles sized from the shingle explode's estimate —
-    // Layout.withShuffleSizedTo; the checkpoints and five writes below
-    // are this function's own actions
-    Layout.withShuffleSizedTo(spark, shingleExplodeBytes(docs)) {
-    val exploded = Ann.materializeOnce(
+    // a store build whose shingle explode fits one partition
+    // (Layout.fitsOnePartition) runs in one partition and plans no
+    // exchange; above it, the shingles are exchanged once by doc id
+    val single = Layout.onePartitionWhen(
+      Layout.fitsOnePartition(spark, shingleExplodeBytes(docs))) _
+    val exploded = single(Ann.materializeOnce(single(
       shingleExplode(docs, idCol, textCol, shingleSize)
         .repartition(col(idCol))
-        .select(col(idCol).cast("long").as("doc_id"), col("__h")))
+        .select(col(idCol).cast("long").as("doc_id"), col("__h")))))
     // ONE signature aggregate feeds both the band surface and the sigs/
     // table (the estimated-verify side) — materialized so neither write
     // re-runs it
-    val sigs = Ann.materializeOnce(
-      signatureTable(exploded, "doc_id", numHashes))
+    val sigs = single(Ann.materializeOnce(signatureTable(exploded, "doc_id", numHashes)))
     // the five table writes are independent jobs over materialized parts
     // into five disjoint dirs — landed concurrently (guide §2.6). A
     // rebuild is a whole-state replace with no commit marker, so a crash
@@ -452,7 +452,7 @@ object Dedup extends IndexLifecycle {
         .write.mode("overwrite").parquet(s"$path/bands"),
       () => sigs.write.mode("overwrite").parquet(s"$path/sigs"),
       () => exploded.write.mode("overwrite").parquet(s"$path/shingles"),
-      () => docs.select(col(idCol).cast("long").as("doc_id")).distinct()
+      () => single(docs).select(col(idCol).cast("long").as("doc_id")).distinct()
         .write.mode("overwrite").parquet(s"$path/docs"),
       () => Seq((shingleSize, numHashes, bands))
         .toDF("shingle_size", "num_hashes", "bands")
@@ -461,7 +461,6 @@ object Dedup extends IndexLifecycle {
     // rebuild = whole-state replace: a stale batches ledger would
     // silently no-op replayed batch ids against the fresh store
     Layout.clearIndexSidecars(spark, path)
-    }
   }
 
   /** Add a new batch to the store — appends only, doc-idempotent via the
@@ -486,31 +485,30 @@ object Dedup extends IndexLifecycle {
     val meta = Layout.readTable(spark, MetaDdl, s"$path/meta")
       .select("shingle_size", "num_hashes", "bands").head
     val existing = Layout.readTable(spark, DocsDdl, s"$path/docs").select("doc_id")
-    // append shuffles sized from the delta's shingle explode + the docs
-    // ledger's real bytes (Layout.withShuffleSizedTo)
-    Layout.withShuffleSizedTo(spark,
-      BigInt(Layout.dirBytes(spark, s"$path/docs")) +
-        shingleExplodeBytes(newDocs)) {
+    // an append whose delta shingle explode + docs ledger bytes fit one
+    // partition (Layout.fitsOnePartition) plans no exchange
+    val single = Layout.onePartitionWhen(Layout.fitsOnePartition(spark,
+      Layout.dirBytes(spark, s"$path/docs") + shingleExplodeBytes(newDocs))) _
     // materialize the fresh id set BEFORE any write: it is both the
     // return count and the ledger delta, and its lineage reads the
     // docs/ ledger the append below extends
-    val fresh = Ann.materializeOnce(newDocs.withColumn("doc_id", col(idCol))
-      .join(existing, Seq("doc_id"), "left_anti"))
+    val fresh = single(Ann.materializeOnce(single(
+      newDocs.withColumn("doc_id", col(idCol))
+        .join(existing, Seq("doc_id"), "left_anti"))))
     // the ledger delta comes from the INPUT ids (see writeMinhash): a
     // zero-shingle doc must still be recorded as processed, or every
     // replay re-ships it and the ledger disagrees with the admitted set
     val freshIds = fresh.select("doc_id").distinct()
     val n = freshIds.count()
     if (n == 0) return 0L
-    val exploded = Ann.materializeOnce(
+    val exploded = single(Ann.materializeOnce(single(
       shingleExplode(fresh, "doc_id", textCol, meta.getInt(0))
-        .repartition(col("doc_id")))
-    val sigs = Ann.materializeOnce(
-      signatureTable(exploded, "doc_id", meta.getInt(1)))
+        .repartition(col("doc_id")))))
+    val sigs = single(Ann.materializeOnce(
+      signatureTable(exploded, "doc_id", meta.getInt(1))))
     appendPartsToStore(path, freshIds, exploded, sigs,
       meta.getInt(1), meta.getInt(2))
     n
-    }
   }
 
   /** The four store appends of [[appendMinhash]] over PRE-BUILT,
@@ -1193,7 +1191,7 @@ object Dedup extends IndexLifecycle {
     // persist unfilled, so any later consumer would recompute the whole
     // pairs pipeline a second time (measured 2x the query's wall-clock);
     // count() fills the cache the loop needs anyway — and the count is
-    // also what sizes the distributed loop's shuffles below
+    // also what sizes the distributed loop below
     val m = edges.count()
     if (smallGraphCollect > 0) {
       if (m <= smallGraphCollect) {
@@ -1225,31 +1223,37 @@ object Dedup extends IndexLifecycle {
     // each round frees the previous round's checkpoint (Ann.release) —
     // without it, every round's label set would stay pinned in executor
     // storage for the life of the session
-    // size the per-round shuffles from the counted edge set, not the
-    // cluster constant — see Layout.withShuffleSizedTo; min-label
-    // propagation is partition-invariant, so labels are identical either
-    // way
-    try Layout.withShuffleSizedTo(pairs.sparkSession, BigInt(m) * CcEdgeRowBytes) {
-      var labels = edges.select(col("src").as("id")).distinct()
+    // the rounds run in one partition while the counted edge set fits
+    // one (Layout.fitsOnePartition): the labels' checkpoints keep it, so
+    // no round plans an exchange; min-label propagation is
+    // partition-invariant, so labels are identical either way
+    val single = Layout.onePartitionWhen(Layout.fitsOnePartition(
+      pairs.sparkSession, BigInt(m) * CcEdgeRowBytes)) _
+    val loopEdges = single(edges)
+    try {
+      var labels = single(loopEdges.select(col("src").as("id")).distinct()
         .withColumn("comp", col("id"))
-        .localCheckpoint(true)
+        .localCheckpoint(true))
       var converged = false
       var i = 0
       while (!converged && i < maxIter) {
-        val nbrMin = edges
+        val nbrMin = loopEdges
           .join(labels.select(col("id").as("dst"), col("comp").as("dcomp")), "dst")
           .groupBy(col("src").as("id"))
           .agg(min(col("dcomp")).as("ncomp"))
         // The convergence marker rides along in the same job as the label
         // update (a prior version re-joined updated×labels per round just
         // to detect change — one extra shuffle for information the update
-        // row already carries).
-        val updated = labels
-          .join(nbrMin, Seq("id"), "left")
-          .select(col("id"),
-            least(col("comp"), coalesce(col("ncomp"), col("comp"))).as("comp"),
-            (coalesce(col("ncomp"), col("comp")) < col("comp")).as("__changed"))
-          .localCheckpoint(true)
+        // row already carries). The update is a left join of every label
+        // with its neighbors' minimum, computed as one aggregate over
+        // their union: a shuffle join of two one-partition sides would
+        // exchange both (see HostGraph's sumByNode)
+        val updated = single(labels.select(col("id"), col("comp"), col("comp").as("__old"))
+          .union(nbrMin.select(col("id"), col("ncomp"), lit(null).cast(labels.schema("comp").dataType)))
+          .groupBy("id")
+          .agg(min(col("comp")).as("comp"), max(col("__old")).as("__old"))
+          .select(col("id"), col("comp"), (col("comp") < col("__old")).as("__changed"))
+          .localCheckpoint(true))
         converged = updated.where(col("__changed")).isEmpty
         Ann.release(labels)
         labels = updated.drop("__changed")
@@ -1323,9 +1327,9 @@ object Dedup extends IndexLifecycle {
     }
     var converged = false
     var i = 0
-    // NOT sized via withShuffleSizedTo: a 1-partition plan measured 50%
-    // slower here (the per-round count + exceptAll convergence actions
-    // and the alternation's joins want the parallel rounds), unlike the
+    // NOT run in one partition: a 1-partition plan measured 50% slower
+    // here (the per-round count + exceptAll convergence actions and the
+    // alternation's joins want the parallel rounds), unlike the
     // min-label loop in connectedComponents
     while (!converged && i < maxIter) {
       val next = smallStar(largeStar(edges)).localCheckpoint(true)
@@ -1347,8 +1351,11 @@ object Dedup extends IndexLifecycle {
     * representative (the minimum id) per connected component of the pair
     * graph. Docs not in any pair pass through untouched.
     *
-    * The min-label path sizes its shuffles from `docs` (see
-    * [[sizedByDocs]]); the `star` path keeps the session's width.
+    * The min-label path reads `docs` and `pairs` in one partition while
+    * the docs' shingle explode fits one ([[Layout.fitsOnePartition]]):
+    * every frame of the pair search is bounded by it, while the pair
+    * graph's own join-product estimate is useless. The `star` path keeps
+    * the session's width.
     */
   def dropNearDupsCC(
       docs: DataFrame,
@@ -1360,13 +1367,15 @@ object Dedup extends IndexLifecycle {
     // picks the O(log n)-round contraction for graphs whose diameter may
     // exceed maxIter propagation rounds (see connectedComponentsStar),
     // whose rounds measured 50% slower at a 1-partition plan
+    val single = Layout.onePartitionWhen(
+      !star && Layout.fitsOnePartition(docs.sparkSession, shingleExplodeBytes(docs))) _
     val labels =
       if (star) connectedComponentsStar(pairs, maxIter)
-      else sizedByDocs(docs)(connectedComponents(pairs, maxIter))
+      else connectedComponents(single(pairs), maxIter)
     val losers = labels
       .where(col("id") =!= col("comp"))
       .select(col("id").as(idCol))
-    docs.join(losers, Seq(idCol), "left_anti")
+    single(docs).join(losers, Seq(idCol), "left_anti")
   }
 
   /** Quality-aware near-dup resolution: one keeper per connected
@@ -1378,8 +1387,9 @@ object Dedup extends IndexLifecycle {
     *
     * Emits EVERY doc with its component, score, and keep decision —
     * singletons keep themselves — so the caller can audit what a drop
-    * decision cost, not just receive the survivors. Shuffles are sized
-    * from `docs` (see [[sizedByDocs]]).
+    * decision cost, not just receive the survivors. Reads `docs` and
+    * `pairs` in one partition while the docs' shingle explode fits one
+    * (see [[dropNearDupsCC]]).
     */
   def resolveNearDupsBy(
       docs: DataFrame,
@@ -1388,9 +1398,10 @@ object Dedup extends IndexLifecycle {
       scoreCol: String = "quality",
       maxIter: Int = 20,
       smallGraphCollect: Long = 0L): DataFrame = {
-    val labels = sizedByDocs(docs)(
-      connectedComponents(pairs, maxIter, smallGraphCollect))
-    val labeled = docs
+    val single = Layout.onePartitionWhen(
+      Layout.fitsOnePartition(docs.sparkSession, shingleExplodeBytes(docs))) _
+    val labels = connectedComponents(single(pairs), maxIter, smallGraphCollect)
+    val labeled = single(docs)
       .select(col(idCol), col(scoreCol))
       .join(labels.withColumnRenamed("id", idCol), Seq(idCol), "left")
       .withColumn("comp", coalesce(col("comp"), col(idCol)))
@@ -1402,16 +1413,6 @@ object Dedup extends IndexLifecycle {
       .withColumn("kept", col("__rn") === 1)
       .drop("__rn")
   }
-
-  /** Run a component resolve's label computation with its shuffles
-    * sized from the DOCS it resolves ([[shingleExplodeBytes]]): every
-    * frame of the pair search is bounded by the docs' shingle explode,
-    * while the pair graph's own join-product estimate is useless. The
-    * labels' first action (`edges.count()`) runs the whole pair
-    * pipeline, so the scope covers it too.
-    */
-  private def sizedByDocs[A](docs: DataFrame)(labels: => A): A =
-    Layout.withShuffleSizedTo(docs.sparkSession, shingleExplodeBytes(docs))(labels)
 
   // -------------------------------------------- embedding cosine near-dup
 

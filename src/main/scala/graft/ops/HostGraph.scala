@@ -45,35 +45,32 @@ object HostGraph {
     require(iterations >= 1, "pageRank needs at least one iteration")
     require(dampingPct > 0 && dampingPct < 100,
       s"dampingPct must be in (0, 100), got $dampingPct")
-    // size every shuffle in the loop from the EDGE data, not the cluster
-    // constant (Layout.withShuffleSizedTo): every frame here — edges,
-    // nodes, ranks, per-iteration contributions — is bounded by the edge
-    // input, and `iterations` keyed shuffles of a KB-sized rank table
-    // fanned to shuffle.partitions × iterations near-empty tasks was the
-    // round-15 32-core anti-scaling (p17/p19 ran ~4× faster on 8 cores).
-    // The integer-grid algebra is partition-invariant, so ranks are
-    // bit-identical either way; at 100 TB the estimate exceeds the
-    // advisory size and nothing changes.
-    Layout.withShuffleSizedTo(edges0.sparkSession, Layout.planBytes(edges0)) {
-    val edges = prepEdges(edges0, srcCol, dstCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // the whole loop runs in one partition while the EDGE data fits one
+    // (Layout.fitsOnePartition): every frame here — edges, nodes, ranks,
+    // per-iteration contributions — is bounded by the edge input and
+    // derives from it, and the per-round checkpoints keep the one
+    // partition, so no round plans an exchange. `iterations` keyed
+    // shuffles of a KB-sized rank table fanned to shuffle.partitions ×
+    // iterations near-empty tasks was the round-15 32-core anti-scaling
+    // (p17/p19 ran ~4× faster on 8 cores). The integer-grid algebra is
+    // partition-invariant, so ranks are bit-identical either way; at
+    // 100 TB the estimate exceeds the advisory size and nothing changes.
+    val one = Layout.fitsOnePartition(edges0.sparkSession, Layout.planBytes(edges0))
+    val pinned = pin(one) _
+    val edges = materializedEdges(edges0, srcCol, dstCol, one)
     try {
-      val nodes = edges.select(col("src").as("node"))
+      val nodes = pinned(edges.select(col("src").as("node"))
         .union(edges.select(col("dst").as("node")))
-        .distinct()
-        .localCheckpoint(true)
-      val outdeg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
-        .localCheckpoint(true)
+        .distinct())
+      val outdeg = pinned(edges.groupBy("src").agg(count(lit(1)).as("deg")))
       // the only driver-side state: one long
       val n = nodes.count()
       require(n > 0, "pageRank on an empty graph")
       val base = ((100L - dampingPct) * scale) / (100L * n)
-      val bases = nodes.withColumn("base", lit(base)).localCheckpoint(true)
-      var ranks = nodes.withColumn("rank_scaled", lit(scale / n))
-        .localCheckpoint(true)
+      val bases = pinned(nodes.withColumn("base", lit(base)))
+      var ranks = pinned(nodes.withColumn("rank_scaled", lit(scale / n)))
       for (_ <- 1 to iterations) {
-        val next = iterationStep(edges, bases, outdeg, ranks, dampingPct)
-          .localCheckpoint(true)
+        val next = pinned(iterationStep(edges, bases, outdeg, ranks, dampingPct))
         Ann.release(ranks)
         ranks = next
       }
@@ -83,8 +80,7 @@ object HostGraph {
       Ann.release(bases)
       Ann.release(outdeg)
       ranks
-    } finally edges.unpersist()
-    }
+    } finally releaseEdges(edges, one)
   }
 
   /** TrustRank (Gyöngyi, Garcia-Molina & Pedersen 2004): PageRank whose
@@ -109,41 +105,34 @@ object HostGraph {
     require(iterations >= 1, "trustRank needs at least one iteration")
     require(dampingPct > 0 && dampingPct < 100,
       s"dampingPct must be in (0, 100), got $dampingPct")
-    // edge-data-derived shuffle sizing — see pageRank's note
-    Layout.withShuffleSizedTo(edges0.sparkSession, Layout.planBytes(edges0)) {
-    val edges = prepEdges(edges0, srcCol, dstCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // edge-data-derived one-partition test — see pageRank's note
+    val one = Layout.fitsOnePartition(edges0.sparkSession, Layout.planBytes(edges0))
+    val pinned = pin(one) _
+    val edges = materializedEdges(edges0, srcCol, dstCol, one)
     try {
-      val nodes = edges.select(col("src").as("node"))
+      val nodes = pinned(edges.select(col("src").as("node"))
         .union(edges.select(col("dst").as("node")))
-        .distinct()
-        .localCheckpoint(true)
-      val seedNodes = nodes.join(
-        seeds.select(col(seedCol).cast("long").as("node")).distinct(),
-        Seq("node"), "left_semi")
-        .withColumn("is_seed", lit(true))
-        .localCheckpoint(true)
+        .distinct())
+      val seedNodes = pinned(nodes.join(Layout.onePartitionWhen(one)(
+        seeds.select(col(seedCol).cast("long").as("node")).distinct()),
+        Seq("node"), "left_semi"))
       val nSeeds = seedNodes.count()
       require(nSeeds > 0, "trustRank: no seed appears in the graph")
-      val outdeg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
-        .localCheckpoint(true)
+      val outdeg = pinned(edges.groupBy("src").agg(count(lit(1)).as("deg")))
       val base = ((100L - dampingPct) * scale) / (100L * nSeeds)
       def seedVector(value: Long, outCol: String): DataFrame =
-        nodes.join(seedNodes, Seq("node"), "left")
-          .select(col("node"),
-            when(col("is_seed"), lit(value)).otherwise(lit(0L)).as(outCol))
-      val bases = seedVector(base, "base").localCheckpoint(true)
-      var ranks = seedVector(scale / nSeeds, "rank_scaled").localCheckpoint(true)
+        sumByNode(nodes.select(col("node"), lit(0L).as("v")),
+          seedNodes.select(col("node"), lit(value).as("v")), outCol)
+      val bases = pinned(seedVector(base, "base"))
+      var ranks = pinned(seedVector(scale / nSeeds, "rank_scaled"))
       for (_ <- 1 to iterations) {
-        val next = iterationStep(edges, bases, outdeg, ranks, dampingPct)
-          .localCheckpoint(true)
+        val next = pinned(iterationStep(edges, bases, outdeg, ranks, dampingPct))
         Ann.release(ranks)
         ranks = next
       }
       Ann.release(nodes); Ann.release(seedNodes); Ann.release(bases); Ann.release(outdeg)
       ranks
-    } finally edges.unpersist()
-    }
+    } finally releaseEdges(edges, one)
   }
 
   /** Edge normalization for [[pageRank]]: cast, drop self-loops, dedup —
@@ -153,15 +142,18 @@ object HostGraph {
     * re-exchange the full edge set; partitioned by src, the cached layout
     * satisfies all `iterations` joins and per-round shuffle cost is
     * rank-table-sized. Pinned in ExplainAudit (one-iteration plan has no
-    * edge-side Exchange).
+    * edge-side Exchange). When `one` ([[Layout.fitsOnePartition]]) the
+    * edges are planned in one partition instead, which already meets
+    * every join's distribution: the repartition is dropped and no
+    * exchange is left.
     */
   private[graft] def prepEdges(
-      edges0: DataFrame, srcCol: String, dstCol: String): DataFrame =
-    edges0
+      edges0: DataFrame, srcCol: String, dstCol: String, one: Boolean): DataFrame =
+    Layout.onePartitionWhen(one)(edges0
       .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
       .where(col("src") =!= col("dst"))
       .distinct()
-      .repartition(col("src"))
+      .repartition(col("src")))
 
   /** Integer-grid HITS (Kleinberg, "Authoritative sources in a
     * hyperlinked environment", 1999): hubs point at good authorities,
@@ -198,17 +190,17 @@ object HostGraph {
       dstCol: String = "dst"): DataFrame = {
     require(iterations >= 1, "hits needs at least one iteration")
     require(scale > 0, s"scale must be positive, got $scale")
-    // edge-data-derived shuffle sizing — see pageRank's note
-    Layout.withShuffleSizedTo(edges0.sparkSession, Layout.planBytes(edges0)) {
-    val edgesS = prepEdges(edges0, srcCol, dstCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val edgesD = edgesS.repartition(col("dst"))
+    // edge-data-derived one-partition test — see pageRank's note; in one
+    // partition the src layout serves the hub step too
+    val one = Layout.fitsOnePartition(edges0.sparkSession, Layout.planBytes(edges0))
+    val pinned = pin(one) _
+    val edgesS = materializedEdges(edges0, srcCol, dstCol, one)
+    val edgesD = if (one) edgesS else edgesS.repartition(col("dst"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val nodes = edgesS.select(col("src").as("node"))
+      val nodes = pinned(edgesS.select(col("src").as("node"))
         .union(edgesS.select(col("dst").as("node")))
-        .distinct()
-        .localCheckpoint(true)
+        .distinct())
       val n = nodes.count()
       require(n > 0, "hits on an empty graph")
       // the L∞ rescale computes raw * scale on Longs with raw ≤ n·scale
@@ -219,7 +211,7 @@ object HostGraph {
       require(n <= Long.MaxValue / scale / scale,
         s"hits: $n nodes at scale=$scale overflows the integer grid " +
           "(n*scale*scale > Long.MaxValue) — pass a smaller scale")
-      var hubs = nodes.withColumn("hub_scaled", lit(scale)).localCheckpoint(true)
+      var hubs = pinned(nodes.withColumn("hub_scaled", lit(scale)))
       // the first round derives auths from hubs alone — no initial auth
       // frame exists to materialize (or free)
       var auths: DataFrame = null
@@ -228,39 +220,67 @@ object HostGraph {
           edgesS.join(hubs.withColumnRenamed("node", "src"), "src")
             .groupBy(col("dst").as("node"))
             .agg(sum(col("hub_scaled")).as("raw")),
-          nodes, scale, "auth_scaled")
+          nodes, scale, "auth_scaled", pinned)
         if (auths != null) Ann.release(auths)
         auths = nextAuth
         val nextHub = normalizeStep(
           edgesD.join(auths.withColumnRenamed("node", "dst"), "dst")
             .groupBy(col("src").as("node"))
             .agg(sum(col("auth_scaled")).as("raw")),
-          nodes, scale, "hub_scaled")
+          nodes, scale, "hub_scaled", pinned)
         Ann.release(hubs)
         hubs = nextHub
       }
-      val out = hubs.join(auths, "node")
-        .select(col("node"), col("hub_scaled"), col("auth_scaled"))
-        .localCheckpoint(true)
+      // every node has one hub and one auth row: their join is a sum
+      // over the union (see sumByNode)
+      val out = pinned(hubs.select(col("node"), col("hub_scaled"), lit(0L).as("auth_scaled"))
+        .union(auths.select(col("node"), lit(0L).as("hub_scaled"), col("auth_scaled")))
+        .groupBy("node")
+        .agg(sum(col("hub_scaled")).as("hub_scaled"), sum(col("auth_scaled")).as("auth_scaled")))
       Ann.release(nodes); Ann.release(hubs); Ann.release(auths)
       out
-    } finally { edgesD.unpersist(); edgesS.unpersist() }
-    }
+    } finally { edgesD.unpersist(); releaseEdges(edgesS, one) }
   }
 
-  /** Fill missing nodes with 0, L∞-normalize onto the grid, checkpoint.
-    * The max is exact (no-in-edge nodes contribute 0, never the max on a
-    * nonempty edge set since some raw ≥ scale > 0).
+  /** [[prepEdges]] kept for a loop's many reads: persisted in their src
+    * layout, or, when `one`, a lazy local checkpoint read in one partition
+    * (filled by the first job that reads it; a cached adaptive plan would
+    * materialize through jobs of its own and report no partitioning).
     */
-  private def normalizeStep(
-      raw: DataFrame, nodes: DataFrame, scale: Long, outCol: String): DataFrame = {
-    val filled = nodes.join(raw, Seq("node"), "left")
-      .select(col("node"), coalesce(col("raw"), lit(0L)).as("raw"))
-      .localCheckpoint(true)
+  private def materializedEdges(
+      edges0: DataFrame, srcCol: String, dstCol: String, one: Boolean): DataFrame = {
+    val edges = prepEdges(edges0, srcCol, dstCol, one)
+    if (one) Layout.onePartitionWhen(one)(edges.localCheckpoint(eager = false))
+    else edges.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+  }
+
+  /** Free [[materializedEdges]]: the checkpoint's blocks, or the cache
+    * (whose plan still holds the caller's lineage, which is not ours to
+    * free). */
+  private def releaseEdges(edges: DataFrame, one: Boolean): Unit =
+    if (one) Ann.release(edges) else edges.unpersist()
+
+  /** `df` checkpointed — flat lineage, blocks freed per round by
+    * [[Ann.release]] — and, when `one` ([[Layout.fitsOnePartition]]),
+    * read back in one partition: the checkpoint of an adaptive plan
+    * reports unknown partitioning, so without the coalesce every keyed
+    * consumer of a round's output would plan an Exchange again.
+    */
+  private def pin(one: Boolean)(df: DataFrame): DataFrame =
+    Layout.onePartitionWhen(one)(df.localCheckpoint(true))
+
+  /** Fill missing nodes with 0, L∞-normalize onto the grid, checkpoint
+    * (`pinned`, see [[pin]]). The max is exact (no-in-edge nodes
+    * contribute 0, never the max on a nonempty edge set since some
+    * raw ≥ scale > 0).
+    */
+  private def normalizeStep(raw: DataFrame, nodes: DataFrame, scale: Long,
+      outCol: String, pinned: DataFrame => DataFrame): DataFrame = {
+    val filled = pinned(sumByNode(nodes.select(col("node"), lit(0L).as("v")),
+      raw.select(col("node"), col("raw").as("v")), "raw"))
     val mx = math.max(1L, filled.agg(max(col("raw"))).head.getLong(0))
-    val out = filled
-      .select(col("node"), expr(s"(raw * $scale) div $mx").as(outCol))
-      .localCheckpoint(true)
+    val out = pinned(filled
+      .select(col("node"), expr(s"(raw * $scale) div $mx").as(outCol)))
     Ann.release(filled)
     out
   }
@@ -268,7 +288,7 @@ object HostGraph {
   /** One PageRank/TrustRank round (pre-checkpoint) — factored out so the
     * plan shape of an iteration is auditable in isolation. `bases` carries
     * each node's teleport mass (uniform for PageRank, seed-only for
-    * TrustRank).
+    * TrustRank); the in-mass adds to it through [[sumByNode]].
     */
   private[graft] def iterationStep(
       edges: DataFrame,
@@ -283,9 +303,18 @@ object HostGraph {
         expr(s"($dampingPct * rank_scaled) div (100 * deg)").as("contrib"))
       .groupBy("node")
       .agg(sum(col("contrib")).as("in_mass"))
-    bases
-      .join(inMass, Seq("node"), "left")
-      .select(col("node"),
-        (col("base") + coalesce(col("in_mass"), lit(0L))).as("rank_scaled"))
+    sumByNode(bases.select(col("node"), col("base").as("v")),
+      inMass.select(col("node"), col("in_mass").as("v")), "rank_scaled")
   }
+
+  /** Per node of `all` (every node), the sum of its `v` over `all` and
+    * `part` (a subset of the nodes) — a left join with a 0 default, as a
+    * union and one aggregate. Two one-partition sides of a shuffle join
+    * each get an Exchange (neither side's partitioning can be created
+    * for the other), so under AQE the join costs two stage jobs that the
+    * aggregate over their union does not: one partition in, one
+    * partition out.
+    */
+  private def sumByNode(all: DataFrame, part: DataFrame, outCol: String): DataFrame =
+    all.union(part).groupBy("node").agg(sum(col("v")).as(outCol))
 }

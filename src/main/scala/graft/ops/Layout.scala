@@ -2,7 +2,6 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import scala.collection.mutable
 
 /** Multi-dimensional data layout: Z-order (Morton) clustering for
   * min/max-stat file skipping.
@@ -581,16 +580,16 @@ object Layout {
     * statistics only (file-listing sums scaled by projection/filter
     * selectivity), never a job. Frames whose stats Catalyst cannot bound
     * (checkpointed RDDs, opaque sources) report `defaultSizeInBytes` ≈
-    * Long.MaxValue, which every [[withShuffleSizedTo]] gate treats as
-    * "not provably small" — the safe direction.
+    * Long.MaxValue, which [[fitsOnePartition]] treats as "not provably
+    * small" — the safe direction.
     */
   private[graft] def planBytes(df: DataFrame): BigInt =
     df.queryExecution.optimizedPlan.stats.sizeInBytes
 
   /** Total bytes of data files under `path` (recursive), 0 when absent —
     * driver-side metadata listing, the same walk the maintenance signals
-    * already do. Used to gate [[withShuffleSizedTo]] on a persisted
-    * store's real size.
+    * already do. Used to size an op on a persisted store's real bytes
+    * ([[fitsOnePartition]]).
     */
   private[graft] def dirBytes(
       spark: org.apache.spark.sql.SparkSession, path: String): Long = {
@@ -600,91 +599,55 @@ object Layout {
     else fs.getContentSummary(p).getLength
   }
 
-  /** Run `body` with the session's shuffle fan-out derived from the
-    * operative data size instead of the cluster-constant
-    * `spark.sql.shuffle.partitions` — the guide's "size partitions from
-    * the data, not the cluster" (§2.1-2.2) applied to the KB-scale
-    * iteration/maintenance frames where a 32-way (or, on a cluster, a
-    * 2000-way) fan-out turns every stage into `partitions` near-empty
-    * tasks, and AQE re-plans each tiny shuffle as its own driver-side
-    * stage job.
+  /** Whether an op's whole working set fits ONE advisory-sized
+    * partition: `bytes` is the caller's upper-bound estimate of the
+    * largest frame any shuffle of the op carries ([[planBytes]] /
+    * [[dirBytes]] / an exact row count × row width — all metadata-only)
+    * against `spark.sql.adaptive.advisoryPartitionSizeInBytes`, the size
+    * AQE's partition coalescing already aims at. Reads the session conf,
+    * writes nothing.
     *
-    * `bytes` is the caller's upper-bound estimate of the largest frame
-    * any shuffle inside `body` carries ([[planBytes]] / [[dirBytes]] /
-    * an exact row count × row width — all metadata-only). The derived
-    * count is `ceil(bytes / advisoryPartitionSizeInBytes)` clamped to
-    * [1, current]; when that does not SHRINK the current setting, `body`
-    * runs completely unchanged. When the whole working set provably fits
-    * one advisory-sized partition, AQE is disabled for the scope too: a
-    * 1-partition plan has nothing left to adapt, and each adaptive stage
-    * otherwise costs a driver job per shuffle on exactly these paths
-    * (measured on the 37-node pageRank loop: 73 jobs/849 tasks →
-    * 36 jobs/53 tasks, 2.6 → 1.4 s warm at sf0.1/local[32]).
+    * An op that fits runs its frames through [[onePartitionWhen]]: the
+    * guide's "size partitions from the data, not the cluster" (§2.1-2.2)
+    * applied to the KB-scale iteration/maintenance frames where a 32-way
+    * (or, on a cluster, a 2000-way) fan-out turns every stage into
+    * `partitions` near-empty tasks, and AQE re-plans each tiny shuffle as
+    * its own driver-side stage job (measured on the 37-node pageRank
+    * loop: 73 jobs/849 tasks → 36 jobs/53 tasks at sf0.1/local[32]).
     *
     * Scale honesty: the gate is the DATA size, never the core count — at
-    * 100 TB the estimates blow past the advisory size and `body` plans
-    * exactly as before; unknown estimates never shrink (see
-    * [[planBytes]]). Values are partitioning-invariant everywhere this
-    * is used (keyed aggregates/joins, integer-grid algebra), so results
-    * are identical either way — the oracle re-asserts that per query.
-    *
-    * The override is plain session conf. A scope changes it only while
-    * no other thread's scope is active on the same session, and the
-    * thread that set the values is the one that restores them; a scope
-    * entered while another thread's is active runs its body unchanged
-    * (the no-shrink direction above). So overlapping scopes — concurrent
-    * `ChatRag.chatTurn`s, or an op's own `mapConcurrently` workers — can
-    * never leave the session changed, and no scope waits for another.
-    * Same-thread nesting shrinks further and restores the outer value. Jobs
-    * that other threads plan OUTSIDE any scope while one is active still
-    * see its values.
+    * 100 TB the estimates blow past the advisory size and the op plans
+    * at the session's width, where AQE coalesces toward the same size;
+    * unknown estimates never fit (see [[planBytes]]). Values are
+    * partitioning-invariant everywhere this is used (keyed
+    * aggregates/joins, integer-grid algebra), so results are identical
+    * either way — the oracle re-asserts that per query.
     */
-  private[graft] def withShuffleSizedTo[A](
-      spark: org.apache.spark.sql.SparkSession, bytes: BigInt,
-      disableAqeAtOne: Boolean = true)(body: => A): A = {
-    val me = Thread.currentThread
-    // register this scope and learn, in the same step, whether it is alone;
-    // only a scope that is alone reads the values it will restore
-    val alone = sizingScopes.synchronized {
-      val depth = sizingScopes.getOrElseUpdate(spark, mutable.Map.empty)
-      depth(me) = depth.getOrElse(me, 0) + 1
-      depth.size == 1
-    }
-    try if (!alone) body else {
-      val conf = spark.conf
-      val cur = conf.get("spark.sql.shuffle.partitions").toInt
-      val advisory = math.max(1L, spark.sessionState.conf.getConf(
-        org.apache.spark.sql.internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES))
-      val wanted = (bytes.max(1) + advisory - 1) / advisory
-      if (wanted >= cur || wanted > Int.MaxValue) body
-      else {
-        val parts = wanted.toInt
-        // `disableAqeAtOne = false` keeps AQE for bodies whose intermediate
-        // frames carry unbounded join-product stats (e.g. checkpointed pair
-        // graphs): there the STATIC planner would pick sort-merge joins a
-        // runtime re-plan turns into broadcasts, and that costs more than
-        // the per-stage AQE jobs save (measured +54% on d10's star loop)
-        val aqeOff = disableAqeAtOne && parts == 1
-        val prevAqe = conf.get("spark.sql.adaptive.enabled")
-        conf.set("spark.sql.shuffle.partitions", parts)
-        if (aqeOff) conf.set("spark.sql.adaptive.enabled", "false")
-        try body
-        finally {
-          conf.set("spark.sql.shuffle.partitions", cur)
-          if (aqeOff) conf.set("spark.sql.adaptive.enabled", prevAqe)
-        }
-      }
-    } finally sizingScopes.synchronized {
-      val depth = sizingScopes(spark)
-      if (depth(me) == 1) depth.remove(me) else depth(me) -= 1
-      if (depth.isEmpty) sizingScopes.remove(spark)
-    }
-  }
+  private[graft] def fitsOnePartition(
+      spark: org.apache.spark.sql.SparkSession, bytes: BigInt): Boolean =
+    bytes <= spark.sessionState.conf.getConf(
+      org.apache.spark.sql.internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
 
-  /** Active [[withShuffleSizedTo]] scopes: session → entering thread →
-    * nesting depth. */
-  private val sizingScopes =
-    mutable.Map.empty[org.apache.spark.sql.SparkSession, mutable.Map[Thread, Int]]
+  /** `df` planned in one partition when `fits` ([[fitsOnePartition]]),
+    * else `df` unchanged: every source of its plan (file scans, driver
+    * rows, checkpoints, cached relations) coalesced to one partition, and
+    * every `repartition(cols)` in its lineage, which would take the
+    * session's width, dropped. A one-partition input meets every
+    * clustered and ordered distribution, so the keyed aggregates,
+    * windows, sorts and broadcast joins an op plans above it — and those
+    * inside `df`'s own lineage — need no Exchange: AQE stays on with no
+    * stage to split into extra jobs, and the session conf is never
+    * touched, so concurrent callers plan at their own widths.
+    *
+    * Two things still exchange: a repartition the op adds itself or
+    * gives an explicit count, and a shuffle join of two one-partition
+    * sides (Spark re-partitions both, since neither side's partitioning
+    * can be created for the other). The checkpoint or cache of an
+    * adaptive plan reports no partitioning, so an op re-applies this to
+    * what it materialized before reading it again.
+    */
+  private[graft] def onePartitionWhen(fits: Boolean)(df: DataFrame): DataFrame =
+    if (fits) org.apache.spark.sql.PlanFrames.onePartition(df) else df
 
   /** Run `f` over every item on a bounded pool and return the results in
     * item order — the ONE copy of the maintenance fan-out protocol

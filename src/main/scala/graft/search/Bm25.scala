@@ -135,21 +135,21 @@ object Bm25 extends graft.ops.IndexLifecycle {
     * aggregate's). Every partition holds whole `(bucket, salt)` groups,
     * so the partitioned write lands bucket-pure files, at most
     * `filesPerBucket` per bucket — exactly one at 1. The partition count
-    * is `buckets × filesPerBucket`, capped at the session's (sized)
-    * shuffle width: a build that fits one partition writes its bucket
-    * files from one task instead of paying a task (conf
-    * deserialization, committer set-up) per bucket.
+    * is `buckets × filesPerBucket`, capped at `width`. At `width` 1 the
+    * caller passes `docs` in one partition ([[graft.ops.Layout.onePartitionWhen]])
+    * and no exchange is planned: the build writes its bucket files from
+    * one task instead of paying a task (conf deserialization, committer
+    * set-up) per bucket, and AQE no stage job.
     */
   private[graft] def bucketedPostings(
       docs: DataFrame, idCol: String, textCol: String,
-      termBuckets: Int, filesPerBucket: Int): DataFrame = {
-    docTerms(docs, idCol, textCol)
+      termBuckets: Int, filesPerBucket: Int, width: Int): DataFrame = {
+    val keyed = docTerms(docs, idCol, textCol)
       .withColumn("bucket", bucketCol(col("term"), termBuckets))
       .withColumn("__salt", pmod(xxhash64(col("doc_id")), lit(filesPerBucket)))
-      .repartition(
-        math.min(termBuckets * filesPerBucket,
-          docs.sparkSession.sessionState.conf.numShufflePartitions),
-        col("bucket"), col("__salt"))
+    (if (width == 1) keyed
+     else keyed.repartition(math.min(termBuckets * filesPerBucket, width),
+       col("bucket"), col("__salt")))
       .groupBy("bucket", "__salt", "doc_id", "dl", "term")
       .agg(count(lit(1)).as("tf"))
       .select("doc_id", "term", "tf", "dl", "bucket")
@@ -226,58 +226,57 @@ object Bm25 extends graft.ops.IndexLifecycle {
     requireFilesPerBucket(filesPerBucket)
     val spark = docs.sparkSession
     import spark.implicits._
-    // build shuffles sized from the token explode's estimate —
-    // Layout.withShuffleSizedTo; the bucket-aligned postings exchange
-    // takes that width up to buckets × filesPerBucket. The build has no
-    // join for AQE to re-plan, so a build that fits one partition runs
-    // without it: one job per query instead of one per shuffle stage
-    val (n, totDl) = graft.ops.Layout.withShuffleSizedTo(spark,
-      tokenExplodeBytes(docs)) {
-      // ONE tokenize pass and ONE postings-sized exchange feed all four
-      // tables, materialized once (the checkpoint keeps the
-      // bucket-aligned partitioning the postings write needs), or every
-      // write below re-runs the corpus build (the double-eval trap).
-      // Postings write shape: the exchange is doc-salted, so every
-      // output file is bucket-pure, at most filesPerBucket per bucket,
-      // from at most buckets × filesPerBucket write tasks. At sf0.1 this
-      // was 448 → 14 files and −25% write time; on object stores / HDFS,
-      // bounding file count is what keeps the metadata layer alive at
-      // 100 TB.
-      val bucketed = graft.ops.Ann.materializeOnce(
-        bucketedPostings(docs, idCol, textCol, termBuckets, filesPerBucket))
-      // ONE postings aggregation feeds the docs/ table AND (N, tot_dl):
-      // sum(tf) over a doc's postings is its token count (tf counts the
-      // same token array dl sizes), so the stats fold rides the docs
-      // ledger (doc-count-sized) instead of paying a second
-      // postings-sized count_distinct pass
-      val docsTbl = graft.ops.Ann.materializeOnce(
-        bucketed.select("doc_id", "dl").distinct())
-      val stats = docsTbl.agg(count(lit(1)).as("n"), sum("dl").as("tot")).head()
-      val n = stats.getLong(0)
-      val totDl = if (n == 0) 0L else stats.getLong(1)
-      // meta rides the same concurrent wave as the four segment tables
-      // (guide §2.6 overlap): the commit marker below is still the LAST
-      // write, so readers never see a half-built index — same crash
-      // window as the sequential ordering, 5 small jobs' wall ≈ the max
-      // instead of the sum
-      graft.ops.Layout.mapConcurrently[() => Unit, Unit](Seq(
-        () => writeSegment(spark, path, 0L, bucketed, docsTbl,
-          n, totDl, overwrite = true),
-        () => Seq(termBuckets).toDF("term_buckets")
-          .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")),
-        parallelism = 2)(_())
-      // every table is written: free both materializations now, not when
-      // ContextCleaner next sees them collected (a build's checkpoints
-      // would otherwise stay pinned into the next build)
-      Seq(bucketed, docsTbl).foreach(graft.ops.Ann.release)
-      resetCommits(spark, path, Seq(0L))
-      // a rebuild replaces the WHOLE index state: the previous life's
-      // _tombstones sidecar and batches ledger go with it, or loadIndex
-      // would silently exclude fresh docs whose ids were once deleted
-      // and appendIndexBatch would no-op previously used batch ids
-      graft.ops.Layout.clearIndexSidecars(spark, path)
-      (n, totDl)
-    }
+    // a build whose token explode fits one partition
+    // (Layout.fitsOnePartition) reads `docs` in one partition and plans
+    // no exchange: one job per query instead of one per shuffle stage;
+    // above it, the bucket-aligned postings exchange takes the session's
+    // width up to buckets × filesPerBucket
+    val one = graft.ops.Layout.fitsOnePartition(spark, tokenExplodeBytes(docs))
+    val width = if (one) 1 else spark.sessionState.conf.numShufflePartitions
+    // ONE tokenize pass and ONE postings-sized exchange feed all four
+    // tables, materialized once (the checkpoint keeps the
+    // bucket-aligned partitioning the postings write needs), or every
+    // write below re-runs the corpus build (the double-eval trap).
+    // Postings write shape: the exchange is doc-salted, so every
+    // output file is bucket-pure, at most filesPerBucket per bucket,
+    // from at most buckets × filesPerBucket write tasks. At sf0.1 this
+    // was 448 → 14 files and −25% write time; on object stores / HDFS,
+    // bounding file count is what keeps the metadata layer alive at
+    // 100 TB.
+    val single = graft.ops.Layout.onePartitionWhen(one) _
+    val bucketed = single(graft.ops.Ann.materializeOnce(bucketedPostings(
+      single(docs), idCol, textCol, termBuckets, filesPerBucket, width)))
+    // ONE postings aggregation feeds the docs/ table AND (N, tot_dl):
+    // sum(tf) over a doc's postings is its token count (tf counts the
+    // same token array dl sizes), so the stats fold rides the docs
+    // ledger (doc-count-sized) instead of paying a second
+    // postings-sized count_distinct pass
+    val docsTbl = single(graft.ops.Ann.materializeOnce(
+      bucketed.select("doc_id", "dl").distinct()))
+    val stats = docsTbl.agg(count(lit(1)).as("n"), sum("dl").as("tot")).head()
+    val n = stats.getLong(0)
+    val totDl = if (n == 0) 0L else stats.getLong(1)
+    // meta rides the same concurrent wave as the four segment tables
+    // (guide §2.6 overlap): the commit marker below is still the LAST
+    // write, so readers never see a half-built index — same crash
+    // window as the sequential ordering, 5 small jobs' wall ≈ the max
+    // instead of the sum
+    graft.ops.Layout.mapConcurrently[() => Unit, Unit](Seq(
+      () => writeSegment(spark, path, 0L, bucketed, docsTbl,
+        n, totDl, overwrite = true),
+      () => Seq(termBuckets).toDF("term_buckets")
+        .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")),
+      parallelism = 2)(_())
+    // every table is written: free both materializations now, not when
+    // ContextCleaner next sees them collected (a build's checkpoints
+    // would otherwise stay pinned into the next build)
+    Seq(bucketed, docsTbl).foreach(graft.ops.Ann.release)
+    resetCommits(spark, path, Seq(0L))
+    // a rebuild replaces the WHOLE index state: the previous life's
+    // _tombstones sidecar and batches ledger go with it, or loadIndex
+    // would silently exclude fresh docs whose ids were once deleted
+    // and appendIndexBatch would no-op previously used batch ids
+    graft.ops.Layout.clearIndexSidecars(spark, path)
     // the driver already holds every load scalar: no read-back of meta
     // and stats (loadIndex's scan)
     committedIndex(spark, path, Seq(0L), termBuckets, n, totDl)
@@ -297,8 +296,8 @@ object Bm25 extends graft.ops.IndexLifecycle {
   private val DocsDdl = "doc_id BIGINT, dl BIGINT, seg INT"
   private val StatsDdl = "n_docs BIGINT, tot_dl BIGINT, seg INT"
 
-  // Byte estimates for the writers' shuffle sizing
-  // (graft.ops.Layout.withShuffleSizedTo), metadata-only upper bounds:
+  // Byte estimates for the writers' one-partition test
+  // (graft.ops.Layout.fitsOnePartition), metadata-only upper bounds:
   // the token explode of a doc frame carries at most 3× its bytes, and
   // an at-rest posting row is ~32 B.
   private def tokenExplodeBytes(docs: DataFrame): BigInt = graft.ops.Layout.planBytes(docs) * 3
@@ -495,28 +494,27 @@ object Bm25 extends graft.ops.IndexLifecycle {
     val existing = readTable(spark, DocsDdl, s"$path/docs")
       .where(col("seg").isin(committed.map(x => x: Any): _*))
       .select("doc_id")
-    // append shuffles sized from the delta's token explode + the
-    // ledger's real bytes (Layout.withShuffleSizedTo): the postings write
-    // keeps its explicit bucket-aligned repartition either way; only the
-    // implicit aggregate/join fan-outs shrink on KB-scale deltas
-    graft.ops.Layout.withShuffleSizedTo(spark,
-      BigInt(graft.ops.Layout.dirBytes(spark, s"$path/docs")) +
-        tokenExplodeBytes(newDocs),
-      disableAqeAtOne = false) {
-    val fresh = newDocs
+    // an append whose delta token explode + ledger bytes fit one
+    // partition (Layout.fitsOnePartition) reads both in one partition
+    // and plans no exchange (see writeIndex)
+    val one = graft.ops.Layout.fitsOnePartition(spark,
+      graft.ops.Layout.dirBytes(spark, s"$path/docs") + tokenExplodeBytes(newDocs))
+    val single = graft.ops.Layout.onePartitionWhen(one) _
+    val fresh = single(newDocs)
       .withColumn("doc_id", col(idCol).cast("long"))
-      .join(existing, Seq("doc_id"), "left_anti")
+      .join(single(existing), Seq("doc_id"), "left_anti")
     // materialize ONCE before any write: the delta's lineage reads the
     // docs/ ledger this append is about to extend (same swap discipline
     // as VectorIndex.append), and the four writes below must not each
     // re-run the tokenize+aggregate build. One bucket-aligned exchange:
     // one file per (seg, bucket)
-    val postings = graft.ops.Ann.materializeOnce(
-      bucketedPostings(fresh, "doc_id", textCol, nb, filesPerBucket = 1))
+    val postings = single(graft.ops.Ann.materializeOnce(bucketedPostings(fresh,
+      "doc_id", textCol, nb, filesPerBucket = 1,
+      width = if (one) 1 else spark.sessionState.conf.numShufflePartitions)))
     // one aggregation feeds the docs/ ledger AND (n, tot_dl) — the same
     // sum(tf) == sum(dl) fusion as writeIndex (one postings pass, not two)
-    val docsTbl = graft.ops.Ann.materializeOnce(
-      postings.select("doc_id", "dl").distinct())
+    val docsTbl = single(graft.ops.Ann.materializeOnce(
+      postings.select("doc_id", "dl").distinct()))
     val stats = docsTbl.agg(count(lit(1)).as("n"), sum("dl").as("tot")).head()
     val n = stats.getLong(0)
     if (n == 0) return 0L
@@ -529,7 +527,6 @@ object Bm25 extends graft.ops.IndexLifecycle {
     Seq(postings, docsTbl).foreach(graft.ops.Ann.release)
     commitSeg(spark, path, seg)
     n
-    }
   }
 
   private def tombPath(path: String) = tombstonesPath(path)
@@ -588,31 +585,30 @@ object Bm25 extends graft.ops.IndexLifecycle {
       s"compactIndex: no committed segments at $path")
     val segFilter = col("seg").isin(committed.map(x => x: Any): _*)
     // compact is a full-index rewrite: sized from the index's real bytes
-    // (no shrink once the postings outgrow one advisory partition)
-    graft.ops.Layout.withShuffleSizedTo(spark,
-      BigInt(graft.ops.Layout.dirBytes(spark, path)),
-      disableAqeAtOne = false) {
+    // (one partition only while the whole index fits one)
+    val single = graft.ops.Layout.onePartitionWhen(graft.ops.Layout.fitsOnePartition(
+      spark, graft.ops.Layout.dirBytes(spark, path))) _
     // anti joins, not broadcast sets: compact is the path that must stay
     // scale-safe at ANY tombstone count (the probe-side cap does not
     // apply here — same split as Hnsw.compact vs its probes). Orphan
     // (uncommitted) segments are excluded from the rewrite and vanish
     // with the directory swap — compact is also the orphan reclaimer.
-    val live = graft.ops.Ann.materializeOnce(
+    val live = single(graft.ops.Ann.materializeOnce(single(
       readTable(spark, PostingsDdl, s"$path/postings")
         .where(segFilter).drop("seg")
-        .join(dead, Seq("doc_id"), "left_anti"))
+        .join(dead, Seq("doc_id"), "left_anti"))))
     // one postings aggregation feeds the rewritten docs/ ledger AND
     // (n, tot_dl) — the writeIndex fusion (sum(dl) over the ledger ==
     // sum(tf) over postings)
-    val docsTbl = graft.ops.Ann.materializeOnce(
-      live.select("doc_id", "dl").distinct())
+    val docsTbl = single(graft.ops.Ann.materializeOnce(
+      live.select("doc_id", "dl").distinct()))
     val stats = docsTbl.agg(count(lit(1)).as("n"), sum("dl").as("tot")).head()
     // `before` from the per-segment stats ledger, not a distinct+count
     // over the corpus-sized docs/ table: committed segments hold disjoint
     // doc ids (the append ledger's law), so sum(n_docs) IS the distinct
     // count — segment-count-sized input instead of a corpus scan+shuffle
     // (the guide's "don't pay a pass for a number a ledger already holds")
-    val before = readTable(spark, StatsDdl, s"$path/stats").where(segFilter)
+    val before = single(readTable(spark, StatsDdl, s"$path/stats").where(segFilter))
       .agg(coalesce(sum("n_docs"), lit(0L)).cast("long")).head.getLong(0)
     val n = stats.getLong(0)
     // refuse compacting to EMPTY: a dynamically-partitioned write of zero
@@ -655,7 +651,6 @@ object Bm25 extends graft.ops.IndexLifecycle {
     // extra ids match no partitions) — benign window
     stageCommits(fs, commitsS, Seq(0L))
     (before, n)
-    }
     }
     // spend exactly the snapshotted files — deleteDocs concurrent with
     // this compact keeps its (unfolded) tombstones for the next one
@@ -737,8 +732,8 @@ object Bm25 extends graft.ops.IndexLifecycle {
     // the re-home is sized from the merged segments' ledgered token
     // count (tot_dl ≈ postings rows) — exactly the tiered-merge premise
     // that bytes rewritten track the small tail, never the whole index
-    graft.ops.Layout.withShuffleSizedTo(spark,
-      BigInt(st.getLong(1)) * PostingRowBytes, disableAqeAtOne = false) {
+    val single = graft.ops.Layout.onePartitionWhen(graft.ops.Layout.fitsOnePartition(
+      spark, BigInt(st.getLong(1)) * PostingRowBytes)) _
     graft.ops.Layout.mapConcurrently[() => Unit, Unit](Seq(
       () => readTable(spark, PostingsDdl, s"$path/postings")
         .where(segFilter).drop("seg")
@@ -746,7 +741,7 @@ object Bm25 extends graft.ops.IndexLifecycle {
           col("bucket"), pmod(xxhash64(col("doc_id")), lit(filesPerBucket)))
         .withColumn("seg", lit(newSeg))
         .write.mode("append").partitionBy("seg", "bucket").parquet(s"$path/postings"),
-      () => readTable(spark, TermsDdl, s"$path/terms").where(segFilter)
+      () => single(readTable(spark, TermsDdl, s"$path/terms").where(segFilter))
         .groupBy("term").agg(sum("df").cast("long").as("df"))
         .withColumn("seg", lit(newSeg))
         .write.mode("append").partitionBy("seg").parquet(s"$path/terms"),
@@ -758,7 +753,6 @@ object Bm25 extends graft.ops.IndexLifecycle {
         .withColumn("seg", lit(newSeg))
         .coalesce(1).write.mode("append").partitionBy("seg").parquet(s"$path/stats")),
       parallelism = 4)(_())
-    }
     // the one-flip commit: sources out, merge result in. Segments
     // committed by an APPEND while this merge rewrote its tail must
     // survive the flip, so the marker set is re-listed here — everything

@@ -299,8 +299,9 @@ object CachedRag {
     *   2. misses run `answerMisses` — the caller's retrieval + answer +
     *      pricing pipeline, `(query_id, question, query_vec) →
     *      (query_id, question, answer, cost)` (deterministic by contract,
-    *      or replays produce different answers), outside every sizing
-    *      scope, since it touches caller-owned tables;
+    *      or replays produce different answers), on the caller's own
+    *      frames: the pass sizes none of its reads, since it touches
+    *      caller-owned tables;
     *   3. the answered misses insert back through
     *      [[SemanticCache.intakeResolved]] with step 1's dispositions (no
     *      second lookup), which also resolves within-batch duplicates;
@@ -800,10 +801,9 @@ object ChatRag {
       b -> fs.exists(new org.apache.hadoop.fs.Path(mp, s"sbucket=$b"))).toMap
     val bucketDirs = touched.keys.toSeq.sorted.filter(preExists)
       .map(b => new org.apache.hadoop.fs.Path(mp, s"sbucket=$b"))
-    // size the memory aggregate's shuffle from the touched buckets' REAL
-    // bytes + sessions × a generous serving-row width. The cache pass
-    // sizes itself (its answerMisses touches caller-owned tables). The
-    // aggregate re-joins no checkpoint, so AQE may go at one partition.
+    // size the memory aggregate from the touched buckets' REAL bytes +
+    // sessions × a generous serving-row width. The cache pass sizes
+    // itself (its answerMisses touches caller-owned tables).
     val sliceBytes =
       if (!bucketed) graft.ops.Layout.dirBytes(spark, memoryPath)
       else bucketDirs.map(d => fs.getContentSummary(d).getLength).sum
@@ -815,22 +815,22 @@ object ChatRag {
     // declared columns and the session IN-filter pushed into the scans
     val sliceDirs = if (bucketed) bucketDirs else Seq(mp)
     val memStats = if (sliceDirs.isEmpty) Map.empty[Any, Row] else {
-      val h = spark.read.schema(StructType(Seq(
-          StructField("session_id", questions0.schema("session_id").dataType),
-          StructField("turn", LongType), StructField("role", StringType),
-          StructField("content", StringType))))
-        .parquet(sliceDirs.map(_.toString): _*)
-        .where(col("session_id").isin(sessionIds: _*))
-      graft.ops.Layout.withShuffleSizedTo(spark, turnBytes) {
-        memoryWindow.fold(h.withColumn("__in_window", lit(true))) {
-            case (maxTurns, tokenBudget) =>
-              SessionMemory.withWindowFlag(h, maxTurns, tokenBudget)
-          }
-          .groupBy("session_id")
-          .agg(count(when(col("__in_window"), 1)).as("__n"),
-            max(col("turn")).as("__mt"))
-          .collect().map(r => r.get(0) -> r).toMap
-      }
+      val h = graft.ops.Layout.onePartitionWhen(
+          graft.ops.Layout.fitsOnePartition(spark, turnBytes))(
+        spark.read.schema(StructType(Seq(
+            StructField("session_id", questions0.schema("session_id").dataType),
+            StructField("turn", LongType), StructField("role", StringType),
+            StructField("content", StringType))))
+          .parquet(sliceDirs.map(_.toString): _*)
+          .where(col("session_id").isin(sessionIds: _*)))
+      memoryWindow.fold(h.withColumn("__in_window", lit(true))) {
+          case (maxTurns, tokenBudget) =>
+            SessionMemory.withWindowFlag(h, maxTurns, tokenBudget)
+        }
+        .groupBy("session_id")
+        .agg(count(when(col("__in_window"), 1)).as("__n"),
+          max(col("turn")).as("__mt"))
+        .collect().map(r => r.get(0) -> r).toMap
     }
     val served = CachedRag.cachedAnswerBatch(spark,
         questions0.select("query_id", "question", "query_vec"),
@@ -1124,11 +1124,10 @@ object ChatRag {
     // retried delete exists to remove (ADVICE r14 #1)
     layout.healLeftovers(fs, mp)
     // bucket rewrites sized from the table's real bytes
-    // (Layout.withShuffleSizedTo) — a KB-scale memory table was paying a
+    // (Layout.fitsOnePartition) — a KB-scale memory table was paying a
     // 32-way fan-out per touched bucket; a grown table keeps its plan
-    graft.ops.Layout.withShuffleSizedTo(spark,
-      BigInt(graft.ops.Layout.dirBytes(spark, memoryPath)),
-      disableAqeAtOne = false) {
+    val single = graft.ops.Layout.onePartitionWhen(graft.ops.Layout.fitsOnePartition(
+      spark, graft.ops.Layout.dirBytes(spark, memoryPath))) _
     val dirs = layout.recorded(fs, mp) match {
       case Some(n) =>
         sessionIds.map(sessionBucket(_, n.toInt)).distinct.sorted
@@ -1140,7 +1139,7 @@ object ChatRag {
     // silently destroy (and count) every null-session row in the bucket
     val trackedBefore = dirs.filter(d => RecencySidecar.isTracked(fs, d)).toSet
     val removed = layout.rewriteDirsAll(spark, fs, dirs,
-      df => df.where(col("session_id").isNull ||
+      df => single(df).where(col("session_id").isNull ||
         !col("session_id").isin(sessionIds: _*)))
     // a swapped bucket loses its recency sidecar with the replaced dir —
     // rebuild it from the surviving data so idle-retention's no-op
@@ -1149,7 +1148,6 @@ object ChatRag {
     RecencySidecar.refreshAll(spark, fs, dirs.filter(d =>
       fs.exists(d) && trackedBefore(d) && !RecencySidecar.isTracked(fs, d)))
     removed
-    }
   }
 
   /** Re-fan-out the memory table (round-13 missing #2) — and, as the
@@ -1218,9 +1216,8 @@ object ChatRag {
     layout.healLeftovers(fs, mp)
     graft.ops.Layout.advanceRetentionMarker(fs, mp, beforeTs)
     // bucket rewrites sized from the table's real bytes (see deleteSessions)
-    graft.ops.Layout.withShuffleSizedTo(spark,
-      BigInt(graft.ops.Layout.dirBytes(spark, memoryPath)),
-      disableAqeAtOne = false) {
+    val single = graft.ops.Layout.onePartitionWhen(graft.ops.Layout.fitsOnePartition(
+      spark, graft.ops.Layout.dirBytes(spark, memoryPath))) _
     val bucketDirs = layout.partitionDirs(fs, mp)
     // the recency sidecar GATES which buckets scan (round-14 verdict #2):
     // a tracked bucket whose folded state shows no candidate — no session
@@ -1237,7 +1234,8 @@ object ChatRag {
         RecencySidecar.hasCandidate(fs, d, beforeTs)
     }
     val pruned = layout.rewriteDirsAll(spark, fs, scan,
-      df =>
+      read => {
+        val df = single(read)
         if (!df.columns.contains("ts")) df // untimed bucket: nothing ages
         else {
           // sessions are bucket-local (one hash home), so the idle set
@@ -1251,13 +1249,13 @@ object ChatRag {
               col("__newest") < lit(beforeTs) && col("__untimed") === 0)
             .select("session_id")
           df.join(idle, Seq("session_id"), "left_anti")
-        })
+        }
+      })
     // every scanned bucket gets a fresh snapshot: rebuilds what a swap
     // replaced, bootstraps the untracked, and settles a stale-low
     // candidate so it cannot re-trigger the next firing
     RecencySidecar.refreshAll(spark, fs, scan.filter(fs.exists(_)))
     pruned
-    }
   }
 
   /** The memory store's stats/report op (round-14 verdict #3 — the
@@ -1292,9 +1290,10 @@ object ChatRag {
       else graft.ops.Layout.readMaxDigitMarker(fs, mp, "_retention")
     val dataStats =
       if (!exists || nFiles == 0L) (0L, 0L, 0L, None: Option[Long], None: Option[Long])
-      else graft.ops.Layout.withShuffleSizedTo(spark, BigInt(bytes),
-        disableAqeAtOne = false) {
-        val df = PartitionedTable.read(spark, memoryPath)
+      else {
+        val df = graft.ops.Layout.onePartitionWhen(
+          graft.ops.Layout.fitsOnePartition(spark, bytes))(
+          PartitionedTable.read(spark, memoryPath))
         val withTs =
           if (df.columns.contains("ts")) df
           else df.withColumn("ts", lit(null).cast("long"))
@@ -2248,14 +2247,9 @@ object SemanticCache {
     val nMiss = rows.count(!_.getBoolean(hi))
     val vecType = looked.schema("__qv").dataType
     // size the resolve/insert tail from the store bytes of the caller's
-    // listing + the caller's batch-row bound (no extra job, no re-listing).
-    // AQE may go at one partition on the exact pair branch only: the
-    // banded branch's checkpoint-rejoin plan trips a Spark analyzer
-    // conflicting-reference error when analyzed with AQE off.
-    graft.ops.Layout.withShuffleSizedTo(spark,
-      (BigInt(batchRowBound) * ServingRowBytes).min(BigInt(Long.MaxValue)) +
-        BigInt(store.bytes),
-      disableAqeAtOne = nMiss <= graft.ops.Dedup.MaxExactPairRows) {
+    // listing + the caller's batch-row bound (no extra job, no re-listing)
+    val single = graft.ops.Layout.onePartitionWhen(graft.ops.Layout.fitsOnePartition(
+      spark, BigInt(batchRowBound) * ServingRowBytes + BigInt(store.bytes))) _
     // within-batch resolve over the misses (step 2). Pair generation is
     // the d8 selectivity law ([[graft.ops.Dedup.cosinePairsAuto]], its
     // size probe answered by the pinned miss count): an exact broadcast
@@ -2265,7 +2259,7 @@ object SemanticCache {
     // only inserts both entries, never serves a wrong one. The pairs stay
     // in Spark (identical questions make them quadratic); only the
     // one-row-per-loser result is collected.
-    val misses = looked.where(!col("hit")).select(col("query_id"), col("__qv"))
+    val misses = single(looked).where(!col("hit")).select(col("query_id"), col("__qv"))
     val inBatch = Pinned.keyed(
       if (nMiss < 2) Nil
       else {
@@ -2331,7 +2325,6 @@ object SemanticCache {
           (col("query_id") + idOffset).cast("long")).as("cache_id"),
         coalesce(col("cos"), col("__in_cos")).as("cos"),
         (col("hit") || col("__in_cid").isNotNull).as("hit")))
-    }
   }
 
   /** Size-cap EVICTION — the lifecycle half every index family already
@@ -2362,10 +2355,8 @@ object SemanticCache {
       .getFileSystem(spark.sessionState.newHadoopConf())
     graft.ops.Layout.replaceDirs(fs, Seq(cachePath)) { case Seq(staged) =>
     // sized from the store's real bytes (see invalidateCacheBefore)
-    graft.ops.Layout.withShuffleSizedTo(spark,
-      BigInt(graft.ops.Layout.dirBytes(spark, cachePath)),
-      disableAqeAtOne = false) {
-    val stored = spark.read.parquet(cachePath)
+    val stored = graft.ops.Layout.onePartitionWhen(graft.ops.Layout.fitsOnePartition(
+      spark, graft.ops.Layout.dirBytes(spark, cachePath)))(spark.read.parquet(cachePath))
     val before = stored.count()
     if (before <= maxEntries) return (before, before)
     // the keep-set is ONE scalar cutoff, not orderBy+limit+broadcast
@@ -2382,7 +2373,6 @@ object SemanticCache {
       stored.where(col("cache_id").cast("long") >= cutoff))
       .write.mode("overwrite").parquet(staged)
     (before, maxEntries.toLong)
-    }
     }
   }
 
@@ -2800,13 +2790,12 @@ object SemanticCache {
       .getFileSystem(spark.sessionState.newHadoopConf())
     graft.ops.Layout.replaceDirs(fs, Seq(cachePath)) { case Seq(staged) =>
     // sweep sized from the store's real bytes (one pass + rewrite)
-    graft.ops.Layout.withShuffleSizedTo(spark,
-      BigInt(graft.ops.Layout.dirBytes(spark, cachePath)),
-      disableAqeAtOne = false) {
-    val stored = spark.read.parquet(cachePath)
+    val single = graft.ops.Layout.onePartitionWhen(graft.ops.Layout.fitsOnePartition(
+      spark, graft.ops.Layout.dirBytes(spark, cachePath))) _
+    val stored = single(spark.read.parquet(cachePath))
     val before = stored.count()
-    val kept = graft.ops.Ann.materializeOnce(
-      stored.where(col("cache_id").cast("long") >= minCacheId))
+    val kept = single(graft.ops.Ann.materializeOnce(
+      stored.where(col("cache_id").cast("long") >= minCacheId)))
     val after = kept.count()
     if (after == before) return (before, before) // nothing stale: no rewrite
     require(after > 0,
@@ -2814,7 +2803,6 @@ object SemanticCache {
         s"$cachePath — remove the cache directory instead")
     kept.write.mode("overwrite").parquet(staged)
     (before, after)
-    }
     }
   }
 
@@ -2864,7 +2852,7 @@ object SemanticCache {
   }
 
   /** The cache dir's data files, listed ONCE per serving or intake pass:
-    * their bytes size the pass's shuffles, their parquet footers bound
+    * their bytes size the pass's reads, their parquet footers bound
     * its row count for the route gate. */
   private[graft] final case class StoreListing(path: String, exists: Boolean,
       files: Seq[org.apache.hadoop.fs.FileStatus]) {
@@ -2931,9 +2919,9 @@ object SemanticCache {
     * pinned ONCE and every later step reads that copy; the store minus
     * the batch's OWN minted ids (a scan filter — the ids are on the
     * driver) goes through [[routeLookup]], whose ≤ batch-many rows
-    * `(query_id, cache_id, cos, hit)` are pinned too. The shuffles are
-    * sized from batch rows × a generous serving-row width + the listed
-    * store bytes. Returns (batch, lookup).
+    * `(query_id, cache_id, cos, hit)` are pinned too. The lookup reads
+    * in one partition while batch rows × a generous serving-row width +
+    * the listed store bytes fit one. Returns (batch, lookup).
     */
   private[graft] def pinnedLookup(
       spark: SparkSession,
@@ -2956,14 +2944,13 @@ object SemanticCache {
     val visible = stored.where(col("cache_id").isNull ||
       !graft.ops.Layout.inIds(col("cache_id"), ownIds))
     val nStore = routeStoreCount(spark, store, nBatch, maxExactProduct)(visible.count())
-    // AQE may go at one partition on the exact route only: the banded
-    // lookup's checkpoint-rejoin plan trips the analyzer with AQE off
-    graft.ops.Layout.withShuffleSizedTo(spark,
-      BigInt(nBatch) * ServingRowBytes + BigInt(store.bytes),
-      disableAqeAtOne = isExactRoute(nBatch, nStore, maxExactProduct)) {
-      (batch0, Pinned.of(routeLookup(batch0, visible, minCos, queryIdCol, queryVecCol,
-        maxExactProduct, batchCount = Some(nBatch), storeCount = Some(nStore))))
-    }
+    // no store: the lookup folds to the pinned batch rows, no job to size
+    val single = graft.ops.Layout.onePartitionWhen(store.exists &&
+      graft.ops.Layout.fitsOnePartition(spark,
+        BigInt(nBatch) * ServingRowBytes + BigInt(store.bytes))) _
+    (batch0, Pinned.of(routeLookup(single(batch0), single(visible), minCos,
+      queryIdCol, queryVecCol, maxExactProduct,
+      batchCount = Some(nBatch), storeCount = Some(nStore))))
   }
 
   private[graft] def isExactRoute(nBatch: Long, nStore: Long,
@@ -2981,7 +2968,7 @@ object SemanticCache {
 
   /** Generous per-row byte bound for serving-batch frames (question text
     * + query embedding + carried answer) — the batch side of the
-    * [[graft.ops.Layout.withShuffleSizedTo]] gates: serving rows are
+    * [[graft.ops.Layout.fitsOnePartition]] gates: serving rows are
     * KB-scale by the micro-batch contract, and the bound only has to be
     * an upper estimate (an 8× miss still leaves partitions far under
     * the advisory size).

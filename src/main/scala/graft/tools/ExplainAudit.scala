@@ -437,7 +437,7 @@ object ExplainAudit {
         val docs = spark.read.parquet(s"$sfDir/documents.parquet")
         val edges = graft.ops.HostGraph.prepEdges(
           docs.selectExpr("doc_id % 37 AS src", "(doc_id * 7 + 3) % 37 AS dst"),
-          "src", "dst")
+          "src", "dst", one = false)
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         edges.count()
         val nodes = edges.select(col("src").as("node"))

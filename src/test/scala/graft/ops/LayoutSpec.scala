@@ -618,8 +618,8 @@ class LayoutSpec extends SparkSpec {
         java.nio.file.Files.readAllLines(f).asScala.zipWithIndex.flatMap {
           case (line, i) =>
             val scope =
-              if (registry.exists(rel.startsWith) && line.contains("withShuffleSizedTo"))
-                Seq("withShuffleSizedTo") else Nil
+              if (registry.exists(rel.startsWith) && line.contains("fitsOnePartition"))
+                Seq("fitsOnePartition") else Nil
             val bare =
               if (literalProduct.findFirstIn(line).isDefined &&
                 namedEstimate.findFirstIn(line).isEmpty) Seq("bare size multiplier")
@@ -629,6 +629,29 @@ class LayoutSpec extends SparkSpec {
       }
     finally walk.close()
     assert(hits.isEmpty, s"shuffle sizing outside the ops' named estimates:\n${hits.mkString("\n")}")
+  }
+
+  test("no library code writes the session conf: conf writes live only in the tools") {
+    // concurrent callers share one session, so a library write of its
+    // conf leaks into every other caller's plans; the tools own their
+    // sessions. GraftExtensions' setIfMissing floor is the one conf write
+    // the library keeps, and it writes nothing a caller already set
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala")
+    assert(java.nio.file.Files.isDirectory(root),
+      s"source root not found under ${root.toAbsolutePath}")
+    val tools = java.nio.file.Paths.get("graft/tools")
+    val write = "conf\\.set\\(|conf\\.unset\\(|setConf\\(".r
+    val walk = java.nio.file.Files.walk(root)
+    val hits = try walk.iterator().asScala.toSeq
+      .filter(f => f.toString.endsWith(".scala") && !root.relativize(f).startsWith(tools))
+      .flatMap { f =>
+        java.nio.file.Files.readAllLines(f).asScala.zipWithIndex.collect {
+          case (line, i) if write.findFirstIn(line).isDefined => s"$f:${i + 1}: $line"
+        }
+      }
+    finally walk.close()
+    assert(hits.isEmpty, s"session conf written outside the tools:\n${hits.mkString("\n")}")
   }
 
   test("vacuum: heals committed crashed swaps, sweeps condemned/uncommitted siblings, never touches live data") {
@@ -702,48 +725,29 @@ class LayoutSpec extends SparkSpec {
       "a crashed whole-table swap must heal from the root's own siblings")
   }
 
-  test("withShuffleSizedTo: derives partitions from bytes, restores conf, " +
-    "never shrinks for big/unknown estimates") {
-    val cur = spark.conf.get("spark.sql.shuffle.partitions")
-    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    // tiny estimate -> 1 partition, AQE off, both restored after
-    Layout.withShuffleSizedTo(spark, BigInt(1024)) {
-      assert(spark.conf.get("spark.sql.shuffle.partitions") == "1")
-      assert(spark.conf.get("spark.sql.adaptive.enabled") == "false")
-      // values are partitioning-invariant: a keyed aggregate under the
-      // 1-partition plan equals the ambient-plan result
-      val r = spark.range(100).selectExpr("id % 7 AS k", "id AS v")
-        .groupBy("k").agg(sum("v").as("s")).orderBy("k")
-        .collect().map(x => (x.getLong(0), x.getLong(1))).toSeq
-      assert(r.size == 7 && r.map(_._2).sum == 4950)
-    }
-    assert(spark.conf.get("spark.sql.shuffle.partitions") == cur)
-    assert(spark.conf.get("spark.sql.adaptive.enabled") == aqe)
-    // disableAqeAtOne=false keeps AQE on even at 1 partition
-    Layout.withShuffleSizedTo(spark, BigInt(1024), disableAqeAtOne = false) {
-      assert(spark.conf.get("spark.sql.shuffle.partitions") == "1")
-      assert(spark.conf.get("spark.sql.adaptive.enabled") == aqe)
-    }
-    // mid-size estimate -> ceil(bytes/advisory), AQE untouched
+  private def partitions = spark.conf.get("spark.sql.shuffle.partitions")
+
+  test("fitsOnePartition: the advisory size fits, one byte more or an unknown estimate does not") {
     val advisory = spark.sessionState.conf.getConf(
       org.apache.spark.sql.internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
-    if (cur.toInt > 2) {
-      Layout.withShuffleSizedTo(spark, BigInt(advisory) * 2) {
-        assert(spark.conf.get("spark.sql.shuffle.partitions") == "2")
-        assert(spark.conf.get("spark.sql.adaptive.enabled") == aqe)
-      }
-    }
-    // huge/unknown estimates (plan-stat default ~ Long.Max) never shrink
-    Layout.withShuffleSizedTo(spark, BigInt(Long.MaxValue)) {
-      assert(spark.conf.get("spark.sql.shuffle.partitions") == cur)
-      assert(spark.conf.get("spark.sql.adaptive.enabled") == aqe)
-    }
-    // conf restored even when the body throws
-    intercept[RuntimeException] {
-      Layout.withShuffleSizedTo(spark, BigInt(1)) { throw new RuntimeException("x") }
-    }
-    assert(spark.conf.get("spark.sql.shuffle.partitions") == cur)
-    assert(spark.conf.get("spark.sql.adaptive.enabled") == aqe)
+    assert(Layout.fitsOnePartition(spark, BigInt(1024)))
+    assert(Layout.fitsOnePartition(spark, BigInt(advisory)))
+    assert(!Layout.fitsOnePartition(spark, BigInt(advisory) + 1))
+    // the plan-stat default for a frame Catalyst cannot bound
+    assert(!Layout.fitsOnePartition(spark, BigInt(Long.MaxValue)))
+    // a frame that fits is read in one partition: its keyed aggregate
+    // plans no exchange and keeps the ambient plan's values
+    val multi = tempDir("graft_one").toString + "/t"
+    spark.range(100).selectExpr("id % 7 AS k", "id AS v").repartition(3)
+      .write.parquet(multi)
+    val df = spark.read.parquet(multi)
+    val one = Layout.onePartitionWhen(fits = true)(df).groupBy("k").agg(sum("v").as("s"))
+    assert(!one.queryExecution.executedPlan.toString.contains("Exchange"),
+      s"a one-partition input must plan no exchange:\n${one.queryExecution.executedPlan}")
+    def values(f: org.apache.spark.sql.DataFrame) =
+      f.collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
+    assert(values(one) == values(df.groupBy("k").agg(sum("v").as("s"))))
+    assert(Layout.onePartitionWhen(fits = false)(df) eq df)
     // planBytes: a parquet-backed frame reports a real (small) size; an
     // unresolvable estimate reports the safe huge default
     val tmp2 = tempDir("graft_wss").toString
@@ -753,53 +757,59 @@ class LayoutSpec extends SparkSpec {
       s"parquet-backed planBytes must be the real file size, got $pb")
   }
 
-  private def partitions = spark.conf.get("spark.sql.shuffle.partitions")
-  private def advisoryBytes = BigInt(spark.sessionState.conf.getConf(
-    org.apache.spark.sql.internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES))
-
-  test("withShuffleSizedTo: overlapping scopes on two threads leave the session unchanged") {
+  test("a sized op held mid-body leaves the session's width and AQE to other threads") {
     val (cur, aqe) = (partitions, spark.conf.get("spark.sql.adaptive.enabled"))
-    assume(cur.toInt > 2, s"needs a session wider than 2 partitions, got $cur")
-    import java.util.concurrent.{CountDownLatch, TimeUnit}
-    val (aIn, bIn, aOut) = (new CountDownLatch(1), new CountDownLatch(1), new CountDownLatch(1))
-    def await(l: CountDownLatch): Unit =
-      assert(l.await(60, TimeUnit.SECONDS), "latch timed out")
-    @volatile var bSaw = ""
-    def thread(body: => Unit) = {
-      val err = new java.util.concurrent.atomic.AtomicReference[Throwable]()
-      val t = new Thread(() => try body catch { case e: Throwable => err.set(e) })
-      t.start()
-      (t, err)
-    }
-    // A enters a 2-partition scope, B a 1-partition scope, A exits, B exits
-    val a = thread {
-      Layout.withShuffleSizedTo(spark, advisoryBytes * 2) { aIn.countDown(); await(bIn) }
-      aOut.countDown()
-    }
-    val b = thread {
-      await(aIn)
-      Layout.withShuffleSizedTo(spark, BigInt(1)) {
-        bSaw = partitions; bIn.countDown(); await(aOut)
+    assume(cur.toInt > 1, s"needs a session wider than 1 partition, got $cur")
+    import java.util.concurrent.TimeUnit
+    LayoutSpecHold.arm()
+    // local mode runs the tasks in this JVM: the first row's text blocks
+    // inside writeIndex's first job until the latch opens
+    val held = udf((s: String) => { LayoutSpecHold.hold(); s }).asNondeterministic()
+    val docs = spark.range(8).select(col("id").as("doc_id"),
+      held(concat(lit("apple banana "), col("id").cast("string"))).as("text"))
+    assert(Layout.fitsOnePartition(spark, Layout.planBytes(docs)))
+    val path = tempDir("graft_held").toString + "/idx"
+    val err = new java.util.concurrent.atomic.AtomicReference[Throwable]()
+    val writer = new Thread(() =>
+      try graft.search.Bm25.writeIndex(docs, "doc_id", "text", path, termBuckets = 4)
+      catch { case e: Throwable => err.set(e) })
+    writer.start()
+    try {
+      assert(LayoutSpecHold.entered.await(120, TimeUnit.SECONDS),
+        "writeIndex never reached its first job")
+      assert(partitions == cur, s"another thread saw $partitions shuffle partitions, not $cur")
+      assert(spark.conf.get("spark.sql.adaptive.enabled") == aqe)
+      spark.range(100).groupBy(col("id") % 7).count().queryExecution.executedPlan match {
+        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
+          val widths = a.executedPlan.collect {
+            case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec =>
+              e.outputPartitioning.numPartitions
+          }
+          assert(widths == Seq(cur.toInt), s"a groupBy planned meanwhile had widths $widths")
+        case p => fail(s"a groupBy planned meanwhile was not adaptive:\n$p")
       }
+    } finally {
+      LayoutSpecHold.release.countDown()
+      writer.join(120000)
     }
-    Seq(a, b).foreach { case (t, err) =>
-      t.join(120000)
-      assert(!t.isAlive, "scope thread hung")
-      Option(err.get).foreach(e => throw e)
-    }
-    // nothing outlived both scopes, and B ran its body unchanged inside A's
-    assert(partitions == cur, s"shuffle partitions left at $partitions, was $cur")
-    assert(spark.conf.get("spark.sql.adaptive.enabled") == aqe)
-    assert(bSaw == "2", s"B's body saw $bSaw partitions")
+    assert(!writer.isAlive, "writeIndex hung")
+    Option(err.get).foreach(e => throw e)
+    assert(graft.search.Bm25.loadIndex(spark, path).nDocs == 8L)
   }
+}
 
-  test("withShuffleSizedTo: scopes inside an op's mapConcurrently workers neither block nor resize") {
-    val cur = partitions
-    val seen = Layout.withShuffleSizedTo(spark, BigInt(1)) {
-      Layout.mapConcurrently(1 to 3, parallelism = 3)(_ =>
-        Layout.withShuffleSizedTo(spark, advisoryBytes * 2)(partitions))
-    }
-    assert(seen == Seq("1", "1", "1"), s"workers saw $seen")
-    assert(partitions == cur)
+/** The latch a held op's UDF waits on: a top-level object, so the task's
+  * deserialized closure reaches the test's instance instead of a copy. */
+private object LayoutSpecHold {
+  @volatile var entered = new java.util.concurrent.CountDownLatch(1)
+  @volatile var release = new java.util.concurrent.CountDownLatch(1)
+  def arm(): Unit = {
+    entered = new java.util.concurrent.CountDownLatch(1)
+    release = new java.util.concurrent.CountDownLatch(1)
+  }
+  def hold(): Unit = {
+    entered.countDown()
+    release.await(120, java.util.concurrent.TimeUnit.SECONDS)
+    ()
   }
 }

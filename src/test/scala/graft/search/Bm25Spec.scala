@@ -520,7 +520,8 @@ class Bm25Spec extends SparkSpec {
     // plans the checkpoints materialize: the in-memory build's natural-key
     // aggregate and the at-rest build's bucket-aligned one
     for (raw <- Seq(Bm25.rawPostings(corpus, "doc_id", "text"),
-        Bm25.bucketedPostings(corpus, "doc_id", "text", 8, 2))) {
+        Bm25.bucketedPostings(corpus, "doc_id", "text", 8, 2,
+          spark.sessionState.conf.numShufflePartitions))) {
       val plan = raw.queryExecution.executedPlan.toString
       assert(!plan.contains("Window ["),
         s"dl must come from size(tokens), not a doc-partitioned window:\n$plan")
@@ -759,5 +760,16 @@ class Bm25Spec extends SparkSpec {
           Bm25.FieldIndex(s"$tmp/body", 1.0, 0.75)), qs, k = 10)
     }
     assert(e.getMessage.contains("SAME doc set"))
+  }
+
+  test("writeIndex job budget: a build that fits one partition runs 8 jobs") {
+    // every job is one of the build's own actions (its two checkpoints,
+    // the stats fold, the table writes): a one-partition build plans no
+    // exchange, so AQE adds no stage job. An exchange that creeps back
+    // into the build adds one and fails here.
+    val path = tempDir("graft_bm25_jobs").toString + "/idx"
+    val (_, n) = org.apache.spark.ListenerBusDrain.jobsOf(spark.sparkContext)(
+      Bm25.writeIndex(corpus, "doc_id", "text", path, termBuckets = 4))
+    assert(n == 8, s"writeIndex ran $n jobs")
   }
 }
