@@ -1,9 +1,11 @@
 package graft.embed
 
-import org.apache.spark.ml.feature.{HashingTF, IDF, IDFModel, RegexTokenizer, Word2Vec, Word2VecModel}
+import graft.functions.TfIdfEmbed
+import org.apache.spark.ml.feature.{RegexTokenizer, Word2Vec, Word2VecModel}
 import org.apache.spark.ml.linalg.Vector
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, ExpressionColumn}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StringType
 
 /** Pluggable embedding stage.
   *
@@ -12,14 +14,14 @@ import org.apache.spark.sql.functions._
   * 1536-d). That is an external-call boundary, so the engine keeps the stage
   * behind this trait; [[HttpEmbedder]] is the remote-API binding (batched
   * `mapPartitions` POSTs), and the default implementation is a fully
-  * deterministic, offline MLlib pipeline (RegexTokenizer → HashingTF → IDF)
-  * producing
+  * deterministic, offline hashed TF-IDF ([[HashingTfIdfEmbedder]]) producing
   * `ARRAY<FLOAT>` — same column shape as the 64-d fixture embeddings, so the
   * search operators are embedder-agnostic.
   *
-  * Scale: HashingTF is stateless (pure hashing, no vocabulary broadcast);
-  * IDF.fit is one treeAggregate over the corpus and the model broadcast is
-  * `numFeatures` doubles — both scale to arbitrary corpus size.
+  * Scale: the hashing is stateless (no vocabulary broadcast); `fit` is one
+  * treeAggregate of per-bucket document counts over the corpus, and the
+  * fitted state bound into each embedding plan is `dims` doubles — both
+  * scale to arbitrary corpus size.
   */
 trait Embedder extends Serializable {
   def dims: Int
@@ -28,41 +30,40 @@ trait Embedder extends Serializable {
   def embed(df: DataFrame, textCol: String = "chunk", outCol: String = "embedding"): DataFrame
 }
 
-/** Deterministic TF-IDF embedder. `fit` once on the corpus, reuse for queries. */
-class HashingTfIdfEmbedder(val dims: Int = 64, idfModel: Option[IDFModel] = None)
+/** Deterministic TF-IDF embedder. `fit` once on the corpus, reuse for queries.
+  *
+  * Its law is MLlib's `RegexTokenizer("\\s+", lowercase)` → `HashingTF(dims)`
+  * → `IDF` → float composition, bit for bit; one compiled expression
+  * ([[graft.functions.TfIdfEmbed]]) computes it in one pass per row, and
+  * `fit` aggregates the same per-row counts.
+  */
+class HashingTfIdfEmbedder private (val dims: Int, weights: Option[Array[Double]])
     extends Embedder {
 
-  private def tokenizer(inputCol: String) = new RegexTokenizer()
-    .setInputCol(inputCol)
-    .setOutputCol("__tokens")
-    .setPattern("\\s+")
-    .setToLowercase(true)
+  def this(dims: Int = 64) = this(dims, None)
 
-  private def hashingTF = new HashingTF()
-    .setInputCol("__tokens")
-    .setOutputCol("__tf")
-    .setNumFeatures(dims)
+  /** The fitted idf weights, one per bucket. */
+  private[graft] def idf: Array[Double] =
+    weights.getOrElse(throw new IllegalStateException("call fit(corpus) before embed"))
 
   /** Fit the IDF statistics on a corpus; returns an embedder that reuses them
     * (required so query-time embeddings live in the same space as the index).
+    * One job: a treeAggregate of `(m, df[dims])` over the text column's
+    * internal rows, with `idf(j) = log((m + 1) / (df(j) + 1))`, as
+    * `mllib.feature.IDF` computes it.
     */
   def fit(corpus: DataFrame, textCol: String = "chunk"): HashingTfIdfEmbedder = {
-    val tf = hashingTF.transform(tokenizer(textCol).transform(corpus))
-    val model = new IDF().setInputCol("__tf").setOutputCol("__idf").fit(tf)
-    new HashingTfIdfEmbedder(dims, Some(model))
+    val text = corpus.select(col(textCol))
+    require(text.schema.head.dataType.isInstanceOf[StringType],
+      s"$textCol must be a string column, got ${text.schema.head.dataType.catalogString}")
+    val freq = text.queryExecution.toRdd.treeAggregate(new TfIdfEmbed.DocFreq(dims))(
+      (acc, row) => acc.add(row.getUTF8String(0)), (a, b) => a.merge(b))
+    new HashingTfIdfEmbedder(dims, Some(freq.idf))
   }
 
-  private val toFloatArray = udf { v: Vector => v.toArray.map(_.toFloat) }
-
-  override def embed(df: DataFrame, textCol: String, outCol: String): DataFrame = {
-    val model = idfModel.getOrElse(
-      throw new IllegalStateException("call fit(corpus) before embed"))
-    val tf = hashingTF.transform(tokenizer(textCol).transform(df))
-    model
-      .transform(tf)
-      .withColumn(outCol, toFloatArray(col("__idf")))
-      .drop("__tokens", "__tf", "__idf")
-  }
+  override def embed(df: DataFrame, textCol: String, outCol: String): DataFrame =
+    df.withColumn(outCol,
+      ExpressionColumn(TfIdfEmbed(ExpressionColumn.expression(col(textCol)), idf)))
 }
 
 /** Seeded Word2Vec embedder — the second implementation behind [[Embedder]],

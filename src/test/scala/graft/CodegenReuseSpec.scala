@@ -1,7 +1,5 @@
 package graft
 
-import java.util.concurrent.TimeUnit
-
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
@@ -10,35 +8,14 @@ import org.scalatest.funsuite.AnyFunSuite
   * `spark.sql.extensions=graft.GraftExtensions`. Spark sizes its
   * generated-class cache once per JVM, and the shared test session starts
   * without the extension, so each case forks a fresh JVM
-  * ([[CodegenReuseProbe]]) from the test classpath.
+  * ([[CodegenReuseProbe]], through [[ForkedProbe]]).
   */
 class CodegenReuseSpec extends AnyFunSuite {
   import CodegenReuseProbe.Plans
 
   /** The probe's count of classes compiled by its second pass. */
-  private def recompiled(props: String*): Long = {
-    val java = s"${System.getProperty("java.home")}/bin/java"
-    val cmd = Seq(java, "-Xmx1g", "-XX:TieredStopAtLevel=1") ++
-      org.apache.spark.launcher.JavaModuleOptions.defaultModuleOptionArray() ++
-      Seq("-Dspark.ui.enabled=false") ++ props ++
-      Seq("-cp", System.getProperty("java.class.path"),
-        CodegenReuseProbe.getClass.getName.stripSuffix("$"))
-    val proc = new ProcessBuilder(cmd: _*).redirectErrorStream(true).start()
-    val out = new StringBuilder
-    val reader = new Thread(() =>
-      scala.io.Source.fromInputStream(proc.getInputStream).getLines()
-        .foreach(l => out.synchronized(out ++= l ++= "\n")))
-    reader.start()
-    val done = proc.waitFor(240, TimeUnit.SECONDS)
-    if (!done) proc.destroyForcibly()
-    reader.join(10000)
-    val log = out.synchronized(out.toString)
-    assert(done && proc.exitValue() == 0, s"probe JVM failed:\n${log.takeRight(4000)}")
-    log.linesIterator.collectFirst {
-      case l if l.startsWith(CodegenReuseProbe.Marker) =>
-        l.stripPrefix(CodegenReuseProbe.Marker).trim.toLong
-    }.getOrElse(fail(s"probe printed no count:\n${log.takeRight(4000)}"))
-  }
+  private def recompiled(props: String*): Long =
+    ForkedProbe.run(CodegenReuseProbe, CodegenReuseProbe.Marker, props, timeoutSec = 240).toLong
 
   test("the extension keeps an operation's generated classes across repeats") {
     val n = recompiled()

@@ -449,4 +449,23 @@ class VectorIndexSpec extends SparkSpec {
     val none = tombs.where(lit(false))
     assert(VectorIndex.resolveActive(data, none).count() == 4)
   }
+
+  test("a built store writes embedding as an optional list of required floats") {
+    val path = tempDir("graft_idx_footer").toString + "/idx"
+    VectorIndex.write(VectorIndex.build(docs(0 until 6)), path)
+    val root = new org.apache.hadoop.fs.Path(path)
+    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    val it = fs.listFiles(root, true)
+    val files = Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+      .filter(_.getPath.getName.endsWith(".parquet")).toSeq
+    assert(files.nonEmpty)
+    graft.ops.Layout.readFooters(spark, files.iterator, rowGroups = false).foreach { footer =>
+      val schema = footer.getFileMetaData.getSchema
+      assert(schema.getType(schema.getFieldIndex("embedding")).toString.replaceAll("\\s+", " ") ==
+        "optional group embedding (LIST) { repeated group list { required float element; } }")
+    }
+    assert(graft.ops.Layout.footerSchema(spark, files)("embedding") ==
+      org.apache.spark.sql.types.StructField("embedding",
+        org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.FloatType, false)))
+  }
 }

@@ -1,7 +1,5 @@
 package graft.serve
 
-import java.util.concurrent.TimeUnit
-
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -25,26 +23,8 @@ class ChatTurnCompileSpec extends AnyFunSuite {
   val DynamicPruningPerProbe = 1L
 
   test("warm chat turns with new ids and a new turnTs compile only the BM25 probe's dynamic pruning") {
-    val java = s"${System.getProperty("java.home")}/bin/java"
-    val cmd = Seq(java, "-Xmx1g", "-XX:TieredStopAtLevel=1") ++
-      org.apache.spark.launcher.JavaModuleOptions.defaultModuleOptionArray() ++
-      Seq("-Dspark.ui.enabled=false", "-cp", System.getProperty("java.class.path"),
-        ChatTurnCompileProbe.getClass.getName.stripSuffix("$"))
-    val proc = new ProcessBuilder(cmd: _*).redirectErrorStream(true).start()
-    val out = new StringBuilder
-    val reader = new Thread(() =>
-      scala.io.Source.fromInputStream(proc.getInputStream).getLines()
-        .foreach(l => out.synchronized(out ++= l ++= "\n")))
-    reader.start()
-    val done = proc.waitFor(300, TimeUnit.SECONDS)
-    if (!done) proc.destroyForcibly()
-    reader.join(10000)
-    val log = out.synchronized(out.toString)
-    assert(done && proc.exitValue() == 0, s"probe JVM failed:\n${log.takeRight(4000)}")
-    val perTurn = log.linesIterator.collectFirst {
-      case l if l.startsWith(ChatTurnCompileProbe.Marker) =>
-        l.stripPrefix(ChatTurnCompileProbe.Marker).trim.split(" ").map(_.toLong).toSeq
-    }.getOrElse(fail(s"probe printed no counts:\n${log.takeRight(4000)}"))
+    val perTurn = graft.ForkedProbe.run(ChatTurnCompileProbe, ChatTurnCompileProbe.Marker)
+      .split(" ").map(_.toLong).toSeq
     info(s"classes compiled per turn: ${perTurn.mkString(", ")}")
     assert(perTurn.size == ChatTurnCompileProbe.Turns)
     assert(perTurn.drop(2).forall(_ <= DynamicPruningPerProbe),
